@@ -103,7 +103,7 @@ def main() -> None:
     )
     times["spatial_join_salted"], _ = timed(
         lambda: joins.spatial_join_cells(
-            points, pack, z=8, salt=True, hot_cell_threshold=20_000, n_salts=8
+            points, pack, z=8, hot_cell_threshold=20_000, n_salts=8
         ).count()
     )
 

@@ -23,11 +23,6 @@ Workloads (BASELINE.json metric = "spatial-join + tile-assignment"):
                JVM-only agg — the both-sides-large spatial-join plan
   pip          broadcast PiP join (distributed-synthesized points vs 200
                polygons) — the Arrow/numpy refine stage
-  pip_native   the SAME join via joins.spatial_join_native — zero Python
-               workers (higher-order parity fold). Measured ~20x SLOWER
-               than the Arrow refine (interpreted HOF; see
-               BENCH/pip_native_ab_r3.json) — kept as the measured
-               counterfactual, not in the main loop
   tile_cut     XYZ tile cutting over synthesized images — Python raster stage
   control      mp.Pool numpy+zlib, no Spark — host ceiling
 
@@ -56,7 +51,6 @@ SIZES = {
     "bucketed_join": 8_000_000,
     "pip": 4_000_000,
     "pip_s2": 8_000_000,
-    "pip_native": 2_000_000,
     "tile_cut": 40_000,
 }
 
@@ -100,7 +94,7 @@ CAPS = {"assign": 4_000_000_000, "s2_assign": 2_000_000_000,
         "salted_join": 200_000_000,
         "bucketed_join": 2_000_000_000,
         "pip": 40_000_000, "pip_s2": 400_000_000,
-        "pip_native": 1_000_000_000, "tile_cut": 400_000}
+        "tile_cut": 400_000}
 n_cap = CAPS[wl]
 _cached = {}
 
@@ -192,12 +186,6 @@ def rebuild(m):
             return joins.spatial_join_s2(pts, pack, id_col="image_id",
                                          regions=reg,
                                          split_interior=True).count()
-    elif wl == "pip_native":
-        pts = synth_pts(m).select(F.col("id").alias("image_id"), "lon", "lat").persist()
-        pts.count(); _cached["pts"] = pts
-        pack = fixtures.polygons_pack(p=200)
-        def job():
-            return joins.spatial_join_native(pts, pack, z=8).count()
     elif wl == "tile_cut":
         images = fixtures.synth_images_spark(spark, m, partitions=4*cpus).persist()
         images.count(); _cached["images"] = images
@@ -602,13 +590,13 @@ Reading the table honestly:
   serve (polygon sets too large/too hot to broadcast, high selectivity
   where the covering prunes candidates JVM-side before any Python); on
   one shared bus it cannot beat a single already-floor-bound pass.
-- **The zero-Python counterfactual was built and measured, and it LOSES**:
-  `joins.spatial_join_native` re-expresses the same join with no Python
-  workers (codegen cell encode -> broadcast cover join -> codegen bbox
-  filter -> `aggregate()` higher-order parity fold, pair-exact vs the numpy
-  oracle — see the `pip_native` workload and
-  `BENCH/pip_native_ab_r3.json`). At 8M points x 200 polygons it takes
-  ~80 s where the Arrow refine takes ~3.9 s (identical 172,440,241 pairs):
+- **The zero-Python counterfactual was built and measured, and it LOST**:
+  a no-Python-worker join (codegen cell encode -> broadcast cover join ->
+  codegen bbox filter -> `aggregate()` higher-order parity fold, pair-exact
+  vs the numpy oracle; `BENCH/pip_native_ab_r3.json`) was measured and
+  then retired. The parity fold survives only as the refine of the
+  table-driven S2 join. At 8M points x 200 polygons it took
+  ~80 s where the Arrow refine took ~3.9 s (identical 172,440,241 pairs):
   Spark evaluates higher-order functions interpreted, per element, while
   the Arrow path pays the copy floor once and then ray-casts as vectorized
   numpy. Conclusion stands on data, not theory: Arrow refine is the right

@@ -122,8 +122,11 @@ def resumable_run(
         .partitionBy("_unit")
         .parquet(out_path)
     )
+    # explicit schema: a transform that wrote no rows leaves a directory
+    # with no parquet files, whose schema Spark cannot infer; its units
+    # then commit with rows_out = 0
     rows_out = (
-        spark.read.parquet(out_path)
+        spark.read.schema("_unit string").parquet(out_path)
         .groupBy(F.col("_unit").alias("unit_id"))
         .count()
         .withColumnRenamed("count", "rows_out")

@@ -38,21 +38,15 @@ import sys
 def cluster_spark(app_name: str):
     """Session for spark-submit: no master override, conf from the
     submitter; falls back to the tuned local factory outside a cluster."""
+    from .session import SQL_CONF, get_spark
+
     if os.environ.get("SPARK_GRAFT_CLUSTER") or "SPARK_EXECUTOR_CORES" in os.environ:
         from pyspark.sql import SparkSession
 
-        return (
-            SparkSession.builder.appName(app_name)
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.adaptive.skewJoin.enabled", "true")
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.sql.execution.arrow.maxRecordsPerBatch", "131072")
-            .config("spark.sql.execution.arrow.maxBytesPerBatch", "32m")
-            .config("spark.sql.session.timeZone", "UTC")
-            .getOrCreate()
-        )
-    from .session import get_spark
-
+        b = SparkSession.builder.appName(app_name)
+        for k, v in SQL_CONF.items():
+            b = b.config(k, v)
+        return b.getOrCreate()
     return get_spark(app_name=app_name)
 
 

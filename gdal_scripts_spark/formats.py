@@ -1253,6 +1253,7 @@ def convex_hull_agg(
     """
     from . import geom as _geom
 
+    g_type = pts.schema[grp_col].dataType.simpleString()
     salted = pts.select(
         F.col(grp_col).alias("_g"),
         F.col(x_col).cast("double").alias("_x"),
@@ -1285,9 +1286,9 @@ def convex_hull_agg(
     # per-bucket distinct counts
     partial = salted.groupBy("_g", "_salt").applyInPandas(
         lambda pdf: local_hull(pdf).assign(_salt=pdf["_salt"].iloc[0]),
-        schema="_g long, _x double, _y double, _n long, _salt long",
+        schema=f"_g {g_type}, _x double, _y double, _n long, _salt long",
     )
     return partial.groupBy("_g").applyInPandas(
         final_hull,
-        schema="grp long, n_pts long, hull_area2 long, hull_perim double",
+        schema=f"grp {g_type}, n_pts long, hull_area2 long, hull_perim double",
     )

@@ -148,7 +148,6 @@ def _cc_distributed(
     e: DataFrame,
     max_rounds: int,
     local_edges_threshold: int = 0,
-    rounds_per_sync: int = 1,
 ) -> DataFrame:
     """Alternating large-star / small-star over a monotonically shrinking
     edge set -> (id, comp) star edges for every NON-isolated node.
@@ -183,34 +182,13 @@ def _cc_distributed(
     the logical plan and OOMs the driver on long-diameter graphs).
     Driver-sync fixed costs are exactly the core-count-invariant term
     that was diluting N->4N efficiency (0.419 in
-    BENCH/cc_scaling_r4.json).
-
-    Round-5 round fusion (``rounds_per_sync``, default 1 — MEASURED
-    SLOWER above 1, knob kept for the record): both star steps are
-    IDENTITIES on a star forest, so chaining two large+small rounds per
-    barrier is semantically safe (equality for rps=1/2/3 pinned by
-    tests/test_graph.py::test_round_fusion_matches_unfused). But each
-    star step SELF-JOINS its input (the edge rows probe a min-per-node
-    aggregate of the same rows), so an unmaterialized previous round is
-    recomputed by BOTH branches of the next round's join — fusion trades
-    one driver sync for a full re-execution of the fused round.
-    Interleaved same-JVM A/B at 40M sym edges
-    (BENCH/cc_rps_ab_r5.json): rps=2 is 3.7x SLOWER (min 141.1 s vs
-    38.0 s). The per-round barrier is load-bearing; the cheap sync cut
-    was the eager->non-eager localCheckpoint fusion above, already
-    landed."""
-    if rounds_per_sync < 1:
-        raise ValueError("rounds_per_sync must be >= 1")
+    BENCH/cc_scaling_r4.json)."""
     cur = e
     prev = None
-    done = 0
-    while done < max_rounds:
-        for _ in range(min(rounds_per_sync, max_rounds - done)):
-            cur = _small_star(_large_star(cur))
-            done += 1
-        cur = cur.localCheckpoint(eager=False)
-        # exact convergence check every sync (a star forest: one parent
-        # per child, no node on both sides). This agg IS the block's
+    for _ in range(max_rounds):
+        cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
+        # exact convergence check every round (a star forest: one parent
+        # per child, no node on both sides). This agg IS the round's
         # materialization barrier — it fills the cache and returns the
         # counts in one job; any deferred-trigger scheme pays one EXTRA
         # full large+small round (~15 s at 20M edges) to detect the

@@ -6,25 +6,38 @@ Reference semantics (public GDAL 3.8.x tree):
   layer (bbox pretest, ``FilterGeometry ≈L800``) then exact GEOS test.
 - ``ogrlayer.cpp : Clip (≈L3800) / Erase (≈L4000)`` — semi / anti variants.
 
-Spark-first redesign (NOT a port): the O(N·M) nested loop becomes either
+Spark-first redesign (NOT a port): the O(N·M) nested loop becomes one of
+three plans, all returning the same pairs:
 
-1. **broadcast PiP join** — polygons packed flat (:class:`geom.PolygonPack`)
-   and broadcast; one ``mapInPandas`` pass over the points emits (point,
-   polygon) pairs. Zero shuffle of the big side; the whole join is one map
-   stage. Right choice whenever the polygon side fits in executor memory
-   (the reference's entire use case). At 100 TB of points this is the plan
-   you want: scan → Arrow batch → numpy ray cast → pairs.
+1. **broadcast PiP join** (:func:`spatial_join_broadcast`) — polygons
+   packed flat (:class:`geom.PolygonPack`) and broadcast; one
+   ``mapInArrow`` pass over the points emits (point, polygon) pairs. Zero
+   shuffle of the big side; the whole join is one map stage. Right
+   whenever the polygon side fits in executor memory (the reference's
+   entire use case).
 
-2. **cell-keyed equi-join** — both sides keyed by the Morton cell of a fixed
-   zoom (points: native expr; polygons: bbox tile cover, exploded), then a
-   plain Catalyst equi-join + exact PiP refine. This is the scale path when
-   BOTH sides are large (polygon side too big to broadcast): the spatial
-   predicate becomes a shuffle join Catalyst can plan, with AQE skew
-   splitting plus explicit **hot-cell salting** (north_rule: "partitioning /
-   shuffle / skew handled explicitly"): cells whose point count exceeds a
-   threshold get a salt from ``pmod(xxhash64(id), S)`` on the point side and
-   an ``explode(0..S-1)`` replica on the polygon side, so one hot Tokyo cell
+2. **salted z-tile join** (:func:`spatial_join_cells`) — both sides keyed
+   by the Morton cell of a fixed zoom (points: native expr; polygons:
+   bbox tile cover, exploded), then a Catalyst equi-join + the Arrow PiP
+   refine. Right when the polygon side is too big to broadcast: the
+   spatial predicate becomes a shuffle join, with AQE skew splitting plus
+   explicit **hot-cell salting** (north_rule: "partitioning / shuffle /
+   skew handled explicitly"): cells whose point count exceeds a threshold
+   get a salt from ``pmod(xxhash64(id), S)`` on the point side and an
+   ``explode(0..S-1)`` replica on the polygon side, so one hot Tokyo cell
    spreads over S reducers instead of one straggler.
+
+3. **S2 covering join** (:func:`spatial_join_s2`) — a mixed-level S2
+   covering per polygon, joined by parent-snap equi-joins, then the Arrow
+   refine. Right at high latitudes, where mercator z-tiles blow up, and
+   for huge polygon sets: ``broadcast_regions=False`` shuffles the
+   covering, and ``pack=None`` builds every polygon-side artifact on the
+   cluster from a polygons table. With no driver-side pack there is no
+   Arrow kernel to ship, so that regime refines with the pure-Column
+   parity fold (:func:`refine_pip_native`). Spark evaluates that fold's
+   higher-order functions interpreted, measured ~20x slower than the
+   Arrow refine on dense candidate sets (BENCH/pip_native_ab_r3.json),
+   so every other plan uses the Arrow refine.
 
 Result-shape contract: pairs (point id, poly_id), deduplicated, matching the
 sequential oracle ``geom.np_pip_pairs`` exactly (BASELINE.json : north_star
@@ -284,72 +297,60 @@ def spatial_join_cells(
     id_col: str = "image_id",
     lon: str = "lon",
     lat: str = "lat",
-    salt: bool = False,
     n_salts: int = 8,
     hot_cell_threshold: int = 10_000,
-    force_shuffle_join: bool = False,
-    refine: str = "arrow",
 ) -> DataFrame:
-    """(id_col, poly_id) via cell equi-join + exact refine.
+    """(id_col, poly_id) via salted cell equi-join + exact Arrow refine.
 
-    ``salt=True`` demonstrates the explicit skew defense: hot cells (point
-    count > threshold) are computed with one cheap count-by-cell pass, the
-    point side gets ``salt = pmod(xxhash64(id), S)`` and the polygon side is
-    exploded xS for those cells only, so the shuffle key becomes (cell, salt).
-    ``force_shuffle_join`` adds a merge-join hint so the A/B bench can show
-    the effect even when the polygon side would otherwise broadcast."""
+    Hot cells (point count > ``hot_cell_threshold``) are found with one
+    cheap count-by-cell pass; the point side gets ``salt =
+    pmod(xxhash64(id), n_salts)`` and the polygon side is exploded
+    ``n_salts``-fold for those cells only, so the shuffle key is
+    (cell, salt). Cold cells keep salt 0."""
     spark = points.sparkSession
     pts = with_cell(points.select(id_col, lon, lat), z)
     cover = spark.createDataFrame(
         polygon_cover_cells(pack, z), schema="poly_id long, cell long"
     )
-
-    if salt:
-        hot = (
-            pts.groupBy("cell").count()
-            .filter(F.col("count") > hot_cell_threshold)
-            .select("cell", F.lit(True).alias("is_hot"))
+    hot = (
+        pts.groupBy("cell").count()
+        .filter(F.col("count") > hot_cell_threshold)
+        .select("cell", F.lit(True).alias("is_hot"))
+    )
+    pts = (
+        pts.join(F.broadcast(hot), "cell", "left")
+        .withColumn(
+            "salt",
+            F.when(
+                F.col("is_hot").isNotNull(),
+                F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts)),
+            ).otherwise(F.lit(0)),
         )
-        pts = (
-            pts.join(F.broadcast(hot), "cell", "left")
-            .withColumn(
-                "salt",
-                F.when(
-                    F.col("is_hot").isNotNull(),
-                    F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts)),
-                ).otherwise(F.lit(0)),
-            )
-            .drop("is_hot")
+        .drop("is_hot")
+    )
+    cover = (
+        cover.join(F.broadcast(hot), "cell", "left")
+        .withColumn(
+            "salts",
+            F.when(
+                F.col("is_hot").isNotNull(),
+                F.array([F.lit(i) for i in range(n_salts)]),
+            ).otherwise(F.array(F.lit(0))),
         )
-        cover = (
-            cover.join(F.broadcast(hot), "cell", "left")
-            .withColumn(
-                "salts",
-                F.when(
-                    F.col("is_hot").isNotNull(),
-                    F.array([F.lit(i) for i in range(n_salts)]),
-                ).otherwise(F.array(F.lit(0))),
-            )
-            .withColumn("salt", F.explode("salts"))
-            .drop("is_hot", "salts")
-        )
-        join_keys = ["cell", "salt"]
-    else:
-        join_keys = ["cell"]
-
-    if force_shuffle_join:
-        cover = cover.hint("merge")
-    cand = pts.join(cover, join_keys, "inner").select(id_col, lon, lat, "poly_id")
+        .withColumn("salt", F.explode("salts"))
+        .drop("is_hot", "salts")
+    )
+    cand = pts.join(cover, ["cell", "salt"], "inner").select(
+        id_col, lon, lat, "poly_id")
     # no dedupe needed: a point has exactly one (cell, salt) and the cover
     # lists each (poly_id, cell, salt) once, so a (point, poly) pair can
-    # only arise from a single join row — the old .distinct() here was a
-    # pure 6M-row shuffle tax
-    if refine == "native":
-        return refine_pip_native(
-            cand, pack_edges_df(spark, pack), id_col, lon, lat
-        )
+    # only arise from a single join row
     return _refine_pip(cand, pack, id_col, lon, lat)
 
+
+# ---------------------------------------------------------------------------
+# 3) S2 covering join (high latitudes, huge polygon sets)
+# ---------------------------------------------------------------------------
 
 def s2_cover_regions(
     spark: SparkSession,
@@ -608,29 +609,8 @@ def spatial_join_s2(
 
 
 # ---------------------------------------------------------------------------
-# 3) fully JVM-native PiP join — zero Python workers in the plan
+# pure-Column PiP refine (the table-driven S2 regime, no Python stage)
 # ---------------------------------------------------------------------------
-#
-# The Arrow refine (paths 1/2 above) is copy-bandwidth-bound on wide hosts:
-# BENCH/BASELINE.md measured a core-count-invariant serDe floor (a no-op
-# mapInArrow passthrough costs the same wall at local[8] and local[32] —
-# every byte crosses JVM→Arrow→socket→Python→socket→JVM). This path removes
-# Python entirely: polygon edges become a broadcast `array<struct>` column
-# and the even-odd ray cast becomes one `aggregate()` higher-order
-# expression, so the whole join is scan → codegen cell encode → broadcast
-# hash join → codegen bbox filter → JVM parity fold. Identical pair
-# semantics to geom.pip_even_odd_edges (same expression, same IEEE-double
-# evaluation order), verified against the sequential numpy oracle.
-#
-# MEASURED VERDICT (BENCH/pip_native_ab_r3.json): at 8M points × 200
-# polygons the Arrow refine finishes in ~3.9 s where this path takes ~80 s
-# (identical 172,440,241 pairs). Spark evaluates higher-order functions
-# (`aggregate`, lambda over array<struct>) in interpreted mode — per-element
-# virtual dispatch and struct-field boxing — while the Arrow path pays the
-# serDe copy once and then runs the ray cast as vectorized numpy at memory
-# bandwidth. The engine therefore keeps refine="arrow" as the default; this
-# path exists as the measured counterfactual and for deployments where
-# Python workers are unavailable.
 
 def pack_edges_df(spark: SparkSession, pack: geom.PolygonPack) -> DataFrame:
     """One row per polygon: (poly_id, bbox, edges array<struct x1,y1,x2,y2>).
@@ -768,36 +748,6 @@ def polygon_edges_df_from_table(
         F.array_max(ys).alias("bymax"),
         edges.alias("edges"),
     )
-
-
-def spatial_join_native(
-    points: DataFrame,
-    pack: geom.PolygonPack,
-    z: int = 8,
-    id_col: str = "image_id",
-    lon: str = "lon",
-    lat: str = "lat",
-) -> DataFrame:
-    """(id_col, poly_id) pairs with an all-JVM plan — no Python workers.
-
-    Plan: codegen cell encode → broadcast hash join vs the polygon cell
-    cover (prunes every point not near any polygon) → codegen bbox filter →
-    higher-order parity fold. Same pairs as ``spatial_join_broadcast`` /
-    ``spatial_join_cells`` (one join row per (point, poly) candidate, so no
-    dedupe needed). The scale ceiling is the broadcast cover + edge tables
-    (fine up to ~10^6 polygons); beyond that use ``spatial_join_cells``
-    whose cover side shuffles.
-
-    NOTE: measured ~20× slower than the Arrow refine on dense candidate
-    sets (interpreted HOF evaluation — see module comment above); prefer
-    ``spatial_join_broadcast`` unless Python workers are unavailable."""
-    spark = points.sparkSession
-    pts = with_cell(points.select(id_col, lon, lat), z)
-    cover = spark.createDataFrame(
-        polygon_cover_cells(pack, z), schema="poly_id long, cell long"
-    )
-    cand = pts.join(F.broadcast(cover), "cell").select(id_col, lon, lat, "poly_id")
-    return refine_pip_native(cand, pack_edges_df(spark, pack), id_col, lon, lat)
 
 
 # ---------------------------------------------------------------------------

@@ -246,7 +246,6 @@ def knn_join(
     q_lat: str = "lat",
     p_lon: str = "lon",
     p_lat: str = "lat",
-    rounds: tuple[int, ...] | None = None,  # legacy alias: max(rounds) -> ring
 ) -> DataFrame:
     """Return (qid, rank, <pid>, dist_m) — exact kNN, ties by pid asc.
 
@@ -275,8 +274,6 @@ def knn_join(
     Each level ends with ``localCheckpoint`` so the iterative plan's lineage
     stays flat. ``z=None`` picks the base zoom from the point count."""
     spark = queries.sparkSession
-    if rounds:
-        ring = max(rounds)
     if z is None:
         z = auto_zoom(points.count(), k)
     pts = _with_tile(

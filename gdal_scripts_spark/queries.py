@@ -1741,7 +1741,7 @@ _add("pq_topk_ivf", _q_pq_topk_ivf, None)  # approximate; golden-pinned rows
 def _q_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     images = fixtures.images_spark(spark, n=800)
     pack = fixtures.polygons_pack(p=20)
-    pairs = joins.spatial_join_cells(images, pack, z=8, salt=True,
+    pairs = joins.spatial_join_cells(images, pack, z=8,
                                      hot_cell_threshold=100, n_salts=4)
     return (
         pairs.groupBy("poly_id").agg(F.count("*").alias("n_images"))
@@ -1786,19 +1786,15 @@ SELECT event_id, poly_id FROM par WHERE k % 2 = 1
 
 
 def _q_pip_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2 via the all-JVM plan (joins.spatial_join_native): codegen cell
-    encode -> broadcast cover join -> bbox filter -> higher-order parity
-    fold. No Python worker anywhere; same pairs as the Arrow paths."""
-    register_views(spark, sf_dir)
-    pts = spark.table("events").select(
-        "event_id",
-        ((F.col("event_id") * 7919 % 3600).cast("double") / 10.0 - 179.95)
-        .alias("lon"),
-        ((F.col("event_id") * 104729 % 1680).cast("double") / 10.0 - 83.95)
-        .alias("lat"),
-    )
+    """J2 refined by the JVM higher-order parity fold
+    (joins.refine_pip_native via spatial_join_s2(refine="native")): S2
+    bbox covering -> broadcast parent-snap joins -> bbox filter -> parity
+    fold over pack_edges_df. No Python refine stage; same pairs as the
+    Arrow paths."""
+    pts = _pts_events(spark, sf_dir)
     pack = fixtures.polygons_pack(p=48)
-    return joins.spatial_join_native(pts, pack, z=8, id_col="event_id")
+    return joins.spatial_join_s2(pts, pack, max_level=9, id_col="event_id",
+                                 refine="native")
 
 
 _add("pip_native_hof", _q_pip_native, _pip_native_oracle())

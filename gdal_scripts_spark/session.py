@@ -23,13 +23,23 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# SQL/Arrow conf shared by the local factory and the spark-submit session
+# (cli.cluster_spark); the Arrow batch caps are explained above
+SQL_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "131072",
+    "spark.sql.execution.arrow.maxBytesPerBatch": "32m",
+}
+
 
 def get_spark(
     app_name: str = "gdal_scripts_spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch_rows: int = 131_072,
-    arrow_batch_bytes: str = "32m",
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a tuned local SparkSession.
@@ -43,18 +53,11 @@ def get_spark(
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", arrow_batch_bytes)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**SQL_CONF, **(extra_conf or {})}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

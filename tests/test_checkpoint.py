@@ -63,6 +63,28 @@ def test_changed_input_reruns_only_that_unit(spark, images, tmp_path):
     assert bucket3 == images.filter("bucket = 3").count()
 
 
+def test_empty_output_commits_units_with_zero_rows(spark, images, tmp_path):
+    """A transform that filters every row out still commits its units
+    (rows_out = 0), so a re-run resumes instead of redoing them."""
+    out = str(tmp_path / "out")
+    man = str(tmp_path / "manifest")
+
+    def drop_all(df):
+        return _transform(df).filter(F.lit(False))
+
+    m1 = checkpoint.resumable_run(
+        images, "bucket", ["image_id"], drop_all, out, man, run_id="r1"
+    )
+    assert m1["units_run"] == 6 and m1["rows_out"] == 0
+    rows = checkpoint.read_manifest(spark, man).collect()
+    assert len(rows) == 6
+    assert {(r["status"], r["rows_out"]) for r in rows} == {("committed", 0)}
+    m2 = checkpoint.resumable_run(
+        images, "bucket", ["image_id"], drop_all, out, man, run_id="r2"
+    )
+    assert m2["resumed"] is True and m2["units_run"] == 0
+
+
 def test_run_metrics_rollup(spark, images, tmp_path):
     out = str(tmp_path / "out")
     man = str(tmp_path / "manifest")

@@ -830,3 +830,9 @@ def test_convex_hull_agg_fanin_invariance(spark):
     a = sorted(map(tuple, formats.convex_hull_agg(df, fanin=1).collect()))
     b = sorted(map(tuple, formats.convex_hull_agg(df, fanin=16).collect()))
     assert a == b and len(a) == 3
+    # a string group key keeps its type through both grouped-map stages
+    sdf = df.withColumn("grp", F.concat(F.lit("g"), F.col("grp").cast("string")))
+    out = formats.convex_hull_agg(sdf, fanin=16)
+    assert out.schema["grp"].dataType.simpleString() == "string"
+    c = sorted(map(tuple, out.collect()))
+    assert c == [(f"g{g}", *rest) for g, *rest in a]

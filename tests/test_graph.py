@@ -148,12 +148,11 @@ def test_oriented_large_star_matches_symmetrized(spark):
     assert all(a > b for a, b in got)
 
 
-def test_round_fusion_matches_unfused(spark):
-    """rounds_per_sync=2 (the default) and =1/=3 reach the identical
-    (id, comp) star forest: both star steps are identities on a star
-    forest, so a fused block overshooting the fixpoint cannot change
-    it. Covers a long-diameter chain (forces several sync blocks) and a
-    random multi-component graph with duplicate rows."""
+def test_distributed_cc_chain_and_duplicates(spark):
+    """The distributed alternating-star loop reaches the oracle's
+    (id, comp) star forest on a long-diameter chain (forces several
+    rounds) joined with a random multi-component graph with duplicate
+    rows."""
     rng = random.Random(7)
     rows = [(i + 1, i) for i in range(200)]  # 201-node chain
     for _ in range(500):
@@ -169,14 +168,8 @@ def test_round_fusion_matches_unfused(spark):
         n: c for n, c in _uf_oracle([(a, b) for a, b in rows]).items()
         if n != c
     }
-    for rps in (1, 2, 3):
-        got = {
-            r["id"]: r["comp"]
-            for r in graph._cc_distributed(
-                e, 50, rounds_per_sync=rps
-            ).collect()
-        }
-        assert got == expected, f"rounds_per_sync={rps} diverged"
+    got = {r["id"]: r["comp"] for r in graph._cc_distributed(e, 50).collect()}
+    assert got == expected
 
 
 def _tri_oracle(edges):

@@ -1,12 +1,13 @@
-"""Spatial join paths (broadcast PiP, cell-keyed equi-join, salted) must all
+"""Spatial join paths (broadcast PiP, salted cell-keyed equi-join) must all
 match the sequential numpy oracle exactly (BASELINE north_star: join result
 rows exact)."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from gdal_scripts_spark import fixtures, geom, joins
 
@@ -40,21 +41,30 @@ def test_broadcast_join_matches_oracle(world):
     assert got == oracle
 
 
-def test_cell_join_matches_oracle(world):
+@pytest.mark.parametrize("broadcast", [True, False],
+                         ids=["broadcast", "shuffle"])
+def test_cell_join_salted_matches_oracle(spark, world, broadcast):
+    """Salted cell join matches the oracle, both when Catalyst may
+    broadcast the small cover side and when broadcasting is disabled —
+    then the candidate join must run as a shuffle join on (cell, salt)."""
     images, pack, oracle = world
-    got = _collect_pairs(joins.spatial_join_cells(images, pack, z=8))
-    assert got == oracle
-
-
-def test_cell_join_salted_matches_oracle(world):
-    images, pack, oracle = world
-    got = _collect_pairs(
-        joins.spatial_join_cells(
-            images, pack, z=8, salt=True, hot_cell_threshold=5, n_salts=4,
-            force_shuffle_join=True,
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if not broadcast:
+        spark.conf.set(key, "-1")
+    try:
+        df = joins.spatial_join_cells(
+            images, pack, z=8, hot_cell_threshold=5, n_salts=4
         )
-    )
+        got = _collect_pairs(df)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
     assert got == oracle
+    if not broadcast:
+        assert re.search(
+            r"(SortMergeJoin|ShuffledHashJoin) \[cell#\d+L, salt#\d+L\]", plan
+        ), plan
 
 
 def test_semi_anti_partition(world):
@@ -88,43 +98,10 @@ def test_no_python_udf_in_cell_key_stage(world):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_native_join_matches_oracle(world):
-    images, pack, oracle = world
-    got = _collect_pairs(joins.spatial_join_native(images, pack, z=8))
-    assert got == oracle
-
-
-def test_cell_join_native_refine_matches_oracle(world):
-    images, pack, oracle = world
-    got = _collect_pairs(
-        joins.spatial_join_cells(
-            images, pack, z=8, salt=True, hot_cell_threshold=5, n_salts=4,
-            refine="native",
-        )
-    )
-    assert got == oracle
-
-
-def test_native_join_plan_has_no_python_stage(world):
-    """The native path's contract: zero Python workers in the plan and a
-    broadcast polygon side. (It is NOT the fast path — interpreted HOF
-    evaluation measured ~20x slower than the Arrow refine,
-    BENCH/pip_native_ab_r3.json — but the plan shape must hold.)"""
-    images, pack, _ = world
-    plan = (
-        joins.spatial_join_native(images, pack, z=8)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInArrow",
-                   "FlatMapGroupsInPandas", "MapInPandas"):
-        assert marker not in plan
-    assert "BroadcastHashJoin" in plan
-
-
 def test_native_join_holed_polygon_parity():
-    """Even-odd fold over all rings: a point in the hole is OUTSIDE, a point
-    in the annulus is inside — checked against the numpy kernel on a
-    constructed donut (not just the random fixtures)."""
+    """The JVM parity fold (spatial_join_s2 refine="native") runs over all
+    rings: a point in the hole is OUTSIDE, a point in the annulus is
+    inside — on a constructed donut, not just the random fixtures."""
     from gdal_scripts_spark.session import get_spark
 
     spark = get_spark()
@@ -135,5 +112,5 @@ def test_native_join_holed_polygon_parity():
         [("in_annulus", 1.5, 5.0), ("in_hole", 5.0, 5.0), ("outside", 11.0, 5.0)],
         schema="image_id string, lon double, lat double",
     )
-    got = _collect_pairs(joins.spatial_join_native(pts, pack, z=8))
+    got = _collect_pairs(joins.spatial_join_s2(pts, pack, refine="native"))
     assert got == {("in_annulus", 7)}

@@ -69,7 +69,7 @@ def test_ring_expansion_small_zoom_forces_fallback(data):
     # z=2 world is 4x4 tiles: rect covers world quickly -> exercises the
     # brute-force fallback branch; result must still be exact.
     images, queries, ipdf, qpdf = data
-    got = _as_map(knn.knn_join(queries.limit(10), images, k=K, z=2, rounds=(0, 1)).collect())
+    got = _as_map(knn.knn_join(queries.limit(10), images, k=K, z=2, ring=1).collect())
     exp = np_knn_oracle(qpdf.head(10), ipdf)
     for q in got:
         assert [(r, i) for r, i, _ in got[q]] == [(r, i) for r, i, _ in exp[q]], q

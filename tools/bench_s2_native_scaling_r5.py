@@ -72,7 +72,8 @@ points = (
 )
 
 # polygon TABLE (standard layer schema) — same deterministic rects as
-# bench_s2_regime; no driver-side PolygonPack anywhere in this tool
+# the S2 regime A/B (BENCH/s2_regime_ab_r5.json); no driver-side PolygonPack
+# anywhere in this tool
 rng = np.random.default_rng(17)
 cx = rng.uniform(-60 + SIDE, 60 - SIDE, k)
 cy = rng.uniform(LAT0 + SIDE, LAT1 - SIDE, k)

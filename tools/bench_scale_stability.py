@@ -71,8 +71,7 @@ for s in SCALES:
         lambda: joins.spatial_join_broadcast(points, pack).count())
     row["spatial_join_salted"] = timed(
         lambda: joins.spatial_join_cells(
-            points, pack, z=8, salt=True, hot_cell_threshold=20_000,
-            n_salts=8).count())
+            points, pack, z=8, hot_cell_threshold=20_000, n_salts=8).count())
     row["knn"] = timed(lambda: knn.knn_join(queries, points, k=5).count())
     row["headline_img_per_s"] = round(
         n / (row["tile_assign"] + row["spatial_join_bc"]), 1)
