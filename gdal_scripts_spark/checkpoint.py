@@ -40,10 +40,14 @@ MANIFEST_SCHEMA = (
 def unit_fingerprints(df: DataFrame, unit_col: str, fp_cols: list[str]) -> DataFrame:
     """(unit_id, input_fingerprint, rows_in) — order-insensitive hash agg."""
     h = F.xxhash64(*[F.col(c) for c in fp_cols])
-    # bit_xor: order-insensitive, overflow-free under ANSI mode (identical
-    # duplicate rows cancel pairwise — rows_in is compared alongside)
+    # order-insensitive sum of the row hashes, kept as four sums of their
+    # 16-bit quarters: a long sum of values < 2^16 overflows (an error
+    # under ANSI mode) only past 2^47 rows in one unit. The four sums fold
+    # into one long. Unlike a bit_xor, identical rows do not cancel.
+    quarters = [F.shiftright(h, 16 * k).bitwiseAND(F.lit(0xFFFF)) for k in range(4)]
     return df.groupBy(F.col(unit_col).cast("string").alias("unit_id")).agg(
-        F.bit_xor(h).alias("input_fingerprint"), F.count("*").alias("rows_in")
+        F.xxhash64(*[F.sum(q) for q in quarters]).alias("input_fingerprint"),
+        F.count("*").alias("rows_in"),
     )
 
 
@@ -84,6 +88,20 @@ def pending_units(
     )
 
 
+def _drop_unit_partitions(spark: SparkSession, out_path: str, unit_ids: list[str]) -> None:
+    """Delete the ``_unit=<id>`` output partitions of units about to re-run.
+    Dynamic overwrite replaces only the partitions a write produces, so a
+    re-run unit whose transform now yields no rows would otherwise keep
+    its stale output (and its stale ``rows_out``)."""
+    jvm = spark._jvm
+    root = jvm.org.apache.hadoop.fs.Path(out_path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    escape = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    for uid in unit_ids:
+        if uid is not None:
+            fs.delete(jvm.org.apache.hadoop.fs.Path(root, f"_unit={escape(uid)}"), True)
+
+
 def resumable_run(
     df: DataFrame,
     unit_col: str,
@@ -115,6 +133,9 @@ def resumable_run(
         "left_semi",
     )
     out = transform(subset)
+    _drop_unit_partitions(
+        spark, out_path, [r["unit_id"] for r in todo.select("unit_id").collect()]
+    )
     (
         out.withColumn("_unit", F.col(unit_col).cast("string"))
         .write.mode("overwrite")

@@ -139,14 +139,17 @@ def merge_upsert(
 
       - ``insert``    key only in incoming
       - ``update``    key in both, payload differs
-      - ``unchanged`` key in both, payload identical
+      - ``unchanged`` key in both, payload identical (two NULLs are
+                      identical)
       - ``keep``      key only in current
 
     Returns (key, action, payload) with the winning payload per row —
-    exactly the post-merge table plus its change audit. One shuffle on
-    the key; payloads ride the join but never fan out. At Iceberg scale
-    the same plan runs as a storage-side MERGE; this is the engine-level
-    equivalent with an explicit audit column."""
+    exactly the post-merge table plus its change audit; a matched row
+    takes the incoming payload, NULL included. Incoming keys must be
+    unique: a duplicated key fans its current row out, once per incoming
+    row. One shuffle on the key; payloads ride the join but never fan
+    out. At Iceberg scale the same plan runs as a storage-side MERGE;
+    this is the engine-level equivalent with an explicit audit column."""
     c = current.select(
         F.col(key).alias("_ck"), F.col(payload).alias("_cv"))
     i = incoming.select(
@@ -155,11 +158,12 @@ def merge_upsert(
     action = (
         F.when(F.col("_ck").isNull(), F.lit("insert"))
         .when(F.col("_ik").isNull(), F.lit("keep"))
-        .when(F.col("_cv") == F.col("_iv"), F.lit("unchanged"))
+        .when(F.col("_cv").eqNullSafe(F.col("_iv")), F.lit("unchanged"))
         .otherwise(F.lit("update"))
     )
     return j.select(
         F.coalesce(F.col("_ik"), F.col("_ck")).alias(key),
         action.alias("action"),
-        F.coalesce(F.col("_iv"), F.col("_cv")).alias(payload),
+        F.when(F.col("_ik").isNull(), F.col("_cv")).otherwise(F.col("_iv"))
+        .alias(payload),
     )

@@ -2996,9 +2996,9 @@ m AS (
   SELECT coalesce(i.doc_id, c.doc_id) AS doc_id,
          CASE WHEN c.doc_id IS NULL THEN 'insert'
               WHEN i.doc_id IS NULL THEN 'keep'
-              WHEN c.text = i.text THEN 'unchanged'
+              WHEN c.text IS NOT DISTINCT FROM i.text THEN 'unchanged'
               ELSE 'update' END AS action,
-         coalesce(i.text, c.text) AS text
+         CASE WHEN i.doc_id IS NULL THEN c.text ELSE i.text END AS text
   FROM documents c FULL OUTER JOIN inc i ON c.doc_id = i.doc_id
 )
 SELECT doc_id, action, CAST(length(text) AS BIGINT) AS n_chars_out FROM m

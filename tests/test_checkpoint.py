@@ -85,6 +85,60 @@ def test_empty_output_commits_units_with_zero_rows(spark, images, tmp_path):
     assert m2["resumed"] is True and m2["units_run"] == 0
 
 
+def test_rerun_unit_with_empty_output_drops_stale_partition(spark, images, tmp_path):
+    """A re-run unit whose transform now yields no rows loses its old
+    output partition, and its manifest row reads rows_out = 0."""
+    out = str(tmp_path / "out")
+    man = str(tmp_path / "manifest")
+
+    def unmarked(df):
+        return _transform(df.filter(~F.col("caption").endswith("!")))
+
+    checkpoint.resumable_run(
+        images, "bucket", ["image_id", "caption"], unmarked, out, man, run_id="r1"
+    )
+    n3 = images.filter("bucket = 3").count()
+    assert spark.read.parquet(out).filter(F.col("_unit") == "3").count() == n3 > 0
+    marked = images.withColumn(
+        "caption",
+        F.when(F.col("bucket") == 3, F.concat(F.col("caption"), F.lit("!")))
+        .otherwise(F.col("caption")),
+    )
+    m = checkpoint.resumable_run(
+        marked, "bucket", ["image_id", "caption"], unmarked, out, man, run_id="r2"
+    )
+    assert m["units_run"] == 1 and m["rows_out"] == 0
+    res = spark.read.parquet(out)
+    assert res.filter(F.col("_unit") == "3").count() == 0
+    assert res.count() == 120 - n3
+    r2 = checkpoint.read_manifest(spark, man).filter(F.col("run_id") == "r2").collect()
+    assert [(r["unit_id"], r["rows_out"]) for r in r2] == [("3", 0)]
+
+
+def test_fingerprint_sees_swapped_duplicate_rows(spark, tmp_path):
+    """Rows A, A, C becoming B, B, C keep rows_in and would keep a
+    bit_xor of row hashes; the fingerprint still changes, so the unit
+    re-runs."""
+    out = str(tmp_path / "out")
+    man = str(tmp_path / "manifest")
+    schema = "unit long, v string"
+    before = spark.createDataFrame([(1, "A"), (1, "A"), (1, "C"), (2, "D")], schema)
+    after = spark.createDataFrame([(1, "B"), (1, "B"), (1, "C"), (2, "D")], schema)
+
+    def fps(df):
+        return {r["unit_id"]: (r["input_fingerprint"], r["rows_in"])
+                for r in checkpoint.unit_fingerprints(df, "unit", ["v"]).collect()}
+
+    fb, fa = fps(before), fps(after)
+    assert fb["2"] == fa["2"]
+    assert fb["1"][1] == fa["1"][1] == 3 and fb["1"][0] != fa["1"][0]
+    checkpoint.resumable_run(before, "unit", ["v"], lambda d: d, out, man, run_id="r1")
+    m = checkpoint.resumable_run(after, "unit", ["v"], lambda d: d, out, man, run_id="r2")
+    assert m["units_run"] == 1
+    got = sorted(r["v"] for r in spark.read.parquet(out).filter("_unit = '1'").collect())
+    assert got == ["B", "B", "C"]
+
+
 def test_run_metrics_rollup(spark, images, tmp_path):
     out = str(tmp_path / "out")
     man = str(tmp_path / "manifest")

@@ -77,6 +77,65 @@ def test_semi_anti_partition(world):
     assert semi & anti == set()
 
 
+def test_broadcast_join_fans_out_per_point_rows(spark):
+    """The per-point rows explode to exactly the oracle's pairs on
+    overlapping polygons (most hit points fall in several), with
+    duplicate ids, a partition with no hits and several Arrow batches per
+    task; the explode runs in the JVM, above the MapInArrow."""
+    from collections import Counter
+
+    pack = fixtures.polygons_pack(p=200)
+    pdf = fixtures.make_images_pdf(N_IMG)[["image_id", "lon", "lat"]]
+    # rows 0-49 reuse the ids of rows 50-99 at other coordinates
+    pdf.loc[:49, "image_id"] = pdf["image_id"].iloc[50:100].to_numpy()
+    nohit = pdf.iloc[:30].assign(lon=170.0, lat=-80.0)
+    schema = "image_id string, lon double, lat double"
+    pts = spark.createDataFrame(pdf, schema).union(
+        spark.createDataFrame(nohit, schema).coalesce(1))
+    oracle = Counter(
+        (pdf["image_id"].iloc[i], pid)
+        for i, pid in geom.np_pip_pairs(
+            pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), pack)
+    )
+    hits = Counter(i for i, _ in oracle)
+    assert sum(oracle.values()) > 2 * len(hits)  # overlapping polygons
+    assert any(n > 1 for n in Counter(pdf["image_id"]).values())
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "17")
+    try:
+        df = joins.spatial_join_broadcast(pts, pack)
+        got = Counter((r["image_id"], r["poly_id"]) for r in df.collect())
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert got == oracle
+    lines = plan.splitlines()
+    gen = [k for k, ln in enumerate(lines) if "Generate explode(" in ln]
+    mia = [k for k, ln in enumerate(lines) if "MapInArrow" in ln]
+    assert gen and mia and gen[0] < mia[0], plan
+
+
+def test_per_point_batches_split_between_points(monkeypatch):
+    """Hits group into one row per point; batches split only between
+    points once a list column would exceed its value budget."""
+    import pyarrow as pa
+
+    ids = pa.array(["a", "b", "c", "d"])
+    idx = np.array([2, 0, 2, 3, 0, 2])
+    pid = np.array([10, 11, 12, 13, 14, 15])
+    rows = [
+        {"id": "a", "poly_ids": [11, 14]},
+        {"id": "c", "poly_ids": [10, 12, 15]},
+        {"id": "d", "poly_ids": [13]},
+    ]
+    (one,) = joins._per_point_batches(ids, idx, pid, "id")
+    assert one.to_pylist() == rows
+    monkeypatch.setattr(joins, "_LIST_MAX_VALUES", 2)
+    batches = list(joins._per_point_batches(ids, idx, pid, "id"))
+    assert [b.to_pylist() for b in batches] == [[r] for r in rows]
+
+
 def test_polygon_cover_is_conservative(world):
     _, pack, _ = world
     cover = joins.polygon_cover_cells(pack, z=8)

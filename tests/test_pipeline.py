@@ -71,12 +71,16 @@ def test_merge_upsert_actions(spark):
     from gdal_scripts_spark import etl
 
     cur = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "doc_id long, text string")
+        [(1, "a"), (2, "b"), (3, "c"), (4, None), (5, "e")],
+        "doc_id long, text string")
     inc = spark.createDataFrame(
-        [(2, "b"), (3, "C2"), (9, "new")], "doc_id long, text string")
+        [(2, "b"), (3, "C2"), (9, "new"), (4, None), (5, None)],
+        "doc_id long, text string")
     got = {r["doc_id"]: (r["action"], r["text"])
            for r in etl.merge_upsert(cur, inc).collect()}
+    # NULL payloads: both NULL is unchanged; an incoming NULL wins
     assert got == {
         1: ("keep", "a"), 2: ("unchanged", "b"),
         3: ("update", "C2"), 9: ("insert", "new"),
+        4: ("unchanged", None), 5: ("update", None),
     }
