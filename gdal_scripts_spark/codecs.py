@@ -27,6 +27,7 @@ specs):
 
 from __future__ import annotations
 
+import functools
 import struct
 import zlib
 
@@ -230,11 +231,31 @@ def gdal_checksum_band(band: np.ndarray) -> int:
     (negative pixels keep their sign) and ``checksum &= 0xffff`` each step
     — algebraically (sum of remainders) mod 65536. The 11-prime table
     {7..43} is GDAL's. This is the autotest golden-checksum convention
-    (e.g. gcore/data/byte.tif -> 4672)."""
-    flat = np.asarray(band).astype(np.int64).ravel()
+    (e.g. gcore/data/byte.tif -> 4672).
+
+    uint8 bands take no int64 copy: a histogram of (i % 11, pixel) dotted
+    with the 11 x 256 table of ``pixel % prime`` is the same sum."""
+    band = np.asarray(band)
+    if band.dtype == np.uint8:
+        idx = _checksum_class_base(band.size) + band.ravel()
+        hist = np.bincount(idx, minlength=11 * 256)
+        return int(hist @ _U8_REMAINDERS % 65536)
+    flat = band.astype(np.int64).ravel()
     primes = _CHECKSUM_PRIMES[np.arange(flat.size, dtype=np.int64) % 11]
     rem = np.fmod(flat, primes)  # trunc remainder == C's %
     return int(rem.sum() % 65536)
+
+
+# uint8 fast path: row c of the table is pixel % primes[c]
+_U8_REMAINDERS = (np.arange(256)[None, :] % _CHECKSUM_PRIMES[:, None]).ravel()
+
+
+@functools.lru_cache(maxsize=8)
+def _checksum_class_base(n: int) -> np.ndarray:
+    """256 * (i % 11) for i < n: the histogram row of each pixel's prime."""
+    base = (np.arange(n, dtype=np.intp) % 11) * 256
+    base.flags.writeable = False
+    return base
 
 
 def gdal_style_checksum(img: np.ndarray) -> int:

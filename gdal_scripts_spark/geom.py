@@ -145,6 +145,48 @@ def pip_even_odd_edges(px, py, edges: tuple[np.ndarray, ...]) -> np.ndarray:
     return inside
 
 
+def pip_grid_edges(xs, ys, edges: tuple[np.ndarray, ...]) -> np.ndarray:
+    """Even-odd mask of the separable grid ``(xs[i], ys[j])`` ->
+    bool[len(ys), len(xs)], bit-identical to :func:`pip_even_odd_edges` on
+    every grid point but O(rows x edges + pixels), not O(pixels x edges).
+
+    Per-row pixel runs (Raptor's raster x vector join): an edge crosses row
+    ``j`` iff ``min(y1, y2) <= ys[j] < max(y1, y2)`` — the ray cast's
+    ``(y1 > py) != (y2 > py)`` — and its x-intercept is the ray cast's own
+    float expression, so column ``i`` counts the edge iff ``xs[i] < xint``,
+    i.e. ``i < searchsorted(xs, xint, "left")``. The mask is the parity of
+    those column boundaries taken from the right along each row."""
+    xs = np.asarray(xs, dtype=np.float64)
+    ys = np.asarray(ys, dtype=np.float64)
+    if np.any(xs[1:] < xs[:-1]):
+        o = np.argsort(xs, kind="stable")
+        return pip_grid_edges(xs[o], ys, edges)[:, np.argsort(o)]
+    x1, y1, x2, y2 = edges
+    h, w = len(ys), len(xs)
+    dy = y2 - y1
+    dy_safe = np.where(dy == 0, 1.0, dy)
+    slope = (x2 - x1) / dy_safe
+    # rows crossed by each edge: a contiguous run of the sorted ys
+    yo = np.argsort(ys, kind="stable")
+    ys_sorted = ys[yo]
+    r0 = np.searchsorted(ys_sorted, np.minimum(y1, y2), "left")
+    r1 = np.searchsorted(ys_sorted, np.maximum(y1, y2), "left")
+    n_rows = r1 - r0
+    e = np.repeat(np.arange(len(x1)), n_rows)
+    first = np.cumsum(n_rows) - n_rows
+    j = yo[r0[e] + np.arange(len(e)) - first[e]]
+    xint = ys[j] - y1[e]
+    xint *= slope[e]
+    xint += x1[e]
+    xint[np.isnan(xint)] = -np.inf          # px < nan is never true
+    k = np.searchsorted(xs, xint, "left")
+    cnt = np.bincount(j * (w + 1) + k, minlength=h * (w + 1)).astype(np.uint8)
+    # column i is inside iff an odd number of boundaries k > i (the uint8
+    # wrap keeps the parity)
+    par = np.bitwise_xor.accumulate(cnt.reshape(h, w + 1)[:, ::-1], axis=1)
+    return (par[:, -2::-1] & 1).view(bool)
+
+
 def pip_even_odd(px: np.ndarray, py: np.ndarray, rings: list[np.ndarray]) -> np.ndarray:
     """Even-odd ray cast of many points against one (multi-ring) polygon;
     edges of all rings toggle the parity (holes subtract automatically)."""

@@ -1152,7 +1152,8 @@ def _q_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latest-record-per-key via the max_by/min_by aggregates (the
     Catalyst MaxBy node — a different physical path than the row_number
     window the registry already covers): ordering key is the composite
-    bigint epoch*10^7 + event_id, unique and identical in both engines."""
+    bigint whole-second epoch*10^7 + event_id (same-second events ordered
+    by event_id), unique; the oracle computes the same bigint key."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     key = F.unix_timestamp("ts") * F.lit(10000000) + F.col("event_id")
     return ev.groupBy("user_id").agg(
@@ -1163,22 +1164,26 @@ def _q_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 _add("latest_per_key", _q_latest_per_key, """
+WITH e AS (
+  SELECT *, CAST(floor(epoch(ts)) AS BIGINT) * 10000000 + event_id AS k
+  FROM events
+)
 SELECT user_id,
-       max_by(event_type, epoch(ts) * 10000000 + event_id) AS last_type,
-       CAST(round(max_by(value, epoch(ts) * 10000000 + event_id), 6) AS DOUBLE)
-         AS last_value,
-       min_by(event_type, epoch(ts) * 10000000 + event_id) AS first_type,
+       max_by(event_type, k) AS last_type,
+       CAST(round(max_by(value, k), 6) AS DOUBLE) AS last_value,
+       min_by(event_type, k) AS first_type,
        CAST(count(*) AS BIGINT) AS n_events
-FROM events GROUP BY 1
+FROM e GROUP BY 1
 """)
 
 
 def _q_rolling_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window FRAMES (the one window feature the registry lacked): a
     7-row trailing moving average (ROWS BETWEEN, unique-key tiebreak) and
-    a 1-hour trailing event count (RANGE BETWEEN over epoch seconds —
-    tie-safe because RANGE includes all peers). Epoch arithmetic is
-    spelled identically in both engines."""
+    a 1-hour trailing event count (RANGE BETWEEN over whole epoch
+    seconds — tie-safe because RANGE includes all peers). The oracle
+    orders and frames on the same whole-second bigint
+    (``unix_timestamp`` = floor of the epoch)."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").filter(
         F.col("user_id") < 300
     )
@@ -1197,15 +1202,19 @@ def _q_rolling_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 _add("window_rolling_frames", _q_rolling_frames, """
+WITH e AS (
+  SELECT *, CAST(floor(epoch(ts)) AS BIGINT) AS es
+  FROM events WHERE user_id < 300
+)
 SELECT user_id, event_id,
        CAST(round(avg(value) OVER (PARTITION BY user_id
-                                   ORDER BY epoch(ts), event_id
+                                   ORDER BY es, event_id
                                    ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 6)
             AS DOUBLE) AS mov_avg7,
-       CAST(count(*) OVER (PARTITION BY user_id ORDER BY epoch(ts)
+       CAST(count(*) OVER (PARTITION BY user_id ORDER BY es
                            RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
             AS BIGINT) AS n_last_hour
-FROM events WHERE user_id < 300
+FROM e
 """)
 
 
@@ -3155,7 +3164,9 @@ def _q_event_time_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     every event pipeline runs before counting. Chained same-key
     short-gap events collapse onto their run's first KEPT event only if
     each gap is >= 60 s (lag is against the previous RAW event — the
-    standard debounce semantics, mirrored exactly in SQL)."""
+    standard debounce semantics). Gaps are in whole epoch seconds
+    (``unix_timestamp``), same-second events ordered by event_id; the
+    oracle computes the same."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     es = F.unix_timestamp("ts")
     w = Window.partitionBy("user_id", "event_type").orderBy(
@@ -3170,12 +3181,15 @@ def _q_event_time_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 _add("event_time_dedup", _q_event_time_dedup, """
-WITH g AS (
+WITH e AS (
+  SELECT *, CAST(floor(epoch(ts)) AS BIGINT) AS es FROM events
+),
+g AS (
   SELECT event_type,
-         epoch(ts) - lag(epoch(ts)) OVER (
+         es - lag(es) OVER (
            PARTITION BY user_id, event_type
-           ORDER BY epoch(ts), event_id) AS gap
-  FROM events
+           ORDER BY es, event_id) AS gap
+  FROM e
 )
 SELECT event_type, CAST(count(*) AS BIGINT) AS n_kept
 FROM g WHERE gap IS NULL OR gap >= 60
@@ -3456,6 +3470,9 @@ FROM orders GROUP BY o_orderpriority
 
 
 def _q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gap sessions: a new session when the whole-second gap
+    (``unix_timestamp``) to the previous event exceeds 3600 s; the oracle
+    computes the same bigint gap."""
     from pyspark.sql import Window
 
     register_views(spark, sf_dir)
@@ -3471,12 +3488,13 @@ def _q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 _add("sessionize", _q_sessionize, """
-WITH s AS (
+WITH e AS (
+  SELECT *, CAST(floor(epoch(ts)) AS BIGINT) AS es FROM events
+),
+s AS (
   SELECT user_id, event_id, ts,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR epoch(ts) - epoch(lag(ts) OVER w) > 3600
-              THEN 1 ELSE 0 END AS new_s
-  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+         CASE WHEN es - lag(es) OVER w <= 3600 THEN 0 ELSE 1 END AS new_s
+  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 ),
 sid AS (
   SELECT user_id,

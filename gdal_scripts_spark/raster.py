@@ -598,7 +598,8 @@ def np_downsample2x(canvas: np.ndarray, method: str = "average") -> np.ndarray:
     """2x downsample kernels of ``alg/overview.cpp : GDALRegenerateOverviews``
     (round 3 — modes beyond plain average):
 
-    - average: 2x2 box mean (GDAL 'AVERAGE')
+    - average: 2x2 box mean (GDAL 'AVERAGE'), rounded half-to-even; the
+               uint8 canvas is summed in uint16 and rounded in integers
     - nearest: top-left pixel of each 2x2 block ('NEAREST')
     - rms:     sqrt of the 2x2 mean of squares ('RMS')
     - mode:    most frequent of the 4 values, ties -> smallest value
@@ -609,15 +610,22 @@ def np_downsample2x(canvas: np.ndarray, method: str = "average") -> np.ndarray:
                interior pixels — the analytic golden in tests)
     """
     h, w, c = canvas.shape
+    if method == "nearest":
+        return canvas[0::2, 0::2].copy()
+    if method == "average":
+        s = canvas[0::2, 0::2].astype(np.uint16)
+        s += canvas[0::2, 1::2]
+        s += canvas[1::2, 0::2]
+        s += canvas[1::2, 1::2]
+        # == rint(s / 4) (half-to-even) for every s in 0..1020
+        s += 1 + ((s >> 2) & 1)
+        s >>= 2
+        return s.astype(np.uint8)
     q00 = canvas[0::2, 0::2].astype(np.float64)
     q01 = canvas[0::2, 1::2].astype(np.float64)
     q10 = canvas[1::2, 0::2].astype(np.float64)
     q11 = canvas[1::2, 1::2].astype(np.float64)
-    if method == "average":
-        out = (q00 + q01 + q10 + q11) / 4.0
-    elif method == "nearest":
-        return canvas[0::2, 0::2].copy()
-    elif method == "rms":
+    if method == "rms":
         out = np.sqrt((q00 * q00 + q01 * q01 + q10 * q10 + q11 * q11) / 4.0)
     elif method == "mode":
         vals = np.stack([q00, q01, q10, q11])           # (4, H, W, C)
@@ -1254,9 +1262,7 @@ def np_cutline_apply(
     my = my0 - (np.arange(h) + 0.5) * pix_m
     lon, _ = cells.np_meters_to_lonlat(mx, np.zeros_like(mx))
     _, lat = cells.np_meters_to_lonlat(np.zeros_like(my), my)
-    glon = np.repeat(lon[None, :], h, axis=0).ravel()
-    glat = np.repeat(lat[:, None], w, axis=1).ravel()
-    inside = geom.pip_even_odd(glon, glat, rings).reshape(h, w)
+    inside = geom.pip_grid_edges(lon, lat, geom.polygon_edges(rings))
     out = img.copy()
     out[~inside] = nodata
     return out, int(inside.sum())

@@ -7,12 +7,15 @@ Reference semantics: ``alg/gdalrasterize.cpp : GDALRasterizeGeometries
 
 Spark-first plan: polygons → covering (z, tx, ty) tiles via the bbox cover
 (the same conservative pretest as the spatial join) exploded into a
-DataFrame; one Arrow pass fills each (polygon, tile) fragment with a
-vectorized even-odd test of the 256x256 pixel-center grid (the engine path);
+DataFrame; one Arrow pass fills each (polygon, tile) fragment's 256x256
+pixel-center mask from per-row edge crossings (``geom.pip_grid_edges``:
+Raptor-style pixel runs, O(rows x edges) instead of a ray cast per pixel);
 a grouped overlay merges fragments per tile (replace = last poly wins in
-poly_id order, add = sum of hits — gdal_rasterize MERGE_ALG). The sequential
-oracle uses a true scanline edge-intersection fill (different algorithm)
-for independence.
+poly_id order, add = sum of hits — gdal_rasterize MERGE_ALG). Independence
+rests on two other algorithms: the per-pixel ray cast
+(``geom.pip_even_odd_edges`` over the full grid) is the mask kernel's test
+oracle, and :func:`np_rasterize_counts` is a sequential scanline fill with
+its own intersection arithmetic.
 
 Pixel-center convention: tile pixel (i, j) covers mercator
 [txmin + i*res, txmin+(i+1)*res] x [tymax-(j+1)*res, tymax-j*res]; its center
@@ -66,12 +69,8 @@ def rasterize_counts(
                 _, tx, ty_xyz = (int(v) for v in cells.np_cell_to_tile(int(cell_v)))
                 ty = n - 1 - ty_xyz
                 lon, lat = _tile_pixel_lonlat(tx, ty, z)
-                rings = pk.rings_of(pos[int(poly_v)])
-                # vectorized even-odd over the grid: evaluate per row j
-                glon = np.repeat(lon[None, :], TILE, axis=0).ravel()
-                glat = np.repeat(lat[:, None], TILE, axis=1).ravel()
-                hit = geom.pip_even_odd(glon, glat, rings)
-                burned = int(hit.sum())
+                hit = geom.pip_grid_edges(lon, lat, pk.edges_of(pos[int(poly_v)]))
+                burned = int(np.count_nonzero(hit))
                 if burned:
                     rows.append((int(poly_v), z, tx, ty, ty_xyz, burned))
             if rows:
@@ -115,10 +114,7 @@ def rasterize_tiles(
                 ty = n - 1 - ty_xyz
                 lon, lat = _tile_pixel_lonlat(tx, ty, z)
                 pid = int(poly_v)
-                rings = pk.rings_of(pos[pid])
-                glon = np.repeat(lon[None, :], TILE, axis=0).ravel()
-                glat = np.repeat(lat[:, None], TILE, axis=1).ravel()
-                hit = geom.pip_even_odd(glon, glat, rings).reshape(TILE, TILE)
+                hit = geom.pip_grid_edges(lon, lat, pk.edges_of(pos[pid]))
                 if hit.any():
                     rows.append((pid, tx, ty, ty_xyz, np.packbits(hit).tobytes()))
             if rows:
@@ -230,9 +226,8 @@ def np_touched_mask(rings_uv: list, h: int = TILE, w: int = TILE) -> np.ndarray:
     in the SAME uv space — edges straight in the raster CRS, i.e. mercator,
     exactly how GDAL burns a layer reprojected to the raster SRS) UNION
     every cell the boundary passes through."""
-    ii = np.tile(np.arange(w, dtype=np.float64) + 0.5, h)
-    jj = np.repeat(np.arange(h, dtype=np.float64) + 0.5, w)
-    mask = geom.pip_even_odd(ii, jj, rings_uv).reshape(h, w).copy()
+    mask = geom.pip_grid_edges(np.arange(w) + 0.5, np.arange(h) + 0.5,
+                               geom.polygon_edges(rings_uv))
     for ring in rings_uv:
         pts = np.asarray(ring, dtype=np.float64)
         for a, b in zip(pts, np.roll(pts, -1, axis=0)):

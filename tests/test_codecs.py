@@ -3,6 +3,8 @@ property-based fuzz via hypothesis (SURVEY.md §5.2 item 4)."""
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
 from hypothesis import given, settings
@@ -128,19 +130,18 @@ def test_jpeg_dispatch():
     assert out.shape == img.shape  # lossy: exactness checked in test_jpeg.py
 
 
-def test_gdal_checksum_exact_algorithm():
-    # sequential mirror of the C loop in alg/gdalchecksum.cpp (int path)
+def c_ref(band):
+    """Sequential mirror of the C loop in alg/gdalchecksum.cpp (int path)."""
     primes = [7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43]
+    cs, ip = 0, 0
+    for v in band.astype(np.int64).ravel().tolist():
+        r = int(math.fmod(v, primes[ip]))  # trunc remainder
+        cs = (cs + r) & 0xFFFF
+        ip = (ip + 1) % 11
+    return cs
 
-    def c_ref(band):
-        cs, ip = 0, 0
-        for v in band.astype(np.int64).ravel():
-            r = int(v) - (int(v) // primes[ip]) * primes[ip]
-            r = int(np.fmod(v, primes[ip]))  # trunc remainder
-            cs = (cs + r) & 0xFFFF
-            ip = (ip + 1) % 11
-        return cs
 
+def test_gdal_checksum_exact_algorithm():
     rng = np.random.default_rng(4)
     for shape in [(20, 20), (7, 13), (1, 1), (3, 64)]:
         u8 = rng.integers(0, 256, shape).astype(np.uint8)
@@ -150,3 +151,18 @@ def test_gdal_checksum_exact_algorithm():
     # pinned value: 20x20 row-major ramp (v = i % 256)
     ramp = (np.arange(400) % 256).astype(np.uint8).reshape(20, 20)
     assert codecs.gdal_checksum_band(ramp) == c_ref(ramp)
+
+
+def test_gdal_checksum_u8_histogram_path_matches_c_loop():
+    rng = np.random.default_rng(5)
+    for shape in [(7, 13), (256, 256)]:
+        u8 = rng.integers(0, 256, shape).astype(np.uint8)
+        assert codecs.gdal_checksum_band(u8) == c_ref(u8)
+        # a strided band of an RGB tile, as gdal_style_checksum passes it
+        rgb = rng.integers(0, 256, shape + (3,)).astype(np.uint8)
+        assert codecs.gdal_checksum_band(rgb[:, :, 1]) == c_ref(rgb[:, :, 1])
+        i16 = rng.integers(-32768, 32768, shape).astype(np.int16)
+        assert (i16 < 0).any()
+        assert codecs.gdal_checksum_band(i16) == c_ref(i16)
+        i32 = rng.integers(-2**31, 2**31, shape).astype(np.int32)
+        assert codecs.gdal_checksum_band(i32) == c_ref(i32)

@@ -95,6 +95,80 @@ def test_pack_and_batch_vs_oracle():
     assert got == oracle
 
 
+def _grid_oracle(xs, ys, edges):
+    """Per-pixel ray cast over the full grid: the pixel-run kernel's oracle."""
+    xs, ys = np.asarray(xs, np.float64), np.asarray(ys, np.float64)
+    gx = np.broadcast_to(xs[None, :], (len(ys), len(xs))).ravel()
+    gy = np.broadcast_to(ys[:, None], (len(ys), len(xs))).ravel()
+    return geom.pip_even_odd_edges(gx, gy, edges).reshape(len(ys), len(xs))
+
+
+def test_pip_grid_matches_ray_cast_on_random_polygons_with_holes():
+    rng = np.random.default_rng(11)
+    for trial in range(60):
+        m = int(rng.integers(3, 25))
+        ang = np.sort(rng.uniform(0, 2 * np.pi, m))
+        ext = np.column_stack([np.cos(ang), np.sin(ang)]) * rng.uniform(0.4, 1.0, (m, 1))
+        hole = 0.3 * ext[::-1] + rng.uniform(-0.05, 0.05, 2)
+        edges = geom.polygon_edges([ext, hole])
+        xs = np.sort(rng.uniform(-1.2, 1.2, int(rng.integers(1, 60))))
+        ys = rng.uniform(-1.2, 1.2, int(rng.integers(1, 60)))  # rows in any order
+        got = geom.pip_grid_edges(xs, ys, edges)
+        assert got.shape == (len(ys), len(xs))
+        assert np.array_equal(got, _grid_oracle(xs, ys, edges)), trial
+
+
+def test_pip_grid_on_vertices_and_horizontal_edges():
+    # quarter-lattice polygons have horizontal (and vertical) edges, and a
+    # quarter-step grid runs through every vertex and along every such edge
+    rng = np.random.default_rng(12)
+    grid = np.arange(-12, 13) / 4.0
+    n_horizontal = 0
+    for trial in range(40):
+        m = int(rng.integers(3, 12))
+        ang = np.sort(rng.uniform(0, 2 * np.pi, m))
+        ext = np.round(np.column_stack([np.cos(ang), np.sin(ang)]) * 8) / 4
+        edges = geom.polygon_edges([ext, ext[::-1] / 2])
+        n_horizontal += int((edges[1] == edges[3]).sum())
+        for ys in (grid, grid[::-1]):
+            assert np.array_equal(geom.pip_grid_edges(grid, ys, edges),
+                                  _grid_oracle(grid, ys, edges)), trial
+    assert n_horizontal > 0
+    # fixture polygons, grid coordinates on their own vertices and midpoints
+    pack = fixtures.polygons_pack(p=25)
+    for p in range(pack.n_polys):
+        v = np.vstack(pack.rings_of(p))
+        xs = np.unique(np.concatenate([v[:, 0], (v[:-1, 0] + v[1:, 0]) / 2]))
+        ys = np.unique(v[:, 1])[::-1]
+        edges = pack.edges_of(p)
+        assert np.array_equal(geom.pip_grid_edges(xs, ys, edges),
+                              _grid_oracle(xs, ys, edges)), p
+
+
+def test_pip_grid_edge_cases():
+    edges = geom.polygon_edges([SQUARE, HOLE])
+    # rows with no crossing (above, below and on the top edge: half-open)
+    ys = np.array([6.0, 4.0, 3.5, 2.0, 0.5, 0.0, -1.0])
+    xs = np.arange(-1.0, 6.0, 0.5)
+    got = geom.pip_grid_edges(xs, ys, edges)
+    assert not got[[0, 1, 6]].any()
+    assert np.array_equal(got, _grid_oracle(xs, ys, edges))
+    # 1x1 grids: inside the ring, inside the hole, outside
+    assert geom.pip_grid_edges([0.5], [0.5], edges).tolist() == [[True]]
+    assert geom.pip_grid_edges([2.0], [2.0], edges).tolist() == [[False]]
+    assert geom.pip_grid_edges([5.0], [2.0], edges).tolist() == [[False]]
+    # descending xs and ys (and a duplicated column) give the same mask
+    xd = np.array([4.5, 3.0, 3.0, 2.5, 0.5, -0.5])
+    yd = np.array([3.5, 2.5, 1.5, 0.5])
+    assert np.array_equal(geom.pip_grid_edges(xd, yd, edges),
+                          _grid_oracle(xd, yd, edges))
+    assert np.array_equal(geom.pip_grid_edges(xd, yd, edges),
+                          geom.pip_grid_edges(xd[::-1], yd, edges)[:, ::-1])
+    # empty grids
+    assert geom.pip_grid_edges([], [1.0], edges).shape == (1, 0)
+    assert geom.pip_grid_edges([1.0], [], edges).shape == (0, 1)
+
+
 def test_clip_ring_rect():
     clipped = geom.clip_ring_rect(SQUARE, 1, 1, 3, 3)
     assert abs(abs(geom.shoelace_area(clipped)) - 4.0) < 1e-12

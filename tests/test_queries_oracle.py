@@ -125,3 +125,56 @@ def test_session_window_inclusive_gap_boundary(spark):
         (int(t0.timestamp()), 2),
         (int(t0.timestamp()) + 7201, 1),
     ]
+
+
+def test_timestamp_entries_key_on_whole_seconds(spark, tmp_path, monkeypatch):
+    """The engine keys, orders and frames these entries on whole epoch
+    seconds (``unix_timestamp``) with event_id breaking same-second ties;
+    each oracle must compute that function, not the fractional epoch.
+    Same-second pairs whose event_id order runs against their time order,
+    and gaps of 59.5 s and 3600.5 s whose whole-second gaps are 60 and
+    3600, tell the two apart."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from gdal_scripts_spark import queries
+
+    t0 = dt.datetime(2024, 1, 1)
+
+    def at(sec):
+        return t0 + dt.timedelta(seconds=sec)
+
+    ev = pd.DataFrame(
+        [
+            # same second, lower id later in time: the first event by key
+            (0, at(100.7), 1, "a", 1.0),
+            (1, at(100.2), 1, "b", 2.0),
+            # 3600.5 s apart, 3600 whole seconds: one session, one hour frame
+            (2, at(1000.2), 1, "a", 3.0),
+            (3, at(4600.7), 1, "a", 4.0),
+            # 59.5 s after event 3, 60 whole seconds: not a duplicate
+            (4, at(4660.2), 1, "a", 5.0),
+            # same second, higher id earlier in time: the last event by key
+            (5, at(5000.7), 1, "c", 6.0),
+            (6, at(5000.2), 1, "d", 7.0),
+            (7, at(50.5), 2, "a", 8.0),
+            (8, at(3651.0), 2, "a", 9.0),
+        ],
+        columns=["event_id", "ts", "user_id", "event_type", "value"],
+    )
+    ev["ts"] = ev["ts"].astype("datetime64[us]")
+    ev["props"] = '{"k": 1}'
+    ev.to_parquet(tmp_path / "events.parquet", index=False)
+    monkeypatch.setattr(queries, "TABLES", ["events"])
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM '{tmp_path / 'events.parquet'}'"
+    )
+    for name in ("latest_per_key", "window_rolling_frames",
+                 "event_time_dedup", "sessionize"):
+        sdf = entrymod.queries()[name](spark, str(tmp_path))
+        res = con.execute(ORACLES[name])
+        dcols = [d[0].lower() for d in res.description]
+        got = _rowset([c.lower() for c in sdf.columns], [tuple(r) for r in sdf.collect()])
+        assert got == _rowset(dcols, res.fetchall()), name

@@ -344,6 +344,29 @@ def test_downsample2x_closed_forms():
     assert md[1, 0] == 7 and md[0, 1] == 0 and md[0, 0] == 10
 
 
+def test_downsample2x_integer_average_equals_float_rint():
+    from gdal_scripts_spark.raster import np_downsample2x
+
+    def float_avg(c):
+        q = [c[i::2, j::2].astype(np.float64) for i in (0, 1) for j in (0, 1)]
+        return np.clip(np.rint(sum(q) / 4.0), 0, 255).astype(np.uint8)
+
+    # one 2x2 block per sum 0..1020, values filled greedily up to 255
+    s = np.arange(1021)
+    q = np.stack([np.clip(s - 255 * k, 0, 255) for k in range(4)], axis=1)
+    blocks = q.reshape(-1, 2, 2).astype(np.uint8)
+    canvas = blocks.transpose(1, 0, 2).reshape(2, 2 * len(s))[:, :, None]
+    out = np_downsample2x(canvas, "average")[0, :, 0]
+    assert out.tolist() == np.rint(s / 4.0).astype(int).tolist()
+    assert np.array_equal(out, float_avg(canvas)[0, :, 0])
+    rng = np.random.default_rng(7)
+    for shape in [(2, 2, 1), (6, 10, 3), (512, 512, 3)]:
+        c = rng.integers(0, 256, shape).astype(np.uint8)
+        got = np_downsample2x(c, "average")
+        assert got.dtype == np.uint8
+        assert np.array_equal(got, float_avg(c))
+
+
 def test_downsample2x_gauss_properties():
     from gdal_scripts_spark.raster import np_downsample2x
 
