@@ -21,7 +21,7 @@ Module map (SURVEY.md §7):
   knn         grid-partitioned kNN with sound ring expansion
   raster      decode/stats/histogram/checksum/retile/clip/resample/pyramid/
               mosaic/rasterize over the images table
-  polygonize  tile-local CCL + cross-tile label fixpoint + ring tracing
+  polygonize  per-image run-based CCL + ring tracing in one map pass; sieve
   sqlops      OGR-SQL-equivalent relational surface over the driver testdata
   textops     dedup (exact/minhash/simhash/jaccard), langid, quality, tokens,
               winnowing rolling-hash fingerprints

@@ -278,9 +278,9 @@ def isoband_regions(
     structure compactly as counts). Returns
     (image_id, band, n_regions, n_pixels).
 
-    Scale shape: band_classify is one Arrow pass; polygonize is the
-    tile-CCL + border equi-join machinery that already holds at arbitrary
-    raster sizes; the final rollup is a plain hash aggregate."""
+    Scale shape: band_classify is one Arrow pass; polygonize labels each
+    image in one more map-only pass (no shuffle, no rings traced); the
+    final rollup is a plain hash aggregate."""
     from . import polygonize as _poly
 
     banded = band_classify(images, interval, base)

@@ -8,21 +8,14 @@ label equivalences, emit one polygon (pixel-edge rings) + value per final
 component. Background/nodata here: value 0 is masked out (the
 ``gdal_polygonize.py -mask`` convention).
 
-Spark-first redesign of the sequential two-pass:
-1. tile the image into fixed windows (mapInPandas) and run a LOCAL union-find
-   CCL per tile — provisional label = the component's minimum global pixel
-   index (gy*W + gx) within the tile, which makes labels canonical and
-   deterministic regardless of execution order (hard part #1).
-2. emit per-component row RUNS (image_id, label, gy, gx0, gx1, value) plus
-   BORDER pixels (tile-edge pixels only) for cross-tile adjacency.
-3. adjacency = equi-join of border pixels on shifted global coordinates
-   (4-conn: E/W + N/S neighbors; 8-conn: + diagonals), same value.
-4. label fixpoint = iterative min-label propagation over the adjacency graph
-   (converges in O(log diameter) joins; lineage cut with localCheckpoint) —
-   the distributed analog of the reference's equivalence-merge pass.
-5. final components: groupBy(final label) over runs → value, pixel_count,
-   min_pixel; exterior ring traced per component (applyInPandas) by
-   edge-stitching, emitted as WKT in global pixel coordinates.
+Spark-first shape: every image is one row, so every component lives inside
+one task. ``polygonize`` is a single mapInPandas pass per image: decode it,
+label it once with the run-based union-find (``_tile_ccl`` — label = the
+component's minimum pixel index y*W + x, canonical and deterministic
+regardless of execution order; hard part #1), then emit one row per
+component with value and pixel count from the row runs and, when asked, the
+rings traced on the component's bbox crop (``image_components``, which
+``raster.footprint`` shares). No pixel, run or label crosses a shuffle.
 
 Interior rings (holes): GDAL's RPolygonizer collects every boundary arc of a
 component — donut components produce one exterior + one ring per hole
@@ -48,7 +41,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from . import codecs
 
@@ -163,21 +155,12 @@ def boundary_rings(
     return ext, holes
 
 
-def exterior_ring(mask: np.ndarray, oy: int = 0, ox: int = 0) -> list[tuple[int, int]]:
-    """Exterior ring only (back-compat helper)."""
-    return boundary_rings(mask, oy, ox)[0]
-
-
 def polygon_wkt(ext: list[tuple[int, int]], holes: list[list[tuple[int, int]]] = ()) -> str:
     def ring_txt(r):
         pts = list(r) + [r[0]]
         return "(" + ", ".join(f"{x} {y}" for x, y in pts) + ")"
 
     return "POLYGON (" + ", ".join(ring_txt(r) for r in [ext, *holes]) + ")"
-
-
-def ring_to_wkt(ring: list[tuple[int, int]]) -> str:
-    return polygon_wkt(ring)
 
 
 # ---------------------------------------------------------------------------
@@ -328,226 +311,101 @@ def _union_roots(nruns: int, pa: np.ndarray, pb: np.ndarray) -> np.ndarray:
         parent = p2
 
 
-def _tile_ccl(tile: np.ndarray, connectivity: int) -> np.ndarray:
-    """Labeling on one tile; labels = component min pixel index + 1
+def _tile_ccl(img: np.ndarray, connectivity: int) -> np.ndarray:
+    """Labeling of one whole image; labels = component min pixel index + 1
     (0 = background). Same contract as GDALRasterPolygonEnumerator's
-    provisional pass, run-vectorized."""
-    h, w = tile.shape
-    sy, sx, ex, rid = _row_runs(tile, include_zero=False)
+    two passes, run-vectorized."""
+    h, w = img.shape
+    sy, sx, ex, rid = _row_runs(img, include_zero=False)
     lab = np.zeros((h, w), dtype=np.int64)
     if len(sy) == 0:
         return lab
-    pa, pb = _run_merge_pairs(tile, sy, sx, ex, connectivity)
+    pa, pb = _run_merge_pairs(img, sy, sx, ex, connectivity)
     roots = _union_roots(len(sy), pa, pb)
     # component anchor = min run-start pixel index; runs are scan-ordered so
     # the root run (min id) already starts at the component's min pixel
     start_idx = sy * w + sx
     lab_run = start_idx[roots] + 1
-    nz = tile != 0
+    nz = img != 0
     lab[nz] = lab_run[rid[nz]]
     return lab
+
+
+def image_components(
+    img: np.ndarray, connectivity: int = 4, trace_rings: bool = True
+) -> Iterator[tuple]:
+    """Connected components of equal nonzero value in one whole image, in
+    label order: ``(label, value, pixel_count, (y0, x0, y1, x1), rings)``.
+
+    label = the component's min pixel index ``y * W + x``; value and
+    pixel_count come from the row runs; the bbox is inclusive pixel
+    rows/cols; rings = ``boundary_rings`` of the component's bbox crop in
+    image coordinates, or None when ``trace_rings`` is False."""
+    w = img.shape[1]
+    lab = _tile_ccl(img, connectivity)
+    # runs of the label image are the value runs, tagged by component
+    sy, sx, ex, _rid = _row_runs(lab)
+    labels, comp = np.unique(lab[sy, sx] - 1, return_inverse=True)
+    n = len(labels)
+    counts = np.bincount(comp, weights=ex - sx + 1, minlength=n)
+    y1 = np.zeros(n, np.int64)
+    np.maximum.at(y1, comp, sy)
+    x0 = np.full(n, w, np.int64)
+    np.minimum.at(x0, comp, sx)
+    x1 = np.zeros(n, np.int64)
+    np.maximum.at(x1, comp, ex)
+    for k, label in enumerate(labels.tolist()):
+        # the min pixel sits on the component's top row
+        bbox = (label // w, int(x0[k]), int(y1[k]), int(x1[k]))
+        rings = None
+        if trace_rings:
+            crop = lab[bbox[0] : bbox[2] + 1, bbox[1] : bbox[3] + 1] == label + 1
+            rings = boundary_rings(crop, oy=bbox[0], ox=bbox[1])
+        yield label, int(img[bbox[0], label % w]), int(counts[k]), bbox, rings
 
 
 def polygonize(
     images: DataFrame,
     connectivity: int = 4,
-    tile: int = 64,
-    max_rounds: int = 16,
     trace_rings: bool = True,
+    *,
+    tile: int | None = None,
 ) -> DataFrame:
-    """Distributed polygonize over single-band images (fmt pgm/png gray).
+    """Polygonize single-band images (fmt pgm/png gray) in one map pass:
+    decode each image, label it whole, emit one row per component.
 
     Returns (image_id, label, value, pixel_count, min_y, min_x[, wkt]).
-    label = global min pixel index of the component (canonical). Results are
-    tile-independent; ``tile`` only trades per-task array size against
-    border-row volume (default 64 suits 256px+ rasters — a tiny tile on a
-    big raster explodes border rows)."""
-    spark = images.sparkSession
+    label = min pixel index of the component (canonical). ``tile`` is
+    ignored: it is accepted only because the traced ``raster_tiles``
+    benchmark still passes it, and goes with the next benchmark change."""
+    cols = ["image_id", "label", "value", "pixel_count", "min_y", "min_x"]
+    schema = ("image_id string, label long, value int, pixel_count long, "
+              "min_y int, min_x int")
+    if trace_rings:
+        cols.append("wkt")
+        schema += ", wkt string"
 
-    def tiles(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            frames = []
+            rows = []
             for iid, buf, fmt in zip(
                 b["image_id"].values, b["bytes"].values, b["fmt"].values
             ):
                 img = codecs.decode(bytes(buf), fmt)
                 if img.ndim == 3:
                     img = img[:, :, 0]
-                H, W = img.shape
-                for ty0 in range(0, H, tile):
-                    for tx0 in range(0, W, tile):
-                        sub = img[ty0 : ty0 + tile, tx0 : tx0 + tile]
-                        lab = _tile_ccl(sub, connectivity)
-                        th, tw = sub.shape
-                        # runs of the LABEL image == value runs (horizontal
-                        # same-value neighbors always share a label)
-                        sy, sx, ex, _rid = _row_runs(lab, include_zero=False)
-                        if len(sy) == 0:
-                            continue
-                        l0 = lab[sy, sx] - 1
-                        g = (ty0 + l0 // tw) * W + (tx0 + l0 % tw)
-                        vals = sub[sy, sx].astype(np.int64)
-                        # border pixels: tile-edge pixels with a label
-                        edge = np.zeros((th, tw), dtype=bool)
-                        edge[0, :] = edge[-1, :] = True
-                        edge[:, 0] = edge[:, -1] = True
-                        bm = edge & (lab != 0)
-                        by, bx = np.nonzero(bm)
-                        bl = lab[by, bx] - 1
-                        bg = (ty0 + bl // tw) * W + (tx0 + bl % tw)
-                        bv = sub[by, bx].astype(np.int64)
-                        nr, nb = len(sy), len(by)
-                        frames.append(pd.DataFrame({
-                            "kind": np.repeat(
-                                np.array(["run", "border"]), [nr, nb]
-                            ),
-                            "image_id": np.repeat(iid, nr + nb),
-                            "label": np.concatenate([g, bg]),
-                            "gy": np.concatenate([ty0 + sy, ty0 + by]).astype(np.int32),
-                            "gx0": np.concatenate([tx0 + sx, tx0 + bx]).astype(np.int32),
-                            "gx1": np.concatenate([tx0 + ex, tx0 + bx]).astype(np.int32),
-                            "value": np.concatenate([vals, bv]).astype(np.int32),
-                            "img_w": np.concatenate(
-                                [np.full(nr, W), np.zeros(nb)]
-                            ).astype(np.int32),
-                        }))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-            else:
-                yield pd.DataFrame({
-                    "kind": pd.Series([], dtype=object),
-                    "image_id": pd.Series([], dtype=object),
-                    "label": pd.Series([], dtype=np.int64),
-                    "gy": pd.Series([], dtype=np.int32),
-                    "gx0": pd.Series([], dtype=np.int32),
-                    "gx1": pd.Series([], dtype=np.int32),
-                    "value": pd.Series([], dtype=np.int32),
-                    "img_w": pd.Series([], dtype=np.int32),
-                })
+                w = img.shape[1]
+                for label, value, n, _bbox, rings in image_components(
+                    img, connectivity, trace_rings
+                ):
+                    row = (iid, label, value, n, label // w, label % w)
+                    if trace_rings:
+                        row += (polygon_wkt(*rings),)
+                    rows.append(row)
+            if rows:
+                yield pd.DataFrame(rows, columns=cols)
 
-    raw = images.select("image_id", "bytes", "fmt").mapInPandas(
-        tiles,
-        schema="kind string, image_id string, label long, gy int, gx0 int, "
-               "gx1 int, value int, img_w int",
-    ).localCheckpoint()
-
-    runs = raw.filter(F.col("kind") == "run").drop("kind")
-    border = raw.filter(F.col("kind") == "border").select(
-        "image_id", "label", "gy", F.col("gx0").alias("gx"), "value"
-    )
-
-    # adjacency across tiles: neighbor offsets by connectivity
-    offs = [(0, 1), (1, 0)]
-    if connectivity == 8:
-        offs += [(1, 1), (1, -1)]
-    adj = None
-    b2 = border.select(
-        F.col("image_id").alias("image_id_b"), F.col("label").alias("label_b"),
-        F.col("gy").alias("gy_b"), F.col("gx").alias("gx_b"),
-        F.col("value").alias("value_b"),
-    ).localCheckpoint()
-    for dy, dx in offs:
-        a = border.join(
-            b2,
-            (F.col("image_id_b") == F.col("image_id"))
-            & (F.col("gy_b") == F.col("gy") + dy)
-            & (F.col("gx_b") == F.col("gx") + dx)
-            & (F.col("value_b") == F.col("value")),
-        ).select("image_id", "label", "label_b")
-        adj = a if adj is None else adj.unionByName(a)
-    adj = (
-        adj.filter(F.col("label") != F.col("label_b"))
-        .select("image_id", "label", "label_b")
-        .unionByName(
-            adj.select("image_id", F.col("label_b").alias("label"),
-                       F.col("label").alias("label_b"))
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-
-    # min-label propagation fixpoint
-    mapping = (
-        runs.select("image_id", "label").distinct()
-        .withColumn("final", F.col("label"))
-        .localCheckpoint()
-    )
-    for _ in range(max_rounds):
-        prop = (
-            adj.join(
-                mapping.select(
-                    F.col("image_id"), F.col("label").alias("label_b"),
-                    F.col("final").alias("final_b"),
-                ),
-                ["image_id", "label_b"],
-            )
-            .groupBy("image_id", "label")
-            .agg(F.min("final_b").alias("nbr_min"))
-        )
-        new_mapping = (
-            mapping.join(prop, ["image_id", "label"], "left")
-            .withColumn("final2", F.least(F.col("final"), F.coalesce("nbr_min", "final")))
-            .select("image_id", "label", F.col("final2").alias("final"))
-            .localCheckpoint()
-        )
-        changed = (
-            new_mapping.join(mapping.withColumnRenamed("final", "old"),
-                             ["image_id", "label"])
-            .filter(F.col("final") != F.col("old"))
-            .count()
-        )
-        mapping = new_mapping
-        if changed == 0:
-            break
-        # propagate transitively: label's final may itself map lower
-        mapping = (
-            mapping.alias("m")
-            .join(
-                mapping.select(
-                    F.col("image_id"), F.col("label").alias("final"),
-                    F.col("final").alias("final_of_final"),
-                ).alias("f"),
-                ["image_id", "final"], "left",
-            )
-            .select(
-                "image_id", "label",
-                F.least(F.col("final"), F.coalesce("final_of_final", "final")).alias("final"),
-            )
-            .localCheckpoint()
-        )
-
-    fruns = runs.join(mapping, ["image_id", "label"]).select(
-        "image_id", F.col("final").alias("label"), "gy", "gx0", "gx1", "value", "img_w"
-    )
-
-    stats = fruns.groupBy("image_id", "label").agg(
-        F.first("value").alias("value"),
-        F.sum(F.col("gx1") - F.col("gx0") + 1).alias("pixel_count"),
-        F.first("img_w").alias("img_w"),
-    ).select(
-        "image_id", "label", "value", "pixel_count",
-        F.floor(F.col("label") / F.col("img_w")).cast("int").alias("min_y"),
-        F.pmod(F.col("label"), F.col("img_w")).cast("int").alias("min_x"),
-    )
-    if not trace_rings:
-        return stats
-
-    def trace(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        gy = pdf["gy"].to_numpy(np.int64)
-        ga = pdf["gx0"].to_numpy(np.int64)
-        gb = pdf["gx1"].to_numpy(np.int64)
-        y0, x0 = int(gy.min()), int(ga.min())
-        mask = np.zeros((int(gy.max()) - y0 + 1, int(gb.max()) - x0 + 1), dtype=bool)
-        for y, a, bb in zip((gy - y0).tolist(), (ga - x0).tolist(), (gb - x0).tolist()):
-            mask[y, a : bb + 1] = True
-        wkt = polygon_wkt(*boundary_rings(mask, oy=y0, ox=x0))
-        return pd.DataFrame([(key[0], int(key[1]), wkt)],
-                            columns=["image_id", "label", "wkt"])
-
-    rings = fruns.groupBy("image_id", "label").applyInPandas(
-        trace, schema="image_id string, label long, wkt string"
-    )
-    return stats.join(rings, ["image_id", "label"])
+    return images.select("image_id", "bytes", "fmt").mapInPandas(run, schema=schema)
 
 
 # ---------------------------------------------------------------------------

@@ -1818,7 +1818,7 @@ _add("images_tile_cut", _q_tile_cut, None)
 
 def _q_polygonize(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = fixtures.labels_spark(spark, n=8)
-    return polygonize.polygonize(labels, connectivity=4, tile=10)
+    return polygonize.polygonize(labels, connectivity=4)
 
 _add("images_polygonize", _q_polygonize, None)
 

@@ -1721,9 +1721,10 @@ def footprint(images: DataFrame, nodata: float = 0.0,
     cols c0..c1 spans x in [c0, c1+1]); n_vertices counts the distinct
     exterior-ring vertices (WKT closes the ring with one repeat).
 
-    One mapInPandas pass: run-vectorized CCL (polygonize._label_all) +
-    Moore boundary tracing per part — pixels never shuffle; the output is
-    the skinny vector layer gdal_footprint writes."""
+    One mapInPandas pass: the valid mask goes through
+    polygonize.image_components (run-vectorized CCL, then each part's rings
+    traced on its bbox crop) — pixels never shuffle; the output is the
+    skinny vector layer gdal_footprint writes."""
     from . import polygonize as _poly
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1735,20 +1736,12 @@ def footprint(images: DataFrame, nodata: float = 0.0,
                 img = codecs.decode(bytes(buf), str(fmt))
                 if img.ndim == 3:
                     img = img[:, :, 0]
-                h, w = img.shape
                 mask = (img.astype(np.float64) != float(nodata)).astype(np.uint8)
-                lab, sizes, vals = _poly._label_all(mask, connectivity)
-                for comp in range(len(sizes)):
-                    if vals[comp] == 0:
-                        continue  # nodata background is not a footprint
-                    cm = lab == comp
-                    ys, xs = np.nonzero(cm)
-                    part_id = int((ys * w + xs).min())
-                    ext, holes = _poly.boundary_rings(cm)
+                for part_id, _v, n_px, (y0, x0, y1, x1), (ext, holes) in (
+                    _poly.image_components(mask, connectivity)
+                ):
                     rows.append(
-                        (str(iid), part_id, int(cm.sum()),
-                         int(xs.min()), int(ys.min()),
-                         int(xs.max()) + 1, int(ys.max()) + 1,
+                        (str(iid), part_id, n_px, x0, y0, x1 + 1, y1 + 1,
                          len(ext), _poly.polygon_wkt(ext, holes))
                     )
             if rows:

@@ -1,6 +1,7 @@
-"""Polygonize: distributed tile-CCL + cross-tile label fixpoint must match
-the sequential BFS flood-fill oracle exactly, 4- and 8-connected (the two
-classic GDAL traps are pinned: connectivity + cross-tile merge)."""
+"""Polygonize: the per-image run-based CCL must match the sequential BFS
+flood-fill oracle exactly, 4- and 8-connected (the two classic GDAL traps
+are pinned: connectivity, and components that a tiled labeler would split
+at a seam)."""
 
 from __future__ import annotations
 
@@ -23,10 +24,18 @@ def _decode(pdf):
     return {r["image_id"]: codecs.decode(r["bytes"], r["fmt"]) for _, r in pdf.iterrows()}
 
 
+def _image_df(spark, imgs):
+    from gdal_scripts_spark import codecs
+
+    rows = [(f"e{i}", codecs.encode(img, "pgm"), img.shape[1], img.shape[0],
+             "pgm", "x", 0, 0.0, 0.0) for i, img in enumerate(imgs)]
+    return spark.createDataFrame(rows, schema=fixtures.IMAGES_SCHEMA)
+
+
 @pytest.mark.parametrize("conn", [4, 8])
 def test_polygonize_matches_flood_fill_oracle(labels, conn):
     df, pdf = labels
-    got_rows = polygonize.polygonize(df, connectivity=conn, tile=10).collect()
+    got_rows = polygonize.polygonize(df, connectivity=conn).collect()
     got: dict[str, dict[int, tuple]] = {}
     for r in got_rows:
         got.setdefault(r["image_id"], {})[r["label"]] = (
@@ -56,24 +65,45 @@ def test_connectivity_pinned():
 
 
 def test_cross_tile_blob(spark):
-    # one rectangle spanning the 10x10 tile seam of a 20x20 image must come
-    # out as ONE component (exercises the fixpoint merge)
-    from gdal_scripts_spark import codecs
-    import pandas as pd
-
+    # one rectangle spanning the 10x10 seams of a 20x20 image must come
+    # out as ONE component (a tiled labeler would have to merge it)
     img = np.zeros((20, 20), np.uint8)
     img[4:16, 6:15] = 9  # crosses both seams
-    pdf = pd.DataFrame([{
-        "image_id": "seam", "bytes": codecs.encode(img, "pgm"), "w": 20, "h": 20,
-        "fmt": "pgm", "caption": "x", "phash": 0, "lon": 0.0, "lat": 0.0,
-    }])
-    df = spark.createDataFrame(pdf, schema=fixtures.IMAGES_SCHEMA)
-    rows = polygonize.polygonize(df, connectivity=4, tile=10).collect()
+    rows = polygonize.polygonize(_image_df(spark, [img]), connectivity=4).collect()
     assert len(rows) == 1
     r = rows[0]
     assert r["pixel_count"] == 12 * 9
     assert (r["min_y"], r["min_x"]) == (4, 6)
     assert r["wkt"] == polygonize.np_polygonize(img, 4)[0]["wkt"]
+
+
+_DTYPES = [("image_id", "string"), ("label", "bigint"), ("value", "int"),
+           ("pixel_count", "bigint"), ("min_y", "int"), ("min_x", "int")]
+
+
+@pytest.mark.parametrize("trace", [True, False])
+def test_edge_inputs_keep_schema(spark, trace):
+    want = _DTYPES + ([("wkt", "string")] if trace else [])
+    one = np.full((1, 1), 4, np.uint8)
+    cases = [([], 0), ([np.zeros((5, 7), np.uint8)], 0), ([one], 1)]
+    for imgs, n in cases:
+        out = polygonize.polygonize(_image_df(spark, imgs), trace_rings=trace)
+        assert out.dtypes == want
+        rows = out.collect()
+        assert len(rows) == n
+    r = rows[0]
+    assert (r["label"], r["value"], r["pixel_count"], r["min_y"], r["min_x"]) == (0, 4, 1, 0, 0)
+    if trace:
+        assert r["wkt"] == polygonize.np_polygonize(one)[0]["wkt"]
+        assert r["wkt"] == "POLYGON ((0 0, 0 1, 1 1, 1 0, 0 0))"
+
+
+def test_untraced_rows_are_traced_rows_minus_wkt(labels):
+    df, _ = labels
+    traced = polygonize.polygonize(df).collect()
+    untraced = polygonize.polygonize(df, trace_rings=False).collect()
+    assert len(traced) > 0
+    assert sorted(tuple(r)[:-1] for r in traced) == sorted(tuple(r) for r in untraced)
 
 
 def test_exterior_ring_shapes():
@@ -136,21 +166,12 @@ def test_sieve_fast_matches_bfs_oracle():
 
 
 def test_donut_holes_cross_tile_seam(spark):
-    # donut whose hole straddles the 10x10 tile seam: the distributed path
+    # donut whose hole straddles the 10x10 seam corner: the Spark path
     # must emit POLYGON ((exterior), (hole)) matching the BFS oracle
-    from gdal_scripts_spark import codecs
-    import pandas as pd
-
     img = np.zeros((20, 20), np.uint8)
     img[3:17, 3:17] = 6        # crosses both seams
     img[8:12, 8:12] = 0        # hole centered on the seam corner
-    pdf = pd.DataFrame([{
-        "image_id": "donut", "bytes": codecs.encode(img, "pgm"), "w": 20,
-        "h": 20, "fmt": "pgm", "caption": "x", "phash": 0, "lon": 0.0,
-        "lat": 0.0,
-    }])
-    df = spark.createDataFrame(pdf, schema=fixtures.IMAGES_SCHEMA)
-    rows = polygonize.polygonize(df, connectivity=4, tile=10).collect()
+    rows = polygonize.polygonize(_image_df(spark, [img]), connectivity=4).collect()
     assert len(rows) == 1
     oracle = polygonize.np_polygonize(img, 4)[0]
     assert rows[0]["wkt"] == oracle["wkt"]
@@ -158,21 +179,12 @@ def test_donut_holes_cross_tile_seam(spark):
 
 
 def test_nested_component_inside_hole(spark):
-    from gdal_scripts_spark import codecs
-    import pandas as pd
-
     img = np.zeros((16, 16), np.uint8)
     img[2:14, 2:14] = 5
     img[6:10, 6:10] = 0
     img[7:9, 7:9] = 3          # island inside the hole
-    pdf = pd.DataFrame([{
-        "image_id": "nest", "bytes": codecs.encode(img, "pgm"), "w": 16,
-        "h": 16, "fmt": "pgm", "caption": "x", "phash": 0, "lon": 0.0,
-        "lat": 0.0,
-    }])
-    df = spark.createDataFrame(pdf, schema=fixtures.IMAGES_SCHEMA)
     rows = {r["value"]: r["wkt"] for r in
-            polygonize.polygonize(df, connectivity=4, tile=8).collect()}
+            polygonize.polygonize(_image_df(spark, [img]), connectivity=4).collect()}
     want = {c["value"]: c["wkt"] for c in polygonize.np_polygonize(img, 4)}
     assert rows == want
     assert rows[5].count("(") == 3     # donut has a hole ring

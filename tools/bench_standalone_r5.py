@@ -102,8 +102,8 @@ def submit(cores_max: int, trials: int = 2) -> dict:
     if os.path.isdir("/dev/shm"):
         shm = "/dev/shm/spark-graft-standalone"
         os.makedirs(shm, exist_ok=True)
-        # same tmpfs + no-compress stand-in as bench_scaling.py: this box's
-        # ONE disk is an artifact a real cluster doesn't share; executor
+        # tmpfs + no-compress stand-in for the local runs: a single-node
+        # host's ONE disk is an artifact a real cluster doesn't share; executor
         # local dirs are set through the WORKER env at daemon start, so
         # here it only affects the driver — harmless either way
         conf += ["--conf", f"spark.local.dir={shm}",

@@ -3,7 +3,7 @@
 via ``spark-submit --py-files`` (the north rule's deployment shape) by
 ``tools/bench_standalone_r5.py``, once per cluster size.
 
-Workloads are the exact headline pair from ``bench_scaling.py`` (the
+Workloads are the headline pair of ``BENCH/scaling.json`` (the
 BASELINE.json metric: "spatial-join + tile-assignment"):
 
   assign       tile/cell/quadkey/morton encode over spark.range rows —

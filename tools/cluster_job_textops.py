@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Text-pipeline job for the STANDALONE-CLUSTER scaling bench — submitted
-via ``spark-submit --py-files`` by ``tools/bench_textops_standalone_r5c.py``
-once per cluster size. Workloads are the session's two heaviest new
+via ``spark-submit --py-files``, once per cluster size (the A/B script
+that submitted it was removed; ``BENCH/textops_standalone_r5c.json`` keeps
+its verdict). Workloads are the session's two heaviest new
 operators over the amplified corpus (worst case: every gram frequent,
 every position duplicated):
 
