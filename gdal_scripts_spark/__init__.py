@@ -29,6 +29,10 @@ Module map (SURVEY.md §7):
   vectorops   embedding similarity: brute-force cosine top-k + LSH buckets
   multimodal  binary-column decode plumbing (codec-gated stubs)
   checkpoint  per-partition lineage manifest + exact resume
+  zipcache    Python workers: skip re-reading unchanged zip archives on
+              PySpark's per-task import-cache reset
 """
 
 __version__ = "0.1.0"
+
+from . import zipcache  # noqa: F401  (installs itself in Python workers only)

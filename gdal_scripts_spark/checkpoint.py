@@ -17,6 +17,11 @@ input_fingerprint is an order-insensitive xxhash64 aggregate of the unit's
 input rows: on resume, a unit whose input changed since the committed run is
 re-run (exact resume, not blind skip).
 
+wall_ms is NOT a per-unit time: all units of a run are transformed and
+written by one Spark job, so every unit committed by a run carries that
+run's whole wall time (from finding the pending units to the manifest
+commit), the ``wall_ms`` that ``resumable_run`` returns.
+
 At 100 TB: the manifest is tiny (one row per unit, units sized to thousands
 of input partitions); the anti-join broadcasts it. A failed executor re-runs
 its Spark task natively; a failed/killed JOB resumes at unit granularity.
@@ -116,6 +121,10 @@ def resumable_run(
     manifest rows. Returns a metrics dict.
 
     transform: DataFrame -> DataFrame; must preserve the unit column.
+
+    The returned ``wall_ms`` is the whole run's wall time, and every
+    manifest row the run commits carries that same value; the units are not
+    timed one by one.
     """
     spark = df.sparkSession
     run_id = run_id or uuid.uuid4().hex[:12]
@@ -175,7 +184,10 @@ def resumable_run(
 
 
 def run_metrics(spark: SparkSession, manifest_path: str) -> DataFrame:
-    """Per-run metrics rollup from the manifest (lineage audit surface)."""
+    """Per-run metrics rollup from the manifest (lineage audit surface).
+
+    ``wall_ms`` is the run's wall time: the units of one run all carry it,
+    so their max is that value, not the slowest unit's time."""
     m = read_manifest(spark, manifest_path)
     return m.groupBy("run_id").agg(
         F.count("*").alias("units"),

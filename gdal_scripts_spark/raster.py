@@ -658,13 +658,10 @@ def overview_tiles(tiles: DataFrame, z_child: int,
 
     def combine(key, pdf: pd.DataFrame) -> pd.DataFrame:
         ptx, pty = int(key[0]), int(key[1])
-        first = codecs.decode_png(bytes(pdf["tile_bytes"].iloc[0]))
-        c = 1 if first.ndim == 2 else first.shape[2]
+        imgs = [codecs.decode_png(bytes(b)) for b in pdf["tile_bytes"].values]
+        c = 1 if imgs[0].ndim == 2 else imgs[0].shape[2]
         canvas = np.zeros((2 * TILE, 2 * TILE, c), dtype=np.uint8)
-        for tile_bytes, r_tx, r_ty in zip(
-            pdf["tile_bytes"].values, pdf["tx"].values, pdf["ty"].values
-        ):
-            img = codecs.decode_png(bytes(tile_bytes))
+        for img, r_tx, r_ty in zip(imgs, pdf["tx"].values, pdf["ty"].values):
             if img.ndim == 2:
                 img = img[:, :, None]
             dx = int(r_tx) - 2 * ptx             # 0 or 1

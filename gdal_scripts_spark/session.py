@@ -13,6 +13,16 @@ Local-mode tuning notes (tests run on one JVM, ``local[N]``):
   before the row cap, so raising the row cap is free for them.
 - AQE on: runtime coalescing + skew-join splitting complement the explicit
   hot-cell salting in :mod:`gdal_scripts_spark.joins`.
+- Per-task Python cost: a reused Python worker starts every task with
+  ``importlib.invalidate_caches()`` (``pyspark/worker_util.py:144``). On
+  CPython 3.11 each zipimporter then re-reads its whole archive directory
+  (``zipimport.py:329-336``; 3.13 defers this, ``zipimport.py:276-278``):
+  16 importers over ``pyspark.zip``, the py4j zip and the Spark core jar,
+  117-228 ms of CPU per task on 4 cores, paid by every
+  ``mapInPandas``/``mapInArrow``/``applyInPandas`` stage.
+  :mod:`gdal_scripts_spark.zipcache`, installed when a worker imports this
+  package, skips the archives whose stat stamp did not change; no conf is
+  involved.
 """
 
 from __future__ import annotations

@@ -142,12 +142,16 @@ def test_fingerprint_sees_swapped_duplicate_rows(spark, tmp_path):
 def test_run_metrics_rollup(spark, images, tmp_path):
     out = str(tmp_path / "out")
     man = str(tmp_path / "manifest")
-    checkpoint.resumable_run(
+    ret = checkpoint.resumable_run(
         images, "bucket", ["image_id"], _transform, out, man, run_id="rX"
     )
     m = {r["run_id"]: r for r in checkpoint.run_metrics(spark, man).collect()}
     assert m["rX"]["units"] == 6
     assert m["rX"]["rows_in"] == 120 and m["rX"]["rows_out"] == 120
+    # wall_ms is the run's wall time, carried by every unit of the run
+    units = checkpoint.read_manifest(spark, man).select("wall_ms").collect()
+    assert {r["wall_ms"] for r in units} == {ret["wall_ms"]}
+    assert m["rX"]["wall_ms"] == ret["wall_ms"]
 
 
 def test_streaming_available_now_incremental(spark, tmp_path):

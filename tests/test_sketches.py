@@ -312,6 +312,27 @@ def test_embedding_pca_matches_eigh(spark):
                    - round(float(ev[c] / np.trace(C)), 4)) < 2e-4
 
 
+def test_pca_power_near_degenerate_spectrum_matches_eigh():
+    """Eigenvalues 1.00/0.99/0.98/0.97 plus a tail: power iteration must
+    run to convergence, or the top eigenvectors come back mixed."""
+    from gdal_scripts_spark import vectorops
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    d = 16
+    Q, _ = np.linalg.qr(rng.standard_normal((d, d)))
+    ev = np.r_[1.0, 0.99, 0.98, 0.97, np.linspace(0.5, 0.05, d - 4)]
+    C = (Q * ev) @ Q.T
+    C = (C + C.T) / 2
+    vals, vecs = vectorops.pca_power(C, k=4)
+    w, U = np.linalg.eigh(C)
+    order = np.argsort(w)[::-1][:4]
+    assert np.allclose(vals, w[order], rtol=0, atol=1e-9)
+    for c, j in enumerate(order):
+        u = U[:, j] * np.sign(U[:, j] @ vecs[c])
+        assert np.allclose(vecs[c], u, rtol=0, atol=1e-6), c
+
+
 def test_covariance_moments_partition_invariance(spark):
     from gdal_scripts_spark import vectorops
     import numpy as np
