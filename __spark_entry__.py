@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-entry()      — flagship pipeline smoke (sf0.001): skewed-cell spatial join
-               (salted cell-keyed equi-join + exact PiP refine) aggregated
-               per polygon. The north-star operator end-to-end.
+entry()      — flagship pipeline smoke (sf0.001): broadcast point-in-polygon
+               spatial join of the seeded images against 20 polygons,
+               aggregated per polygon. The north-star operator end-to-end.
 queries()    — one entry per implemented operator family (SURVEY.md §2 +
                training-data ops); see gdal_scripts_spark/queries.py.
 oracle_sql() — DuckDB-runnable ANSI SQL twins for every SQL-expressible

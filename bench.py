@@ -4,7 +4,6 @@
 Workloads (the north-star pipeline + operator families):
   tile_assign      cell/tile/quadkey encode, native columns (map-only)
   spatial_join_bc  broadcast PiP join (flagship plan: the dim side fits)
-  spatial_join_salted  cell-keyed equi-join + hot-cell salting (scale plan)
   knn              grid kNN with ring expansion
   tile_cut         decode + clip + resample + mosaic -> PNG tiles + 1 overview
   minhash_lsh      document near-dup candidates (banded minhash)
@@ -13,8 +12,7 @@ Workloads (the north-star pipeline + operator families):
 
 value = images/sec of the flagship spatial-join + tile-assignment pipeline
 (BASELINE.json : metric), i.e. N_points / (t_tile_assign + t_spatial_join_bc)
-— the realistic Catalyst plan for a broadcastable polygon side; the salted
-cell-keyed path is timed alongside as the both-sides-large plan.
+— the realistic Catalyst plan for a broadcastable polygon side.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_N (default 400000).
@@ -101,17 +99,12 @@ def main() -> None:
     times["spatial_join_bc"], _ = timed(
         lambda: joins.spatial_join_broadcast(points, pack).count()
     )
-    times["spatial_join_salted"], _ = timed(
-        lambda: joins.spatial_join_cells(
-            points, pack, z=8, hot_cell_threshold=20_000, n_salts=8
-        ).count()
-    )
 
     # the co-located plan a 100-TB deployment runs: both sides bucketed on
     # the cell key at WRITE time (one shuffle at ingest, zero per join).
     # Timed separately: the one-time bucketed write vs the shuffle-free join
     # (measured 11.5x vs plain parquet in the round-3 A/B; here it rides the
-    # headline bench so every round records it next to the salted path).
+    # headline bench so every round records it next to the broadcast path).
     from gdal_scripts_spark import bucketing
 
     pts_cells = joins.with_cell(points, z=8)

@@ -15,7 +15,7 @@ Module map (SURVEY.md §7):
   codecs      numpy image codecs (PPM/PGM/PNG via zlib), aHash, GDAL checksum
   fixtures    deterministic seeded generators for images/polygons/query_points
   geom        polygon packs, ray-cast PiP, shoelace area/centroid, rect clip
-  joins       cell-keyed + broadcast spatial joins, semi/anti, hot-cell salting
+  joins       broadcast PiP and S2 rings-covering spatial joins, semi/anti
   overlay     P5 GEOS predicate family (exact segment/PiP kernel) + U2 layer
               algebra (intersection/erase/union via convex S-H clip)
   knn         grid-partitioned kNN with sound ring expansion

@@ -217,12 +217,6 @@ def cell_id(lon, lat, z: int) -> Column:
     return F.shiftleft(F.lit(z).cast("long"), 58).bitwiseOR(morton_interleave(tx, ty))
 
 
-def cell_id_from_tile(tx, ty_xyz, z: int) -> Column:
-    return F.shiftleft(F.lit(z).cast("long"), 58).bitwiseOR(
-        morton_interleave(_c(tx), _c(ty_xyz))
-    )
-
-
 # ---------------------------------------------------------------------------
 # Ring neighbors (constant offset explode — used by knn.py)
 # ---------------------------------------------------------------------------
@@ -396,14 +390,6 @@ def np_hilbert_d(tx, ty, z: int):
         y = np.where(flip, (s - 1) - y, y)
         s >>= 1
     return d
-
-
-def np_hilbert_cell_id(lon, lat, z: int):
-    tx, ty = np_lonlat_to_tile_tms(lon, lat, z)
-    ty_xyz = (1 << z) - 1 - ty
-    tx = np.clip(tx, 0, (1 << z) - 1)
-    ty_xyz = np.clip(ty_xyz, 0, (1 << z) - 1)
-    return (np.int64(z) << np.int64(58)) | np_hilbert_d(tx, ty_xyz, z)
 
 
 # ---------------------------------------------------------------------------

@@ -220,18 +220,6 @@ def _fallback_partition_topk(
     )
 
 
-def np_haversine_matrix(qlon, qlat, plon, plat):
-    import numpy as np
-
-    rad = np.pi / 180.0
-    ql = qlat[:, None] * rad
-    pl = plat[None, :] * rad
-    dlat = (plat[None, :] - qlat[:, None]) * rad / 2.0
-    dlon = (plon[None, :] - qlon[:, None]) * rad / 2.0
-    a = np.sin(dlat) ** 2 + np.cos(ql) * np.cos(pl) * np.sin(dlon) ** 2
-    return 2.0 * cells.HAVERSINE_RADIUS * np.arcsin(np.sqrt(a))
-
-
 def knn_join(
     queries: DataFrame,
     points: DataFrame,

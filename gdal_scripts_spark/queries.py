@@ -1750,8 +1750,7 @@ _add("pq_topk_ivf", _q_pq_topk_ivf, None)  # approximate; golden-pinned rows
 def _q_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     images = fixtures.images_spark(spark, n=800)
     pack = fixtures.polygons_pack(p=20)
-    pairs = joins.spatial_join_cells(images, pack, z=8,
-                                     hot_cell_threshold=100, n_salts=4)
+    pairs = joins.spatial_join_broadcast(images, pack)
     return (
         pairs.groupBy("poly_id").agg(F.count("*").alias("n_images"))
         .orderBy("poly_id")
@@ -1796,14 +1795,17 @@ SELECT event_id, poly_id FROM par WHERE k % 2 = 1
 
 def _q_pip_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 refined by the JVM higher-order parity fold
-    (joins.refine_pip_native via spatial_join_s2(refine="native")): S2
-    bbox covering -> broadcast parent-snap joins -> bbox filter -> parity
-    fold over pack_edges_df. No Python refine stage; same pairs as the
-    Arrow paths."""
+    (joins.refine_pip_native via spatial_join_s2 with pack=None): S2
+    rings covering -> broadcast parent-snap joins -> interior bypass or
+    bbox filter + parity fold over pack_edges_df. No Python refine stage;
+    same pairs as the Arrow paths."""
     pts = _pts_events(spark, sf_dir)
     pack = fixtures.polygons_pack(p=48)
-    return joins.spatial_join_s2(pts, pack, max_level=9, id_col="event_id",
-                                 refine="native")
+    return joins.spatial_join_s2(
+        pts, None, id_col="event_id",
+        regions=joins.s2_cover_regions(spark, pack, 9),
+        edges=joins.pack_edges_df(spark, pack),
+    )
 
 
 _add("pip_native_hof", _q_pip_native, _pip_native_oracle())
@@ -5684,10 +5686,10 @@ WHERE lon >= 2.0e1 AND lon <= 6.0e1 AND lat >= 1.0e1 AND lat <= 4.0e1
 
 def _q_pip_s2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 via the S2-indexed plan (joins.spatial_join_s2): per-polygon
-    mixed-level S2 bbox covering -> parent-snap equi-joins -> exact
-    even-odd Arrow refine. Same pairs as every other PiP path; the oracle
-    is the SAME independent plain-SQL parity fold used for
-    pip_native_hof — no S2 math on the oracle side."""
+    mixed-level S2 rings covering -> parent-snap equi-joins -> exact
+    even-odd Arrow refine of the boundary-cell candidates. Same pairs as
+    every other PiP path; the oracle is the SAME independent plain-SQL
+    parity fold used for pip_native_hof — no S2 math on the oracle side."""
     pts = _pts_events(spark, sf_dir)
     pack = fixtures.polygons_pack(p=48)
     return joins.spatial_join_s2(pts, pack, max_level=9, id_col="event_id")
@@ -5697,8 +5699,8 @@ _add("pip_s2_cover", _q_pip_s2, _pip_native_oracle())
 
 
 def _q_pip_s2_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2 via the round-5 at-scale S2 plan shape: shape-aware rings
-    covering, regions NOT broadcast (shuffled hash containment join —
+    """J2 via the round-5 at-scale S2 plan shape: rings covering,
+    regions NOT broadcast (shuffled hash containment join —
     the region-set-too-large-to-broadcast regime), and the pure-Column
     lon/lat-grid prefilter ahead of the Arrow leaf encode. Measured the
     fastest plan in its regime (BENCH/s2_regime_ab_r5.json); same pairs
@@ -5707,7 +5709,7 @@ def _q_pip_s2_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _pts_events(spark, sf_dir)
     pack = fixtures.polygons_pack(p=48)
     return joins.spatial_join_s2(
-        pts, pack, max_level=9, id_col="event_id", cover="rings",
+        pts, pack, max_level=9, id_col="event_id",
         broadcast_regions=False, prefilter_z=6,
     )
 
@@ -5721,9 +5723,9 @@ def _q_pip_s2_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     built BY THE CLUSTER (s2_cover_regions_from_table, one mapInPandas
     pass) and its edge arrays as pure Column HOFs
     (polygon_edges_df_from_table); the containment join and the parity
-    refine both run as SHUFFLED hash joins (refine='native',
-    broadcast_regions=False). No PolygonPack, no broadcast, nothing in
-    the plan bounded by driver memory or driver CPU — the shape that
+    refine both run as SHUFFLED hash joins (pack=None selects the parity
+    fold; broadcast_regions=False). No PolygonPack, no broadcast, nothing
+    in the plan bounded by driver memory or driver CPU — the shape that
     survives a 1M-polygon dim side. Oracle: the same independent
     plain-SQL parity fold as every other PiP path."""
     pts = _pts_events(spark, sf_dir)
@@ -5732,7 +5734,7 @@ def _q_pip_s2_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = joins.polygon_edges_df_from_table(polys)
     return joins.spatial_join_s2(
         pts, None, id_col="event_id", regions=regions,
-        refine="native", edges=edges, broadcast_regions=False,
+        edges=edges, broadcast_regions=False,
     )
 
 

@@ -11,8 +11,9 @@ Local-mode tuning notes (tests run on one JVM, ``local[N]``):
   image-payload rows, bounding Python-worker memory (SURVEY.md §4
   "Physical-execution decisions") — fat rows hit the bytes cap long
   before the row cap, so raising the row cap is free for them.
-- AQE on: runtime coalescing + skew-join splitting complement the explicit
-  hot-cell salting in :mod:`gdal_scripts_spark.joins`.
+- AQE on: runtime coalescing + skew-join splitting of the shuffled joins
+  (e.g. :func:`gdal_scripts_spark.joins.spatial_join_s2` with
+  ``broadcast_regions=False``).
 - Per-task Python cost: a reused Python worker starts every task with
   ``importlib.invalidate_caches()`` (``pyspark/worker_util.py:144``). On
   CPython 3.11 each zipimporter then re-reads its whole archive directory

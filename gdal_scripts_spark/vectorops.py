@@ -63,36 +63,6 @@ def cosine_topk_bruteforce(
     )
 
 
-def l2_topk_bruteforce(
-    queries: DataFrame, corpus: DataFrame, k: int = 5,
-    qid: str = "vec_id", cid: str = "vec_id", vec: str = "embedding",
-) -> DataFrame:
-    """(qid, rank, neighbor_id, dist) EXACT squared-L2 top-k via the same
-    zip_with/aggregate JVM fold the PQ re-rank stage uses — the
-    apples-to-apples exactness baseline for the ADC codes scan (same
-    metric, same per-row arithmetic; round-4 ADVICE). Broadcast nested
-    loop by design, like cosine_topk_bruteforce."""
-    q = queries.select(
-        F.col(qid).alias("qid"), F.col(vec).cast("array<double>").alias("qv")
-    )
-    c = corpus.select(
-        F.col(cid).alias("neighbor_id"), F.col(vec).cast("array<double>").alias("cv")
-    )
-    d = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    wnd = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("neighbor_id"))
-    return (
-        F.broadcast(q).crossJoin(c)
-        .filter(F.col("qid") != F.col("neighbor_id"))
-        .withColumn("dist", d)
-        .withColumn("rank", F.row_number().over(wnd))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "neighbor_id", F.round("dist", 6).alias("dist"))
-    )
-
-
 def _planes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim)).tolist()

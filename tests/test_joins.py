@@ -1,13 +1,12 @@
-"""Spatial join paths (broadcast PiP, salted cell-keyed equi-join) must all
-match the sequential numpy oracle exactly (BASELINE north_star: join result
-rows exact)."""
+"""Spatial join paths (broadcast PiP; the S2 covering join's parity-fold
+refine) must match the sequential numpy oracle exactly (BASELINE
+north_star: join result rows exact)."""
 
 from __future__ import annotations
 
-import re
-
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from gdal_scripts_spark import fixtures, geom, joins
 
@@ -39,32 +38,6 @@ def test_broadcast_join_matches_oracle(world):
     got = _collect_pairs(joins.spatial_join_broadcast(images, pack))
     assert len(oracle) > 20  # fixture really produces hits
     assert got == oracle
-
-
-@pytest.mark.parametrize("broadcast", [True, False],
-                         ids=["broadcast", "shuffle"])
-def test_cell_join_salted_matches_oracle(spark, world, broadcast):
-    """Salted cell join matches the oracle, both when Catalyst may
-    broadcast the small cover side and when broadcasting is disabled —
-    then the candidate join must run as a shuffle join on (cell, salt)."""
-    images, pack, oracle = world
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    if not broadcast:
-        spark.conf.set(key, "-1")
-    try:
-        df = joins.spatial_join_cells(
-            images, pack, z=8, hot_cell_threshold=5, n_salts=4
-        )
-        got = _collect_pairs(df)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set(key, old)
-    assert got == oracle
-    if not broadcast:
-        assert re.search(
-            r"(SortMergeJoin|ShuffledHashJoin) \[cell#\d+L, salt#\d+L\]", plan
-        ), plan
 
 
 def test_semi_anti_partition(world):
@@ -158,7 +131,7 @@ def test_no_python_udf_in_cell_key_stage(world):
 
 
 def test_native_join_holed_polygon_parity():
-    """The JVM parity fold (spatial_join_s2 refine="native") runs over all
+    """The JVM parity fold (spatial_join_s2 with pack=None) runs over all
     rings: a point in the hole is OUTSIDE, a point in the annulus is
     inside — on a constructed donut, not just the random fixtures."""
     from gdal_scripts_spark.session import get_spark
@@ -171,5 +144,11 @@ def test_native_join_holed_polygon_parity():
         [("in_annulus", 1.5, 5.0), ("in_hole", 5.0, 5.0), ("outside", 11.0, 5.0)],
         schema="image_id string, lon double, lat double",
     )
-    got = _collect_pairs(joins.spatial_join_s2(pts, pack, refine="native"))
+    # the solid square's covering, every cell boundary: all three points
+    # are candidates and only the fold over the donut's edges decides
+    solid = geom.PolygonPack.from_rings([(7, [outer])])
+    regions = joins.s2_cover_regions(spark, solid).withColumn(
+        "interior", F.lit(False))
+    got = _collect_pairs(joins.spatial_join_s2(
+        pts, None, regions=regions, edges=joins.pack_edges_df(spark, pack)))
     assert got == {("in_annulus", 7)}

@@ -293,15 +293,38 @@ def test_cover_rect_complete_near_pole():
 def test_spatial_join_s2_matches_broadcast(spark):
     """The S2-indexed join path returns the EXACT same (point, poly) pairs
     as the direct broadcast Arrow path — covering prefilter changes the
-    plan, never the answer."""
-    from gdal_scripts_spark import fixtures, joins
+    plan, never the answer — also for polygons at the poles and on the
+    antimeridian."""
+    from gdal_scripts_spark import fixtures, geom, joins
 
-    pts = fixtures.points_spark(spark, 4000, partitions=8)
-    pack = fixtures.polygons_pack(p=60)
-    a = set(map(tuple, joins.spatial_join_s2(pts, pack, max_level=8)
-                .collect()))
+    def square(x0, y0, x1, y1):
+        return [np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]])]
+
+    edge = [
+        (1000, square(-2.0, 89.92, 2.0, 90.0)),
+        (1001, square(-1.0, 89.5, 1.0, 89.99)),
+        (1002, square(-1.0, -89.99, 1.0, -89.5)),
+        (1003, square(179.99, 10.0, 180.0, 11.0)),
+        (1004, square(-180.0, 10.0, -179.99, 11.0)),
+    ]
+    fx = fixtures.polygons_pack(p=60)
+    pack = geom.PolygonPack.from_rings(
+        [(int(fx.poly_ids[i]), fx.rings_of(i)) for i in range(fx.n_polys)]
+        + edge)
+    edge_pts = spark.createDataFrame(
+        [("pole", 0.0, 89.95), ("north", 0.5, 89.97), ("south", 0.5, -89.97),
+         ("east", 179.999, 10.5), ("west", -179.999, 10.5)],
+        schema="image_id string, lon double, lat double")
+    pts = fixtures.points_spark(spark, 4000, partitions=8).select(
+        "image_id", "lon", "lat").unionByName(edge_pts)
     b = set(map(tuple, joins.spatial_join_broadcast(pts, pack).collect()))
-    assert a == b and len(a) > 0
+    assert {(i, p) for i, p in b if p >= 1000} == {
+        ("pole", 1000), ("pole", 1001), ("north", 1000), ("north", 1001),
+        ("south", 1002), ("east", 1003), ("west", 1004)}
+    for level in (9, 12):
+        a = set(map(tuple, joins.spatial_join_s2(pts, pack, max_level=level)
+                    .collect()))
+        assert a == b, level
 
 
 def test_spatial_join_s2_shuffled_regions_matches_broadcast(spark):
@@ -313,7 +336,7 @@ def test_spatial_join_s2_shuffled_regions_matches_broadcast(spark):
 
     pts = fixtures.points_spark(spark, 4000, partitions=8)
     pack = fixtures.polygons_pack(p=60)
-    df = joins.spatial_join_s2(pts, pack, max_level=8, cover="rings",
+    df = joins.spatial_join_s2(pts, pack, max_level=8,
                                broadcast_regions=False)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" not in plan, "regions were silently broadcast"
@@ -438,8 +461,8 @@ def test_spatial_join_s2_rings_matches_broadcast(spark):
 
     pts = fixtures.points_spark(spark, 3000, partitions=8)
     pack = fixtures.polygons_pack(p=30)
-    a = set(map(tuple, joins.spatial_join_s2(pts, pack, max_level=8,
-                                             cover="rings").collect()))
+    a = set(map(tuple, joins.spatial_join_s2(pts, pack, max_level=8)
+                .collect()))
     b = set(map(tuple, joins.spatial_join_broadcast(pts, pack).collect()))
     assert a == b and len(a) > 0
 
@@ -466,8 +489,8 @@ def test_cover_polygon_flags_interior_exact():
 
 
 def test_spatial_join_s2_interior_shortcut_fires(spark):
-    """cover='rings' must route interior-cell candidates around the Arrow
-    refine (pairs come from the codegen equi-join alone) and still match
+    """The rings covering must route interior-cell candidates around the
+    Arrow refine (pairs come from the codegen equi-join alone) and still match
     the broadcast path exactly on a polygon big enough to have interior
     cells — including its hole."""
     from gdal_scripts_spark import fixtures, geom, joins
@@ -487,7 +510,7 @@ def test_spatial_join_s2_interior_shortcut_fires(spark):
         "lat": rng.uniform(-5.0, 33.0, 4000),
     })
     pts = spark.createDataFrame(pdf)
-    got = joins.spatial_join_s2(pts, pack, max_level=8, cover="rings")
+    got = joins.spatial_join_s2(pts, pack, max_level=8)
     a = set(map(tuple, got.collect()))
     b = set(map(tuple, joins.spatial_join_broadcast(pts, pack).collect()))
     assert a == b and len(a) > 0
@@ -497,12 +520,6 @@ def test_spatial_join_s2_interior_shortcut_fires(spark):
     # the shortcut really fired: interior cells exist in the covering
     _, flags = s2.np_s2_cover_polygon_flags(pack.edges_of(0), max_level=8)
     assert flags.any()
-    # split mode (interior pairs emitted JVM-side, probe persisted) is
-    # pair-identical too — same covering, different plan shape
-    c = set(map(tuple, joins.spatial_join_s2(
-        pts, pack, max_level=8, cover="rings",
-        split_interior=True).collect()))
-    assert c == b
 
 
 def test_cover_rect_bad_inputs():
@@ -538,9 +555,11 @@ def test_s2_cover_regions_from_table_matches_driver(spark):
     a = set(map(tuple, joins.s2_cover_regions_from_table(
         polys, max_level=8).collect()))
     b = set(map(tuple, joins.s2_cover_regions(
-        spark, pack, max_level=8, cover="rings").collect()))
+        spark, pack, max_level=8).collect()))
     assert a == b and len(a) > 0
     assert any(t[2] for t in a), "no interior cells — covering degenerate"
+    with pytest.raises(ValueError, match="rings"):
+        joins.s2_cover_regions(spark, pack, cover="bbox")
 
 
 def test_polygon_edges_df_from_table_matches_pack(spark):
@@ -567,16 +586,18 @@ def test_polygon_edges_df_from_table_matches_pack(spark):
 
 
 def test_spatial_join_s2_native_refine_matches_arrow(spark):
-    """refine="native" (pure-Column parity fold + interior OR-bypass) is
-    pair-identical to the Arrow refine, broadcast and shuffled."""
+    """pack=None (pure-Column parity fold + interior OR-bypass) is
+    pair-identical to the Arrow path, broadcast and shuffled."""
     from gdal_scripts_spark import fixtures, joins
 
     pts = fixtures.points_spark(spark, 4000, partitions=8)
     pack = fixtures.polygons_pack(p=60)
+    regions = joins.s2_cover_regions(spark, pack, max_level=8)
+    edges = joins.pack_edges_df(spark, pack)
     b = set(map(tuple, joins.spatial_join_broadcast(pts, pack).collect()))
     for bc in (True, False):
         a = set(map(tuple, joins.spatial_join_s2(
-            pts, pack, max_level=8, cover="rings", refine="native",
+            pts, None, regions=regions, edges=edges,
             broadcast_regions=bc).collect()))
         assert a == b and len(a) > 0
 
@@ -593,8 +614,8 @@ def test_spatial_join_s2_fully_table_driven(spark):
     regions = joins.s2_cover_regions_from_table(polys, max_level=8)
     edges = joins.polygon_edges_df_from_table(polys)
     df = joins.spatial_join_s2(
-        pts, None, id_col="image_id", regions=regions, refine="native",
-        edges=edges, broadcast_regions=False)
+        pts, None, id_col="image_id", regions=regions, edges=edges,
+        broadcast_regions=False)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" not in plan, "dim side silently broadcast"
     a = set(map(tuple, df.collect()))
@@ -613,48 +634,11 @@ def test_spatial_join_s2_pack_none_requires_artifacts(spark):
     polys = fixtures.polygons_spark(spark, p=5)
     regions = joins.s2_cover_regions_from_table(polys, max_level=8)
     with pytest.raises(ValueError, match="edges"):
-        joins.spatial_join_s2(pts, None, regions=regions, refine="native")
-    with pytest.raises(ValueError, match="prefilter_tiles"):
-        joins.spatial_join_s2(pts, None, regions=regions, prefilter_z=6)
-    with pytest.raises(ValueError, match="refine"):
-        joins.spatial_join_s2(pts, None, regions=regions, refine="bogus")
-
-
-def test_grid_cover_tiles_from_table_matches_driver(spark):
-    """The pure-Column prefilter-tile build over a polygons TABLE emits
-    the exact key set of the driver-side _grid_cover_keys — the third
-    and last dim-side artifact of the pack=None regime goes
-    cluster-built."""
-    from gdal_scripts_spark import fixtures, joins
-
-    pack = fixtures.polygons_pack(p=40)
-    polys = fixtures.polygons_spark(spark, p=40).repartition(8)
-    for z in (5, 8):
-        a = {
-            r["_ctile"]
-            for r in joins.grid_cover_tiles_from_table(polys, z).collect()
-        }
-        b = set(map(int, joins._grid_cover_keys(pack.bbox, z)))
-        assert a == b and len(a) > 0
-
-
-def test_spatial_join_s2_table_driven_prefiltered(spark):
-    """pack=None + prefilter_z with cluster-built tiles: the coarse prune
-    is conservative, so pairs match the broadcast oracle exactly."""
-    from gdal_scripts_spark import fixtures, joins
-
-    pts = fixtures.points_spark(spark, 4000, partitions=8)
-    pack = fixtures.polygons_pack(p=60)
-    polys = fixtures.polygons_spark(spark, p=60).repartition(8)
-    regions = joins.s2_cover_regions_from_table(polys, max_level=8)
+        joins.spatial_join_s2(pts, None, regions=regions)
     edges = joins.polygon_edges_df_from_table(polys)
-    tiles = joins.grid_cover_tiles_from_table(polys, 8)
-    df = joins.spatial_join_s2(
-        pts, None, regions=regions, refine="native", edges=edges,
-        broadcast_regions=False, prefilter_z=8, prefilter_tiles=tiles)
-    a = set(map(tuple, df.collect()))
-    b = set(map(tuple, joins.spatial_join_broadcast(pts, pack).collect()))
-    assert a == b and len(a) > 0
+    with pytest.raises(ValueError, match="prefilter_z"):
+        joins.spatial_join_s2(pts, None, regions=regions, edges=edges,
+                              prefilter_z=6)
 
 
 def test_hilbert_sort_orders_by_cell_and_preserves_rows(spark):
