@@ -4600,7 +4600,7 @@ _add("geom_reproject_conic", _q_geom_reproject_conic, _conic_oracle_sql())
 def _q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zonal statistics (raster x vector): 60 deterministic 16x12 PGM
     rasters placed on a world grid by part key, 3 overlapping rect zones.
-    Engine path: broadcast PolygonPack -> mapInPandas per-image partial
+    Engine path: broadcast PolygonPack -> mapInArrow per-image partial
     moments -> groupBy(zone) exact combine (zonal.py). The oracle is a
     FULLY INDEPENDENT pixel enumeration: DuckDB cross-joins range(h) x
     range(w), recomputes the closed-form pixel value and the center-in-rect

@@ -19,11 +19,12 @@ Reference semantics (public GDAL 3.8.x tree), re-expressed Spark-first:
               (``apps/gdal_translate_lib.cpp : -srcwin (≈L1500)``) + inverse-
               map resample (``alg/gdalwarpkernel.cpp : GWKNearestNoMasks /
               GWKBilinear``) + mosaic overlay (``osgeo_utils/gdal_merge.py :
-              raster_copy_with_nodata (≈L100)``).
+              raster_copy_with_nodata (≈L100)``). Here: a ``mapInArrow``
+              fragment pass and a grouped ``applyInArrow`` overlay per tile.
 - pyramid:    ``alg/overview.cpp : GDALRegenerateOverviews (≈L2000)`` 2x2
               average + ``gdal2tiles.py : create_overview_tile (≈L800)`` —
-              one groupBy(parent) job per zoom level (same per-level barrier
-              the reference has).
+              one groupBy(parent) ``applyInArrow`` job per zoom level (same
+              per-level barrier the reference has).
 - band math:  ``osgeo_utils/gdal_calc.py : doit() (≈L200-400)`` — numpy
               expression over bands inside Arrow batches.
 - translate:  ``apps/gdal_translate_lib.cpp : GDALTranslate (≈L900)`` —
@@ -49,11 +50,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import cells, codecs, geom
+from . import arrowrows, cells, codecs, geom
 
 DEFAULT_PIX_M = 100.0
 TILE = 256
 _DEC_COLS = ["image_id", "bytes", "fmt"]
+# output of the tile-pyramid stages (cut_base_tiles, overview_tiles)
+_PYRAMID_DDL = ("z int, tx long, ty long, y_xyz long, tile_bytes binary, "
+                "checksum int, n_src int")
 
 
 def _decode_row(b: bytes, fmt: str) -> np.ndarray:
@@ -484,63 +488,52 @@ def cut_base_tiles(images: DataFrame, z: int, pix_m: float = DEFAULT_PIX_M,
     )
 
     CHUNK = 64  # small emitted batches: see cut_image_tiles.render
-    fcols = ["image_id", "tx", "ty", "px0", "py0", "fw", "fh", "c", "frag"]
+    frag_ddl = ("image_id string, tx long, ty long, px0 int, py0 int, "
+                "fw int, fh int, c int, frag binary")
+    frag_schema = arrowrows.arrow_schema(frag_ddl)
+    out_schema = arrowrows.arrow_schema(_PYRAMID_DDL)
 
-    def frag(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def frag(batches):
         rows = []
         for b in batches:
+            d = b.to_pydict()
             for iid, byts, fmt, mx0, my1, tx, ty in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values,
-                b["mx0"].values, b["my1"].values, b["tx"].values, b["ty"].values,
+                d["image_id"], d["bytes"], d["fmt"], d["mx0"], d["my1"],
+                d["tx"], d["ty"],
             ):
-                img = _decode_row(byts, fmt)
-                got = _resample_fragment(
-                    img, float(mx0), float(my1), pix_m, int(tx), int(ty), z,
-                    resampling,
-                )
+                got = _resample_fragment(_decode_row(byts, fmt), mx0, my1,
+                                         pix_m, tx, ty, z, resampling)
                 if got is None:
                     continue
                 px0, py0, crop = got
-                rows.append(
-                    (iid, int(tx), int(ty), px0, py0,
-                     crop.shape[1], crop.shape[0], crop.shape[2], crop.tobytes())
-                )
+                rows.append((iid, tx, ty, px0, py0, crop.shape[1],
+                             crop.shape[0], crop.shape[2], crop.tobytes()))
                 if len(rows) >= CHUNK:
-                    yield pd.DataFrame(rows, columns=fcols)
+                    yield from arrowrows.rows_table(rows, frag_schema).to_batches()
                     rows = []
         if rows:
-            yield pd.DataFrame(rows, columns=fcols)
+            yield from arrowrows.rows_table(rows, frag_schema).to_batches()
 
-    frags = assigned.mapInPandas(
-        frag,
-        schema="image_id string, tx long, ty long, px0 int, py0 int, "
-               "fw int, fh int, c int, frag binary",
-    )
+    frags = assigned.mapInArrow(frag, schema=frag_ddl)
 
-    def overlay(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
-        c = int(pdf["c"].iloc[0])
+    # grouped Arrow UDFs stay unannotated: PySpark 4.1 applyInArrow fails
+    # on partial type hints
+    def overlay(key, tbl):
+        tx, ty = key[0].as_py(), key[1].as_py()
+        d = tbl.to_pydict()
+        c = d["c"][0]
         canvas = np.zeros((TILE, TILE, c), dtype=np.uint8)
-        pdf = pdf.sort_values("image_id")  # deterministic input order
-        for frag, fh, fw, fc, py0, px0 in zip(
-            pdf["frag"].values, pdf["fh"].values, pdf["fw"].values,
-            pdf["c"].values, pdf["py0"].values, pdf["px0"].values,
-        ):
-            a = np.frombuffer(frag, np.uint8).reshape(fh, fw, fc)
+        # deterministic input order: last image_id wins
+        for i in sorted(range(tbl.num_rows), key=d["image_id"].__getitem__):
+            fh, fw, py0, px0 = d["fh"][i], d["fw"][i], d["py0"][i], d["px0"][i]
+            a = np.frombuffer(d["frag"][i], np.uint8).reshape(fh, fw, d["c"][i])
             canvas[py0 : py0 + fh, px0 : px0 + fw] = a
         img = canvas[:, :, 0] if c == 1 else canvas
-        png = codecs.encode_png(img)
-        return pd.DataFrame(
-            [(z, tx, ty, (1 << z) - 1 - ty, png,
-              codecs.gdal_style_checksum(img), len(pdf))],
-            columns=["z", "tx", "ty", "y_xyz", "tile_bytes", "checksum", "n_src"],
-        )
+        return arrowrows.rows_table(
+            [(z, tx, ty, (1 << z) - 1 - ty, codecs.encode_png(img),
+              codecs.gdal_style_checksum(img), tbl.num_rows)], out_schema)
 
-    return frags.groupBy("tx", "ty").applyInPandas(
-        overlay,
-        schema="z int, tx long, ty long, y_xyz long, tile_bytes binary, "
-               "checksum int, n_src int",
-    )
+    return frags.groupBy("tx", "ty").applyInArrow(overlay, schema=_PYRAMID_DDL)
 
 
 def cut_image_tiles(images: DataFrame, z: int, pix_m: float = DEFAULT_PIX_M,
@@ -655,36 +648,33 @@ def overview_tiles(tiles: DataFrame, z_child: int,
     TMS orientation: the child with the LARGER ty is the TOP half of the
     parent image (y-up grid vs y-down pixels — pinned by test)."""
     zp = z_child - 1
+    out_schema = arrowrows.arrow_schema(_PYRAMID_DDL)
 
-    def combine(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ptx, pty = int(key[0]), int(key[1])
-        imgs = [codecs.decode_png(bytes(b)) for b in pdf["tile_bytes"].values]
+    def combine(key, tbl):  # unannotated: see cut_base_tiles.overlay
+        ptx, pty = key[0].as_py(), key[1].as_py()
+        d = tbl.to_pydict()
+        imgs = [codecs.decode_png(b) for b in d["tile_bytes"]]
         c = 1 if imgs[0].ndim == 2 else imgs[0].shape[2]
         canvas = np.zeros((2 * TILE, 2 * TILE, c), dtype=np.uint8)
-        for img, r_tx, r_ty in zip(imgs, pdf["tx"].values, pdf["ty"].values):
+        for img, r_tx, r_ty in zip(imgs, d["tx"], d["ty"]):
             if img.ndim == 2:
                 img = img[:, :, None]
-            dx = int(r_tx) - 2 * ptx             # 0 or 1
-            dy = int(r_ty) - 2 * pty             # 0 (bottom) or 1 (top)
+            dx = r_tx - 2 * ptx                  # 0 or 1
+            dy = r_ty - 2 * pty                  # 0 (bottom) or 1 (top)
             row0 = (1 - dy) * TILE               # ty parity 1 -> top half
             canvas[row0 : row0 + TILE, dx * TILE : (dx + 1) * TILE] = img
         small = np_downsample2x(canvas, resampling)
         img = small[:, :, 0] if c == 1 else small
-        return pd.DataFrame(
+        return arrowrows.rows_table(
             [(zp, ptx, pty, (1 << zp) - 1 - pty, codecs.encode_png(img),
-              codecs.gdal_style_checksum(img), len(pdf))],
-            columns=["z", "tx", "ty", "y_xyz", "tile_bytes", "checksum", "n_src"],
-        )
+              codecs.gdal_style_checksum(img), tbl.num_rows)], out_schema)
 
     return (
-        tiles.withColumn("ptx", F.floor(F.col("tx") / 2))
+        tiles.select("tx", "ty", "tile_bytes")
+        .withColumn("ptx", F.floor(F.col("tx") / 2))
         .withColumn("pty", F.floor(F.col("ty") / 2))
         .groupBy("ptx", "pty")
-        .applyInPandas(
-            combine,
-            schema="z int, tx long, ty long, y_xyz long, tile_bytes binary, "
-                   "checksum int, n_src int",
-        )
+        .applyInArrow(combine, schema=_PYRAMID_DDL)
     )
 
 

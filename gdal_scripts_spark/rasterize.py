@@ -7,11 +7,12 @@ Reference semantics: ``alg/gdalrasterize.cpp : GDALRasterizeGeometries
 
 Spark-first plan: polygons → covering (z, tx, ty) tiles via the bbox cover
 (the same conservative pretest as the spatial join) exploded into a
-DataFrame; one Arrow pass fills each (polygon, tile) fragment's 256x256
-pixel-center mask from per-row edge crossings (``geom.pip_grid_edges``:
-Raptor-style pixel runs, O(rows x edges) instead of a ray cast per pixel);
-a grouped overlay merges fragments per tile (replace = last poly wins in
-poly_id order, add = sum of hits — gdal_rasterize MERGE_ALG). Independence
+DataFrame; one ``mapInArrow`` pass fills each (polygon, tile) fragment's
+256x256 pixel-center mask from per-row edge crossings
+(``geom.pip_grid_edges``: Raptor-style pixel runs, O(rows x edges) instead
+of a ray cast per pixel); a grouped ``applyInArrow`` overlay merges
+fragments per tile (replace = last poly wins in poly_id order, add = sum of
+hits — gdal_rasterize MERGE_ALG). Independence
 rests on two other algorithms: the per-pixel ray cast
 (``geom.pip_even_odd_edges`` over the full grid) is the mask kernel's test
 oracle, and :func:`np_rasterize_counts` is a sequential scanline fill with
@@ -25,14 +26,11 @@ degrees). ALL_TOUCHED=false exactly as the reference default.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import cells, geom, joins
+from . import arrowrows, cells, geom, joins
 
 TILE = 256
 
@@ -49,38 +47,45 @@ def _tile_pixel_lonlat(tx: int, ty: int, z: int):
     return lon, lat
 
 
+def _cover(spark, pack: geom.PolygonPack, z: int) -> DataFrame:
+    """(poly_id, cell) rows of the bbox covering, as an Arrow-backed local
+    DataFrame: one built from a Python list is a Python RDD that every job
+    re-reads in Python workers (~1 CPU-s per job at 900 rows, 4 cores)."""
+    schema = arrowrows.arrow_schema("poly_id long, cell long")
+    return spark.createDataFrame(
+        arrowrows.rows_table(joins.polygon_cover_cells(pack, z), schema))
+
+
 def rasterize_counts(
     polygons_pack: geom.PolygonPack, spark, z: int = 8
 ) -> DataFrame:
     """(poly_id, z, tx, ty, y_xyz, burned) — burned-pixel count per covering
     tile, even-odd, ALL_TOUCHED=false (FIXTURES.md golden/rasterize.json)."""
-    cover = spark.createDataFrame(
-        joins.polygon_cover_cells(polygons_pack, z), schema="poly_id long, cell long"
-    )
+    cover = _cover(spark, polygons_pack, z)
     bc = spark.sparkContext.broadcast(polygons_pack)
 
-    def burn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    out_ddl = "poly_id long, z int, tx long, ty long, y_xyz long, burned long"
+    out_schema = arrowrows.arrow_schema(out_ddl)
+
+    def burn(batches):
         pk = bc.value
         pos = {int(p): i for i, p in enumerate(pk.poly_ids)}
         n = 1 << z
         for b in batches:
             rows = []
-            for cell_v, poly_v in zip(b["cell"].values, b["poly_id"].values):
-                _, tx, ty_xyz = (int(v) for v in cells.np_cell_to_tile(int(cell_v)))
+            d = b.to_pydict()
+            for cell_v, pid in zip(d["cell"], d["poly_id"]):
+                _, tx, ty_xyz = (int(v) for v in cells.np_cell_to_tile(cell_v))
                 ty = n - 1 - ty_xyz
                 lon, lat = _tile_pixel_lonlat(tx, ty, z)
-                hit = geom.pip_grid_edges(lon, lat, pk.edges_of(pos[int(poly_v)]))
+                hit = geom.pip_grid_edges(lon, lat, pk.edges_of(pos[pid]))
                 burned = int(np.count_nonzero(hit))
                 if burned:
-                    rows.append((int(poly_v), z, tx, ty, ty_xyz, burned))
+                    rows.append((pid, z, tx, ty, ty_xyz, burned))
             if rows:
-                yield pd.DataFrame(
-                    rows, columns=["poly_id", "z", "tx", "ty", "y_xyz", "burned"]
-                )
+                yield from arrowrows.rows_table(rows, out_schema).to_batches()
 
-    return cover.mapInPandas(
-        burn, schema="poly_id long, z int, tx long, ty long, y_xyz long, burned long"
-    )
+    return cover.mapInArrow(burn, schema=out_ddl)
 
 
 def rasterize_tiles(
@@ -97,55 +102,52 @@ def rasterize_tiles(
     (MERGE_ALG=ADD)."""
     if merge_alg not in ("replace", "add"):
         raise ValueError(merge_alg)
-    cover = spark.createDataFrame(
-        joins.polygon_cover_cells(polygons_pack, z), schema="poly_id long, cell long"
-    )
+    cover = _cover(spark, polygons_pack, z)
     bc = spark.sparkContext.broadcast(polygons_pack)
     burn_map = burn_attr or {}
 
-    def frag(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    frag_ddl = "poly_id long, tx long, ty long, y_xyz long, mask binary"
+    frag_schema = arrowrows.arrow_schema(frag_ddl)
+    out_ddl = "z int, tx long, ty long, y_xyz long, tile_bytes binary"
+    out_schema = arrowrows.arrow_schema(out_ddl)
+
+    def frag(batches):
         pk = bc.value
         pos = {int(p): i for i, p in enumerate(pk.poly_ids)}
         n = 1 << z
         for b in batches:
             rows = []
-            for cell_v, poly_v in zip(b["cell"].values, b["poly_id"].values):
-                _, tx, ty_xyz = (int(v) for v in cells.np_cell_to_tile(int(cell_v)))
+            d = b.to_pydict()
+            for cell_v, pid in zip(d["cell"], d["poly_id"]):
+                _, tx, ty_xyz = (int(v) for v in cells.np_cell_to_tile(cell_v))
                 ty = n - 1 - ty_xyz
                 lon, lat = _tile_pixel_lonlat(tx, ty, z)
-                pid = int(poly_v)
                 hit = geom.pip_grid_edges(lon, lat, pk.edges_of(pos[pid]))
                 if hit.any():
                     rows.append((pid, tx, ty, ty_xyz, np.packbits(hit).tobytes()))
             if rows:
-                yield pd.DataFrame(
-                    rows, columns=["poly_id", "tx", "ty", "y_xyz", "mask"]
-                )
+                yield from arrowrows.rows_table(rows, frag_schema).to_batches()
 
-    frags = cover.mapInPandas(
-        frag, schema="poly_id long, tx long, ty long, y_xyz long, mask binary"
-    )
+    frags = cover.mapInArrow(frag, schema=frag_ddl)
 
-    def overlay(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
+    # grouped Arrow UDFs stay unannotated: PySpark 4.1 applyInArrow fails
+    # on partial type hints
+    def overlay(key, tbl):
+        tx, ty = key[0].as_py(), key[1].as_py()
         canvas = np.zeros((TILE, TILE), dtype=np.int32)
-        srt = pdf.sort_values("poly_id")
-        for mask_v, poly_v in zip(srt["mask"].values, srt["poly_id"].values):
+        d = tbl.to_pydict()
+        for pid, mask_v in sorted(zip(d["poly_id"], d["mask"]), key=lambda r: r[0]):
             m = np.unpackbits(np.frombuffer(mask_v, np.uint8))[: TILE * TILE]
             m = m.reshape(TILE, TILE).astype(bool)
-            v = int(burn_map.get(int(poly_v), poly_v))
+            v = int(burn_map.get(pid, pid))
             if merge_alg == "add":
                 canvas[m] += v
             else:
                 canvas[m] = v
-        return pd.DataFrame(
-            [(z, tx, ty, (1 << z) - 1 - ty, canvas.tobytes())],
-            columns=["z", "tx", "ty", "y_xyz", "tile_bytes"],
-        )
+        return arrowrows.rows_table(
+            [(z, tx, ty, (1 << z) - 1 - ty, canvas.tobytes())], out_schema)
 
-    return frags.groupBy("tx", "ty").applyInPandas(
-        overlay, schema="z int, tx long, ty long, y_xyz long, tile_bytes binary"
-    )
+    return frags.groupBy("tx", "ty").applyInArrow(overlay, schema=out_ddl)
 
 
 # ---------------------------------------------------------------------------
@@ -242,36 +244,37 @@ def rasterize_touched(
     of cells the polygon TOUCHES, totalled over its covering tiles. Same
     cover + Arrow-fragment plan as rasterize_counts; only the per-fragment
     kernel differs."""
-    cover = spark.createDataFrame(
-        joins.polygon_cover_cells(polygons_pack, z), schema="poly_id long, cell long"
-    )
+    cover = _cover(spark, polygons_pack, z)
     bc = spark.sparkContext.broadcast(polygons_pack)
 
-    def burn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    out_schema = arrowrows.arrow_schema("poly_id long, burned long")
+
+    def burn(batches):
         pk = bc.value
         pos = {int(p): i for i, p in enumerate(pk.poly_ids)}
         n = 1 << z
         res = cells.resolution(z)
         for b in batches:
             rows = []
-            for cell_v, poly_v in zip(b["cell"].values, b["poly_id"].values):
-                _, tx, ty_xyz = (int(v) for v in cells.np_cell_to_tile(int(cell_v)))
+            d = b.to_pydict()
+            for cell_v, pid in zip(d["cell"], d["poly_id"]):
+                _, tx, ty_xyz = (int(v) for v in cells.np_cell_to_tile(cell_v))
                 ty = n - 1 - ty_xyz
                 txmin = tx * TILE * res - cells.ORIGIN_SHIFT
                 tymax = (ty + 1) * TILE * res - cells.ORIGIN_SHIFT
                 rings_uv = []
-                for ring in pk.rings_of(pos[int(poly_v)]):
+                for ring in pk.rings_of(pos[pid]):
                     mx, my = cells.np_lonlat_to_meters(ring[:, 0], ring[:, 1])
                     rings_uv.append(
                         np.column_stack(((mx - txmin) / res, (tymax - my) / res))
                     )
                 burned = int(np_touched_mask(rings_uv).sum())
                 if burned:
-                    rows.append((int(poly_v), burned))
+                    rows.append((pid, burned))
             if rows:
-                yield pd.DataFrame(rows, columns=["poly_id", "burned"])
+                yield from arrowrows.rows_table(rows, out_schema).to_batches()
 
-    frags = cover.mapInPandas(burn, schema="poly_id long, burned long")
+    frags = cover.mapInArrow(burn, schema="poly_id long, burned long")
     return frags.groupBy("poly_id").agg(
         F.count("*").alias("n_tiles"), F.sum("burned").alias("burned_total")
     )

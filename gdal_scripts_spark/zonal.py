@@ -11,7 +11,7 @@ Spark-first shape — built for 100 TB of imagery:
 
 1. the zone layer (small side) is a flat :class:`geom.PolygonPack`,
    broadcast ONCE per executor via ``sparkContext.broadcast``;
-2. ONE ``mapInPandas`` pass over the images computes, per (image, zone),
+2. ONE ``mapInArrow`` pass over the images computes, per (image, zone),
    the *partial* moments (n, sum, sum-of-squares, min, max) — pixels never
    leave the task, so the only shuffle is O(images x zones-touched) tiny
    rows, not O(pixels);
@@ -28,14 +28,11 @@ per-pixel ray cast stays the oracle (:func:`np_zonal_oracle`).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import codecs, geom
+from . import arrowrows, codecs, geom
 
 _PARTIAL_SCHEMA = (
     "image_id string, zone_id long, n long, s double, s2 double, "
@@ -61,16 +58,18 @@ def zonal_partials(
     spark = images.sparkSession
     bc = spark.sparkContext.broadcast(pack)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    out_schema = arrowrows.arrow_schema(_PARTIAL_SCHEMA)
+
+    def run(batches):
         pk = bc.value
         bx0, by0, bx1, by1 = pk.bbox.T
         for b in batches:
             rows: list[tuple] = []
+            d = b.to_pydict()
             for iid, buf, fmt, x0, y1 in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values,
-                b["x0"].values, b["y1"].values,
+                d["image_id"], d["bytes"], d["fmt"], d["x0"], d["y1"]
             ):
-                img = codecs.decode(bytes(buf), str(fmt))
+                img = codecs.decode(buf, fmt)
                 bandv = (img if img.ndim == 2 else img[:, :, band]).astype(
                     np.float64
                 )
@@ -90,19 +89,16 @@ def zonal_partials(
                     v = bandv[np.ix_(rm, cm)][hit]
                     if len(v):
                         rows.append(
-                            (str(iid), int(pk.poly_ids[z]), len(v),
+                            (iid, int(pk.poly_ids[z]), len(v),
                              float(v.sum()), float((v * v).sum()),
                              float(v.min()), float(v.max()))
                         )
             if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "image_id", "zone_id", "n", "s", "s2", "vmin", "vmax",
-                    ],
-                )
+                yield from arrowrows.rows_table(rows, out_schema).to_batches()
 
-    return images.mapInPandas(run, schema=_PARTIAL_SCHEMA)
+    return images.select("image_id", "bytes", "fmt", "x0", "y1").mapInArrow(
+        run, schema=_PARTIAL_SCHEMA
+    )
 
 
 def zonal_stats(

@@ -354,9 +354,10 @@ def test_spatial_join_s2_coarse_prefilter_matches(spark):
     pts = fixtures.points_spark(spark, 4000, partitions=8)
     pack = fixtures.polygons_pack(p=60)
     b = set(map(tuple, joins.spatial_join_broadcast(pts, pack).collect()))
+    regions = joins.s2_cover_regions(spark, pack, 8)
     for z in (4, 6, 8):
         a = set(map(tuple, joins.spatial_join_s2(
-            pts, pack, max_level=8, prefilter_z=z).collect()))
+            pts, pack, regions=regions, prefilter_z=z).collect()))
         assert a == b, z
     assert len(b) > 0
 
@@ -454,17 +455,6 @@ def test_cover_cap_polar():
     idx = np.searchsorted(mn[order], leaf, "right") - 1
     assert np.all(idx >= 0)
     assert np.all(leaf <= mx[order][idx])
-
-
-def test_spatial_join_s2_rings_matches_broadcast(spark):
-    from gdal_scripts_spark import fixtures, joins
-
-    pts = fixtures.points_spark(spark, 3000, partitions=8)
-    pack = fixtures.polygons_pack(p=30)
-    a = set(map(tuple, joins.spatial_join_s2(pts, pack, max_level=8)
-                .collect()))
-    b = set(map(tuple, joins.spatial_join_broadcast(pts, pack).collect()))
-    assert a == b and len(a) > 0
 
 
 def test_cover_polygon_flags_interior_exact():
