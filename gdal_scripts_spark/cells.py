@@ -160,23 +160,23 @@ def lonlat_to_tile_geodetic(lon, lat, z: int) -> tuple[Column, Column]:
 # ---------------------------------------------------------------------------
 
 def quadkey(tx, ty_tms, z: int) -> Column:
-    """Bing-style quadkey string of length z, built with unrolled bit ops.
+    """Bing-style quadkey string of length z (0 <= z <= 32).
 
     Matches GlobalMercator.QuadTree: flips TMS y to XYZ then emits one digit
-    per zoom bit (msb first): digit = bit(tx) + 2*bit(y_xyz).
+    per zoom bit (msb first): digit = bit(tx) + 2*bit(y_xyz). That digit
+    string is the Morton interleave of the two tile indices written in
+    base 4, so one ``conv`` builds it. Only the low z bits of each index
+    count, as in the reference, and z > 32 would leave ``conv``'s unsigned
+    64-bit range.
     """
-    tx = _c(tx)
-    ty = tms_to_xyz_y(_c(ty_tms), z)
-    digits = []
-    for i in range(z, 0, -1):
-        d = (
-            F.shiftright(tx, i - 1).bitwiseAND(F.lit(1))
-            + F.shiftright(ty, i - 1).bitwiseAND(F.lit(1)) * 2
-        )
-        digits.append(d.cast("string"))
-    if not digits:
+    if not 0 <= z <= 32:
+        raise ValueError(f"zoom {z} out of range 0..32")
+    if z == 0:
         return F.lit("")
-    return F.concat(*digits)
+    low = F.lit((1 << z) - 1)
+    m = morton_interleave(_c(tx).bitwiseAND(low),
+                          tms_to_xyz_y(_c(ty_tms), z).bitwiseAND(low))
+    return F.lpad(F.conv(m.cast("string"), 10, 4), z, "0")
 
 
 # ---------------------------------------------------------------------------

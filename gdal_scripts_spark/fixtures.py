@@ -18,7 +18,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from . import codecs, geom
+from . import arrowrows, codecs, geom
 
 SEED = 42
 
@@ -127,10 +127,28 @@ def make_points_pdf(n: int, seed: int = SEED) -> pd.DataFrame:
     )
 
 
+POINTS_SCHEMA = "image_id string, lon double, lat double, phash long"
+
+
 def points_spark(spark, n: int, seed: int = SEED, partitions: int | None = None):
-    df = spark.createDataFrame(
-        make_points_pdf(n, seed), schema="image_id string, lon double, lat double, phash long"
-    )
+    """:func:`make_points_pdf` as a DataFrame generated in the executors.
+
+    Task ``i`` of ``k`` (at most ``defaultParallelism``) builds the whole
+    table and keeps rows ``[i*n//k, (i+1)*n//k)``: the slices
+    ``createDataFrame`` would give, without a driver-built local relation
+    that rides, serialized, in every task reading it (cached or not)."""
+    import pyarrow as pa
+
+    k = max(min(n, spark.sparkContext.defaultParallelism), 1)
+    schema = arrowrows.arrow_schema(POINTS_SCHEMA)
+
+    def gen(batches):
+        for b in batches:
+            for i in b.column("id").to_pylist():
+                pdf = make_points_pdf(n, seed).iloc[i * n // k:(i + 1) * n // k]
+                yield pa.RecordBatch.from_pandas(pdf, schema=schema, preserve_index=False)
+
+    df = spark.range(0, k, 1, k).mapInArrow(gen, schema=POINTS_SCHEMA)
     return df.repartition(partitions) if partitions else df
 
 

@@ -10,13 +10,13 @@ Spark-first redesign (NOT a port): the O(N·M) nested loop becomes one of
 two plans, both returning the same pairs:
 
 1. **broadcast PiP join** (:func:`spatial_join_broadcast`) — polygons
-   packed flat (:class:`geom.PolygonPack`) and broadcast; one
-   ``mapInArrow`` pass over the points emits one row per matched point
-   (its id and the array of polygons it falls in), and a JVM ``explode``
-   fans that row out to (point, polygon) pairs. Zero shuffle of the big
-   side; the whole join is one map stage. Right
-   whenever the polygon side fits in executor memory (the reference's
-   entire use case).
+   packed flat (:class:`geom.PolygonPack`) and broadcast; a scalar Arrow
+   UDF over each point's ``(lon, lat)`` returns the array of polygons it
+   falls in, and a JVM ``explode`` fans that out to (point, polygon)
+   pairs. The point id never enters Python. Zero shuffle of the big
+   side; the whole join is one map stage. Right whenever the polygon side
+   fits in executor memory (the reference's entire use case). The semi
+   and anti joins filter on the same UDF's array size.
 
 2. **S2 covering join** (:func:`spatial_join_s2`) — one covering per
    polygon, the shape-aware rings covering
@@ -45,10 +45,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from . import cells, geom
+from . import arrowrows, cells, geom
 
 
 def with_cell(df: DataFrame, z: int, lon: str = "lon", lat: str = "lat",
@@ -102,73 +103,41 @@ def polygon_cover_cells(pack: geom.PolygonPack, z: int) -> list[tuple[int, int]]
 # 1) broadcast PiP join (small/medium polygon side — the default)
 # ---------------------------------------------------------------------------
 
-# Arrow list offsets are int32, so one output batch carries < 2^31 poly ids
-_LIST_MAX_VALUES = 2**31 - 1
+# Arrow list offsets are int32: one batch's list column holds < 2^31 ids
+_MAX_BATCH_HITS = 2**31 - 1
 
 
-def _per_point_batches(ids, idx: np.ndarray, pid: np.ndarray, id_col: str):
-    """Group one batch's (point row ``idx``, ``pid``) hits by point and
-    yield ``(id_col, poly_ids)`` record batches: one row per matched
-    point, its id taken once from ``ids``. Batches are split between
-    points so no batch's list column holds more than ``_LIST_MAX_VALUES``
-    ids (a single point's list is never split)."""
-    import pyarrow as pa
+def _hits_by_point(n: int, idx: np.ndarray, pid: np.ndarray) -> pa.ListArray:
+    """``n``-row list column whose row ``i`` holds the ``pid`` of every hit
+    with ``idx == i``, in hit order (empty for a point with no hit).
 
-    order = np.argsort(idx, kind="stable")
-    idx, pid = idx[order], pid[order]
-    starts = np.flatnonzero(np.diff(idx, prepend=-1))
-    offsets = np.append(starts, len(idx))
-    rows = ids.take(pa.array(idx[starts]))
-    lo = 0
-    while lo < len(starts):
-        end = offsets[lo] + _LIST_MAX_VALUES
-        hi = max(int(np.searchsorted(offsets, end, "right")) - 1, lo + 1)
-        off = offsets[lo:hi + 1]
-        poly_ids = pa.ListArray.from_arrays(
-            pa.array((off - off[0]).astype(np.int32)), pa.array(pid[off[0]:off[-1]])
-        )
-        yield pa.RecordBatch.from_arrays(
-            [rows.slice(lo, hi - lo), poly_ids], names=[id_col, "poly_ids"]
-        )
-        lo = hi
+    A scalar UDF returns one row per input row, so a batch's list column
+    cannot be split; its hits must fit the int32 offsets."""
+    if len(idx) > _MAX_BATCH_HITS:
+        raise ValueError(
+            f"{len(idx)} PiP hits in one Arrow batch overflow its int32 list "
+            "offsets; lower spark.sql.execution.arrow.maxRecordsPerBatch")
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(np.bincount(idx, minlength=n), out=offsets[1:])
+    values = pa.array(pid[np.argsort(idx, kind="stable")], type=pa.int64())
+    return pa.ListArray.from_arrays(pa.array(offsets), values)
 
 
-def _pip_hits_per_point(
-    points: DataFrame,
-    pack: geom.PolygonPack,
-    id_col: str = "image_id",
-    lon: str = "lon",
-    lat: str = "lat",
-) -> DataFrame:
-    """``(id_col, poly_ids array<long>)``: one row per point inside at least
-    one polygon of ``pack``, from one ``mapInArrow`` pass over the points.
-    Points with no hit emit no row.
+def _poly_ids(points: DataFrame, pack: geom.PolygonPack, lon: str, lat: str):
+    """``array<long>`` Column: the ids of the polygons of ``pack`` that
+    contain each point, from a scalar Arrow UDF over ``(lon, lat)``.
 
-    The pack rides the closure → Spark broadcasts it once per executor;
-    pixels/captions never enter the stage (column pruning keeps the scan to
-    id+lon+lat)."""
-    spark = points.sparkSession
-    bc = spark.sparkContext.broadcast(pack)
-    id_field = points.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_field}, poly_ids array<long>"
+    Spark plans it as ``ArrowEvalPython``: only the two coordinates cross
+    into Python, while the rest of each row waits in the JVM. The pack
+    rides a broadcast, read once per executor."""
+    bc = points.sparkSession.sparkContext.broadcast(pack)
 
-    def run(batches):
-        # mapInArrow: coords come out zero-copy as numpy; ids are gathered
-        # with Arrow take() — no Python string objects ever materialize
-        # (SURVEY.md §4: keep strings/binary out of the Python hot path)
-        pk = bc.value
-        if pk._grid is None:
-            pk.build_grid()
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            px = b.column(lon).to_numpy(zero_copy_only=False)
-            py = b.column(lat).to_numpy(zero_copy_only=False)
-            idx, pid = geom.pip_batch(px, py, pk)
-            if len(idx):
-                yield from _per_point_batches(b.column(id_col), idx, pid, id_col)
+    def poly_ids(lon: pa.Array, lat: pa.Array) -> pa.Array:
+        idx, pid = geom.pip_batch(lon.to_numpy(zero_copy_only=False),
+                                  lat.to_numpy(zero_copy_only=False), bc.value)
+        return _hits_by_point(len(lon), idx, pid)
 
-    return points.select(id_col, lon, lat).mapInArrow(run, schema=out_schema)
+    return F.arrow_udf(poly_ids, "array<long>")(F.col(lon), F.col(lat))
 
 
 def spatial_join_broadcast(
@@ -178,34 +147,36 @@ def spatial_join_broadcast(
     lon: str = "lon",
     lat: str = "lat",
 ) -> DataFrame:
-    """(id_col, poly_id) pairs: one ``mapInArrow`` pass emits a row per
-    matched point with its array of polygon ids, and a JVM ``explode``
-    fans it out to pairs.
+    """(id_col, poly_id) pairs: a scalar Arrow UDF gives every point the
+    array of polygon ids it falls in, and a JVM ``explode`` fans it out to
+    pairs.
 
-    Why per-point rows: the Arrow hop back from the Python workers was the
-    join's biggest layer. Pair-shaped output repeats the whole id for every
-    pair, and the JVM decodes every copy. On the ``broadcast_join``
-    benchmark (480k points carrying a 7-field struct id, 200 overlapping
-    polygons, 7.6M pairs) the workers sent back 585,066,872 B as pairs and
-    94,954,496 B as per-point rows."""
-    return _pip_hits_per_point(points, pack, id_col, lon, lat).select(
-        id_col, F.explode("poly_ids").alias("poly_id")
-    )
-
-
-def spatial_semi_join(points: DataFrame, pack: geom.PolygonPack, **kw) -> DataFrame:
-    """OGRLayer::Clip analog — rows of `points` inside ANY polygon. The
-    per-point hit rows are the hit ids: no fan-out to pairs, no distinct."""
-    id_col = kw.get("id_col", "image_id")
-    hits = _pip_hits_per_point(points, pack, **kw).select(id_col)
-    return points.join(F.broadcast(hits), id_col, "left_semi")
+    Why this shape: the Arrow hop is the join's biggest layer, and its
+    cost is the bytes it moves. Pair-shaped output repeats the whole id
+    for every pair; a ``mapInArrow`` over the points ships every id into
+    Python and the hit ids back. The UDF takes only ``lon, lat`` and
+    returns only the arrays, so the id, of any Spark type, never leaves
+    the JVM. On the ``broadcast_join`` benchmark (480k points carrying a
+    7-field struct id, 200 overlapping polygons, 7.6M pairs; seed 1) the
+    per-job bytes to Python fell from 41,351,456 to 7,800,768 and the
+    bytes back from 94,954,496 to 62,889,728 (585,066,872 back as
+    pairs)."""
+    return points.select(
+        id_col, F.explode(_poly_ids(points, pack, lon, lat)).alias("poly_id"))
 
 
-def spatial_anti_join(points: DataFrame, pack: geom.PolygonPack, **kw) -> DataFrame:
+def spatial_semi_join(points: DataFrame, pack: geom.PolygonPack,
+                      lon: str = "lon", lat: str = "lat") -> DataFrame:
+    """OGRLayer::Clip analog — rows of `points` inside ANY polygon. Each
+    row is kept or dropped on its own coordinates: no fan-out to pairs,
+    no join on an id."""
+    return points.filter(F.size(_poly_ids(points, pack, lon, lat)) > 0)
+
+
+def spatial_anti_join(points: DataFrame, pack: geom.PolygonPack,
+                      lon: str = "lon", lat: str = "lat") -> DataFrame:
     """OGRLayer::Erase analog — rows of `points` inside NO polygon."""
-    id_col = kw.get("id_col", "image_id")
-    hits = _pip_hits_per_point(points, pack, **kw).select(id_col)
-    return points.join(F.broadcast(hits), id_col, "left_anti")
+    return points.filter(F.size(_poly_ids(points, pack, lon, lat)) == 0)
 
 
 # ---------------------------------------------------------------------------
@@ -275,8 +246,8 @@ def s2_cover_regions(
         cov, interior = s2mod.np_s2_cover_polygon_flags(
             pack.edges_of(i), max_level=max_level)
         rows.extend((pid, int(c), bool(f)) for c, f in zip(cov, interior))
-    return spark.createDataFrame(
-        rows, schema="poly_id long, cell long, interior boolean")
+    return spark.createDataFrame(arrowrows.rows_table(
+        rows, arrowrows.arrow_schema("poly_id long, cell long, interior boolean")))
 
 
 def s2_cover_regions_from_table(
@@ -449,10 +420,9 @@ def spatial_join_s2(
     if regions is None:
         regions = s2_cover_regions(spark, pack, max_level=max_level)
     if prefilter_z is not None:
-        coarse = spark.createDataFrame(
+        coarse = spark.createDataFrame(arrowrows.rows_table(
             [(int(c),) for c in _grid_cover_keys(pack.bbox, prefilter_z)],
-            schema="_ctile long",
-        )
+            arrowrows.arrow_schema("_ctile long")))
         points = points.join(
             F.broadcast(coarse),
             _grid_key_col(lon, lat, prefilter_z) == coarse["_ctile"],
@@ -496,14 +466,10 @@ def pack_edges_df(spark: SparkSession, pack: geom.PolygonPack) -> DataFrame:
         ]
         bx0, by0, bx1, by1 = (float(v) for v in pack.bbox[p])
         rows.append((int(pack.poly_ids[p]), bx0, by0, bx1, by1, edges))
-    return spark.createDataFrame(
-        rows,
-        schema=(
-            "poly_id long, bxmin double, bymin double, bxmax double, "
-            "bymax double, edges array<struct<x1:double,y1:double,"
-            "x2:double,y2:double>>"
-        ),
-    )
+    return spark.createDataFrame(arrowrows.rows_table(rows, arrowrows.arrow_schema(
+        "poly_id long, bxmin double, bymin double, bxmax double, "
+        "bymax double, edges array<struct<x1:double,y1:double,"
+        "x2:double,y2:double>>")))
 
 
 def pip_parity_expr(edges_col, lon_col, lat_col):

@@ -39,6 +39,18 @@ Local-mode tuning notes (tests run on one JVM, ``local[N]``):
   1 CPU-s per job for 900 rows on 4 cores, against 0.1-0.2 for the same
   rows from a ``pyarrow.Table``). Small driver-built inputs that jobs
   re-read are built from Arrow tables (``rasterize._cover``).
+- A table built on the driver, as a ``LocalRelation`` (``createDataFrame``
+  from pandas or Arrow below
+  ``spark.sql.execution.arrow.localRelationThreshold``) or as a
+  parallelized collection, rides serialized in every task that reads it,
+  even when it is cached: each
+  partition object holds its slice of the rows, and a task over the cache
+  still ships its partition. Spark warns "task of very large size". A
+  ``count()`` of the 480k cached benchmark points cost 1.2-1.8 CPU-s
+  (process tree, median 1.31) that way, against 0.6-0.9 (median 0.70)
+  generated in the executors
+  (:func:`gdal_scripts_spark.fixtures.points_spark`, 4 cores). Only small
+  tables, such as the join coverings, should be driver-built.
 """
 
 from __future__ import annotations

@@ -101,23 +101,44 @@ def test_spark_tile_matches_oracle(pts_df):
 
 def test_spark_cell_and_quadkey_match_oracle(pts_df):
     df, lon, lat = pts_df
-    z = 8
-    tx_c, ty_c = cells.lonlat_to_tile_tms(F.col("lon"), F.col("lat"), z)
-    rows = (
-        df.select(
-            F.col("lon"),
-            cells.cell_id(F.col("lon"), F.col("lat"), z).alias("cell"),
-            cells.quadkey(tx_c, ty_c, z).alias("qk"),
+    for z in (0, 1, 8, 23, 29):
+        tx_c, ty_c = cells.lonlat_to_tile_tms(F.col("lon"), F.col("lat"), z)
+        rows = (
+            df.select(
+                F.col("lon"),
+                cells.cell_id(F.col("lon"), F.col("lat"), z).alias("cell"),
+                cells.quadkey(tx_c, ty_c, z).alias("qk"),
+            )
+            .collect()
         )
-        .collect()
-    )
-    ocell = cells.np_cell_id(lon, lat, z)
-    otx, oty = cells.np_lonlat_to_tile_tms(lon, lat, z)
-    by_lon = {r["lon"]: r for r in rows}
-    for i in range(len(lon)):
-        r = by_lon[lon[i]]
-        assert r["cell"] == int(ocell[i])
-        assert r["qk"] == cells.np_quadkey(int(otx[i]), int(oty[i]), z)
+        ocell = cells.np_cell_id(lon, lat, z)
+        otx, oty = cells.np_lonlat_to_tile_tms(lon, lat, z)
+        by_lon = {r["lon"]: r for r in rows}
+        for i in range(len(lon)):
+            r = by_lon[lon[i]]
+            assert r["cell"] == int(ocell[i])
+            assert r["qk"] == cells.np_quadkey(int(otx[i]), int(oty[i]), z)
+        # the corner tiles of the zoom: every digit 0, 1, 2 or 3
+        n = 1 << z
+        corners = [(0, 0), (n - 1, 0), (0, n - 1), (n - 1, n - 1)]
+        assert spark_quadkeys(df.sparkSession, corners, z) == [
+            cells.np_quadkey(tx, ty, z) for tx, ty in corners]
+
+
+def spark_quadkeys(spark, tiles, z):
+    return [r["qk"] for r in spark.createDataFrame(tiles, "tx long, ty long")
+            .select(cells.quadkey(F.col("tx"), F.col("ty"), z).alias("qk"))
+            .collect()]
+
+
+def test_quadkey_zoom_range(spark):
+    """z = 32 fills conv's unsigned 64-bit range; z = 33 is refused."""
+    n = 1 << 32
+    tiles = [(0, 0), (n - 1, 0), (n - 1, n - 1)]
+    assert spark_quadkeys(spark, tiles, 32) == [
+        cells.np_quadkey(tx, ty, 32) for tx, ty in tiles]
+    with pytest.raises(ValueError, match="zoom 33"):
+        cells.quadkey(F.col("tx"), F.col("ty"), 33)
 
 
 def test_spark_bounds_roundtrip(spark):
