@@ -112,19 +112,25 @@ IMAGES_SCHEMA = (
 )
 
 
+def _points_columns(n: int, seed: int, lo: int, hi: int) -> dict[str, np.ndarray]:
+    """Rows ``[lo, hi)`` of :func:`make_points_pdf`'s columns. The whole
+    rng stream is drawn so a slice matches the table's rows, but the id
+    strings are built for the slice only."""
+    rng = np.random.default_rng(seed)
+    lon, lat = _skewed_lonlat(rng, n)
+    phash = rng.integers(-(2**62), 2**62, n, dtype=np.int64)
+    return {
+        "image_id": np.char.add("img", np.arange(lo, hi).astype("U10")),
+        "lon": lon[lo:hi],
+        "lat": lat[lo:hi],
+        "phash": phash[lo:hi],
+    }
+
+
 def make_points_pdf(n: int, seed: int = SEED) -> pd.DataFrame:
     """Vectorized metadata-only images table (no pixel payload) — the
     spatial-bench workload: same Zipf-skewed cells, millions of rows fast."""
-    rng = np.random.default_rng(seed)
-    lon, lat = _skewed_lonlat(rng, n)
-    return pd.DataFrame(
-        {
-            "image_id": np.char.add("img", np.arange(n).astype("U10")),
-            "lon": lon,
-            "lat": lat,
-            "phash": rng.integers(-(2**62), 2**62, n, dtype=np.int64),
-        }
-    )
+    return pd.DataFrame(_points_columns(n, seed, 0, n))
 
 
 POINTS_SCHEMA = "image_id string, lon double, lat double, phash long"
@@ -133,10 +139,10 @@ POINTS_SCHEMA = "image_id string, lon double, lat double, phash long"
 def points_spark(spark, n: int, seed: int = SEED, partitions: int | None = None):
     """:func:`make_points_pdf` as a DataFrame generated in the executors.
 
-    Task ``i`` of ``k`` (at most ``defaultParallelism``) builds the whole
-    table and keeps rows ``[i*n//k, (i+1)*n//k)``: the slices
-    ``createDataFrame`` would give, without a driver-built local relation
-    that rides, serialized, in every task reading it (cached or not)."""
+    Task ``i`` of ``k`` (at most ``defaultParallelism``) builds rows
+    ``[i*n//k, (i+1)*n//k)``: the slices ``createDataFrame`` would give,
+    without a driver-built local relation that rides, serialized, in every
+    task reading it (cached or not)."""
     import pyarrow as pa
 
     k = max(min(n, spark.sparkContext.defaultParallelism), 1)
@@ -145,8 +151,9 @@ def points_spark(spark, n: int, seed: int = SEED, partitions: int | None = None)
     def gen(batches):
         for b in batches:
             for i in b.column("id").to_pylist():
-                pdf = make_points_pdf(n, seed).iloc[i * n // k:(i + 1) * n // k]
-                yield pa.RecordBatch.from_pandas(pdf, schema=schema, preserve_index=False)
+                cols = _points_columns(n, seed, i * n // k, (i + 1) * n // k)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(cols[f.name], type=f.type) for f in schema], schema=schema)
 
     df = spark.range(0, k, 1, k).mapInArrow(gen, schema=POINTS_SCHEMA)
     return df.repartition(partitions) if partitions else df

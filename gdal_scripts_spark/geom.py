@@ -16,9 +16,11 @@ Spark-first design: polygons are packed into flat numpy arrays
 (:class:`PolygonPack`) that serialize once and ship to every executor as a
 Spark broadcast — the analog of the reference's in-process prepared-geometry
 cache (``ogrlayer.cpp : USE_PREPARED_GEOMETRIES``). The PiP kernel is called
-from Arrow-batched pandas UDFs only; no per-row Python. A bbox-sorted
-uniform grid over the pack plays the R-tree's role (``shptree.c :
-SHPTreeFindLikelyShapes``) for candidate pruning inside a batch.
+from Arrow UDFs only; no per-row Python. A classified cell index over the
+pack plays the R-tree's role (``shptree.c : SHPTreeFindLikelyShapes``):
+built once, it lists per grid cell the polygons that contain the cell whole
+(hits as they stand) or whose outline passes near it (the only pairs that
+pay the ray cast) — Raptor's interior/boundary split (VLDB'19).
 
 Boundary rule (pinned by tests): strict even-odd ray cast with half-open
 edges — a point exactly on a horizontal lower edge counts as inside-adjacent
@@ -29,6 +31,7 @@ irrational-ish floats so golden outputs never sit on edges.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 import numpy as np
 
@@ -241,8 +244,96 @@ def clip_ring_rect(
 
 
 # ---------------------------------------------------------------------------
-# PolygonPack — flat broadcastable polygon set + uniform grid index
+# PolygonPack — flat broadcastable polygon set + classified cell index
 # ---------------------------------------------------------------------------
+
+# (cell, polygon) entries a pack's cell index may hold (at least 4 per
+# polygon): the cell side follows from it, so the index size does not
+# depend on the polygons' extent
+_INDEX_SLOTS = 1 << 18
+# a (cell, polygon) entry is *boundary* when an edge comes within _EPS
+# (times the coordinates' magnitude, if above 1) of the cell. The ray
+# cast's rounding is ~1e-13 of that scale, so a point farther than _EPS
+# from every edge gets the exact parity, the same as its cell's center.
+_EPS = 1e-9
+
+
+class CellIndex(NamedTuple):
+    """The occupied cells of a uniform grid over a pack, each listing the
+    polygons whose outline passes near it (boundary) or that contain it
+    whole (interior); polygons that miss a cell are not listed.
+
+    A point ``(x, y)`` falls in cell ``floor((x - x0) / side) * ny +
+    floor((y - y0) / side)``. ``keys`` are the occupied cells, sorted;
+    entries ``starts[k]:starts[k + 1]`` of ``poly`` and ``boundary`` belong
+    to ``keys[k]``, by ascending pack position."""
+
+    x0: float
+    y0: float
+    side: float
+    nx: int
+    ny: int
+    keys: np.ndarray        # (K,) int64
+    starts: np.ndarray      # (K+1,) int64
+    poly: np.ndarray        # (N,) int32 pack positions
+    boundary: np.ndarray    # (N,) bool
+
+
+def _cell_floor(v, origin: float, side: float) -> np.ndarray:
+    """The grid coordinate of ``v``: the one expression points and edges
+    are both mapped through, so a point's cell never disagrees with the
+    cells an edge near it marked."""
+    return np.floor((np.asarray(v, dtype=np.float64) - origin) / side)
+
+
+def _ranges(lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``(i, v)`` for every integer ``v`` in ``lo[i]..hi[i]`` (inclusive)."""
+    n = np.maximum(hi - lo + 1, 0)
+    i = np.repeat(np.arange(len(lo)), n)
+    return i, lo[i] + np.arange(len(i)) - (np.cumsum(n) - n)[i]
+
+
+def _cell_side(bbox: np.ndarray, budget: int) -> float:
+    """The smallest cell side whose bbox cell ranges fit ``budget``: a bbox
+    spans at most ``(w/side + 1) * (h/side + 1)`` cells, so the summed
+    bound is a quadratic in ``1/side``."""
+    w, h = bbox[:, 2] - bbox[:, 0], bbox[:, 3] - bbox[:, 1]
+    a, b, c = float((w * h).sum()), float((w + h).sum()), len(bbox) - budget
+    if a > 0:
+        u = (-b + np.sqrt(b * b - 4 * a * c)) / (2 * a)
+    elif b > 0:
+        u = -c / b
+    else:
+        return 0.0
+    return 1.0 / u
+
+
+def _boundary_cells(edges: tuple[np.ndarray, ...], x0: float, y0: float,
+                    side: float, eps: float, cx0: int, cx1: int, cy0: int,
+                    cy1: int) -> np.ndarray:
+    """bool[cy1 - cy0 + 1, cx1 - cx0 + 1]: the cells of that range within
+    ``eps`` of an edge. Each edge is cut by every column strip it spans
+    (grown by ``eps``), and its y-range in the strip, grown by ``eps``,
+    goes through :func:`_cell_floor` like the points' own y."""
+    x1, y1, x2, y2 = edges
+    mask = np.zeros((cy1 - cy0 + 1, cx1 - cx0 + 1), dtype=bool)
+    c0 = np.clip(_cell_floor(np.minimum(x1, x2) - eps, x0, side), cx0, cx1)
+    c1 = np.clip(_cell_floor(np.maximum(x1, x2) + eps, x0, side), cx0, cx1)
+    e, c = _ranges(c0.astype(np.int64), c1.astype(np.int64))
+    dx, dy = (x2 - x1)[e], (y2 - y1)[e]
+    vertical = dx == 0
+    dx[vertical] = 1.0
+    ta = (x0 + c * side - eps - x1[e]) / dx
+    tb = (x0 + (c + 1) * side + eps - x1[e]) / dx
+    t0 = np.where(vertical, 0.0, np.clip(np.minimum(ta, tb), 0.0, 1.0))
+    t1 = np.where(vertical, 1.0, np.clip(np.maximum(ta, tb), 0.0, 1.0))
+    ya, yb = y1[e] + t0 * dy, y1[e] + t1 * dy
+    r0 = np.clip(_cell_floor(np.minimum(ya, yb) - eps, y0, side), cy0, cy1)
+    r1 = np.clip(_cell_floor(np.maximum(ya, yb) + eps, y0, side), cy0, cy1)
+    k, r = _ranges(r0.astype(np.int64), r1.astype(np.int64))
+    mask[r - cy0, c[k] - cx0] = True
+    return mask
+
 
 @dataclass
 class PolygonPack:
@@ -253,14 +344,17 @@ class PolygonPack:
     poly_rings:   (P+1,) offsets into ring_starts per polygon
     poly_ids:     (P,) external ids
     bbox:         (P,4) xmin,ymin,xmax,ymax
-    """
+
+    :meth:`build_grid` adds the :class:`CellIndex` that :func:`pip_batch`
+    reads. It is built once per pack and pickles with it, so a pack built
+    on the driver ships its index inside the broadcast."""
 
     coords: np.ndarray
     ring_starts: np.ndarray
     poly_rings: np.ndarray
     poly_ids: np.ndarray
     bbox: np.ndarray
-    _grid: dict | None = field(default=None, repr=False)
+    _index: CellIndex | None = field(default=None, repr=False)
 
     @classmethod
     def from_rings(cls, polys: list[tuple[int, list[np.ndarray]]]) -> "PolygonPack":
@@ -306,40 +400,58 @@ class PolygonPack:
             self._edges[p] = e
         return e
 
-    # --- uniform grid over polygon bboxes (in-batch R-tree stand-in) ---
-    def build_grid(self, nx: int = 64, ny: int = 32) -> None:
+    # --- classified cell index (in-batch R-tree stand-in, Raptor-style) ---
+    def build_grid(self) -> None:
+        """Build the :class:`CellIndex`: per polygon, every cell of its bbox
+        range within ``_EPS`` of an edge is a boundary entry, and every
+        other cell whose center the ray cast puts inside is an interior
+        entry. Only occupied cells are stored, at most ``_INDEX_SLOTS``
+        entries (or 4 per polygon, if more)."""
+        bb = self.bbox
         if self.n_polys == 0:
-            self._grid = {"nx": nx, "ny": ny, "cells": {}}
+            self._index = CellIndex(0.0, 0.0, 1.0, 0, 0, np.zeros(0, np.int64),
+                                    np.zeros(1, np.int64), np.zeros(0, np.int32),
+                                    np.zeros(0, bool))
             return
-        x0, y0 = self.bbox[:, 0].min(), self.bbox[:, 1].min()
-        x1, y1 = self.bbox[:, 2].max(), self.bbox[:, 3].max()
-        sx = (x1 - x0) / nx or 1.0
-        sy = (y1 - y0) / ny or 1.0
-        cells: dict[tuple[int, int], list[int]] = {}
+        eps = _EPS * max(1.0, float(np.abs(bb).max()))
+        x0, y0 = float(bb[:, 0].min()), float(bb[:, 1].min())
+        x1, y1 = float(bb[:, 2].max()), float(bb[:, 3].max())
+        budget = max(_INDEX_SLOTS, 4 * self.n_polys)
+        # no finer than eps (cell centers stay exact) or 2^30 cells a side
+        side = max(_cell_side(bb, budget), eps, (x1 - x0) / 2**30, (y1 - y0) / 2**30)
+        while True:
+            cx0, cx1 = _cell_floor(bb[:, 0], x0, side), _cell_floor(bb[:, 2], x0, side)
+            cy0, cy1 = _cell_floor(bb[:, 1], y0, side), _cell_floor(bb[:, 3], y0, side)
+            if ((cx1 - cx0 + 1) * (cy1 - cy0 + 1)).sum() <= budget:
+                break
+            side *= 1.25            # rounding of the quadratic's bound
+        nx = int(_cell_floor(x1, x0, side)) + 1
+        ny = int(_cell_floor(y1, y0, side)) + 1
+        keys, polys, bnds = [], [], []
         for p in range(self.n_polys):
-            cx0 = int((self.bbox[p, 0] - x0) / sx)
-            cx1 = int((self.bbox[p, 2] - x0) / sx)
-            cy0 = int((self.bbox[p, 1] - y0) / sy)
-            cy1 = int((self.bbox[p, 3] - y0) / sy)
-            for cx in range(max(cx0, 0), min(cx1, nx - 1) + 1):
-                for cy in range(max(cy0, 0), min(cy1, ny - 1) + 1):
-                    cells.setdefault((cx, cy), []).append(p)
-        self._grid = {
-            "nx": nx, "ny": ny, "x0": x0, "y0": y0, "sx": sx, "sy": sy,
-            "cells": {k: np.asarray(v, dtype=np.int64) for k, v in cells.items()},
-        }
+            a, b, c, d = int(cx0[p]), int(cx1[p]), int(cy0[p]), int(cy1[p])
+            edges = self.edges_of(p)
+            bnd = _boundary_cells(edges, x0, y0, side, eps, a, b, c, d)
+            inner = pip_grid_edges(x0 + (np.arange(a, b + 1) + 0.5) * side,
+                                   y0 + (np.arange(c, d + 1) + 0.5) * side, edges)
+            ry, rx = np.nonzero(bnd | inner)
+            keys.append((rx + a) * ny + (ry + c))
+            polys.append(np.full(len(rx), p, dtype=np.int32))
+            bnds.append(bnd[ry, rx])
+        key = np.concatenate(keys)
+        # stable: entries of one cell stay in pack order
+        order = np.argsort(key, kind="stable")
+        key = key[order]
+        uniq, first = np.unique(key, return_index=True)
+        self._index = CellIndex(
+            x0, y0, side, nx, ny, uniq, np.append(first, len(key)).astype(np.int64),
+            np.concatenate(polys)[order], np.concatenate(bnds)[order])
 
-    def candidates(self, px: float, py: float) -> np.ndarray:
-        if self._grid is None:
+    def cell_index(self) -> CellIndex:
+        """The pack's :class:`CellIndex`, built on first use."""
+        if self._index is None:
             self.build_grid()
-        g = self._grid
-        if not g["cells"]:
-            return np.zeros(0, dtype=np.int64)
-        cx = int((px - g["x0"]) / g["sx"])
-        cy = int((py - g["y0"]) / g["sy"])
-        if not (0 <= cx < g["nx"] and 0 <= cy < g["ny"]):
-            return np.zeros(0, dtype=np.int64)
-        return g["cells"].get((cx, cy), np.zeros(0, dtype=np.int64))
+        return self._index
 
 
 def np_pip_pairs(
@@ -366,49 +478,51 @@ def np_pip_pairs(
 def pip_batch(
     px: np.ndarray, py: np.ndarray, pack: PolygonPack
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Batch kernel for pandas UDFs: returns (point_row_idx, poly_id) arrays.
+    """Batch kernel for Arrow UDFs: the ``(point_row_idx, poly_id)`` arrays
+    of :func:`np_pip_pairs`' pairs, ordered by point, then by pack position.
 
-    Same semantics as np_pip_pairs; kept separate so the oracle and the
-    engine path stay two implementations (grid-pruned here)."""
+    Each point expands to its cell's entries in the pack's
+    :class:`CellIndex`, with no loop over points or cells. Interior
+    entries are hits as they stand; only boundary entries get the closed
+    bbox pretest and the ray cast, one :func:`pip_even_odd_edges` call per
+    polygon. Points outside the grid, NaN or infinite, hit nothing."""
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)
-    if pack._grid is None:
-        pack.build_grid()
-    out_i: list[np.ndarray] = []
-    out_p: list[np.ndarray] = []
-    # group points by grid cell, test each candidate polygon against the group
-    g = pack._grid
-    if g["cells"]:
-        cx = np.floor((px - g["x0"]) / g["sx"]).astype(np.int64)
-        cy = np.floor((py - g["y0"]) / g["sy"]).astype(np.int64)
-        ok = (cx >= 0) & (cx < g["nx"]) & (cy >= 0) & (cy < g["ny"])
-        key = cx * g["ny"] + cy
-        key[~ok] = -1
-        order = np.argsort(key, kind="stable")
-        sorted_key = key[order]
-        bounds = np.nonzero(np.diff(sorted_key))[0] + 1
-        groups = np.split(order, bounds)
-        for grp in groups:
-            if len(grp) == 0 or key[grp[0]] < 0:
-                continue
-            k = int(key[grp[0]])
-            cand = g["cells"].get((k // g["ny"], k % g["ny"]))
-            if cand is None:
-                continue
-            gx, gy = px[grp], py[grp]
-            for p in cand:
-                x0, y0, x1, y1 = pack.bbox[p]
-                m = (gx >= x0) & (gx <= x1) & (gy >= y0) & (gy <= y1)
-                if not m.any():
-                    continue
-                sub = grp[m]
-                hit = pip_even_odd_edges(px[sub], py[sub], pack.edges_of(p))
-                if hit.any():
-                    out_i.append(sub[hit])
-                    out_p.append(np.full(int(hit.sum()), pack.poly_ids[p], np.int64))
-    if not out_i:
-        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
-    return np.concatenate(out_i), np.concatenate(out_p)
+    g = pack.cell_index()
+    none = np.zeros(0, dtype=np.int64)
+    if len(g.keys) == 0:
+        return none, none
+    cx = _cell_floor(px, g.x0, g.side)
+    cy = _cell_floor(py, g.y0, g.side)
+    pt = np.nonzero((cx >= 0) & (cx < g.nx) & (cy >= 0) & (cy < g.ny))[0]
+    key = cx[pt].astype(np.int64) * g.ny + cy[pt].astype(np.int64)
+    k = np.minimum(np.searchsorted(g.keys, key), len(g.keys) - 1)
+    found = g.keys[k] == key
+    pt, k = pt[found], k[found]
+    lo = g.starts[k]
+    n = g.starts[k + 1] - lo
+    i = np.repeat(pt, n)
+    e = np.repeat(lo - (np.cumsum(n) - n), n)
+    e += np.arange(len(e))
+    boundary = g.boundary[e]
+    keep = ~boundary
+    # boundary pairs grouped by polygon; a 16-bit key sorts by radix
+    b = np.flatnonzero(boundary)
+    q = g.poly[e[b]]
+    o = np.argsort(q.astype(np.int16) if pack.n_polys <= 1 << 15 else q, kind="stable")
+    b, q = b[o], q[o]
+    cuts = np.flatnonzero(q[1:] != q[:-1]) + 1
+    for s, t in zip(np.r_[0, cuts], np.r_[cuts, len(b)]):
+        if s == t:
+            continue
+        sel = b[s:t]
+        x, y = px[i[sel]], py[i[sel]]
+        bx0, by0, bx1, by1 = pack.bbox[q[s]]
+        m = (x >= bx0) & (x <= bx1) & (y >= by0) & (y <= by1)
+        hit = np.zeros(len(sel), dtype=bool)
+        hit[m] = pip_even_odd_edges(x[m], y[m], pack.edges_of(int(q[s])))
+        keep[sel] = hit
+    return i[keep], pack.poly_ids[g.poly[e[keep]]]
 
 
 def np_convex_hull(pts: np.ndarray) -> np.ndarray:

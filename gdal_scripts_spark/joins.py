@@ -119,8 +119,11 @@ def _hits_by_point(n: int, idx: np.ndarray, pid: np.ndarray) -> pa.ListArray:
             "offsets; lower spark.sql.execution.arrow.maxRecordsPerBatch")
     offsets = np.zeros(n + 1, dtype=np.int32)
     np.cumsum(np.bincount(idx, minlength=n), out=offsets[1:])
-    values = pa.array(pid[np.argsort(idx, kind="stable")], type=pa.int64())
-    return pa.ListArray.from_arrays(pa.array(offsets), values)
+    # geom.pip_batch already orders its hits by point: an O(n) check
+    # skips the sort
+    if np.any(idx[1:] < idx[:-1]):
+        pid = pid[np.argsort(idx, kind="stable")]
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(pid, type=pa.int64()))
 
 
 def _poly_ids(points: DataFrame, pack: geom.PolygonPack, lon: str, lat: str):
@@ -129,7 +132,9 @@ def _poly_ids(points: DataFrame, pack: geom.PolygonPack, lon: str, lat: str):
 
     Spark plans it as ``ArrowEvalPython``: only the two coordinates cross
     into Python, while the rest of each row waits in the JVM. The pack
-    rides a broadcast, read once per executor."""
+    rides a broadcast, read once per executor, with its cell index built
+    here on the driver, once per pack, so no worker rebuilds it."""
+    pack.cell_index()
     bc = points.sparkSession.sparkContext.broadcast(pack)
 
     def poly_ids(lon: pa.Array, lat: pa.Array) -> pa.Array:
@@ -151,16 +156,18 @@ def spatial_join_broadcast(
     array of polygon ids it falls in, and a JVM ``explode`` fans it out to
     pairs.
 
-    Why this shape: the Arrow hop is the join's biggest layer, and its
-    cost is the bytes it moves. Pair-shaped output repeats the whole id
-    for every pair; a ``mapInArrow`` over the points ships every id into
-    Python and the hit ids back. The UDF takes only ``lon, lat`` and
-    returns only the arrays, so the id, of any Spark type, never leaves
-    the JVM. On the ``broadcast_join`` benchmark (480k points carrying a
-    7-field struct id, 200 overlapping polygons, 7.6M pairs; seed 1) the
-    per-job bytes to Python fell from 41,351,456 to 7,800,768 and the
-    bytes back from 94,954,496 to 62,889,728 (585,066,872 back as
-    pairs)."""
+    Why this shape: the Arrow hop's cost is the bytes it moves.
+    Pair-shaped output repeats the whole id for every pair; a
+    ``mapInArrow`` over the points ships every id into Python and the hit
+    ids back. The UDF takes only ``lon, lat`` and returns only the arrays,
+    so the id, of any Spark type, never leaves the JVM. On the
+    ``broadcast_join`` benchmark (480k points carrying a 7-field struct
+    id, 200 overlapping polygons, 7.6M pairs; seed 1) the per-job bytes to
+    Python are 7,800,768 (41,351,456 with the id) and the bytes back
+    62,889,728 (585,066,872 as pairs). What is left in Python is the
+    kernel, :func:`geom.pip_batch`: each point reads its cell of the
+    pack's interior/boundary index, and only boundary pairs pay the ray
+    cast."""
     return points.select(
         id_col, F.explode(_poly_ids(points, pack, lon, lat)).alias("poly_id"))
 

@@ -95,6 +95,95 @@ def test_pack_and_batch_vs_oracle():
     assert got == oracle
 
 
+def _batch_vs_oracle(pack, px, py):
+    """``pip_batch`` gives exactly the oracle's pairs, ordered by point,
+    then by pack position; returns the pair count."""
+    pos = {int(p): k for k, p in enumerate(pack.poly_ids)}
+    want = sorted(geom.np_pip_pairs(px, py, pack), key=lambda t: (t[0], pos[t[1]]))
+    idx, pid = geom.pip_batch(px, py, pack)
+    assert list(zip(idx.tolist(), pid.tolist())) == want
+    return len(want)
+
+
+def test_pip_batch_matches_oracle_on_adversarial_points():
+    """Random polygons with holes and quarter-lattice polygons (horizontal
+    and vertical edges) against points on their vertices, edge midpoints
+    and exactly on cell borders of the pack's index, quarter-lattice
+    points, NaN and infinite coordinates and points outside the grid."""
+    rng = np.random.default_rng(21)
+    n_pairs = n_boundary = n_interior = 0
+    for trial in range(30):
+        polys = []
+        for _ in range(int(rng.integers(1, 25))):
+            cx, cy = np.round(rng.uniform(-5, 5, 2) * 4) / 4
+            m = int(rng.integers(3, 25))
+            ang = np.sort(rng.uniform(0, 2 * np.pi, m))
+            ring = np.column_stack([np.cos(ang), np.sin(ang)])
+            if rng.random() < 0.5:
+                ext = ring * rng.uniform(0.4, 1.0, (m, 1)) * rng.uniform(0.1, 3)
+                hole = 0.3 * ext[::-1] + rng.uniform(-0.05, 0.05, 2)
+            else:
+                ext = np.round(ring * 8) / 4
+                hole = ext[::-1] / 2
+            polys.append([ext + (cx, cy), hole + (cx, cy)])
+        # ids in no particular order: the output follows pack positions
+        ids = rng.permutation(len(polys)) * 7
+        pack = geom.PolygonPack.from_rings(list(zip(ids.tolist(), polys)))
+        g = pack.cell_index()
+        n_boundary += int(g.boundary.sum())
+        n_interior += int((~g.boundary).sum())
+        v = pack.coords
+        mid = (v[:-1] + v[1:]) / 2
+        borders_x = g.x0 + np.arange(-1, g.nx + 2) * g.side
+        borders_y = g.y0 + np.arange(-1, g.ny + 2) * g.side
+        u = rng.uniform(-9, 9, (2, 1000))
+        px = np.concatenate([u[0], v[:, 0], mid[:, 0], rng.choice(borders_x, 1000),
+                             u[1], np.round(u[0] * 4) / 4,
+                             [np.nan, np.inf, -np.inf, 0.0, 1e300, 2.0]])
+        py = np.concatenate([u[1], v[:, 1], mid[:, 1], u[0],
+                             rng.choice(borders_y, 1000), np.round(u[1] * 4) / 4,
+                             [0.0, 0.0, 0.0, np.nan, 0.0, -np.inf]])
+        n_pairs += _batch_vs_oracle(pack, px, py)
+    assert n_pairs > 10_000 and n_boundary > 0 and n_interior > 0
+
+
+def test_pip_batch_empty_pack_and_zero_width_bbox():
+    empty = geom.PolygonPack.from_rings([])
+    idx, pid = geom.pip_batch([1.0, np.nan], [2.0, 0.0], empty)
+    assert len(idx) == len(pid) == 0
+    # a polygon collapsed onto the line x = 1 beside an ordinary triangle
+    pack = geom.PolygonPack.from_rings([
+        (3, [np.array([[1.0, 0.0], [1.0, 2.0], [1.0, 1.0]])]),
+        (4, [np.array([[0.0, 0.0], [2.0, 0.0], [2.0, 2.0]])]),
+    ])
+    px = np.array([1.0, 1.0, 1.5, 1.9, 0.5, 3.0])
+    py = np.array([1.0, 0.5, 0.2, 1.0, 1.0, 1.0])
+    assert _batch_vs_oracle(pack, px, py) > 0
+    only_line = geom.PolygonPack.from_rings([(3, [np.array([[1.0, 0.0], [1.0, 2.0]])])])
+    _batch_vs_oracle(only_line, px, py)
+
+
+def test_cell_index_size_is_bounded():
+    """One continent-sized polygon beside 200 small ones: the index holds
+    at most the budget's entries, with no grid-sized array, and stays
+    exact."""
+    rng = np.random.default_rng(22)
+    continent = np.array([[-170.0, -60.0], [170.0, -60.0], [170.0, 70.0],
+                          [0.0, 80.0], [-170.0, 70.0]])
+    small = []
+    for k in range(200):
+        ang = np.sort(rng.uniform(0, 2 * np.pi, 8))
+        c = rng.uniform(-150, 150, 2)
+        small.append((k + 1, [0.5 * np.column_stack([np.cos(ang), np.sin(ang)]) + c]))
+    pack = geom.PolygonPack.from_rings([(0, [continent])] + small)
+    g = pack.cell_index()
+    assert len(g.poly) <= geom._INDEX_SLOTS
+    assert len(g.keys) < g.nx * g.ny
+    assert set(np.unique(g.poly).tolist()) == set(range(201))
+    px, py = rng.uniform(-180, 180, 20_000), rng.uniform(-90, 90, 20_000)
+    assert _batch_vs_oracle(pack, px, py) > 10_000
+
+
 def _grid_oracle(xs, ys, edges):
     """Per-pixel ray cast over the full grid: the pixel-run kernel's oracle."""
     xs, ys = np.asarray(xs, np.float64), np.asarray(ys, np.float64)

@@ -116,6 +116,35 @@ def test_broadcast_join_fans_out_per_point_rows(spark):
     assert re.sub(r"#\d+", "", args) == "lon, lat", plan
 
 
+def test_broadcast_pack_carries_its_cell_index(spark, monkeypatch):
+    """The join builds the pack's cell index on the driver, before the
+    broadcast, and a pickled copy carries it: workers read it, they do not
+    rebuild it."""
+    import pickle
+
+    pack = fixtures.polygons_pack(p=N_POLY)
+    assert pack._index is None
+    pdf = fixtures.make_images_pdf(N_IMG)[["image_id", "lon", "lat"]]
+    pts = spark.createDataFrame(pdf, "image_id string, lon double, lat double")
+    df = joins.spatial_join_broadcast(pts, pack)
+    built = pack._index
+    assert built is not None and len(built.poly) > 0
+    copy = pickle.loads(pickle.dumps(pack))
+    for a, b in zip(copy._index, built):
+        assert np.array_equal(a, b)
+
+    def rebuild(self):
+        raise AssertionError("cell index rebuilt")
+
+    monkeypatch.setattr(geom.PolygonPack, "build_grid", rebuild)
+    idx, pid = geom.pip_batch(pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), copy)
+    want = geom.np_pip_pairs(pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), pack)
+    assert sorted(zip(idx.tolist(), pid.tolist())) == sorted(want)
+    assert {(r["image_id"], r["poly_id"]) for r in df.collect()} == {
+        (pdf["image_id"].iloc[i], p) for i, p in want}
+    assert pack._index is built
+
+
 def test_hits_by_point_builds_one_list_per_row(monkeypatch):
     """One list per input row, in hit order, empty for rows with no hit;
     a batch whose hits overflow the int32 list offsets is refused."""
@@ -132,6 +161,8 @@ def test_hits_by_point_builds_one_list_per_row(monkeypatch):
     idx, pid = [2, 0, 2, 3, 0, 2], [10, 11, 12, 13, 14, 15]
     want = [[11, 14], [], [10, 12, 15], [13]]
     assert lists(4, idx, pid) == want
+    # hits already in point order (as geom.pip_batch gives them)
+    assert lists(4, [0, 0, 2, 2, 2, 3], [11, 14, 10, 12, 15, 13]) == want
     monkeypatch.setattr(joins, "_MAX_BATCH_HITS", 6)
     assert lists(4, idx, pid) == want
     with pytest.raises(ValueError, match="maxRecordsPerBatch"):
