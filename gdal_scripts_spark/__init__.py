@@ -10,7 +10,7 @@ semantics (pixel kernels, ray-cast point-in-polygon, connected components).
 
 Module map (SURVEY.md §7):
   session     SparkSession factory tuned for binary-heavy Arrow batches
-  arrowrows   row tuples -> Arrow tables for the mapInArrow/applyInArrow stages
+  arrowrows   row tuples -> Arrow tables; map_rows runs every per-row stage
   cells       GlobalMercator/GlobalGeodetic tile math, quadkey, Morton/Hilbert
               cell ids — native Column expressions (zero UDF)
   codecs      numpy image codecs (PPM/PGM/PNG via zlib), aHash, GDAL checksum

@@ -1,10 +1,11 @@
 """numpy image codecs + image hashes — the pixel layer of the engine.
 
-Spark-first role: these functions run ONLY inside Arrow batches
-(``mapInPandas`` / scalar ``pandas_udf``) — a batch of rows arrives as a
-``pd.Series`` of ``bytes``, each element is decoded to a numpy ``(h, w, c)``
-array, processed, and re-encoded. Never row-at-a-time Python in the hot path
-(BASELINE.json : input_hint — "no per-row Python").
+Spark-first role: these functions run ONLY inside Arrow stages — mostly
+the per-row stages of :func:`gdal_scripts_spark.arrowrows.map_rows`, where
+each image row's ``bytes`` are decoded to a numpy ``(h, w, c)`` array
+(:func:`decode_hwc`), processed, and re-encoded. Pixels are never touched
+one at a time in Python: every kernel is vectorized numpy over the whole
+image (BASELINE.json : input_hint — "no per-row Python").
 
 Reference parity (public GDAL 3.8.x tree; formats themselves are public
 specs):
@@ -214,6 +215,13 @@ def decode(buf: bytes, fmt: str) -> np.ndarray:
 
         return codecs_jpeg.decode_jpeg(buf)
     raise ValueError(f"unknown fmt {fmt!r}")
+
+
+def decode_hwc(buf: bytes, fmt: str) -> np.ndarray:
+    """:func:`decode` as an ``(h, w, c)`` array: a single-band image gets a
+    band axis of length 1."""
+    img = decode(buf, fmt)
+    return img if img.ndim == 3 else img[:, :, None]
 
 
 # ---------------------------------------------------------------------------

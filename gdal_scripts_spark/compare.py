@@ -14,14 +14,11 @@ shuffle once each, pixels never leave numpy.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import codecs
+from . import arrowrows, codecs
 
 
 def np_psnr(a: np.ndarray, b: np.ndarray) -> float:
@@ -50,35 +47,23 @@ def compare_images(
     )
     pairs = l.join(r, id_col)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, bl, fl, br, fr in zip(
-                b[id_col].values, b["_bl"].values, b["_fl"].values,
-                b["_br"].values, b["_fr"].values,
-            ):
-                a = codecs.decode(bytes(bl), fl)
-                c = codecs.decode(bytes(br), fr)
-                ca = codecs.gdal_style_checksum(a)
-                cc = codecs.gdal_style_checksum(c)
-                if a.shape != c.shape:
-                    rows.append((iid, False, ca, cc, None, None, False))
-                    continue
-                diff = a.astype(np.float64) - c.astype(np.float64)
-                mse = float(np.mean(diff * diff))
-                psnr = float("inf") if mse == 0.0 else 10.0 * np.log10(65025.0 / mse)
-                rows.append((iid, True, ca, cc, mse, psnr, mse == 0.0))
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[id_col, "same_dims", "checksum_l", "checksum_r",
-                             "mse", "psnr_db", "identical"],
-                )
+    def kern(iid, bl, fl, br, fr):
+        a = codecs.decode(bl, fl)
+        c = codecs.decode(br, fr)
+        ca = codecs.gdal_style_checksum(a)
+        cc = codecs.gdal_style_checksum(c)
+        if a.shape != c.shape:
+            yield iid, False, ca, cc, None, None, False
+            return
+        diff = a.astype(np.float64) - c.astype(np.float64)
+        mse = float(np.mean(diff * diff))
+        psnr = float("inf") if mse == 0.0 else float(10.0 * np.log10(65025.0 / mse))
+        yield iid, True, ca, cc, mse, psnr, mse == 0.0
 
-    return pairs.mapInPandas(
-        run,
-        schema=f"{id_col} string, same_dims boolean, checksum_l int, "
-               "checksum_r int, mse double, psnr_db double, identical boolean",
+    return arrowrows.map_rows(
+        pairs, kern,
+        f"{id_col} string, same_dims boolean, checksum_l int, "
+        "checksum_r int, mse double, psnr_db double, identical boolean",
     )
 
 

@@ -11,19 +11,17 @@ values in both adjacent cells, so the floats are bit-identical; no epsilon
 needed). Open lines start at border endpoints; closed rings are emitted as
 cycles. ``contour_metrics`` keeps the cheaper per-level aggregate view.
 
-Spark shape: each image row is an independent raster -> ``mapInPandas`` with
-a vectorized per-level pass, zero shuffle, embarrassingly parallel.
+Spark shape: each image row is an independent raster -> one per-row Arrow
+stage (``arrowrows.map_rows``) with a vectorized per-level pass, zero
+shuffle, embarrassingly parallel.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from . import codecs
+from . import arrowrows, codecs
 
 # marching-squares lookup: corner bits 1=TL 2=TR 4=BR 8=BL (value >= level);
 # edges 0=top 1=right 2=bottom 3=left; saddles (5, 10) resolved by cell mean.
@@ -101,29 +99,17 @@ def contour_metrics(
     matching gdal_contour's level generation (``alg/contour.cpp``).
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = codecs.decode(bytes(byts), fmt)
-                z = (img[:, :, 0] if img.ndim == 3 else img).astype(np.float64)
-                for level in np_contour_levels(z.min(), z.max(), interval, base):
-                    s = np_contour_segments(z, level)
-                    if len(s) == 0:
-                        continue
-                    length = float(
-                        np.hypot(s[:, 2] - s[:, 0], s[:, 3] - s[:, 1]).sum()
-                    )
-                    rows.append((iid, float(level), len(s), round(length, 4)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "level", "n_segments", "length_px"]
-                )
+    def kern(iid, byts, fmt):
+        z = codecs.decode_hwc(byts, fmt)[:, :, 0].astype(np.float64)
+        for level in np_contour_levels(z.min(), z.max(), interval, base):
+            s = np_contour_segments(z, level)
+            if len(s):
+                length = float(np.hypot(s[:, 2] - s[:, 0], s[:, 3] - s[:, 1]).sum())
+                yield (iid, float(level), len(s), round(length, 4))
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema="image_id string, level double, n_segments long, length_px double"
+    return arrowrows.map_rows(
+        images.select("image_id", "bytes", "fmt"), kern,
+        "image_id string, level double, n_segments long, length_px double",
     )
 
 
@@ -211,33 +197,18 @@ def contour_polylines(
     line) with vertex count + length — (image_id, level, line_id, n_pts,
     length_px, wkt). line_id orders lines deterministically per level."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = codecs.decode(bytes(byts), fmt)
-                z = (img[:, :, 0] if img.ndim == 3 else img).astype(np.float64)
-                for level in np_contour_levels(z.min(), z.max(), interval, base):
-                    segs = np_contour_segments(z, level)
-                    for li, line in enumerate(np_stitch_segments(segs)):
-                        d = np.hypot(
-                            np.diff(line[:, 0]), np.diff(line[:, 1])
-                        ).sum()
-                        rows.append((iid, float(level), li, len(line),
-                                     round(float(d), 4), linestring_wkt(line)))
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["image_id", "level", "line_id", "n_pts",
-                             "length_px", "wkt"],
-                )
+    def kern(iid, byts, fmt):
+        z = codecs.decode_hwc(byts, fmt)[:, :, 0].astype(np.float64)
+        for level in np_contour_levels(z.min(), z.max(), interval, base):
+            for li, line in enumerate(np_stitch_segments(np_contour_segments(z, level))):
+                d = np.hypot(np.diff(line[:, 0]), np.diff(line[:, 1])).sum()
+                yield (iid, float(level), li, len(line), round(float(d), 4),
+                       linestring_wkt(line))
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run,
-        schema="image_id string, level double, line_id int, n_pts int, "
-               "length_px double, wkt string",
+    return arrowrows.map_rows(
+        images.select("image_id", "bytes", "fmt"), kern,
+        "image_id string, level double, line_id int, n_pts int, "
+        "length_px double, wkt string",
     )
 
 
@@ -250,23 +221,13 @@ def band_classify(
     polygonize background convention (0 = nodata) never bites. Map-only
     Arrow pass, same (image_id, bytes, fmt) contract in and out."""
 
-    def run(batches):
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = codecs.decode(bytes(byts), fmt)
-                z = (img[:, :, 0] if img.ndim == 3 else img).astype(np.float64)
-                band = (np.floor((z - base) / interval) + 1.0)
-                band = np.clip(band, 0, 255).astype(np.uint8)
-                rows.append((iid, codecs.encode(band, "pgm"), "pgm"))
-            if rows:
-                yield pd.DataFrame(rows, columns=["image_id", "bytes", "fmt"])
+    def kern(iid, byts, fmt):
+        z = codecs.decode_hwc(byts, fmt)[:, :, 0].astype(np.float64)
+        band = np.clip(np.floor((z - base) / interval) + 1.0, 0, 255).astype(np.uint8)
+        yield iid, codecs.encode(band, "pgm"), "pgm"
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema="image_id string, bytes binary, fmt string"
-    )
+    return arrowrows.map_rows(images.select("image_id", "bytes", "fmt"), kern,
+                              "image_id string, bytes binary, fmt string")
 
 
 def isoband_regions(

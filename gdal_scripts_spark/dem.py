@@ -24,13 +24,12 @@ by our goldens).
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from . import codecs
+from . import arrowrows, codecs
 
 
 def _pad(a: np.ndarray) -> np.ndarray:
@@ -155,25 +154,14 @@ def gdaldem(images: DataFrame, mode: str = "hillshade", out_fmt: str = "pgm",
     if mode == "color-relief" and out_fmt == "pgm":
         out_fmt = "ppm"  # 3-band output; PGM is single-band
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = codecs.decode(bytes(byts), fmt)
-                z = img[:, :, 0] if img.ndim == 3 else img
-                out = fn(z, kwargs)
-                rows.append((iid, codecs.encode(out, out_fmt), out_fmt,
-                             out.shape[1], out.shape[0],
-                             codecs.gdal_style_checksum(out)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "bytes", "fmt", "w", "h", "checksum"])
+    def kern(iid, byts, fmt):
+        out = fn(codecs.decode_hwc(byts, fmt)[:, :, 0], kwargs)
+        yield (iid, codecs.encode(out, out_fmt), out_fmt, out.shape[1],
+               out.shape[0], codecs.gdal_style_checksum(out))
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run,
-        schema="image_id string, bytes binary, fmt string, w int, h int, checksum int",
+    return arrowrows.map_rows(
+        images.select("image_id", "bytes", "fmt"), kern,
+        "image_id string, bytes binary, fmt string, w int, h int, checksum int",
     )
 
 
@@ -203,46 +191,31 @@ def gdaldem_tiled(tiles: DataFrame, mode: str = "hillshade", **kwargs) -> DataFr
         )
     fn = _MODES[mode]
 
-    def strips(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, tc, tr, tw, th, nb, buf in zip(
-                b["image_id"].values, b["tile_col"].values,
-                b["tile_row"].values, b["tw"].values, b["th"].values,
-                b["n_bands"].values, b["tile_bytes"].values,
-            ):
-                a = np.frombuffer(buf, np.uint8).reshape(th, tw, nb)[:, :, 0]
-                a = np.ascontiguousarray(a)
-                tc, tr = int(tc), int(tr)
-                rows.append((iid, tc, tr, 0, 0, int(th), int(tw), a.tobytes()))
-                # (dy, dx) = my position relative to the TARGET tile
-                pieces = [
-                    (tc, tr - 1, 1, 0, a[:1, :]),     # my top row -> above's bottom halo
-                    (tc, tr + 1, -1, 0, a[-1:, :]),   # my bottom row -> below's top halo
-                    (tc - 1, tr, 0, 1, a[:, :1]),     # my left col -> left's right halo
-                    (tc + 1, tr, 0, -1, a[:, -1:]),   # my right col -> right's left halo
-                    (tc - 1, tr - 1, 1, 1, a[:1, :1]),
-                    (tc + 1, tr - 1, 1, -1, a[:1, -1:]),
-                    (tc - 1, tr + 1, -1, 1, a[-1:, :1]),
-                    (tc + 1, tr + 1, -1, -1, a[-1:, -1:]),
-                ]
-                for gc, gr, dy, dx, piece in pieces:
-                    if gc < 0 or gr < 0:
-                        continue
-                    p = np.ascontiguousarray(piece)
-                    rows.append((iid, gc, gr, dy, dx,
-                                 p.shape[0], p.shape[1], p.tobytes()))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "tile_col", "tile_row",
-                                   "dy", "dx", "sh", "sw", "piece"])
+    def strips(iid, tc, tr, tw, th, nb, buf):
+        a = np.ascontiguousarray(np.frombuffer(buf, np.uint8).reshape(th, tw, nb)[:, :, 0])
+        yield (iid, tc, tr, 0, 0, th, tw, a.tobytes())
+        # (dy, dx) = my position relative to the TARGET tile
+        pieces = [
+            (tc, tr - 1, 1, 0, a[:1, :]),     # my top row -> above's bottom halo
+            (tc, tr + 1, -1, 0, a[-1:, :]),   # my bottom row -> below's top halo
+            (tc - 1, tr, 0, 1, a[:, :1]),     # my left col -> left's right halo
+            (tc + 1, tr, 0, -1, a[:, -1:]),   # my right col -> right's left halo
+            (tc - 1, tr - 1, 1, 1, a[:1, :1]),
+            (tc + 1, tr - 1, 1, -1, a[:1, -1:]),
+            (tc - 1, tr + 1, -1, 1, a[-1:, :1]),
+            (tc + 1, tr + 1, -1, -1, a[-1:, -1:]),
+        ]
+        for gc, gr, dy, dx, piece in pieces:
+            if gc >= 0 and gr >= 0:
+                p = np.ascontiguousarray(piece)
+                yield (iid, gc, gr, dy, dx, p.shape[0], p.shape[1], p.tobytes())
 
-    strip_df = tiles.select(
-        "image_id", "tile_col", "tile_row", "tw", "th", "n_bands", "tile_bytes"
-    ).mapInPandas(
+    strip_df = arrowrows.map_rows(
+        tiles.select("image_id", "tile_col", "tile_row", "tw", "th", "n_bands",
+                     "tile_bytes"),
         strips,
-        schema="image_id string, tile_col int, tile_row int, dy int, dx int, "
-               "sh int, sw int, piece binary",
+        "image_id string, tile_col int, tile_row int, dy int, dx int, "
+        "sh int, sw int, piece binary",
     )
 
     def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:

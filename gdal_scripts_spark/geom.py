@@ -390,6 +390,13 @@ class PolygonPack:
             out.append(self.coords[self.ring_starts[r] : self.ring_starts[r + 1]])
         return out
 
+    def position(self, poly_id: int) -> int:
+        """Pack index of the polygon with external id ``poly_id`` (the
+        id -> index map is built on first use and kept)."""
+        if getattr(self, "_pos", None) is None:
+            self._pos = {p: i for i, p in enumerate(self.poly_ids.tolist())}
+        return self._pos[int(poly_id)]
+
     def edges_of(self, p: int) -> tuple[np.ndarray, ...]:
         """Memoized flat edge arrays for the ray-cast kernel."""
         if not hasattr(self, "_edges") or self._edges is None:

@@ -8,21 +8,18 @@ Reference anchors (public GDAL tree):
   per-layer summary (``-so``): feature count (``OGRLayer::GetFeatureCount``),
   extent (``OGRLayer::GetExtent``), geometry type.
 
-Spark-first shape: raster_info is ONE mapInPandas pass emitting a skinny
+Spark-first shape: raster_info is ONE per-row Arrow pass emitting a skinny
 stats row per image (pixels never shuffle); layer_info is a plain
 groupBy aggregate — whole-stage-codegen, no Python.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import codecs
+from . import arrowrows, codecs
 
 _RASTER_INFO_SCHEMA = (
     "image_id string, w int, h int, bands int, dtype string, "
@@ -35,33 +32,16 @@ def raster_info(images: DataFrame, *, band: int = 0) -> DataFrame:
     pixel dtype, band-0 min/max/mean (``ComputeStatistics`` integer path)
     and the exact GDALChecksumImage value (the autotest golden)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, buf, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = codecs.decode(bytes(buf), str(fmt))
-                bands = 1 if img.ndim == 2 else img.shape[2]
-                bv = img if img.ndim == 2 else img[:, :, band]
-                f = bv.astype(np.float64)
-                rows.append(
-                    (
-                        str(iid), int(bv.shape[1]), int(bv.shape[0]), bands,
-                        str(img.dtype), float(f.min()), float(f.max()),
-                        float(f.mean()), codecs.gdal_checksum_band(bv),
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "image_id", "w", "h", "bands", "dtype",
-                        "v_min", "v_max", "v_mean", "checksum",
-                    ],
-                )
+    def kern(iid, buf, fmt):
+        img = codecs.decode(buf, fmt)
+        bv = img if img.ndim == 2 else img[:, :, band]
+        f = bv.astype(np.float64)
+        yield (iid, bv.shape[1], bv.shape[0], 1 if img.ndim == 2 else img.shape[2],
+               str(img.dtype), float(f.min()), float(f.max()), float(f.mean()),
+               codecs.gdal_checksum_band(bv))
 
-    return images.mapInPandas(run, schema=_RASTER_INFO_SCHEMA)
+    return arrowrows.map_rows(images.select("image_id", "bytes", "fmt"), kern,
+                              _RASTER_INFO_SCHEMA)
 
 
 def layer_info(

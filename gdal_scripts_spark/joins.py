@@ -44,7 +44,6 @@ sequential oracle ``geom.np_pip_pairs`` exactly (BASELINE.json : north_star
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -270,40 +269,25 @@ def s2_cover_regions_from_table(
 
     The driver-side builder costs 5-60 ms/polygon of single-core Python;
     at 1M polygons that is HOURS on the driver and does not survive a
-    100x scale-up. Here the covering runs as one ``mapInPandas`` pass
-    over the polygon table (each Arrow batch covers its polygons with
-    the same exact ``np_s2_cover_polygon_flags`` kernel), so the build
-    parallelizes with the cluster and the resulting regions table is a
-    persistable ingest artifact. Output is row-for-row identical to the
-    driver-side rings covering (pinned by test)."""
+    100x scale-up. Here the covering runs as one per-row Arrow pass over
+    the polygon table (each polygon is covered by the same exact
+    ``np_s2_cover_polygon_flags`` kernel), so the build parallelizes with
+    the cluster and the resulting regions table is a persistable ingest
+    artifact. Output is row-for-row identical to the driver-side rings
+    covering (pinned by test)."""
     from . import s2 as s2mod
 
     ml = int(max_level)
 
-    def kern(batches):
-        for pdf in batches:
-            out_pid: list[int] = []
-            out_cell: list[int] = []
-            out_int: list[bool] = []
-            for pid, rr in zip(pdf[poly_id], pdf[rings]):
-                arrs = [
-                    np.array([[pt["x"], pt["y"]] for pt in ring],
-                             dtype=np.float64)
-                    for ring in rr
-                ]
-                edges = geom.polygon_edges(arrs)
-                cov, flags = s2mod.np_s2_cover_polygon_flags(
-                    edges, max_level=ml)
-                out_pid.extend([int(pid)] * len(cov))
-                out_cell.extend(int(c) for c in cov)
-                out_int.extend(bool(f) for f in flags)
-            yield pd.DataFrame(
-                {"poly_id": out_pid, "cell": out_cell, "interior": out_int}
-            )
+    def kern(pid, rr):
+        arrs = [np.array([[pt["x"], pt["y"]] for pt in ring], dtype=np.float64)
+                for ring in rr]
+        cov, flags = s2mod.np_s2_cover_polygon_flags(geom.polygon_edges(arrs),
+                                                     max_level=ml)
+        return [(pid, c, f) for c, f in zip(cov.tolist(), flags.tolist())]
 
-    return polygons.select(poly_id, rings).mapInPandas(
-        kern, schema="poly_id long, cell long, interior boolean"
-    )
+    return arrowrows.map_rows(polygons.select(poly_id, rings), kern,
+                              "poly_id long, cell long, interior boolean")
 
 
 def _refine_pip(candidates: DataFrame, pack: geom.PolygonPack,
@@ -326,7 +310,6 @@ def _refine_pip(candidates: DataFrame, pack: geom.PolygonPack,
         import pyarrow as pa
 
         pk = bc.value
-        pos = {int(pid): i for i, pid in enumerate(pk.poly_ids)}
         for b in batches:
             if b.num_rows == 0:
                 continue
@@ -338,7 +321,7 @@ def _refine_pip(candidates: DataFrame, pack: geom.PolygonPack,
             todo = ~keep
             for pid in np.unique(pids[todo]):
                 m = todo & (pids == pid)
-                keep[m] = geom.pip_even_odd_edges(px[m], py[m], pk.edges_of(pos[int(pid)]))
+                keep[m] = geom.pip_even_odd_edges(px[m], py[m], pk.edges_of(pk.position(pid)))
             if keep.any():
                 idx = pa.array(np.nonzero(keep)[0])
                 yield pa.RecordBatch.from_arrays(

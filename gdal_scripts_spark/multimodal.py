@@ -13,14 +13,10 @@ signatures — is real and tested; the codec boundary is explicit:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from . import codecs
+from . import arrowrows, codecs
 
 FEATURE_SCHEMA = (
     "image_id string, ok boolean, h int, w int, c int, mean_0 double, "
@@ -41,8 +37,7 @@ def decode_any(buf: bytes, fmt: str, w: int, h: int,
                deterministic_fake: bool = False) -> np.ndarray:
     fmt = fmt.lower()
     if fmt in ("ppm", "pgm", "pnm", "png", "jpeg", "jpg"):
-        img = codecs.decode(buf, fmt)
-        return img if img.ndim == 3 else img[:, :, None]
+        return codecs.decode_hwc(buf, fmt)
     if deterministic_fake:
         return _fake_decode(buf, w, h)
     raise NotImplementedError(
@@ -56,60 +51,34 @@ def extract_features(images: DataFrame, deterministic_fake: bool = False) -> Dat
 
     Bad/undecodable rows are quarantined (ok=false) instead of failing the
     job — the ops posture a 100 TB pipeline needs."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt, w_, h_ in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values,
-                b["w"].values, b["h"].values,
-            ):
-                try:
-                    img = decode_any(bytes(byts), fmt, int(w_), int(h_),
-                                     deterministic_fake)
-                    means = img.astype(np.float64).mean(axis=(0, 1))
-                    m = [float(means[i]) if i < img.shape[2] else float("nan")
-                         for i in range(3)]
-                    rows.append((iid, True, img.shape[0], img.shape[1],
-                                 img.shape[2], m[0], m[1], m[2],
-                                 float(img.astype(np.float64).std()),
-                                 codecs.ahash64(img)))
-                except Exception:
-                    rows.append((iid, False, None, None, None,
-                                 None, None, None, None, None))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "ok", "h", "w", "c", "mean_0",
-                                   "mean_1", "mean_2", "contrast", "phash"])
+    def kern(iid, byts, fmt, w_, h_):
+        try:
+            img = decode_any(byts, fmt, int(w_), int(h_), deterministic_fake)
+            means = img.astype(np.float64).mean(axis=(0, 1))
+            m = [float(means[i]) if i < img.shape[2] else None for i in range(3)]
+            yield (iid, True, img.shape[0], img.shape[1], img.shape[2], *m,
+                   float(img.astype(np.float64).std()), codecs.ahash64(img))
+        except Exception:
+            yield (iid, False) + (None,) * 8
 
-    return images.select("image_id", "bytes", "fmt", "w", "h").mapInPandas(
-        run, schema=FEATURE_SCHEMA
-    )
+    return arrowrows.map_rows(images.select("image_id", "bytes", "fmt", "w", "h"),
+                              kern, FEATURE_SCHEMA)
 
 
 def resize_images(images: DataFrame, out_w: int = 16, out_h: int = 16,
                   deterministic_fake: bool = False) -> DataFrame:
     """Nearest-neighbor thumbnail (real for native fmts) re-encoded as PNG."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt, w_, h_ in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values,
-                b["w"].values, b["h"].values,
-            ):
-                img = decode_any(bytes(byts), fmt, int(w_), int(h_),
-                                 deterministic_fake)
-                ys = (np.arange(out_h) * img.shape[0] // out_h)
-                xs = (np.arange(out_w) * img.shape[1] // out_w)
-                thumb = img[np.ix_(ys, xs)]
-                sq = thumb[:, :, 0] if thumb.shape[2] == 1 else thumb
-                rows.append((iid, codecs.encode_png(sq), "png",
-                             out_w, out_h))
-            if rows:
-                yield pd.DataFrame(rows, columns=["image_id", "bytes", "fmt", "w", "h"])
+    def kern(iid, byts, fmt, w_, h_):
+        img = decode_any(byts, fmt, w_, h_, deterministic_fake)
+        ys = (np.arange(out_h) * img.shape[0] // out_h)
+        xs = (np.arange(out_w) * img.shape[1] // out_w)
+        thumb = img[np.ix_(ys, xs)]
+        sq = thumb[:, :, 0] if thumb.shape[2] == 1 else thumb
+        yield iid, codecs.encode_png(sq), "png", out_w, out_h
 
-    return images.select("image_id", "bytes", "fmt", "w", "h").mapInPandas(
-        run, schema="image_id string, bytes binary, fmt string, w int, h int"
-    )
+    return arrowrows.map_rows(
+        images.select("image_id", "bytes", "fmt", "w", "h"), kern,
+        "image_id string, bytes binary, fmt string, w int, h int")
 
 
 def frame_sample_stub(videos: DataFrame, every_n: int = 10,
@@ -121,34 +90,24 @@ def frame_sample_stub(videos: DataFrame, every_n: int = 10,
 
     Input: (video_id, bytes, n_frames, w, h); output one row per sampled
     frame (video_id, frame_idx, frame_bytes PNG-gray)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if not deterministic_fake:
-            # fail fast regardless of input size — an empty partition must
-            # not make the unsupported path look supported
-            raise NotImplementedError(
-                "video frame decode requires an external codec library; "
-                "pass deterministic_fake=True to exercise the plumbing"
-            )
-        for b in batches:
-            rows = []
-            for vid, buf, nf, w_, h_ in zip(
-                b["video_id"].values, b["bytes"].values,
-                b["n_frames"].values, b["w"].values, b["h"].values,
-            ):
-                for fi in range(0, int(nf), every_n):
-                    # frame-dependent fake: container bytes rolled by index
-                    frame = np.roll(
-                        np.resize(np.frombuffer(buf, np.uint8),
-                                  int(w_) * int(h_)), fi
-                    ).reshape(int(h_), int(w_))
-                    rows.append((vid, fi, codecs.encode_png(frame)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["video_id", "frame_idx", "frame_bytes"])
+    if not deterministic_fake:
+        # fail fast on the driver, whatever the input size: an empty
+        # partition must not make the unsupported path look supported
+        raise NotImplementedError(
+            "video frame decode requires an external codec library; "
+            "pass deterministic_fake=True to exercise the plumbing"
+        )
 
-    return videos.select("video_id", "bytes", "n_frames", "w", "h").mapInPandas(
-        run, schema="video_id string, frame_idx int, frame_bytes binary"
-    )
+    def kern(vid, buf, nf, w_, h_):
+        for fi in range(0, nf, every_n):
+            # frame-dependent fake: container bytes rolled by index
+            frame = np.roll(np.resize(np.frombuffer(buf, np.uint8), w_ * h_),
+                            fi).reshape(h_, w_)
+            yield vid, fi, codecs.encode_png(frame)
+
+    return arrowrows.map_rows(
+        videos.select("video_id", "bytes", "n_frames", "w", "h"), kern,
+        "video_id string, frame_idx int, frame_bytes binary")
 
 
 # ---------------------------------------------------------------------------
@@ -234,37 +193,25 @@ def extract_audio_features(audio: DataFrame, id_col: str = "audio_id",
     """Per-clip audio features in one Arrow pass — duration, RMS, peak,
     zero-crossing rate, FFT spectral centroid (mono mixdown). Undecodable
     rows quarantine with ok=false, like extract_features."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for aid, buf in zip(b[id_col].values, b[bytes_col].values):
-                try:
-                    s, rate = decode_wav(bytes(buf))
-                    mono = s.mean(axis=1)
-                    n = len(mono)
-                    rms = float(np.sqrt(np.mean(mono * mono))) if n else 0.0
-                    peak = float(np.abs(mono).max()) if n else 0.0
-                    zc = float(np.mean(np.signbit(mono[1:]) != np.signbit(mono[:-1]))) if n > 1 else 0.0
-                    if n > 1:
-                        spec = np.abs(np.fft.rfft(mono))
-                        freqs = np.fft.rfftfreq(n, d=1.0 / rate)
-                        tot = spec.sum()
-                        cent = float((freqs * spec).sum() / tot) if tot > 0 else 0.0
-                    else:
-                        cent = 0.0
-                    rows.append((aid, True, rate, n, s.shape[1],
-                                 round(n / rate, 6), round(rms, 6),
-                                 round(peak, 6), round(zc, 6), round(cent, 3)))
-                except Exception:
-                    rows.append((aid, False, None, None, None,
-                                 None, None, None, None, None))
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["audio_id", "ok", "sample_rate", "n_samples",
-                             "channels", "duration_s", "rms", "peak",
-                             "zero_cross_rate", "spectral_centroid_hz"])
+    def kern(aid, buf):
+        try:
+            s, rate = decode_wav(buf)
+            mono = s.mean(axis=1)
+            n = len(mono)
+            rms = float(np.sqrt(np.mean(mono * mono))) if n else 0.0
+            peak = float(np.abs(mono).max()) if n else 0.0
+            zc = float(np.mean(np.signbit(mono[1:]) != np.signbit(mono[:-1]))) if n > 1 else 0.0
+            if n > 1:
+                spec = np.abs(np.fft.rfft(mono))
+                freqs = np.fft.rfftfreq(n, d=1.0 / rate)
+                tot = spec.sum()
+                cent = float((freqs * spec).sum() / tot) if tot > 0 else 0.0
+            else:
+                cent = 0.0
+            yield (aid, True, rate, n, s.shape[1], round(n / rate, 6), round(rms, 6),
+                   round(peak, 6), round(zc, 6), round(cent, 3))
+        except Exception:
+            yield (aid, False) + (None,) * 8
 
-    return audio.select(id_col, bytes_col).mapInPandas(
-        run, schema=AUDIO_FEATURE_SCHEMA
-    )
+    return arrowrows.map_rows(audio.select(id_col, bytes_col), kern,
+                              AUDIO_FEATURE_SCHEMA)

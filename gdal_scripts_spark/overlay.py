@@ -35,14 +35,11 @@ driver hash-checks the real code paths end to end.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import geom
+from . import arrowrows, geom
 
 # ---------------------------------------------------------------------------
 # numpy predicate core (simple polygons)
@@ -516,22 +513,11 @@ def predicate_join_general(
     the bucketed candidate join)."""
     pairs = _bucketed_pairs(a, b, id_a, id_b, bucket)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for bt in batches:
-            rows = []
-            for ia, ib, ra, rb in zip(
-                bt[id_a].values, bt[id_b].values,
-                bt["rings_a"].values, bt["rings_b"].values,
-            ):
-                p = polygon_predicates_general(
-                    _all_rings_np(ra), _all_rings_np(rb)
-                )
-                rows.append((ia, ib) + tuple(bool(p[k]) for k in PREDICATES))
-            if rows:
-                yield pd.DataFrame(rows, columns=[id_a, id_b, *PREDICATES])
+    def kern(ia, ib, ra, rb):
+        p = polygon_predicates_general(_all_rings_np(ra), _all_rings_np(rb))
+        yield (ia, ib) + tuple(bool(p[k]) for k in PREDICATES)
 
-    preds = ", ".join(f"{k} boolean" for k in PREDICATES)
-    return pairs.mapInPandas(run, schema=f"{id_a} long, {id_b} long, {preds}")
+    return arrowrows.map_rows(pairs, kern, _predicate_ddl(id_a, id_b))
 
 
 def intersection_layer_general(
@@ -543,23 +529,13 @@ def intersection_layer_general(
     positive intersection area — (id_a, id_b, inter_area)."""
     pairs = _bucketed_pairs(a, b, id_a, id_b, bucket)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for bt in batches:
-            rows = []
-            for ia, ib, ra, rb in zip(
-                bt[id_a].values, bt[id_b].values,
-                bt["rings_a"].values, bt["rings_b"].values,
-            ):
-                m_pieces = holed_to_pieces(_all_rings_np(rb))
-                area = clip_area_general(_all_rings_np(ra), m_pieces)
-                if area > 1e-12:
-                    rows.append((ia, ib, area))
-            if rows:
-                yield pd.DataFrame(rows, columns=[id_a, id_b, "inter_area"])
+    def kern(ia, ib, ra, rb):
+        area = clip_area_general(_all_rings_np(ra), holed_to_pieces(_all_rings_np(rb)))
+        if area > 1e-12:
+            yield ia, ib, area
 
-    return pairs.mapInPandas(
-        run, schema=f"{id_a} long, {id_b} long, inter_area double"
-    )
+    return arrowrows.map_rows(pairs, kern,
+                              f"{id_a} long, {id_b} long, inter_area double")
 
 
 def erase_layer_general(
@@ -577,27 +553,16 @@ def erase_layer_general(
         F.collect_list("rings_b").alias("methods"),
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for bt in batches:
-            rows = []
-            for ia, ra, ms in zip(
-                bt[id_a].values, bt["rings_a"].values, bt["methods"].values,
-            ):
-                s_rings = _all_rings_np(ra)
-                cover = disjoint_cover(
-                    [holed_to_pieces(_all_rings_np(m)) for m in ms]
-                )
-                area = area_with_holes(s_rings)
-                erased = clip_area_general(s_rings, cover)
-                rows.append((ia, area, erased, area - erased))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[id_a, "area", "erased_area", "remaining_area"])
+    def kern(ia, ra, ms):
+        s_rings = _all_rings_np(ra)
+        cover = disjoint_cover([holed_to_pieces(_all_rings_np(m)) for m in ms])
+        area = area_with_holes(s_rings)
+        erased = clip_area_general(s_rings, cover)
+        yield ia, area, erased, area - erased
 
-    matched = grouped.mapInPandas(
-        run,
-        schema=f"{id_a} long, area double, erased_area double, "
-               "remaining_area double",
+    matched = arrowrows.map_rows(
+        grouped, kern,
+        f"{id_a} long, area double, erased_area double, remaining_area double",
     )
     # subjects with no bbox-overlapping method feature: erased = 0
     # (area = outer ring minus holes, all as native Column math)
@@ -665,6 +630,11 @@ def _bucketed_pairs(a: DataFrame, b: DataFrame, id_a: str, id_b: str,
     )
 
 
+def _predicate_ddl(id_a: str, id_b: str) -> str:
+    preds = ", ".join(f"{k} boolean" for k in PREDICATES)
+    return f"{id_a} long, {id_b} long, {preds}"
+
+
 def _rings_to_np(rings) -> np.ndarray:
     return np.array([(p["x"], p["y"]) for p in rings[0]], dtype=np.float64)
 
@@ -678,20 +648,11 @@ def predicate_join(
     natively (their truth row is the constant disjoint row)."""
     pairs = _bucketed_pairs(a, b, id_a, id_b, bucket)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for bt in batches:
-            rows = []
-            for ia, ib, ra, rb in zip(
-                bt[id_a].values, bt[id_b].values,
-                bt["rings_a"].values, bt["rings_b"].values,
-            ):
-                p = polygon_predicates(_rings_to_np(ra), _rings_to_np(rb))
-                rows.append((ia, ib) + tuple(bool(p[k]) for k in PREDICATES))
-            if rows:
-                yield pd.DataFrame(rows, columns=[id_a, id_b, *PREDICATES])
+    def kern(ia, ib, ra, rb):
+        p = polygon_predicates(_rings_to_np(ra), _rings_to_np(rb))
+        yield (ia, ib) + tuple(bool(p[k]) for k in PREDICATES)
 
-    preds = ", ".join(f"{k} boolean" for k in PREDICATES)
-    return pairs.mapInPandas(run, schema=f"{id_a} long, {id_b} long, {preds}")
+    return arrowrows.map_rows(pairs, kern, _predicate_ddl(id_a, id_b))
 
 
 def intersection_layer(
@@ -704,24 +665,15 @@ def intersection_layer(
     simple polygon."""
     pairs = _bucketed_pairs(a, b, id_a, id_b, bucket)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for bt in batches:
-            rows = []
-            for ia, ib, ra, rb in zip(
-                bt[id_a].values, bt[id_b].values,
-                bt["rings_a"].values, bt["rings_b"].values,
-            ):
-                clipped = clip_ring_convex(_rings_to_np(ra), _rings_to_np(rb))
-                if len(clipped) >= 3:
-                    area = abs(geom.shoelace_area(clipped))
-                    if area > 0:
-                        rows.append((ia, ib, area, geom.polygon_wkt([clipped])))
-            if rows:
-                yield pd.DataFrame(rows, columns=[id_a, id_b, "inter_area", "wkt"])
+    def kern(ia, ib, ra, rb):
+        clipped = clip_ring_convex(_rings_to_np(ra), _rings_to_np(rb))
+        if len(clipped) >= 3:
+            area = abs(geom.shoelace_area(clipped))
+            if area > 0:
+                yield ia, ib, area, geom.polygon_wkt([clipped])
 
-    return pairs.mapInPandas(
-        run, schema=f"{id_a} long, {id_b} long, inter_area double, wkt string"
-    )
+    return arrowrows.map_rows(
+        pairs, kern, f"{id_a} long, {id_b} long, inter_area double, wkt string")
 
 
 def erase_layer(

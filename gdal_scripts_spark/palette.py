@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import codecs
+from . import arrowrows, codecs
 
 
 def rgb_histogram(images: DataFrame, bits: int = 5) -> DataFrame:
@@ -32,16 +32,15 @@ def rgb_histogram(images: DataFrame, bits: int = 5) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             for byts, fmt in zip(b["bytes"].values, b["fmt"].values):
-                img = codecs.decode(bytes(byts), fmt)
-                if img.ndim == 2:
-                    img = np.repeat(img[:, :, None], 3, axis=2)
-                q = (img >> shift).astype(np.int64)
+                q = (codecs.decode_hwc(byts, fmt) >> shift).astype(np.int64)
+                # a single-band image counts as gray r = g = b
+                q = np.broadcast_to(q, (*q.shape[:2], 3))
                 bins = (q[:, :, 0] << (2 * bits)) | (q[:, :, 1] << bits) | q[:, :, 2]
                 counts = np.bincount(bins.ravel(), minlength=1 << (3 * bits))
                 nz = np.nonzero(counts)[0]
                 yield pd.DataFrame({"bin": nz, "count": counts[nz]})
 
-    per_img = images.select("image_id", "bytes", "fmt").mapInPandas(
+    per_img = images.select("bytes", "fmt").mapInPandas(
         run, schema="bin long, count long"
     )
     return per_img.groupBy("bin").agg(F.sum("count").alias("count"))
@@ -100,30 +99,18 @@ def rgb2pct(images: DataFrame, n_colors: int = 256, bits: int = 5) -> tuple[Data
     # (and the committed dither goldens) run-deterministic
     hist = sorted((r["bin"], r["count"]) for r in rgb_histogram(images, bits).collect())
     palette = median_cut(hist, n_colors, bits)
-    bc = spark.sparkContext.broadcast(palette)
+    bc = spark.sparkContext.broadcast(palette.astype(np.int32))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pal = bc.value.astype(np.int32)
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = codecs.decode(bytes(byts), fmt)
-                if img.ndim == 2:
-                    img = np.repeat(img[:, :, None], 3, axis=2)
-                flat = img.reshape(-1, 3).astype(np.int32)
-                d = ((flat[:, None, :] - pal[None, :, :]) ** 2).sum(axis=2)
-                idx = d.argmin(axis=1).astype(np.uint8)
-                out = idx.reshape(img.shape[:2])
-                rows.append((iid, codecs.encode(out, "pgm"), "pgm",
-                             out.shape[1], out.shape[0]))
-            if rows:
-                yield pd.DataFrame(rows, columns=["image_id", "bytes", "fmt", "w", "h"])
+    def kern(iid, byts, fmt):
+        img = codecs.decode_hwc(byts, fmt)
+        flat = np.broadcast_to(img, (*img.shape[:2], 3)).reshape(-1, 3).astype(np.int32)
+        d = ((flat[:, None, :] - bc.value[None, :, :]) ** 2).sum(axis=2)
+        out = d.argmin(axis=1).astype(np.uint8).reshape(img.shape[:2])
+        yield iid, codecs.encode(out, "pgm"), "pgm", out.shape[1], out.shape[0]
 
-    indexed = images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema="image_id string, bytes binary, fmt string, w int, h int"
-    )
+    indexed = arrowrows.map_rows(
+        images.select("image_id", "bytes", "fmt"), kern,
+        "image_id string, bytes binary, fmt string, w int, h int")
     return indexed, palette
 
 
@@ -132,23 +119,13 @@ def pct2rgb(indexed: DataFrame, palette: np.ndarray) -> DataFrame:
     spark = indexed.sparkSession
     bc = spark.sparkContext.broadcast(palette)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pal = bc.value
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                idx = codecs.decode(bytes(byts), fmt)
-                rgb = pal[idx]
-                rows.append((iid, codecs.encode(rgb, "ppm"), "ppm",
-                             rgb.shape[1], rgb.shape[0]))
-            if rows:
-                yield pd.DataFrame(rows, columns=["image_id", "bytes", "fmt", "w", "h"])
+    def kern(iid, byts, fmt):
+        rgb = bc.value[codecs.decode(byts, fmt)]
+        yield iid, codecs.encode(rgb, "ppm"), "ppm", rgb.shape[1], rgb.shape[0]
 
-    return indexed.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema="image_id string, bytes binary, fmt string, w int, h int"
-    )
+    return arrowrows.map_rows(
+        indexed.select("image_id", "bytes", "fmt"), kern,
+        "image_id string, bytes binary, fmt string, w int, h int")
 
 
 # ---------------------------------------------------------------------------
@@ -198,30 +175,17 @@ def dither_to_palette(images: DataFrame, n_colors: int = 64) -> tuple:
     """rgb2pct with Floyd–Steinberg dithering (GDAL's default path):
     median-cut global palette, then per-image error-diffused indices.
     Returns (indexed DataFrame, palette)."""
-    from collections.abc import Iterator as _It
-
     _, pal = rgb2pct(images, n_colors)  # reuse the global median-cut palette
     spark = images.sparkSession
     bc = spark.sparkContext.broadcast(pal)
 
-    def run(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        p = bc.value
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = codecs.decode(bytes(byts), fmt)
-                idx = np_dither_fs(img, p)
-                rows.append((iid, codecs.encode(idx, "pgm"), "pgm",
-                             idx.shape[1], idx.shape[0],
-                             codecs.gdal_style_checksum(idx)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "bytes", "fmt", "w", "h", "checksum"])
+    def kern(iid, byts, fmt):
+        idx = np_dither_fs(codecs.decode(byts, fmt), bc.value)
+        yield (iid, codecs.encode(idx, "pgm"), "pgm", idx.shape[1], idx.shape[0],
+               codecs.gdal_style_checksum(idx))
 
-    indexed = images.select("image_id", "bytes", "fmt").mapInPandas(
-        run,
-        schema="image_id string, bytes binary, fmt string, w int, h int, checksum int",
+    indexed = arrowrows.map_rows(
+        images.select("image_id", "bytes", "fmt"), kern,
+        "image_id string, bytes binary, fmt string, w int, h int, checksum int",
     )
     return indexed, pal

@@ -9,7 +9,7 @@ component. Background/nodata here: value 0 is masked out (the
 ``gdal_polygonize.py -mask`` convention).
 
 Spark-first shape: every image is one row, so every component lives inside
-one task. ``polygonize`` is a single mapInPandas pass per image: decode it,
+one task. ``polygonize`` is a single per-row Arrow pass: decode each image,
 label it once with the run-based union-find (``_tile_ccl`` — label = the
 component's minimum pixel index y*W + x, canonical and deterministic
 regardless of execution order; hard part #1), then emit one row per
@@ -39,10 +39,9 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from . import codecs
+from . import arrowrows, codecs
 
 # ---------------------------------------------------------------------------
 # shared geometry helper: pixel-edge exterior ring of a component mask
@@ -378,34 +377,21 @@ def polygonize(
     label = min pixel index of the component (canonical). ``tile`` is
     ignored: it is accepted only because the traced ``raster_tiles``
     benchmark still passes it, and goes with the next benchmark change."""
-    cols = ["image_id", "label", "value", "pixel_count", "min_y", "min_x"]
     schema = ("image_id string, label long, value int, pixel_count long, "
               "min_y int, min_x int")
     if trace_rings:
-        cols.append("wkt")
         schema += ", wkt string"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, buf, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = codecs.decode(bytes(buf), fmt)
-                if img.ndim == 3:
-                    img = img[:, :, 0]
-                w = img.shape[1]
-                for label, value, n, _bbox, rings in image_components(
-                    img, connectivity, trace_rings
-                ):
-                    row = (iid, label, value, n, label // w, label % w)
-                    if trace_rings:
-                        row += (polygon_wkt(*rings),)
-                    rows.append(row)
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
+    def kern(iid, buf, fmt):
+        img = codecs.decode_hwc(buf, fmt)[:, :, 0]
+        w = img.shape[1]
+        for label, value, n, _bbox, rings in image_components(
+            img, connectivity, trace_rings
+        ):
+            row = (iid, label, value, n, label // w, label % w)
+            yield row + (polygon_wkt(*rings),) if trace_rings else row
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(run, schema=schema)
+    return arrowrows.map_rows(images.select("image_id", "bytes", "fmt"), kern, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -537,24 +523,12 @@ def sieve(images: DataFrame, threshold: int, connectivity: int = 4,
           out_fmt: str = "pgm") -> DataFrame:
     """Distributed sieve over single-band images (one Arrow pass per batch;
     each image row is its own raster in this engine's data model)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, buf, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = codecs.decode(bytes(buf), fmt)
-                if img.ndim == 3:
-                    img = img[:, :, 0]
-                out = np_sieve_fast(img, threshold, connectivity)
-                rows.append((iid, codecs.encode(out, out_fmt), out_fmt,
-                             out.shape[1], out.shape[0],
-                             codecs.gdal_style_checksum(out)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "bytes", "fmt", "w", "h", "checksum"])
+    def kern(iid, buf, fmt):
+        out = np_sieve_fast(codecs.decode_hwc(buf, fmt)[:, :, 0], threshold, connectivity)
+        yield (iid, codecs.encode(out, out_fmt), out_fmt, out.shape[1], out.shape[0],
+               codecs.gdal_style_checksum(out))
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run,
-        schema="image_id string, bytes binary, fmt string, w int, h int, checksum int",
+    return arrowrows.map_rows(
+        images.select("image_id", "bytes", "fmt"), kern,
+        "image_id string, bytes binary, fmt string, w int, h int, checksum int",
     )

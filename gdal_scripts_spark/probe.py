@@ -19,14 +19,11 @@ scalar columns (§2.8 F5).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from . import cells, codecs, raster
+from . import arrowrows, cells, codecs, raster
 
 
 # ---------------------------------------------------------------------------
@@ -81,32 +78,21 @@ def probe_pixels(
             F.floor((F.col("my1") - F.col("pmy")) / pix_m).cast("int").alias("py"),
         )
     )
-    withbytes = cand.join(images.select("image_id", "bytes", "fmt"), "image_id")
+    # sorted by image within each task: each image is decoded once per
+    # task, not once per probe row
+    withbytes = cand.join(
+        images.select("image_id", "bytes", "fmt"), "image_id"
+    ).sortWithinPartitions("image_id")
+    last = [None, None]  # (image_id, pixels) of the previous row
 
-    def read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for bt in batches:
-            rows = []
-            # decode once per image within the batch, not once per probe row
-            # (the join on image_id co-locates same-image probes already)
-            for iid, grp in bt.groupby("image_id", sort=False):
-                img = codecs.decode(
-                    bytes(grp["bytes"].iloc[0]), grp["fmt"].iloc[0]
-                )
-                if img.ndim == 2:
-                    img = img[:, :, None]
-                pxs = grp["px"].values.astype(np.int64)
-                pys = grp["py"].values.astype(np.int64)
-                vals = img[pys, pxs]
-                for pid_v, x, y, v in zip(grp[probe_id].values, pxs, pys, vals):
-                    rows.append((pid_v, iid, int(x), int(y),
-                                 [int(c) for c in v]))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[probe_id, "image_id", "px", "py", "value"])
+    def read(iid, pid, px, py, byts, fmt):
+        if last[0] != iid:
+            last[:] = iid, codecs.decode_hwc(byts, fmt)
+        yield pid, iid, px, py, last[1][py, px].tolist()
 
-    return withbytes.mapInPandas(
-        read,
-        schema=f"{probe_id} long, image_id string, px int, py int, value array<int>",
+    return arrowrows.map_rows(
+        withbytes.select("image_id", probe_id, "px", "py", "bytes", "fmt"), read,
+        f"{probe_id} long, image_id string, px int, py int, value array<int>",
     )
 
 
@@ -224,26 +210,22 @@ def clip_polygons_rect(
         F.size("rings").alias("n_rings_out"),
     )
 
-    def clip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for id_v, rings_v in zip(b[id_col].values, b["rings"].values):
-                area = 0.0
-                n_out = 0
-                for k, ring in enumerate(rings_v):
-                    pts = np.array([(p["x"], p["y"]) for p in ring])
-                    c = _geom.clip_ring_rect(pts, xmin, ymin, xmax, ymax)
-                    if len(c) >= 3:
-                        a = abs(_geom.shoelace_area(c))
-                        area += a if k == 0 else -a
-                        n_out += 1
-                if n_out:
-                    rows.append((id_v, area, n_out))
-            if rows:
-                yield pd.DataFrame(rows, columns=[id_col, "clipped_area", "n_rings_out"])
+    def clip(id_v, rings_v):
+        area = 0.0
+        n_out = 0
+        for k, ring in enumerate(rings_v):
+            pts = np.array([(p["x"], p["y"]) for p in ring])
+            c = _geom.clip_ring_rect(pts, xmin, ymin, xmax, ymax)
+            if len(c) >= 3:
+                a = abs(_geom.shoelace_area(c))
+                area += a if k == 0 else -a
+                n_out += 1
+        if n_out:
+            yield id_v, area, n_out
 
-    straddle = base.filter(~inside).select(id_col, "rings").mapInPandas(
-        clip, schema=f"{id_col} long, clipped_area double, n_rings_out int"
+    straddle = arrowrows.map_rows(
+        base.filter(~inside).select(id_col, "rings"), clip,
+        f"{id_col} long, clipped_area double, n_rings_out int",
     )
     return whole.unionByName(straddle)
 

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import (
+    arrowrows,
+    codecs,
     fixtures,
     formats,
     joins,
@@ -3126,26 +3128,13 @@ def _q_translate_srcwin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     imgs = fixtures.formula_images_spark(spark, n=12)
 
-    def run(batches):
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = _raster._decode_row(byts, fmt)[:, :, 0]
-                sub = img[3:13, 4:20]  # yoff 3 / ysize 10, xoff 4 / xsize 16
-                vals, counts = np.unique(
-                    sub.astype(np.int64), return_counts=True)
-                rows.extend((iid, int(v), int(c))
-                            for v, c in zip(vals, counts))
-            if rows:
-                import pandas as pd
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "v_out", "n"])
+    def kern(iid, byts, fmt):
+        img = codecs.decode_hwc(byts, fmt)[:, :, 0]
+        # yoff 3 / ysize 10, xoff 4 / xsize 16
+        return _raster._hist_rows((iid,), img[3:13, 4:20])
 
-    return imgs.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema="image_id string, v_out int, n long"
-    )
+    return arrowrows.map_rows(imgs.select("image_id", "bytes", "fmt"), kern,
+                              "image_id string, v_out int, n long")
 
 _add("translate_srcwin", _q_translate_srcwin, f"""
 WITH dims AS ({_FIM_DIMS_SQL}),
@@ -5720,8 +5709,8 @@ _add("pip_s2_shuffle", _q_pip_s2_shuffle, _pip_native_oracle())
 def _q_pip_s2_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 via the fully TABLE-DRIVEN S2 plan (round 5): the polygon set
     lives as a TABLE (standard layer schema) — its rings covering is
-    built BY THE CLUSTER (s2_cover_regions_from_table, one mapInPandas
-    pass) and its edge arrays as pure Column HOFs
+    built BY THE CLUSTER (s2_cover_regions_from_table, one per-row
+    Arrow pass) and its edge arrays as pure Column HOFs
     (polygon_edges_df_from_table); the containment join and the parity
     refine both run as SHUFFLED hash joins (pack=None selects the parity
     fold; broadcast_regions=False). No PolygonPack, no broadcast, nothing

@@ -58,11 +58,14 @@ _DEC_COLS = ["image_id", "bytes", "fmt"]
 # output of the tile-pyramid stages (cut_base_tiles, overview_tiles)
 _PYRAMID_DDL = ("z int, tx long, ty long, y_xyz long, tile_bytes binary, "
                 "checksum int, n_src int")
+_HIST_DDL = "image_id string, v_out int, n long"
 
 
-def _decode_row(b: bytes, fmt: str) -> np.ndarray:
-    img = codecs.decode(bytes(b), fmt)
-    return img if img.ndim == 3 else img[:, :, None]
+def _hist_rows(key: tuple, arr: np.ndarray) -> list[tuple]:
+    """``(*key, v, n)`` rows of the value histogram of ``arr`` (values
+    truncated to int64), ascending by value."""
+    vals, counts = np.unique(arr.astype(np.int64), return_counts=True)
+    return [(*key, v, n) for v, n in zip(vals.tolist(), counts.tolist())]
 
 
 # ---------------------------------------------------------------------------
@@ -71,29 +74,17 @@ def _decode_row(b: bytes, fmt: str) -> np.ndarray:
 
 def per_image_stats(images: DataFrame) -> DataFrame:
     """(image_id, band, n, vmin, vmax, vsum, vsumsq) — partial aggregates."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = _decode_row(byts, fmt).astype(np.float64)
-                for band in range(img.shape[2]):
-                    a = img[:, :, band]
-                    rows.append(
-                        (iid, band, a.size, float(a.min()),
-                         float(a.max()), float(a.sum()), float((a * a).sum()))
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["image_id", "band", "n", "vmin", "vmax", "vsum", "vsumsq"],
-                )
+    def kern(iid, byts, fmt):
+        img = codecs.decode_hwc(byts, fmt).astype(np.float64)
+        for band in range(img.shape[2]):
+            a = img[:, :, band]
+            yield (iid, band, a.size, float(a.min()), float(a.max()),
+                   float(a.sum()), float((a * a).sum()))
 
-    return images.select(*_DEC_COLS).mapInPandas(
-        run,
-        schema="image_id string, band int, n long, vmin double, vmax double, "
-               "vsum double, vsumsq double",
+    return arrowrows.map_rows(
+        images.select(*_DEC_COLS), kern,
+        "image_id string, band int, n long, vmin double, vmax double, "
+        "vsum double, vsumsq double",
     )
 
 
@@ -120,21 +111,12 @@ def global_band_stats(images: DataFrame) -> DataFrame:
 
 def histogram(images: DataFrame, band: int = 0) -> DataFrame:
     """Global 256-bin histogram of one band: per-image bincount -> bin agg."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = _decode_row(byts, fmt)
-                counts = np.bincount(img[:, :, band].ravel(), minlength=256)
-                rows.append((iid, counts.astype(np.int64).tolist()))
-            if rows:
-                yield pd.DataFrame(rows, columns=["image_id", "hist"])
+    def kern(iid, byts, fmt):
+        img = codecs.decode_hwc(byts, fmt)
+        yield (iid, np.bincount(img[:, :, band].ravel(), minlength=256).tolist())
 
-    per_img = images.select(*_DEC_COLS).mapInPandas(
-        run, schema="image_id string, hist array<long>"
-    )
+    per_img = arrowrows.map_rows(images.select(*_DEC_COLS), kern,
+                                 "image_id string, hist array<long>")
     return (
         per_img.select(F.posexplode("hist").alias("bin", "count"))
         .groupBy("bin")
@@ -155,43 +137,28 @@ def hist_equalize(images: DataFrame, band: int = 0) -> DataFrame:
     while keeping output cardinality <= 256 rows per image.
 
     Scale shape: decode + bincount + 256-entry remap per image inside ONE
-    ``mapInPandas`` pass (pixels never shuffle; partial results are final —
-    each image is independent), Arrow-batched. Constant images (npix ==
-    cdf_min) map to 0, matching the convention that a flat image has no
-    contrast to stretch.
+    per-row Arrow pass (pixels never shuffle; partial results are final —
+    each image is independent). Constant images (npix == cdf_min) map to
+    0, matching the convention that a flat image has no contrast to
+    stretch.
     """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                flat = _decode_row(byts, fmt)[:, :, band].ravel().astype(np.int64)
-                hist = np.bincount(flat, minlength=256)
-                cdf = hist.cumsum()
-                npix = int(flat.size)
-                cdf_min = int(cdf[np.flatnonzero(hist)[0]])
-                denom = npix - cdf_min
-                if denom > 0:
-                    # integer-valued doubles well below 2^53: exact, and the
-                    # (a - b) * 255.0 / c evaluation order matches the SQL
-                    # oracle literally, so the floor is cross-engine stable
-                    out_map = np.floor(
-                        (cdf - cdf_min) * 255.0 / denom + 0.5
-                    ).astype(np.int64)
-                else:
-                    out_map = np.zeros(256, np.int64)
-                vout = out_map[flat]
-                vals, counts = np.unique(vout, return_counts=True)
-                rows.extend(
-                    (iid, int(v), int(c)) for v, c in zip(vals, counts)
-                )
-            if rows:
-                yield pd.DataFrame(rows, columns=["image_id", "v_out", "n"])
+    def kern(iid, byts, fmt):
+        flat = codecs.decode_hwc(byts, fmt)[:, :, band].ravel().astype(np.int64)
+        hist = np.bincount(flat, minlength=256)
+        cdf = hist.cumsum()
+        npix = int(flat.size)
+        cdf_min = int(cdf[np.flatnonzero(hist)[0]])
+        denom = npix - cdf_min
+        if denom > 0:
+            # integer-valued doubles well below 2^53: exact, and the
+            # (a - b) * 255.0 / c evaluation order matches the SQL
+            # oracle literally, so the floor is cross-engine stable
+            out_map = np.floor((cdf - cdf_min) * 255.0 / denom + 0.5).astype(np.int64)
+        else:
+            out_map = np.zeros(256, np.int64)
+        return _hist_rows((iid,), out_map[flat])
 
-    return images.select(*_DEC_COLS).mapInPandas(
-        run, schema="image_id string, v_out int, n long"
-    )
+    return arrowrows.map_rows(images.select(*_DEC_COLS), kern, _HIST_DDL)
 
 
 def scale_stretch(images: DataFrame, band: int = 0) -> DataFrame:
@@ -206,84 +173,47 @@ def scale_stretch(images: DataFrame, band: int = 0) -> DataFrame:
     arithmetic is spelled (a - vmin) * 255.0 / denom so a SQL oracle
     replaying the identical expression gets the identical IEEE double,
     making the half-to-even tie cases engine-stable."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                a = _decode_row(byts, fmt)[:, :, band].astype(np.float64)
-                vmin, vmax = float(a.min()), float(a.max())
-                if vmax > vmin:
-                    out = np.rint((a - vmin) * 255.0 / (vmax - vmin))
-                else:
-                    out = np.zeros_like(a)
-                vals, counts = np.unique(out.astype(np.int64),
-                                         return_counts=True)
-                rows.extend(
-                    (iid, int(v), int(c)) for v, c in zip(vals, counts)
-                )
-            if rows:
-                yield pd.DataFrame(rows, columns=["image_id", "v_out", "n"])
+    def kern(iid, byts, fmt):
+        a = codecs.decode_hwc(byts, fmt)[:, :, band].astype(np.float64)
+        vmin, vmax = float(a.min()), float(a.max())
+        if vmax > vmin:
+            out = np.rint((a - vmin) * 255.0 / (vmax - vmin))
+        else:
+            out = np.zeros_like(a)
+        return _hist_rows((iid,), out)
 
-    return images.select(*_DEC_COLS).mapInPandas(
-        run, schema="image_id string, v_out int, n long"
-    )
+    return arrowrows.map_rows(images.select(*_DEC_COLS), kern, _HIST_DDL)
 
 
 def reduce_modes_hist(images: DataFrame, ops: tuple = ("average", "min",
                       "max", "med", "q1", "q3"), scale: float = 0.5,
                       band: int = 0) -> DataFrame:
     """Value histograms of SEVERAL footprint-reduce warps in one decode
-    pass — (image_id, op, val, n). Same single-MiP shape as morphology3:
+    pass — (image_id, op, val, n). Same single-pass shape as morphology3:
     each image is decoded once and every requested kernel reduces the same
     pixel array, instead of one scan + decode per op."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = _decode_row(byts, fmt)
-                ow = max(1, int(round(img.shape[1] * scale)))
-                oh = max(1, int(round(img.shape[0] * scale)))
-                for op in ops:
-                    out = np_warp_resize(img, ow, oh, op)[:, :, band]
-                    vals, counts = np.unique(out.astype(np.int64),
-                                             return_counts=True)
-                    rows.extend(
-                        (iid, op, int(v), int(c))
-                        for v, c in zip(vals, counts)
-                    )
-            if rows:
-                yield pd.DataFrame(rows,
-                                   columns=["image_id", "op", "val", "n"])
+    def kern(iid, byts, fmt):
+        img = codecs.decode_hwc(byts, fmt)
+        ow = max(1, int(round(img.shape[1] * scale)))
+        oh = max(1, int(round(img.shape[0] * scale)))
+        for op in ops:
+            yield from _hist_rows((iid, op), np_warp_resize(img, ow, oh, op)[:, :, band])
 
-    return images.select(*_DEC_COLS).mapInPandas(
-        run, schema="image_id string, op string, val int, n long"
-    )
+    return arrowrows.map_rows(images.select(*_DEC_COLS), kern,
+                              "image_id string, op string, val int, n long")
 
 
 def value_hist(images: DataFrame, band: int = 0) -> DataFrame:
     """Per-image value histogram of one band — (image_id, val, n). The
     compact whole-raster pin used by the closed-form cross-engine entries:
     <= 256 rows per image regardless of raster size, and any single-pixel
-    difference shows up as a count shift. Single MiP pass, no shuffle."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                a = _decode_row(byts, fmt)[:, :, band]
-                vals, counts = np.unique(a.astype(np.int64), return_counts=True)
-                rows.extend((iid, int(v), int(c)) for v, c in zip(vals, counts))
-            if rows:
-                yield pd.DataFrame(rows, columns=["image_id", "val", "n"])
+    difference shows up as a count shift. Single per-row pass, no
+    shuffle."""
+    def kern(iid, byts, fmt):
+        return _hist_rows((iid,), codecs.decode_hwc(byts, fmt)[:, :, band])
 
-    return images.select(*_DEC_COLS).mapInPandas(
-        run, schema="image_id string, val int, n long"
-    )
+    return arrowrows.map_rows(images.select(*_DEC_COLS), kern,
+                              "image_id string, val int, n long")
 
 
 def morphology3(images: DataFrame, band: int = 0) -> DataFrame:
@@ -295,53 +225,28 @@ def morphology3(images: DataFrame, band: int = 0) -> DataFrame:
 
     Returns the value histogram of each result — (image_id, op, val, n)
     with op in ('erode', 'dilate') — pinning every output pixel's value
-    while keeping cardinality <= 512 rows per image. Same no-shuffle MiP
-    shape as hist_equalize: windows never cross image boundaries, so the
-    whole operator is embarrassingly parallel over images.
+    while keeping cardinality <= 512 rows per image. Same no-shuffle
+    per-row shape as hist_equalize: windows never cross image boundaries,
+    so the whole operator is embarrassingly parallel over images.
     """
     from numpy.lib.stride_tricks import sliding_window_view
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = _decode_row(byts, fmt)[:, :, band]
-                win = sliding_window_view(img, (3, 3))
-                for op, res in (
-                    ("erode", win.min(axis=(2, 3))),
-                    ("dilate", win.max(axis=(2, 3))),
-                ):
-                    vals, counts = np.unique(res.astype(np.int64),
-                                             return_counts=True)
-                    rows.extend(
-                        (iid, op, int(v), int(c)) for v, c in zip(vals, counts)
-                    )
-            if rows:
-                yield pd.DataFrame(rows, columns=["image_id", "op", "val", "n"])
+    def kern(iid, byts, fmt):
+        win = sliding_window_view(codecs.decode_hwc(byts, fmt)[:, :, band], (3, 3))
+        return (_hist_rows((iid, "erode"), win.min(axis=(2, 3)))
+                + _hist_rows((iid, "dilate"), win.max(axis=(2, 3))))
 
-    return images.select(*_DEC_COLS).mapInPandas(
-        run, schema="image_id string, op string, val int, n long"
-    )
+    return arrowrows.map_rows(images.select(*_DEC_COLS), kern,
+                              "image_id string, op string, val int, n long")
 
 
 def checksums(images: DataFrame) -> DataFrame:
     """GDAL-style per-image checksum (golden-test workhorse)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [
-                (iid, codecs.gdal_style_checksum(_decode_row(byts, fmt)))
-                for iid, byts, fmt in zip(
-                    b["image_id"].values, b["bytes"].values, b["fmt"].values
-                )
-            ]
-            if rows:
-                yield pd.DataFrame(rows, columns=["image_id", "checksum"])
+    def kern(iid, byts, fmt):
+        yield iid, codecs.gdal_style_checksum(codecs.decode_hwc(byts, fmt))
 
-    return images.select(*_DEC_COLS).mapInPandas(
-        run, schema="image_id string, checksum int"
-    )
+    return arrowrows.map_rows(images.select(*_DEC_COLS), kern,
+                              "image_id string, checksum int")
 
 
 # ---------------------------------------------------------------------------
@@ -357,37 +262,24 @@ def retile(images: DataFrame, tile_w: int = 10, tile_h: int = 10,
 
     Output: image_id, tile_col, tile_row, tw, th, n_bands, tile_bytes (raw
     uint8 HxWxC) — the tile-index table (S9) is this DataFrame itself."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = _decode_row(byts, fmt)
-                h, w, c = img.shape
-                for ty in range((h + tile_h - 1) // tile_h):
-                    for tx in range((w + tile_w - 1) // tile_w):
-                        window = img[ty * tile_h : (ty + 1) * tile_h,
-                                     tx * tile_w : (tx + 1) * tile_w]
-                        if pad and window.shape[:2] != (tile_h, tile_w):
-                            padded = np.full((tile_h, tile_w, c), pad_value, np.uint8)
-                            padded[: window.shape[0], : window.shape[1]] = window
-                            window = padded
-                        rows.append(
-                            (iid, tx, ty, window.shape[1], window.shape[0], c,
-                             np.ascontiguousarray(window).tobytes())
-                        )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["image_id", "tile_col", "tile_row", "tw", "th",
-                             "n_bands", "tile_bytes"],
-                )
+    def kern(iid, byts, fmt):
+        img = codecs.decode_hwc(byts, fmt)
+        h, w, c = img.shape
+        for ty in range((h + tile_h - 1) // tile_h):
+            for tx in range((w + tile_w - 1) // tile_w):
+                window = img[ty * tile_h : (ty + 1) * tile_h,
+                             tx * tile_w : (tx + 1) * tile_w]
+                if pad and window.shape[:2] != (tile_h, tile_w):
+                    padded = np.full((tile_h, tile_w, c), pad_value, np.uint8)
+                    padded[: window.shape[0], : window.shape[1]] = window
+                    window = padded
+                yield (iid, tx, ty, window.shape[1], window.shape[0], c,
+                       np.ascontiguousarray(window).tobytes())
 
-    return images.select(*_DEC_COLS).mapInPandas(
-        run,
-        schema="image_id string, tile_col int, tile_row int, tw int, th int, "
-               "n_bands int, tile_bytes binary",
+    return arrowrows.map_rows(
+        images.select(*_DEC_COLS), kern,
+        "image_id string, tile_col int, tile_row int, tw int, th int, "
+        "n_bands int, tile_bytes binary",
     )
 
 
@@ -484,37 +376,23 @@ def cut_base_tiles(images: DataFrame, z: int, pix_m: float = DEFAULT_PIX_M,
     """gdal2tiles base-tile stage: (z, tx, ty, y_xyz, tile_bytes PNG, checksum,
     n_src) — fragments mosaicked last-wins in image_id order (gdal_merge)."""
     assigned = assign_tiles(images, z, pix_m).select(
-        "image_id", "bytes", "fmt", "mx0", "my1", "z", "tx", "ty"
+        "image_id", "bytes", "fmt", "mx0", "my1", "tx", "ty"
     )
-
-    CHUNK = 64  # small emitted batches: see cut_image_tiles.render
-    frag_ddl = ("image_id string, tx long, ty long, px0 int, py0 int, "
-                "fw int, fh int, c int, frag binary")
-    frag_schema = arrowrows.arrow_schema(frag_ddl)
     out_schema = arrowrows.arrow_schema(_PYRAMID_DDL)
 
-    def frag(batches):
-        rows = []
-        for b in batches:
-            d = b.to_pydict()
-            for iid, byts, fmt, mx0, my1, tx, ty in zip(
-                d["image_id"], d["bytes"], d["fmt"], d["mx0"], d["my1"],
-                d["tx"], d["ty"],
-            ):
-                got = _resample_fragment(_decode_row(byts, fmt), mx0, my1,
-                                         pix_m, tx, ty, z, resampling)
-                if got is None:
-                    continue
-                px0, py0, crop = got
-                rows.append((iid, tx, ty, px0, py0, crop.shape[1],
-                             crop.shape[0], crop.shape[2], crop.tobytes()))
-                if len(rows) >= CHUNK:
-                    yield from arrowrows.rows_table(rows, frag_schema).to_batches()
-                    rows = []
-        if rows:
-            yield from arrowrows.rows_table(rows, frag_schema).to_batches()
+    def frag(iid, byts, fmt, mx0, my1, tx, ty):
+        got = _resample_fragment(codecs.decode_hwc(byts, fmt), mx0, my1,
+                                 pix_m, tx, ty, z, resampling)
+        if got is not None:
+            px0, py0, crop = got
+            yield (iid, tx, ty, px0, py0, crop.shape[1], crop.shape[0],
+                   crop.shape[2], crop.tobytes())
 
-    frags = assigned.mapInArrow(frag, schema=frag_ddl)
+    frags = arrowrows.map_rows(
+        assigned, frag,
+        "image_id string, tx long, ty long, px0 int, py0 int, fw int, fh int, "
+        "c int, frag binary",
+    )
 
     # grouped Arrow UDFs stay unannotated: PySpark 4.1 applyInArrow fails
     # on partial type hints
@@ -544,46 +422,25 @@ def cut_image_tiles(images: DataFrame, z: int, pix_m: float = DEFAULT_PIX_M,
     explode) -> resample fragment -> render own canvas; ZERO shuffle, which
     is the plan you want for 10^12 images."""
     assigned = assign_tiles(images, z, pix_m).select(
-        "image_id", "bytes", "fmt", "mx0", "my1", "z", "tx", "ty"
+        "image_id", "bytes", "fmt", "mx0", "my1", "tx", "ty"
     )
 
-    CHUNK = 64  # tiles per emitted batch: keeps Arrow output buffers ~2MB
-    # (large per-task output allocations pay a first-touch page-fault tax on
-    # virtualized hosts — measured ~3s/task constant at 20-40MB batches)
-    cols = ["image_id", "z", "tx", "ty", "y_xyz", "tile_bytes", "checksum"]
+    def render(iid, byts, fmt, mx0, my1, tx, ty):
+        got = _resample_fragment(codecs.decode_hwc(byts, fmt), mx0, my1,
+                                 pix_m, tx, ty, z, resampling)
+        if got is None:
+            return
+        px0, py0, crop = got
+        canvas = np.zeros((TILE, TILE, crop.shape[2]), dtype=np.uint8)
+        canvas[py0 : py0 + crop.shape[0], px0 : px0 + crop.shape[1]] = crop
+        out = canvas[:, :, 0] if crop.shape[2] == 1 else canvas
+        yield (iid, z, tx, ty, (1 << z) - 1 - ty, codecs.encode_png(out),
+               codecs.gdal_style_checksum(out))
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for b in batches:
-            for iid, byts, fmt, mx0, my1, tx, ty in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values,
-                b["mx0"].values, b["my1"].values, b["tx"].values, b["ty"].values,
-            ):
-                img = _decode_row(byts, fmt)
-                got = _resample_fragment(
-                    img, float(mx0), float(my1), pix_m, int(tx), int(ty), z,
-                    resampling,
-                )
-                if got is None:
-                    continue
-                px0, py0, crop = got
-                canvas = np.zeros((TILE, TILE, crop.shape[2]), dtype=np.uint8)
-                canvas[py0 : py0 + crop.shape[0], px0 : px0 + crop.shape[1]] = crop
-                out = canvas[:, :, 0] if crop.shape[2] == 1 else canvas
-                rows.append(
-                    (iid, z, int(tx), int(ty), (1 << z) - 1 - int(ty),
-                     codecs.encode_png(out), codecs.gdal_style_checksum(out))
-                )
-                if len(rows) >= CHUNK:
-                    yield pd.DataFrame(rows, columns=cols)
-                    rows = []
-        if rows:
-            yield pd.DataFrame(rows, columns=cols)
-
-    return assigned.mapInPandas(
-        render,
-        schema="image_id string, z int, tx long, ty long, y_xyz long, "
-               "tile_bytes binary, checksum int",
+    return arrowrows.map_rows(
+        assigned, render,
+        "image_id string, z int, tx long, ty long, y_xyz long, "
+        "tile_bytes binary, checksum int",
     )
 
 
@@ -710,24 +567,16 @@ def band_calc(images: DataFrame, calc: str, out_fmt: str = "pgm") -> DataFrame:
     namespace (same trust model as the reference, which evals --calc)."""
     code = compile(calc, "<band_calc>", "eval")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = _decode_row(byts, fmt).astype(np.float64)
-                ns = {chr(ord("A") + i): img[:, :, i] for i in range(img.shape[2])}
-                val = eval(code, _CALC_GLOBALS, ns)  # noqa: S307 — sandboxed ns
-                out = np.clip(np.rint(np.asarray(val, np.float64)), 0, 255).astype(np.uint8)
-                rows.append((iid, codecs.encode(out, out_fmt), out_fmt,
-                             out.shape[1], out.shape[0]))
-            if rows:
-                yield pd.DataFrame(rows, columns=["image_id", "bytes", "fmt", "w", "h"])
+    def kern(iid, byts, fmt):
+        img = codecs.decode_hwc(byts, fmt).astype(np.float64)
+        ns = {chr(ord("A") + i): img[:, :, i] for i in range(img.shape[2])}
+        val = eval(code, _CALC_GLOBALS, ns)  # noqa: S307 — sandboxed ns
+        out = np.clip(np.rint(np.asarray(val, np.float64)), 0, 255).astype(np.uint8)
+        yield (iid, codecs.encode(out, out_fmt), out_fmt, out.shape[1], out.shape[0])
 
-    return images.select(*_DEC_COLS).mapInPandas(
-        run, schema="image_id string, bytes binary, fmt string, w int, h int"
-    )
+    return arrowrows.map_rows(
+        images.select(*_DEC_COLS), kern,
+        "image_id string, bytes binary, fmt string, w int, h int")
 
 
 def band_calc_two(
@@ -747,50 +596,27 @@ def band_calc_two(
         "image_id", F.col("bytes").alias("bytes_b"), F.col("fmt").alias("fmt_b"))
     joined = a.join(b, "image_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for iid, ba, fa, bb, fb in zip(
-                batch["image_id"].values, batch["bytes_a"].values,
-                batch["fmt_a"].values, batch["bytes_b"].values,
-                batch["fmt_b"].values,
-            ):
-                A = _decode_row(ba, fa)[:, :, band].astype(np.float64)
-                B = _decode_row(bb, fb)[:, :, band].astype(np.float64)
-                val = eval(code, _CALC_GLOBALS, {"A": A, "B": B})  # noqa: S307
-                out = np.clip(
-                    np.rint(np.asarray(val, np.float64)), 0, 255
-                ).astype(np.int64)
-                vals, counts = np.unique(out, return_counts=True)
-                rows.extend(
-                    (iid, int(v), int(c)) for v, c in zip(vals, counts)
-                )
-            if rows:
-                yield pd.DataFrame(rows, columns=["image_id", "v_out", "n"])
+    def kern(iid, ba, fa, bb, fb):
+        A = codecs.decode_hwc(ba, fa)[:, :, band].astype(np.float64)
+        B = codecs.decode_hwc(bb, fb)[:, :, band].astype(np.float64)
+        val = eval(code, _CALC_GLOBALS, {"A": A, "B": B})  # noqa: S307
+        return _hist_rows((iid,), np.clip(np.rint(np.asarray(val, np.float64)), 0, 255))
 
-    return joined.mapInPandas(run, schema="image_id string, v_out int, n long")
+    return arrowrows.map_rows(joined, kern, _HIST_DDL)
 
 
 def translate(images: DataFrame, dst_fmt: str, bands: list[int] | None = None) -> DataFrame:
     """gdal_translate: format conversion + band select (lossless tier)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = _decode_row(byts, fmt)
-                if bands is not None:
-                    img = img[:, :, bands]
-                sq = img[:, :, 0] if img.shape[2] == 1 else img
-                rows.append((iid, codecs.encode(sq, dst_fmt), dst_fmt,
-                             img.shape[1], img.shape[0]))
-            if rows:
-                yield pd.DataFrame(rows, columns=["image_id", "bytes", "fmt", "w", "h"])
+    def kern(iid, byts, fmt):
+        img = codecs.decode_hwc(byts, fmt)
+        if bands is not None:
+            img = img[:, :, bands]
+        sq = img[:, :, 0] if img.shape[2] == 1 else img
+        yield (iid, codecs.encode(sq, dst_fmt), dst_fmt, img.shape[1], img.shape[0])
 
-    return images.select(*_DEC_COLS).mapInPandas(
-        run, schema="image_id string, bytes binary, fmt string, w int, h int"
-    )
+    return arrowrows.map_rows(
+        images.select(*_DEC_COLS), kern,
+        "image_id string, bytes binary, fmt string, w int, h int")
 
 
 def jpeg_variant_matrix(images: DataFrame, quality: int = 90) -> DataFrame:
@@ -802,38 +628,24 @@ def jpeg_variant_matrix(images: DataFrame, quality: int = 90) -> DataFrame:
     libjpeg scan scripts)."""
     from . import codecs_jpeg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = _decode_row(byts, fmt)
-                sq = img[:, :, 0] if img.shape[2] == 1 else img
-                base = codecs_jpeg.decode_jpeg(
-                    codecs_jpeg.encode_jpeg(sq, quality))
-                sub = codecs_jpeg.decode_jpeg(codecs_jpeg.encode_jpeg(
-                    sq, quality, subsampling="4:2:0"))
-                prog = codecs_jpeg.decode_jpeg(codecs_jpeg.encode_jpeg(
-                    sq, quality, progressive=True))
-                rst = codecs_jpeg.decode_jpeg(codecs_jpeg.encode_jpeg(
-                    sq, quality, restart_interval=2))
-                rows.append((
-                    iid,
-                    round(min(codecs.psnr(sq, base), 99.0), 2),
-                    round(min(codecs.psnr(sq, sub), 99.0), 2),
-                    bool(np.array_equal(base, prog)),
-                    bool(np.array_equal(base, rst)),
-                ))
-            if rows:
-                yield pd.DataFrame(rows, columns=[
-                    "image_id", "psnr_444", "psnr_420",
-                    "prog_exact", "rst_exact"])
+    def kern(iid, byts, fmt):
+        img = codecs.decode_hwc(byts, fmt)
+        sq = img[:, :, 0] if img.shape[2] == 1 else img
+        base = codecs_jpeg.decode_jpeg(codecs_jpeg.encode_jpeg(sq, quality))
+        sub = codecs_jpeg.decode_jpeg(codecs_jpeg.encode_jpeg(
+            sq, quality, subsampling="4:2:0"))
+        prog = codecs_jpeg.decode_jpeg(codecs_jpeg.encode_jpeg(
+            sq, quality, progressive=True))
+        rst = codecs_jpeg.decode_jpeg(codecs_jpeg.encode_jpeg(
+            sq, quality, restart_interval=2))
+        yield (iid, round(min(codecs.psnr(sq, base), 99.0), 2),
+               round(min(codecs.psnr(sq, sub), 99.0), 2),
+               bool(np.array_equal(base, prog)), bool(np.array_equal(base, rst)))
 
-    return images.select(*_DEC_COLS).mapInPandas(
-        run,
-        schema="image_id string, psnr_444 double, psnr_420 double, "
-               "prog_exact boolean, rst_exact boolean",
+    return arrowrows.map_rows(
+        images.select(*_DEC_COLS), kern,
+        "image_id string, psnr_444 double, psnr_420 double, "
+        "prog_exact boolean, rst_exact boolean",
     )
 
 
@@ -1060,26 +872,18 @@ def warp_resize(images: DataFrame, scale: float | None = None,
     if scale is None and (out_w is None or out_h is None):
         raise ValueError("need scale or out_w+out_h")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = _decode_row(byts, fmt)
-                ow = out_w if out_w else max(1, int(round(img.shape[1] * scale)))
-                oh = out_h if out_h else max(1, int(round(img.shape[0] * scale)))
-                out = np_warp_resize(img, ow, oh, method)
-                sq = out[:, :, 0] if out.shape[2] == 1 else out
-                rows.append((iid, codecs.encode(sq, out_fmt), out_fmt, ow, oh,
-                             codecs.gdal_style_checksum(out)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "bytes", "fmt", "w", "h", "checksum"])
+    def kern(iid, byts, fmt):
+        img = codecs.decode_hwc(byts, fmt)
+        ow = out_w if out_w else max(1, int(round(img.shape[1] * scale)))
+        oh = out_h if out_h else max(1, int(round(img.shape[0] * scale)))
+        out = np_warp_resize(img, ow, oh, method)
+        sq = out[:, :, 0] if out.shape[2] == 1 else out
+        yield (iid, codecs.encode(sq, out_fmt), out_fmt, ow, oh,
+               codecs.gdal_style_checksum(out))
 
-    return images.select(*_DEC_COLS).mapInPandas(
-        run,
-        schema="image_id string, bytes binary, fmt string, w int, h int, checksum int",
+    return arrowrows.map_rows(
+        images.select(*_DEC_COLS), kern,
+        "image_id string, bytes binary, fmt string, w int, h int, checksum int",
     )
 
 
@@ -1090,32 +894,18 @@ def warp_reproject(images: DataFrame, method: str = "bilinear",
     mapped reprojection (R5), one Arrow pass, zero shuffle — the map-only
     plan shape that holds at any scale. Returns
     (image_id, bytes, fmt, w, h, lon_w, lat_s, lon_e, lat_n, checksum)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt, lon, lat in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values,
-                b["lon"].values, b["lat"].values,
-            ):
-                img = _decode_row(byts, fmt)
-                out, bbox = np_warp_reproject_geodetic(
-                    img, float(lon), float(lat), pix_m, method=method
-                )
-                sq = out[:, :, 0] if out.shape[2] == 1 else out
-                rows.append((iid, codecs.encode(sq, out_fmt), out_fmt,
-                             out.shape[1], out.shape[0],
-                             bbox[0], bbox[1], bbox[2], bbox[3],
-                             codecs.gdal_style_checksum(out)))
-            if rows:
-                yield pd.DataFrame(rows, columns=[
-                    "image_id", "bytes", "fmt", "w", "h",
-                    "lon_w", "lat_s", "lon_e", "lat_n", "checksum"])
+    def kern(iid, byts, fmt, lon, lat):
+        out, bbox = np_warp_reproject_geodetic(
+            codecs.decode_hwc(byts, fmt), lon, lat, pix_m, method=method)
+        sq = out[:, :, 0] if out.shape[2] == 1 else out
+        yield (iid, codecs.encode(sq, out_fmt), out_fmt, out.shape[1],
+               out.shape[0], *bbox, codecs.gdal_style_checksum(out))
 
-    return images.select("image_id", "bytes", "fmt", "lon", "lat").mapInPandas(
-        run,
-        schema="image_id string, bytes binary, fmt string, w int, h int, "
-               "lon_w double, lat_s double, lon_e double, lat_n double, "
-               "checksum int",
+    return arrowrows.map_rows(
+        images.select("image_id", "bytes", "fmt", "lon", "lat"), kern,
+        "image_id string, bytes binary, fmt string, w int, h int, "
+        "lon_w double, lat_s double, lon_e double, lat_n double, "
+        "checksum int",
     )
 
 
@@ -1202,32 +992,18 @@ def warp_reproject_utm(images: DataFrame, method: str = "bilinear",
     pass, zero shuffle, the same map-only plan shape as the geodetic warp.
     Returns (image_id, bytes, fmt, w, h, zone, e_min, n_min, e_max, n_max,
     checksum)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt, lon, lat in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values,
-                b["lon"].values, b["lat"].values,
-            ):
-                img = _decode_row(byts, fmt)
-                out, bbox, zone = np_warp_reproject_utm(
-                    img, float(lon), float(lat), pix_m, method=method
-                )
-                sq = out[:, :, 0] if out.shape[2] == 1 else out
-                rows.append((iid, codecs.encode(sq, out_fmt), out_fmt,
-                             out.shape[1], out.shape[0], zone,
-                             bbox[0], bbox[1], bbox[2], bbox[3],
-                             codecs.gdal_style_checksum(out)))
-            if rows:
-                yield pd.DataFrame(rows, columns=[
-                    "image_id", "bytes", "fmt", "w", "h", "zone",
-                    "e_min", "n_min", "e_max", "n_max", "checksum"])
+    def kern(iid, byts, fmt, lon, lat):
+        out, bbox, zone = np_warp_reproject_utm(
+            codecs.decode_hwc(byts, fmt), lon, lat, pix_m, method=method)
+        sq = out[:, :, 0] if out.shape[2] == 1 else out
+        yield (iid, codecs.encode(sq, out_fmt), out_fmt, out.shape[1],
+               out.shape[0], zone, *bbox, codecs.gdal_style_checksum(out))
 
-    return images.select("image_id", "bytes", "fmt", "lon", "lat").mapInPandas(
-        run,
-        schema="image_id string, bytes binary, fmt string, w int, h int, "
-               "zone int, e_min double, n_min double, e_max double, "
-               "n_max double, checksum int",
+    return arrowrows.map_rows(
+        images.select("image_id", "bytes", "fmt", "lon", "lat"), kern,
+        "image_id string, bytes binary, fmt string, w int, h int, "
+        "zone int, e_min double, n_min double, e_max double, "
+        "n_max double, checksum int",
     )
 
 
@@ -1265,31 +1041,18 @@ def warp_cutline(
     Returns (image_id, bytes, fmt, w, h, kept, total, checksum)."""
     rings = [np.asarray(r, dtype=np.float64) for r in rings]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt, lon, lat in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values,
-                b["lon"].values, b["lat"].values,
-            ):
-                img = _decode_row(byts, fmt)
-                out, kept = np_cutline_apply(
-                    img, float(lon), float(lat), pix_m, rings, nodata
-                )
-                sq = out[:, :, 0] if out.shape[2] == 1 else out
-                rows.append((iid, codecs.encode(sq, out_fmt), out_fmt,
-                             out.shape[1], out.shape[0], kept,
-                             out.shape[0] * out.shape[1],
-                             codecs.gdal_style_checksum(out)))
-            if rows:
-                yield pd.DataFrame(rows, columns=[
-                    "image_id", "bytes", "fmt", "w", "h", "kept", "total",
-                    "checksum"])
+    def kern(iid, byts, fmt, lon, lat):
+        out, kept = np_cutline_apply(
+            codecs.decode_hwc(byts, fmt), lon, lat, pix_m, rings, nodata)
+        sq = out[:, :, 0] if out.shape[2] == 1 else out
+        yield (iid, codecs.encode(sq, out_fmt), out_fmt, out.shape[1],
+               out.shape[0], kept, out.shape[0] * out.shape[1],
+               codecs.gdal_style_checksum(out))
 
-    return images.select("image_id", "bytes", "fmt", "lon", "lat").mapInPandas(
-        run,
-        schema="image_id string, bytes binary, fmt string, w int, h int, "
-               "kept long, total long, checksum int",
+    return arrowrows.map_rows(
+        images.select("image_id", "bytes", "fmt", "lon", "lat"), kern,
+        "image_id string, bytes binary, fmt string, w int, h int, "
+        "kept long, total long, checksum int",
     )
 
 
@@ -1361,24 +1124,13 @@ def warp_gcp_affine(
     )
     joined = images.select(*_DEC_COLS).join(F.broadcast(gl), "image_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt, g in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values,
-                b["_gcps"].values,
-            ):
-                img = _decode_row(byts, fmt)
-                coefs = gcps_to_geotransform(np.array([list(r) for r in g]))
-                out, _, _ = np_warp_gcp_nearest(img, coefs, nodata, band)
-                vals, counts = np.unique(out, return_counts=True)
-                rows.extend(
-                    (iid, int(vv), int(c)) for vv, c in zip(vals, counts)
-                )
-            if rows:
-                yield pd.DataFrame(rows, columns=["image_id", "v_out", "n"])
+    def kern(iid, byts, fmt, g):
+        coefs = gcps_to_geotransform(np.array(g))
+        out, _, _ = np_warp_gcp_nearest(codecs.decode_hwc(byts, fmt), coefs,
+                                        nodata, band)
+        return _hist_rows((iid,), out)
 
-    return joined.mapInPandas(run, schema="image_id string, v_out int, n long")
+    return arrowrows.map_rows(joined, kern, _HIST_DDL)
 
 
 def to_xyz(images: DataFrame, band: int = 0, sample_stride: int = 1) -> DataFrame:
@@ -1389,7 +1141,7 @@ def to_xyz(images: DataFrame, band: int = 0, sample_stride: int = 1) -> DataFram
             for iid, byts, fmt in zip(
                 b["image_id"].values, b["bytes"].values, b["fmt"].values
             ):
-                img = _decode_row(byts, fmt)[::sample_stride, ::sample_stride, band]
+                img = codecs.decode_hwc(byts, fmt)[::sample_stride, ::sample_stride, band]
                 h, w = img.shape
                 ys, xs = np.mgrid[0:h, 0:w]
                 yield pd.DataFrame(
@@ -1506,51 +1258,32 @@ def proximity(images: DataFrame, targets=(1,), max_dist: float | None = None,
               out_fmt: str = "pgm") -> DataFrame:
     """Distributed proximity map: distance raster (rounded to uint8, capped
     255) per image + checksum — one Arrow pass, each row its own raster."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = _decode_row(byts, fmt)
-                d = np_proximity(img, targets=targets, max_dist=max_dist, nodata=255.0)
-                q = np.clip(np.round(d), 0, 255).astype(np.uint8)
-                rows.append((iid, codecs.encode(q, out_fmt), out_fmt,
-                             q.shape[1], q.shape[0],
-                             codecs.gdal_style_checksum(q)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "bytes", "fmt", "w", "h", "checksum"])
+    def kern(iid, byts, fmt):
+        d = np_proximity(codecs.decode_hwc(byts, fmt), targets=targets,
+                         max_dist=max_dist, nodata=255.0)
+        q = np.clip(np.round(d), 0, 255).astype(np.uint8)
+        yield (iid, codecs.encode(q, out_fmt), out_fmt, q.shape[1], q.shape[0],
+               codecs.gdal_style_checksum(q))
 
-    return images.select(*_DEC_COLS).mapInPandas(
-        run,
-        schema="image_id string, bytes binary, fmt string, w int, h int, checksum int",
+    return arrowrows.map_rows(
+        images.select(*_DEC_COLS), kern,
+        "image_id string, bytes binary, fmt string, w int, h int, checksum int",
     )
 
 
 def fillnodata(images: DataFrame, nodata: int = 0, max_search: int = 16,
                smoothing: int = 0, out_fmt: str = "pgm") -> DataFrame:
     """Distributed fillnodata: filled raster (uint8) + checksum per image."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = _decode_row(byts, fmt)
-                f = np_fillnodata(img, nodata=nodata, max_search=max_search,
-                                  smoothing=smoothing)
-                q = np.clip(np.round(f), 0, 255).astype(np.uint8)
-                rows.append((iid, codecs.encode(q, out_fmt), out_fmt,
-                             q.shape[1], q.shape[0],
-                             codecs.gdal_style_checksum(q)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "bytes", "fmt", "w", "h", "checksum"])
+    def kern(iid, byts, fmt):
+        f = np_fillnodata(codecs.decode_hwc(byts, fmt), nodata=nodata,
+                          max_search=max_search, smoothing=smoothing)
+        q = np.clip(np.round(f), 0, 255).astype(np.uint8)
+        yield (iid, codecs.encode(q, out_fmt), out_fmt, q.shape[1], q.shape[0],
+               codecs.gdal_style_checksum(q))
 
-    return images.select(*_DEC_COLS).mapInPandas(
-        run,
-        schema="image_id string, bytes binary, fmt string, w int, h int, checksum int",
+    return arrowrows.map_rows(
+        images.select(*_DEC_COLS), kern,
+        "image_id string, bytes binary, fmt string, w int, h int, checksum int",
     )
 
 
@@ -1590,36 +1323,24 @@ def nearblack(images: DataFrame, near: int = 15, white: bool = False,
               out_fmt: str = "pgm") -> DataFrame:
     """Distributed nearblack: collar-flattened raster + collared-pixel count
     + checksum per image (map-only; each row is its own raster)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = _decode_row(byts, fmt)
-                collar = np_nearblack_mask(img, near=near, white=white)
-                a = img if img.ndim == 3 else img[:, :, None]
-                out = a.copy()
-                out[collar] = 255 if white else 0
-                out = out.reshape(img.shape)
-                if out.ndim == 3 and out.shape[2] == 1:
-                    out = out[:, :, 0]
-                fmt_out = "ppm" if out.ndim == 3 else out_fmt
-                band0 = out[:, :, 0] if out.ndim == 3 else out
-                rows.append((iid, codecs.encode(out, fmt_out), fmt_out,
-                             band0.shape[1], band0.shape[0],
-                             int(collar.sum()),
-                             codecs.gdal_style_checksum(band0)))
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["image_id", "bytes", "fmt", "w", "h",
-                             "n_collar_px", "checksum"])
+    def kern(iid, byts, fmt):
+        img = codecs.decode_hwc(byts, fmt)
+        collar = np_nearblack_mask(img, near=near, white=white)
+        out = img.copy()
+        out[collar] = 255 if white else 0
+        fmt_out = out_fmt
+        if out.shape[2] == 1:
+            out = out[:, :, 0]
+        else:
+            fmt_out = "ppm"
+        band0 = out[:, :, 0] if out.ndim == 3 else out
+        yield (iid, codecs.encode(out, fmt_out), fmt_out, band0.shape[1],
+               band0.shape[0], int(collar.sum()), codecs.gdal_style_checksum(band0))
 
-    return images.select(*_DEC_COLS).mapInPandas(
-        run,
-        schema="image_id string, bytes binary, fmt string, w int, h int, "
-               "n_collar_px long, checksum int",
+    return arrowrows.map_rows(
+        images.select(*_DEC_COLS), kern,
+        "image_id string, bytes binary, fmt string, w int, h int, "
+        "n_collar_px long, checksum int",
     )
 
 
@@ -1668,28 +1389,15 @@ def pansharpen(ms_images: DataFrame, pan_images: DataFrame,
         "image_id", F.col("bytes").alias("_pb"), F.col("fmt").alias("_pf"))
     pairs = ms.join(pan, "image_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, mb, mf, pb, pf in zip(
-                b["image_id"].values, b["_mb"].values, b["_mf"].values,
-                b["_pb"].values, b["_pf"].values,
-            ):
-                msa = _decode_row(mb, mf)
-                pana = codecs.decode(bytes(pb), pf)
-                if pana.ndim == 3:
-                    pana = pana[:, :, 0]
-                out = np_pansharpen(msa, pana, weights)
-                rows.append((iid, codecs.encode(out, out_fmt), out_fmt,
-                             out.shape[1], out.shape[0],
-                             codecs.gdal_style_checksum(out)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "bytes", "fmt", "w", "h", "checksum"])
+    def kern(iid, mb, mf, pb, pf):
+        out = np_pansharpen(codecs.decode_hwc(mb, mf),
+                            codecs.decode_hwc(pb, pf)[:, :, 0], weights)
+        yield (iid, codecs.encode(out, out_fmt), out_fmt, out.shape[1],
+               out.shape[0], codecs.gdal_style_checksum(out))
 
-    return pairs.mapInPandas(
-        run,
-        schema="image_id string, bytes binary, fmt string, w int, h int, checksum int",
+    return arrowrows.map_rows(
+        pairs, kern,
+        "image_id string, bytes binary, fmt string, w int, h int, checksum int",
     )
 
 
@@ -1709,40 +1417,25 @@ def footprint(images: DataFrame, nodata: float = 0.0,
     cols c0..c1 spans x in [c0, c1+1]); n_vertices counts the distinct
     exterior-ring vertices (WKT closes the ring with one repeat).
 
-    One mapInPandas pass: the valid mask goes through
+    One per-row Arrow pass: the valid mask goes through
     polygonize.image_components (run-vectorized CCL, then each part's rings
     traced on its bbox crop) — pixels never shuffle; the output is the
     skinny vector layer gdal_footprint writes."""
     from . import polygonize as _poly
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, buf, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = codecs.decode(bytes(buf), str(fmt))
-                if img.ndim == 3:
-                    img = img[:, :, 0]
-                mask = (img.astype(np.float64) != float(nodata)).astype(np.uint8)
-                for part_id, _v, n_px, (y0, x0, y1, x1), (ext, holes) in (
-                    _poly.image_components(mask, connectivity)
-                ):
-                    rows.append(
-                        (str(iid), part_id, n_px, x0, y0, x1 + 1, y1 + 1,
-                         len(ext), _poly.polygon_wkt(ext, holes))
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["image_id", "part_id", "n_px", "xmin", "ymin",
-                             "xmax", "ymax", "n_vertices", "wkt"],
-                )
+    def kern(iid, byts, fmt):
+        img = codecs.decode_hwc(byts, fmt)[:, :, 0]
+        mask = (img.astype(np.float64) != float(nodata)).astype(np.uint8)
+        for part_id, _v, n_px, (y0, x0, y1, x1), (ext, holes) in (
+            _poly.image_components(mask, connectivity)
+        ):
+            yield (iid, part_id, n_px, x0, y0, x1 + 1, y1 + 1, len(ext),
+                   _poly.polygon_wkt(ext, holes))
 
-    return images.mapInPandas(
-        run,
-        schema=("image_id string, part_id long, n_px long, xmin int, "
-                "ymin int, xmax int, ymax int, n_vertices int, wkt string"),
+    return arrowrows.map_rows(
+        images.select(*_DEC_COLS), kern,
+        "image_id string, part_id long, n_px long, xmin int, ymin int, "
+        "xmax int, ymax int, n_vertices int, wkt string",
     )
 
 
@@ -1873,21 +1566,9 @@ def warp_tps(
     )
     joined = images.select(*_DEC_COLS).join(F.broadcast(gl), "image_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt, g in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values,
-                b["_gcps"].values,
-            ):
-                img = _decode_row(byts, fmt)
-                out = np_warp_tps_nearest(
-                    img, np.array([list(r) for r in g]), nodata, band)
-                vals, counts = np.unique(out, return_counts=True)
-                rows.extend(
-                    (iid, int(vv), int(c)) for vv, c in zip(vals, counts)
-                )
-            if rows:
-                yield pd.DataFrame(rows, columns=["image_id", "v_out", "n"])
+    def kern(iid, byts, fmt, g):
+        out = np_warp_tps_nearest(codecs.decode_hwc(byts, fmt), np.array(g),
+                                  nodata, band)
+        return _hist_rows((iid,), out)
 
-    return joined.mapInPandas(run, schema="image_id string, v_out int, n long")
+    return arrowrows.map_rows(joined, kern, _HIST_DDL)

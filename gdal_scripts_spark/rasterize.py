@@ -64,28 +64,20 @@ def rasterize_counts(
     cover = _cover(spark, polygons_pack, z)
     bc = spark.sparkContext.broadcast(polygons_pack)
 
-    out_ddl = "poly_id long, z int, tx long, ty long, y_xyz long, burned long"
-    out_schema = arrowrows.arrow_schema(out_ddl)
+    n = 1 << z
 
-    def burn(batches):
+    def burn(pid, cell_v):
         pk = bc.value
-        pos = {int(p): i for i, p in enumerate(pk.poly_ids)}
-        n = 1 << z
-        for b in batches:
-            rows = []
-            d = b.to_pydict()
-            for cell_v, pid in zip(d["cell"], d["poly_id"]):
-                _, tx, ty_xyz = (int(v) for v in cells.np_cell_to_tile(cell_v))
-                ty = n - 1 - ty_xyz
-                lon, lat = _tile_pixel_lonlat(tx, ty, z)
-                hit = geom.pip_grid_edges(lon, lat, pk.edges_of(pos[pid]))
-                burned = int(np.count_nonzero(hit))
-                if burned:
-                    rows.append((pid, z, tx, ty, ty_xyz, burned))
-            if rows:
-                yield from arrowrows.rows_table(rows, out_schema).to_batches()
+        _, tx, ty_xyz = (int(v) for v in cells.np_cell_to_tile(cell_v))
+        ty = n - 1 - ty_xyz
+        lon, lat = _tile_pixel_lonlat(tx, ty, z)
+        burned = int(np.count_nonzero(
+            geom.pip_grid_edges(lon, lat, pk.edges_of(pk.position(pid)))))
+        if burned:
+            yield pid, z, tx, ty, ty_xyz, burned
 
-    return cover.mapInArrow(burn, schema=out_ddl)
+    return arrowrows.map_rows(
+        cover, burn, "poly_id long, z int, tx long, ty long, y_xyz long, burned long")
 
 
 def rasterize_tiles(
@@ -106,29 +98,21 @@ def rasterize_tiles(
     bc = spark.sparkContext.broadcast(polygons_pack)
     burn_map = burn_attr or {}
 
-    frag_ddl = "poly_id long, tx long, ty long, y_xyz long, mask binary"
-    frag_schema = arrowrows.arrow_schema(frag_ddl)
     out_ddl = "z int, tx long, ty long, y_xyz long, tile_bytes binary"
     out_schema = arrowrows.arrow_schema(out_ddl)
+    n = 1 << z
 
-    def frag(batches):
+    def frag(pid, cell_v):
         pk = bc.value
-        pos = {int(p): i for i, p in enumerate(pk.poly_ids)}
-        n = 1 << z
-        for b in batches:
-            rows = []
-            d = b.to_pydict()
-            for cell_v, pid in zip(d["cell"], d["poly_id"]):
-                _, tx, ty_xyz = (int(v) for v in cells.np_cell_to_tile(cell_v))
-                ty = n - 1 - ty_xyz
-                lon, lat = _tile_pixel_lonlat(tx, ty, z)
-                hit = geom.pip_grid_edges(lon, lat, pk.edges_of(pos[pid]))
-                if hit.any():
-                    rows.append((pid, tx, ty, ty_xyz, np.packbits(hit).tobytes()))
-            if rows:
-                yield from arrowrows.rows_table(rows, frag_schema).to_batches()
+        _, tx, ty_xyz = (int(v) for v in cells.np_cell_to_tile(cell_v))
+        ty = n - 1 - ty_xyz
+        lon, lat = _tile_pixel_lonlat(tx, ty, z)
+        hit = geom.pip_grid_edges(lon, lat, pk.edges_of(pk.position(pid)))
+        if hit.any():
+            yield pid, tx, ty, ty_xyz, np.packbits(hit).tobytes()
 
-    frags = cover.mapInArrow(frag, schema=frag_ddl)
+    frags = arrowrows.map_rows(
+        cover, frag, "poly_id long, tx long, ty long, y_xyz long, mask binary")
 
     # grouped Arrow UDFs stay unannotated: PySpark 4.1 applyInArrow fails
     # on partial type hints
@@ -247,34 +231,24 @@ def rasterize_touched(
     cover = _cover(spark, polygons_pack, z)
     bc = spark.sparkContext.broadcast(polygons_pack)
 
-    out_schema = arrowrows.arrow_schema("poly_id long, burned long")
+    n = 1 << z
+    res = cells.resolution(z)
 
-    def burn(batches):
+    def burn(pid, cell_v):
         pk = bc.value
-        pos = {int(p): i for i, p in enumerate(pk.poly_ids)}
-        n = 1 << z
-        res = cells.resolution(z)
-        for b in batches:
-            rows = []
-            d = b.to_pydict()
-            for cell_v, pid in zip(d["cell"], d["poly_id"]):
-                _, tx, ty_xyz = (int(v) for v in cells.np_cell_to_tile(cell_v))
-                ty = n - 1 - ty_xyz
-                txmin = tx * TILE * res - cells.ORIGIN_SHIFT
-                tymax = (ty + 1) * TILE * res - cells.ORIGIN_SHIFT
-                rings_uv = []
-                for ring in pk.rings_of(pos[pid]):
-                    mx, my = cells.np_lonlat_to_meters(ring[:, 0], ring[:, 1])
-                    rings_uv.append(
-                        np.column_stack(((mx - txmin) / res, (tymax - my) / res))
-                    )
-                burned = int(np_touched_mask(rings_uv).sum())
-                if burned:
-                    rows.append((pid, burned))
-            if rows:
-                yield from arrowrows.rows_table(rows, out_schema).to_batches()
+        _, tx, ty_xyz = (int(v) for v in cells.np_cell_to_tile(cell_v))
+        ty = n - 1 - ty_xyz
+        txmin = tx * TILE * res - cells.ORIGIN_SHIFT
+        tymax = (ty + 1) * TILE * res - cells.ORIGIN_SHIFT
+        rings_uv = []
+        for ring in pk.rings_of(pk.position(pid)):
+            mx, my = cells.np_lonlat_to_meters(ring[:, 0], ring[:, 1])
+            rings_uv.append(np.column_stack(((mx - txmin) / res, (tymax - my) / res)))
+        burned = int(np_touched_mask(rings_uv).sum())
+        if burned:
+            yield pid, burned
 
-    frags = cover.mapInArrow(burn, schema="poly_id long, burned long")
+    frags = arrowrows.map_rows(cover, burn, "poly_id long, burned long")
     return frags.groupBy("poly_id").agg(
         F.count("*").alias("n_tiles"), F.sum("burned").alias("burned_total")
     )

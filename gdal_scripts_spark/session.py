@@ -19,21 +19,33 @@ Local-mode tuning notes (tests run on one JVM, ``local[N]``):
   CPython 3.11 each zipimporter then re-reads its whole archive directory
   (``zipimport.py:329-336``; 3.13 defers this, ``zipimport.py:276-278``):
   16 importers over ``pyspark.zip``, the py4j zip and the Spark core jar,
-  117-228 ms of CPU per task on 4 cores, paid by every
-  ``mapInPandas``/``mapInArrow``/``applyInPandas`` stage.
+  117-228 ms of CPU per task on 4 cores, paid by every Python stage.
   :mod:`gdal_scripts_spark.zipcache`, installed when a worker imports this
   package, skips the archives whose stat stamp did not change; no conf is
   involved.
-- Per-group Python cost: ``applyInPandas`` also builds and tears down a
-  pandas frame per group, about 4 ms of worker CPU. Two
-  ``raster.overview_tiles`` levels over the ``raster_tiles`` benchmark's
-  seed-1 base tiles (305 groups, 4 cores) used 2.97 worker CPU-s as
-  ``applyInPandas`` and 1.77 as ``applyInArrow`` (median of 5 warm runs;
-  decode, downsample, encode and checksum included). So the grouped tile
-  stages (``raster.cut_base_tiles``, ``raster.overview_tiles``,
-  ``rasterize.rasterize_tiles``) and their fragment passes are Arrow UDFs:
-  columns are read with ``to_pydict`` and output tables are built by
-  :mod:`gdal_scripts_spark.arrowrows`.
+- Python stages come in two shapes. Per-row stages (a kernel reads one
+  input row — an image, a polygon pair, a covering cell — and returns
+  zero or more output rows: the raster operators, the fragment passes of
+  the tile stages, rasterize, zonal partials, overlays of candidate
+  pairs) all run through :func:`gdal_scripts_spark.arrowrows.map_rows`,
+  one ``mapInArrow`` with Python scalars in and Arrow tables out, no
+  pandas frame. Grouped stages (the tile mosaics and overviews, the
+  ``dem`` halo assembly, ``formats.convex_hull_agg``, the ``gridops``
+  cogroup) get a whole group per call. Per-group Python cost:
+  ``applyInPandas`` builds and tears down a pandas frame per group, about
+  4 ms of worker CPU. Two ``raster.overview_tiles`` levels over the
+  ``raster_tiles`` benchmark's seed-1 base tiles (305 groups, 4 cores)
+  used 2.97 worker CPU-s as ``applyInPandas`` and 1.77 as
+  ``applyInArrow`` (median of 5 warm runs; decode, downsample, encode and
+  checksum included), so the grouped tile stages
+  (``raster.cut_base_tiles``, ``raster.overview_tiles``,
+  ``rasterize.rasterize_tiles``) are ``applyInArrow`` UDFs whose output
+  tables are built by :mod:`gdal_scripts_spark.arrowrows`. The few
+  ``mapInPandas`` stages left work on whole column batches
+  (``knn``, the ``vectorops`` scans, ``graph``, the ``sketches`` KMV
+  partial) or emit one column-shaped frame per image
+  (``raster.to_xyz``, ``viewshed.viewshed_cells``,
+  ``palette.rgb_histogram``).
 - A DataFrame made by ``spark.createDataFrame`` from a Python list scans a
   Python RDD, so every job that reads it runs Python tasks again (about
   1 CPU-s per job for 900 rows on 4 cores, against 0.1-0.2 for the same

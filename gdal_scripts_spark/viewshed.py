@@ -151,9 +151,7 @@ def viewshed_cells(images: DataFrame, *, observer_height_col: str =
                 b["orow"].values, b["ocol"].values,
                 b[observer_height_col].values,
             ):
-                dem = codecs.decode(bytes(buf), str(fmt))
-                if dem.ndim == 3:
-                    dem = dem[:, :, 0]
+                dem = codecs.decode_hwc(buf, fmt)[:, :, 0]
                 vis = np_viewshed(dem, int(orow), int(ocol), float(oh))
                 h, w = vis.shape
                 rr, cc = np.mgrid[0:h, 0:w]
@@ -170,4 +168,6 @@ def viewshed_cells(images: DataFrame, *, observer_height_col: str =
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
-    return images.mapInPandas(run, schema=_CELL_SCHEMA)
+    return images.select(
+        "image_id", "bytes", "fmt", "orow", "ocol", observer_height_col
+    ).mapInPandas(run, schema=_CELL_SCHEMA)

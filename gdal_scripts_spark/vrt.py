@@ -16,14 +16,12 @@ linear interpolation between them (the `<LUT>` element).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from . import codecs
+from . import arrowrows, codecs
 
 
 @dataclass
@@ -68,23 +66,13 @@ def vrt_apply(images: DataFrame, spec: VrtSpec, out_fmt: str = "pgm") -> DataFra
     """Compose the VRT transfer onto an images table — returns a LAZY
     DataFrame (the VRT itself); chain further ops (tile cut, stats, dem)
     before any action and the whole pipeline runs as one plan."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                img = codecs.decode(bytes(byts), fmt)
-                out = np_vrt_apply(img, spec)
-                sq = out[:, :, 0] if out.ndim == 3 and out.shape[2] == 1 else out
-                rows.append((iid, codecs.encode(sq, out_fmt), out_fmt,
-                             sq.shape[1], sq.shape[0],
-                             codecs.gdal_style_checksum(sq)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "bytes", "fmt", "w", "h", "checksum"])
+    def kern(iid, byts, fmt):
+        out = np_vrt_apply(codecs.decode(byts, fmt), spec)
+        sq = out[:, :, 0] if out.ndim == 3 and out.shape[2] == 1 else out
+        yield (iid, codecs.encode(sq, out_fmt), out_fmt, sq.shape[1], sq.shape[0],
+               codecs.gdal_style_checksum(sq))
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run,
-        schema="image_id string, bytes binary, fmt string, w int, h int, checksum int",
+    return arrowrows.map_rows(
+        images.select("image_id", "bytes", "fmt"), kern,
+        "image_id string, bytes binary, fmt string, w int, h int, checksum int",
     )

@@ -11,7 +11,7 @@ Spark-first shape — built for 100 TB of imagery:
 
 1. the zone layer (small side) is a flat :class:`geom.PolygonPack`,
    broadcast ONCE per executor via ``sparkContext.broadcast``;
-2. ONE ``mapInArrow`` pass over the images computes, per (image, zone),
+2. ONE per-row Arrow pass over the images computes, per (image, zone),
    the *partial* moments (n, sum, sum-of-squares, min, max) — pixels never
    leave the task, so the only shuffle is O(images x zones-touched) tiny
    rows, not O(pixels);
@@ -58,47 +58,29 @@ def zonal_partials(
     spark = images.sparkSession
     bc = spark.sparkContext.broadcast(pack)
 
-    out_schema = arrowrows.arrow_schema(_PARTIAL_SCHEMA)
-
-    def run(batches):
+    def kern(iid, buf, fmt, x0, y1):
         pk = bc.value
         bx0, by0, bx1, by1 = pk.bbox.T
-        for b in batches:
-            rows: list[tuple] = []
-            d = b.to_pydict()
-            for iid, buf, fmt, x0, y1 in zip(
-                d["image_id"], d["bytes"], d["fmt"], d["x0"], d["y1"]
-            ):
-                img = codecs.decode(buf, fmt)
-                bandv = (img if img.ndim == 2 else img[:, :, band]).astype(
-                    np.float64
-                )
-                h, w = bandv.shape
-                wx = float(x0) + (np.arange(w) + 0.5) * pix
-                wy = float(y1) - (np.arange(h) + 0.5) * pix
-                # zones whose bbox meets the pixel centers; inside a zone's
-                # bbox, the pixel-run mask of its sub-grid
-                near = ((bx0 <= wx.max()) & (bx1 >= wx.min())
-                        & (by0 <= wy.max()) & (by1 >= wy.min()))
-                for z in np.nonzero(near)[0]:
-                    cm = (wx >= bx0[z]) & (wx <= bx1[z])
-                    rm = (wy >= by0[z]) & (wy <= by1[z])
-                    hit = geom.pip_grid_edges(wx[cm], wy[rm], pk.edges_of(z))
-                    # pixel values are integers, so the sums are exact in
-                    # any order
-                    v = bandv[np.ix_(rm, cm)][hit]
-                    if len(v):
-                        rows.append(
-                            (iid, int(pk.poly_ids[z]), len(v),
-                             float(v.sum()), float((v * v).sum()),
-                             float(v.min()), float(v.max()))
-                        )
-            if rows:
-                yield from arrowrows.rows_table(rows, out_schema).to_batches()
+        bandv = codecs.decode_hwc(buf, fmt)[:, :, band].astype(np.float64)
+        h, w = bandv.shape
+        wx = x0 + (np.arange(w) + 0.5) * pix
+        wy = y1 - (np.arange(h) + 0.5) * pix
+        # zones whose bbox meets the pixel centers; inside a zone's bbox,
+        # the pixel-run mask of its sub-grid
+        near = ((bx0 <= wx.max()) & (bx1 >= wx.min())
+                & (by0 <= wy.max()) & (by1 >= wy.min()))
+        for z in np.nonzero(near)[0]:
+            cm = (wx >= bx0[z]) & (wx <= bx1[z])
+            rm = (wy >= by0[z]) & (wy <= by1[z])
+            hit = geom.pip_grid_edges(wx[cm], wy[rm], pk.edges_of(z))
+            # pixel values are integers, so the sums are exact in any order
+            v = bandv[np.ix_(rm, cm)][hit]
+            if len(v):
+                yield (iid, int(pk.poly_ids[z]), len(v), float(v.sum()),
+                       float((v * v).sum()), float(v.min()), float(v.max()))
 
-    return images.select("image_id", "bytes", "fmt", "x0", "y1").mapInArrow(
-        run, schema=_PARTIAL_SCHEMA
-    )
+    return arrowrows.map_rows(
+        images.select("image_id", "bytes", "fmt", "x0", "y1"), kern, _PARTIAL_SCHEMA)
 
 
 def zonal_stats(

@@ -1,14 +1,21 @@
-"""The tile, rasterize and zonal stages run as Arrow UDFs: their plans hold
-no pandas node, and edge inputs (empty images, a covering that burns no
-pixel, a single-band image) keep the declared output schemas."""
+"""Per-row stages run through ``arrowrows.map_rows`` and the tile stages
+as Arrow UDFs: their plans hold no pandas node, ``map_rows`` keeps its
+contract (declared schema on empty input, NULLs in, no casting out, rows
+in order), and edge inputs (empty images, a covering that burns no pixel,
+a single-band image) keep the declared output schemas."""
 
 from __future__ import annotations
+
+import re
 
 import numpy as np
 import pytest
 from pyspark.sql import types as T
 
-from gdal_scripts_spark import codecs, fixtures, geom, joins, raster, rasterize, zonal
+from gdal_scripts_spark import (
+    arrowrows, codecs, fixtures, geom, info, joins, palette, polygonize, raster,
+    rasterize, viewshed, zonal,
+)
 
 PYRAMID_TYPES = [
     ("z", T.IntegerType()), ("tx", T.LongType()), ("ty", T.LongType()),
@@ -49,11 +56,17 @@ def test_stage_plans_have_no_pandas_node(spark, square_pack):
         [("i0", codecs.encode(np.zeros((4, 4), np.uint8), "pgm"), "pgm", 0.0, 4.0)],
         schema="image_id string, bytes binary, fmt string, x0 double, y1 double",
     )
+    polys = fixtures.polygons_spark(spark, p=2)
     stages = {
         "cut_base_tiles": (base, True),
         "overview_tiles": (raster.overview_tiles(base, 14), True),
         "rasterize_tiles": (rasterize.rasterize_tiles(square_pack, spark, z=8), True),
         "zonal_partials": (zonal.zonal_partials(zin, square_pack), False),
+        "polygonize": (polygonize.polygonize(imgs), False),
+        "footprint": (raster.footprint(imgs), False),
+        "raster_info": (info.raster_info(imgs), False),
+        "s2_cover_regions_from_table": (joins.s2_cover_regions_from_table(polys), False),
+        "warp_reproject": (raster.warp_reproject(imgs), False),
     }
     for name, (df, grouped) in stages.items():
         plan = _plan(df)
@@ -64,6 +77,88 @@ def test_stage_plans_have_no_pandas_node(spark, square_pack):
     # the covering is an Arrow-backed local table, not a Python RDD that
     # every job would re-run in Python workers
     assert "ExistingRDD" not in _plan(stages["rasterize_tiles"][0])
+
+
+def _python_inputs(df, node: str) -> list[str]:
+    """Input attributes of the plan's first ``node`` (MapInArrow or
+    MapInPandas) Python node, without their expression ids."""
+    plan = _plan(df)
+    (args,) = re.findall(node + r" \w+\(([^)]*)\)", plan)[:1]
+    return re.sub(r"#\d+L?", "", args).split(", ")
+
+
+def test_stages_ship_only_the_columns_they_read(spark):
+    # the full images table (9 columns) plus the viewshed observer columns
+    dem = _images(spark, np.arange(30, dtype=np.uint8).reshape(5, 6), "pgm")
+    dem = dem.selectExpr("*", "2 AS orow", "3 AS ocol", "1.5d AS obs_h")
+    assert len(dem.columns) == 12
+    assert _python_inputs(raster.footprint(dem), "MapInArrow") == [
+        "image_id", "bytes", "fmt"]
+    assert _python_inputs(info.raster_info(dem), "MapInArrow") == [
+        "image_id", "bytes", "fmt"]
+    assert _python_inputs(viewshed.viewshed_cells(dem), "MapInPandas") == [
+        "image_id", "bytes", "fmt", "orow", "ocol", "obs_h"]
+    assert _python_inputs(palette.rgb_histogram(dem), "MapInPandas") == [
+        "bytes", "fmt"]
+
+
+def _collect_in_order(df):
+    return [tuple(r) for r in df.coalesce(1).collect()]
+
+
+def test_map_rows_empty_input_keeps_declared_schema(spark):
+    empty = spark.createDataFrame([], "a long, b string")
+    out = arrowrows.map_rows(empty, lambda a, b: [(a, b, 1.5)],
+                             "a long, b string, c double")
+    assert _types(out) == [("a", T.LongType()), ("b", T.StringType()),
+                           ("c", T.DoubleType())]
+    assert out.collect() == []
+
+
+def test_map_rows_kernel_that_returns_nothing(spark):
+    src = spark.range(0, 10, 1, 2)
+
+    def none_or_empty(i):
+        if i % 2:
+            return None
+        yield from ()
+
+    assert arrowrows.map_rows(src, none_or_empty, "i long").count() == 0
+    assert arrowrows.map_rows(src, lambda i: [], "i long").count() == 0
+
+
+def test_map_rows_fans_one_row_out_past_the_chunk_in_order(spark):
+    n = 3 * arrowrows.CHUNK + 5
+    src = spark.range(0, 3, 1, 1)
+
+    def fan(i):
+        return [(i, j) for j in range(n)] if i != 1 else []
+
+    out = arrowrows.map_rows(src, fan, "i long, j int")
+    assert _collect_in_order(out) == [(i, j) for i in (0, 2) for j in range(n)]
+
+
+def test_map_rows_passes_null_as_none(spark):
+    src = spark.createDataFrame(
+        [(1, None, 0.5), (None, "x", None)], "a long, b string, c double")
+
+    def kern(a, b, c):
+        yield a is None, b is None, c is None, repr((a, b, c))
+
+    out = arrowrows.map_rows(
+        src, kern, "a_null boolean, b_null boolean, c_null boolean, r string")
+    assert sorted(_collect_in_order(out)) == [
+        (False, True, False, "(1, None, 0.5)"),
+        (True, False, True, "(None, 'x', None)"),
+    ]
+
+
+def test_map_rows_raises_instead_of_casting(spark):
+    src = spark.range(0, 2, 1, 1)
+    with pytest.raises(Exception, match="convert|Expected"):
+        arrowrows.map_rows(src, lambda i: [(str(i),)], "i long").collect()
+    with pytest.raises(Exception, match="convert|Expected"):
+        arrowrows.map_rows(src, lambda i: [(i,)], "s string").collect()
 
 
 def test_empty_images_give_empty_typed_tiles(spark):

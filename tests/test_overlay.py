@@ -249,6 +249,30 @@ def test_erase_layer_general_spark_overlapping_methods(spark):
     assert abs(row.remaining_area - 36.0) < 1e-9
 
 
+def test_erase_layer_general_methods_of_different_vertex_counts(spark):
+    """A subject meeting method features whose rings differ in length (a
+    ragged list of rings per subject) erases each of them."""
+    def rings_row(*rings):
+        return [[{"x": float(x), "y": float(y)} for (x, y) in r] for r in rings]
+
+    a = spark.createDataFrame(
+        [(1, rings_row([(0, 0), (4, 0), (4, 4), (0, 4)]))],
+        schema="id_a long, rings array<array<struct<x:double,y:double>>>",
+    )
+    b = spark.createDataFrame(
+        [(1, rings_row([(0, 0), (2, 0), (0, 2)])),
+         (2, rings_row([(3, 3), (5, 3), (5, 5), (3, 5)])),
+         (3, rings_row([(3.5, 0), (5, 0), (5, 0.5), (4.5, 1), (3.5, 0.5)]))],
+        schema="id_b long, rings array<array<struct<x:double,y:double>>>",
+    )
+    row = overlay.erase_layer_general(a, b, bucket=8.0).collect()[0]
+    # triangle 2 + corner square [3,4]x[3,4] 1 + the pentagon's part left
+    # of x = 4, under y = 0.5 + (x - 3.5) / 2: 0.25 + 0.0625
+    assert abs(row.area - 16.0) < 1e-9
+    assert abs(row.erased_area - 3.3125) < 1e-9
+    assert abs(row.remaining_area - 12.6875) < 1e-9
+
+
 def test_predicates_general_reference_cases():
     """Hand-built truth rows for holed subject x L method."""
     subj = [SQ10, HOLE4]                       # [0,10]^2 minus [3,7]^2

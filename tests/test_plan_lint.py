@@ -8,8 +8,12 @@ operators that kill a 100x scale-up never appear:
   for the two DOCUMENTED brute-force baselines (they exist as oracles for
   the scale paths, and both broadcast the small side by contract).
 - ``BatchEvalPython`` — a row-at-a-time Python UDF sneaked onto a hot
-  path (the engine's contract is Arrow-batched pandas UDFs / mapInPandas
-  only, which plan as ArrowEvalPython / MapInPandas nodes).
+  path (the engine's Python runs only in Arrow stages: scalar Arrow and
+  pandas UDFs plan as ArrowEvalPython, per-row stages as the MapInArrow
+  of ``arrowrows.map_rows``, grouped stages as FlatMapGroupsIn*).
+- ``MapInPandas`` outside the few batch- and column-shaped stages that
+  keep it (``MAP_IN_PANDAS``): a per-row stage that bypasses
+  ``arrowrows.map_rows``.
 
 Constructing a few entries executes bounded driver-side work (fixpoint
 rounds, IVF sampling, streaming micro-batches) — at sf0.001 that is
@@ -25,6 +29,12 @@ BRUTE_BASELINES = {"knn_brute_topk", "cosine_topk_brute"}
 
 FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin", "BatchEvalPython")
 
+# entries whose plans keep a MapInPandas stage: the sketches KMV partial
+# (kmv_distinct_users), the vectorops PQ scans (pq_topk*) and the
+# column-shaped per-pixel emitters raster.to_xyz and viewshed_cells
+MAP_IN_PANDAS = {"kmv_distinct_users", "pq_topk", "pq_topk_ivf",
+                 "raster_to_xyz", "viewshed_wall"}
+
 
 @pytest.mark.parametrize("name", sorted(entry_mod.queries()))
 def test_no_scale_killers_in_plan(spark, name):
@@ -35,6 +45,8 @@ def test_no_scale_killers_in_plan(spark, name):
         assert set(hits) <= {"BroadcastNestedLoopJoin"}, hits
     else:
         assert not hits, f"{name}: scale-killer operators in plan: {hits}"
+    assert ("MapInPandas" in plan) == (name in MAP_IN_PANDAS), (
+        f"{name}: per-row Python stages run through arrowrows.map_rows")
     # driver-canon contract: the correctness harness sorts result columns
     # with pandas before hashing and cannot factorize nested values, so no
     # registry entry may expose Array/Map/Struct columns (flatten to
