@@ -5,7 +5,7 @@ script family (reference: supergis/GDAL_scripts).
 Not a port: semantics come from the public GDAL algorithms (cited per module
 as ``path/file : symbol`` into the public GDAL 3.8.x tree, see SURVEY.md §0);
 the execution design is idiomatic Spark — DataFrame/SQL plans optimized by
-Catalyst, Arrow-batched pandas UDFs only where built-ins cannot express the
+Catalyst, Arrow UDFs only where built-ins cannot express the
 semantics (pixel kernels, ray-cast point-in-polygon, connected components).
 
 Module map (SURVEY.md §7):

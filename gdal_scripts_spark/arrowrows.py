@@ -11,8 +11,10 @@ Most Python stages of the package are per-row: a kernel reads one input
 row (one image, one polygon pair, one covering cell) and returns zero or
 more output rows. :func:`map_rows` runs every such stage: the batch loop,
 the column-to-scalar conversion and the emit rule live here once. Grouped
-stages (``applyInArrow`` / ``applyInPandas``) and stages that work on whole
-column batches at a time build their tables themselves.
+stages (``applyInArrow``) and stages that work on whole column batches at
+a time build their tables themselves, from row tuples with
+:func:`rows_table` or from one array per column with
+:func:`columns_table`.
 """
 
 from __future__ import annotations
@@ -35,13 +37,30 @@ def arrow_schema(ddl: str) -> pa.Schema:
     return to_arrow_schema(DataType.fromDDL(ddl))
 
 
+def _array(values, t: pa.DataType) -> pa.Array:
+    """``values`` (a sequence or numpy array) as an Arrow array of ``t``.
+    ``pa.array(values, type=<integer>)`` truncates a Python float (3.5
+    gives 3), so floats for an integer type go through a checked cast:
+    3.0 gives 3 and 3.5 raises."""
+    if pa.types.is_integer(t):
+        a = pa.array(values)
+        if pa.types.is_floating(a.type):
+            return a.cast(t)
+    return pa.array(values, type=t)
+
+
+def columns_table(cols, schema: pa.Schema) -> pa.Table:
+    """Arrow table of ``schema`` from one sequence or numpy array per
+    field, all of one length."""
+    return pa.Table.from_arrays(
+        [_array(c, f.type) for c, f in zip(cols, schema)], schema=schema
+    )
+
+
 def rows_table(rows, schema: pa.Schema) -> pa.Table:
     """Arrow table of ``schema`` from a sequence of row tuples (possibly
     empty)."""
-    cols = list(zip(*rows)) or [()] * len(schema)
-    return pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
-    )
+    return columns_table(list(zip(*rows)) or [()] * len(schema), schema)
 
 
 def map_rows(df: DataFrame, fn, ddl: str) -> DataFrame:
@@ -55,8 +74,10 @@ def map_rows(df: DataFrame, fn, ddl: str) -> DataFrame:
     nothing else converts them, so a kernel emits each column's type
     itself: ``None`` (a float NaN stays NaN) for a NULL, a ``bool`` for a
     boolean column, a ``str`` for a string column; a value Arrow cannot
-    convert raises. Rows are emitted at the end of each input batch and
-    after any input row that leaves :data:`CHUNK` or more rows pending."""
+    convert without loss (a ``str`` for a number, an ``int`` for a
+    string, ``3.5`` for an integer) raises. Rows are emitted at the end
+    of each input batch and after any input row that leaves :data:`CHUNK`
+    or more rows pending."""
     schema = arrow_schema(ddl)
 
     def run(batches):

@@ -26,7 +26,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from . import arrowrows, codecs
@@ -218,27 +217,20 @@ def gdaldem_tiled(tiles: DataFrame, mode: str = "hillshade", **kwargs) -> DataFr
         "sh int, sw int, piece binary",
     )
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    out_ddl = ("image_id string, tile_col int, tile_row int, tw int, th int, "
+               "n_bands int, tile_bytes binary, checksum int")
+    out_schema = arrowrows.arrow_schema(out_ddl)
+
+    # grouped Arrow UDFs stay unannotated: PySpark 4.1 applyInArrow fails
+    # on partly annotated functions
+    def assemble(key, t):
         have = {}
-        for dy, dx, sh, sw, piece in zip(
-            pdf["dy"].values, pdf["dx"].values, pdf["sh"].values,
-            pdf["sw"].values, pdf["piece"].values,
-        ):
-            have[(int(dy), int(dx))] = np.frombuffer(
-                piece, np.uint8
-            ).reshape(int(sh), int(sw))
+        for dy, dx, sh, sw, piece in zip(*(
+                t.column(c).to_pylist() for c in ("dy", "dx", "sh", "sw", "piece"))):
+            have[(dy, dx)] = np.frombuffer(piece, np.uint8).reshape(sh, sw)
         if (0, 0) not in have:
             # strips addressed at a grid position with no tile (ragged edge)
-            return pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "tile_col": pd.Series([], dtype=np.int32),
-                "tile_row": pd.Series([], dtype=np.int32),
-                "tw": pd.Series([], dtype=np.int32),
-                "th": pd.Series([], dtype=np.int32),
-                "n_bands": pd.Series([], dtype=np.int32),
-                "tile_bytes": pd.Series([], dtype=object),
-                "checksum": pd.Series([], dtype=np.int32),
-            })
+            return out_schema.empty_table()
         center = have[(0, 0)]
         th, tw = center.shape
         canvas = np.empty((th + 2, tw + 2), np.uint8)
@@ -276,16 +268,10 @@ def gdaldem_tiled(tiles: DataFrame, mode: str = "hillshade", **kwargs) -> DataFr
             else:
                 canvas[pos] = canvas[inner]
         out = fn(canvas, kwargs)[1:-1, 1:-1]
-        return pd.DataFrame(
-            [(key[0], int(key[1]), int(key[2]), tw, th, 1,
+        return arrowrows.rows_table(
+            [(*(k.as_py() for k in key), tw, th, 1,
               np.ascontiguousarray(out).tobytes(),
-              codecs.gdal_style_checksum(out))],
-            columns=["image_id", "tile_col", "tile_row", "tw", "th",
-                     "n_bands", "tile_bytes", "checksum"],
-        )
+              codecs.gdal_style_checksum(out))], out_schema)
 
-    return strip_df.groupBy("image_id", "tile_col", "tile_row").applyInPandas(
-        assemble,
-        schema="image_id string, tile_col int, tile_row int, tw int, th int, "
-               "n_bands int, tile_bytes binary, checksum int",
-    )
+    return strip_df.groupBy("image_id", "tile_col", "tile_row").applyInArrow(
+        assemble, schema=out_ddl)

@@ -34,8 +34,8 @@ Hot-path scalars (area, length, bbox, counts) are pure-Column
 higher-order functions — whole-stage-codegen JVM evaluation, no Python
 workers, so filtering/aggregating billions of geometries never leaves the
 JVM. Text/byte (de)serialization is inherently per-value string work and
-runs as Arrow-batched pandas UDFs (the GDAL analog is the per-feature
-createFromWkt loop; here it is vectorized per Arrow batch).
+runs as scalar Arrow UDFs (the GDAL analog is the per-feature
+createFromWkt loop; here it is one Python call per Arrow batch).
 
 Scale notes (100 TB): parse/format UDFs are map-only (no shuffle, no
 driver state); GeoJSONSeq read is a plain lines-json scan with full
@@ -51,9 +51,10 @@ import re
 import struct as _struct
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -62,6 +63,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from . import arrowrows
 
 # ---------------------------------------------------------------------------
 # canonical geometry struct type
@@ -98,7 +101,7 @@ _WKB_KIND = {v: k for k, v in _WKB_CODE.items()}
 
 
 # ---------------------------------------------------------------------------
-# WKT text <-> python nesting (shared by the pandas UDFs and tests)
+# WKT text <-> python nesting (shared by the Arrow UDFs and tests)
 # ---------------------------------------------------------------------------
 
 _WKT_HEAD = re.compile(r"^\s*([A-Za-z]+)\s*(.*)$", re.S)
@@ -293,43 +296,17 @@ def _wkb_read(mv: memoryview, off: int) -> tuple[str, list, int]:
 
 
 # ---------------------------------------------------------------------------
-# Arrow-batched column codecs (pandas UDFs)
+# Arrow-batched column codecs (scalar Arrow UDFs)
 # ---------------------------------------------------------------------------
 
-
-def _geom_records(series: pd.Series, parse):
-    ks, ps = [], []
-    for v in series:
-        if v is None:
-            ks.append(None)
-            ps.append(None)
-            continue
-        k, parts = parse(v)
-        ks.append(k)
-        ps.append(
-            [[[{"x": float(x), "y": float(y)} for x, y in ring] for ring in part]
-             for part in parts]
-        )
-    return pd.DataFrame({"kind": ks, "parts": ps})
+_GEOM_ARROW = to_arrow_type(GEOM_TYPE)
 
 
-@F.pandas_udf(GEOM_TYPE)
-def wkt_parse(s: pd.Series) -> pd.DataFrame:
-    """WKT text column -> geometry struct (``createFromWkt`` analog)."""
-    return _geom_records(s, wkt_to_parts)
-
-
-@F.pandas_udf(BinaryType())
-def wkb_from_wkt(s: pd.Series) -> pd.Series:
-    """WKT text -> ISO WKB bytes in one Arrow pass (no intermediate
-    struct materialization — the common ETL direction)."""
-    return s.map(lambda v: None if v is None else parts_to_wkb(*wkt_to_parts(v)))
-
-
-@F.pandas_udf(GEOM_TYPE)
-def wkb_parse(s: pd.Series) -> pd.DataFrame:
-    """ISO WKB binary column -> geometry struct (``createFromWkb`` analog)."""
-    return _geom_records(s, wkb_to_parts)
+def _geom_array(geoms) -> pa.Array:
+    """Geometry struct array from ``(kind, parts)`` pairs (points as
+    ``(x, y)`` tuples); ``None`` gives a struct of NULL fields."""
+    return pa.array([(None, None) if g is None else g for g in geoms],
+                    _GEOM_ARROW)
 
 
 def _parts_tuples(parts):
@@ -338,42 +315,50 @@ def _parts_tuples(parts):
     ]
 
 
-# Struct-valued *inputs* to pandas UDFs choke on ragged nested arrays
-# (PySpark's Arrow->pandas converter rebuilds np.array per nesting level and
-# rings of different lengths are inhomogeneous), so the formatters take the
-# geometry serialized to JSON JVM-side (`to_json` — codegen) and parse the
-# line in the worker. Text/byte emission is string-bound anyway; the hot
-# scalar path above never leaves the JVM.
+def _geoms_in(s: pa.Array):
+    """``(kind, parts)`` per geometry struct of ``s``; ``None`` for a NULL
+    struct or a NULL kind."""
+    return [
+        None if v is None or v["kind"] is None
+        else (v["kind"], _parts_tuples(v["parts"] or []))
+        for v in s.to_pylist()
+    ]
 
 
-def _emit_from_json(s: pd.Series, emit) -> pd.Series:
-    def run(v):
-        if v is None:
-            return None
-        obj = json.loads(v)
-        return emit(obj["kind"], _parts_tuples(obj["parts"]))
-
-    return s.map(run)
+@F.arrow_udf(GEOM_TYPE)
+def wkt_parse(s: pa.Array) -> pa.Array:
+    """WKT text column -> geometry struct (``createFromWkt`` analog)."""
+    return _geom_array(None if v is None else wkt_to_parts(v)
+                       for v in s.to_pylist())
 
 
-@F.pandas_udf(StringType())
-def _wkt_format_json(s: pd.Series) -> pd.Series:
-    return _emit_from_json(s, parts_to_wkt)
+@F.arrow_udf(BinaryType())
+def wkb_from_wkt(s: pa.Array) -> pa.Array:
+    """WKT text -> ISO WKB bytes in one Arrow pass (no intermediate
+    struct materialization — the common ETL direction)."""
+    return pa.array([None if v is None else parts_to_wkb(*wkt_to_parts(v))
+                     for v in s.to_pylist()], pa.binary())
 
 
-@F.pandas_udf(BinaryType())
-def _wkb_format_json(s: pd.Series) -> pd.Series:
-    return _emit_from_json(s, parts_to_wkb)
+@F.arrow_udf(GEOM_TYPE)
+def wkb_parse(s: pa.Array) -> pa.Array:
+    """ISO WKB binary column -> geometry struct (``createFromWkb`` analog)."""
+    return _geom_array(None if v is None else wkb_to_parts(v)
+                       for v in s.to_pylist())
 
 
-def wkt_format(g: Column) -> Column:
+@F.arrow_udf(StringType())
+def wkt_format(g: pa.Array) -> pa.Array:
     """geometry struct -> canonical WKT (``exportToWkt`` analog)."""
-    return _wkt_format_json(F.to_json(g))
+    return pa.array([None if v is None else parts_to_wkt(*v)
+                     for v in _geoms_in(g)], pa.string())
 
 
-def wkb_format(g: Column) -> Column:
+@F.arrow_udf(BinaryType())
+def wkb_format(g: pa.Array) -> pa.Array:
     """geometry struct -> ISO WKB bytes (``exportToWkb`` analog)."""
-    return _wkb_format_json(F.to_json(g))
+    return pa.array([None if v is None else parts_to_wkb(*v)
+                     for v in _geoms_in(g)], pa.binary())
 
 
 # ---------------------------------------------------------------------------
@@ -888,27 +873,15 @@ def _simplify_parts(kind: str, parts, eps: float):
     return kind, out_parts
 
 
-@F.pandas_udf(GEOM_TYPE)
-def _simplify_json(s: pd.Series, eps: pd.Series) -> pd.DataFrame:
-    ks, ps = [], []
-    for v, e in zip(s, eps):
-        if v is None:
-            ks.append(None)
-            ps.append(None)
-            continue
-        obj = json.loads(v)
-        k, parts = _simplify_parts(obj["kind"], _parts_tuples(obj["parts"]), float(e))
-        ks.append(k)
-        ps.append(
-            [[[{"x": x, "y": y} for x, y in ring] for ring in part] for part in parts]
-        )
-    return pd.DataFrame({"kind": ks, "parts": ps})
-
-
 def simplify_dp(g: Column, eps) -> Column:
-    """geometry struct -> simplified geometry struct (map-only; same
-    to_json input route as the formatters)."""
-    return _simplify_json(F.to_json(g), F.lit(float(eps)))
+    """geometry struct -> simplified geometry struct (map-only)."""
+    eps = float(eps)
+
+    def simplify(s: pa.Array) -> pa.Array:
+        return _geom_array(None if v is None else _simplify_parts(*v, eps)
+                           for v in _geoms_in(s))
+
+    return F.arrow_udf(simplify, GEOM_TYPE)(g)
 
 
 def buffer_point(x: Column, y: Column, r, segments: int = 8) -> Column:
@@ -982,26 +955,12 @@ def members_to_wkt(members) -> str:
     )
 
 
-@F.pandas_udf(ArrayType(GEOM_TYPE))
-def wkt_parse_collection(s: pd.Series) -> pd.Series:
+@F.arrow_udf(ArrayType(GEOM_TYPE))
+def wkt_parse_collection(s: pa.Array) -> pa.Array:
     """WKT (any kind, incl. GEOMETRYCOLLECTION) -> array of geometry
     structs; pair with ``posexplode`` for one member per row."""
-    def run(v):
-        if v is None:
-            return None
-        return [
-            {
-                "kind": k,
-                "parts": [
-                    [[{"x": float(x), "y": float(y)} for x, y in ring]
-                     for ring in part]
-                    for part in parts
-                ],
-            }
-            for k, parts in wkt_to_members(v)
-        ]
-
-    return s.map(run)
+    return pa.array([None if v is None else wkt_to_members(v)
+                     for v in s.to_pylist()], pa.list_(_GEOM_ARROW))
 
 
 # ---------------------------------------------------------------------------
@@ -1262,33 +1221,39 @@ def convex_hull_agg(
         "_salt", F.pmod(F.xxhash64("_x", "_y"), F.lit(int(fanin)))
     )
 
-    def local_hull(pdf: pd.DataFrame) -> pd.DataFrame:
-        h = _geom.np_convex_hull(pdf[["_x", "_y"]].to_numpy())
-        n = len(pdf.drop_duplicates(["_x", "_y"]))
-        return pd.DataFrame({
-            "_g": pdf["_g"].iloc[0], "_x": h[:, 0], "_y": h[:, 1], "_n": n,
-        })
+    partial_ddl = f"_g {g_type}, _x double, _y double, _n long, _salt long"
+    partial_schema = arrowrows.arrow_schema(partial_ddl)
+    final_ddl = f"grp {g_type}, n_pts long, hull_area2 long, hull_perim double"
+    final_schema = arrowrows.arrow_schema(final_ddl)
 
-    def final_hull(pdf: pd.DataFrame) -> pd.DataFrame:
-        h = _geom.np_convex_hull(pdf[["_x", "_y"]].to_numpy())
-        area2, perim = _geom.hull_metrics(h)
+    # grouped Arrow UDFs stay unannotated: PySpark 4.1 applyInArrow fails
+    # on partly annotated functions
+    def local_hull(t):
+        x, y = t.column("_x").to_numpy(), t.column("_y").to_numpy()
+        h = _geom.np_convex_hull(np.column_stack([x, y]))
+        # distinct points, NaN equal to NaN and -0.0 to 0.0
+        xy = pa.table({"x": x + 0.0, "y": y + 0.0})
+        n = xy.group_by(["x", "y"]).aggregate([]).num_rows
+        g, salt = t.column("_g")[0].as_py(), t.column("_salt")[0].as_py()
+        k = len(h)
+        # carry the salt through so the final stage can de-duplicate the
+        # per-bucket distinct counts
+        return arrowrows.columns_table(
+            [[g] * k, h[:, 0], h[:, 1], [n] * k, [salt] * k], partial_schema)
+
+    def final_hull(t):
+        x, y = t.column("_x").to_numpy(), t.column("_y").to_numpy()
+        area2, perim = _geom.hull_metrics(
+            _geom.np_convex_hull(np.column_stack([x, y])))
         # salt buckets partition DISTINCT (x, y) pairs (salt is a function
         # of the point), so the global distinct count is the sum of one
         # per-bucket count each
-        n = int(pdf.groupby("_salt")["_n"].first().sum())
-        return pd.DataFrame({
-            "grp": [pdf["_g"].iloc[0]], "n_pts": [n],
-            "hull_area2": [int(round(area2))],
-            "hull_perim": [round(perim, 6)],
-        })
+        n = sum(dict(zip(t.column("_salt").to_pylist(),
+                         t.column("_n").to_pylist())).values())
+        return arrowrows.rows_table(
+            [(t.column("_g")[0].as_py(), n, int(round(area2)), round(perim, 6))],
+            final_schema)
 
-    # carry the salt through so the final stage can de-duplicate the
-    # per-bucket distinct counts
-    partial = salted.groupBy("_g", "_salt").applyInPandas(
-        lambda pdf: local_hull(pdf).assign(_salt=pdf["_salt"].iloc[0]),
-        schema=f"_g {g_type}, _x double, _y double, _n long, _salt long",
-    )
-    return partial.groupBy("_g").applyInPandas(
-        final_hull,
-        schema=f"grp {g_type}, n_pts long, hull_area2 long, hull_perim double",
-    )
+    partial = salted.groupBy("_g", "_salt").applyInArrow(
+        local_hull, schema=partial_ddl)
+    return partial.groupBy("_g").applyInArrow(final_hull, schema=final_ddl)

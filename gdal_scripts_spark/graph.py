@@ -15,7 +15,7 @@ HYBRID execution, sized by the (already-materialized) edge count:
    synchronization while a single-task union-find over the same edges
    costs seconds. So when the symmetrized edge set is at most
    ``local_edges_threshold`` rows it is coalesced into one partition and
-   solved by a path-halving union-find inside ``mapInPandas`` — no driver
+   solved by a path-halving union-find inside ``mapInArrow`` — no driver
    collect, no rounds. This is the common case for dedup: LSH candidate
    pairs are orders of magnitude fewer than corpus rows.
 2. **Big graphs run alternating large-star / small-star** (Kiveris et
@@ -37,10 +37,8 @@ Edge payloads are two longs — document text never enters either path.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -58,16 +56,15 @@ LOCAL_EDGES_THRESHOLD = 25_000_000
 def _cc_local(e: DataFrame) -> DataFrame:
     """Single-task union-find (path halving) over a coalesced edge list."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts = [b for b in batches]
+    def kernel(batches):
+        parts = list(batches)
         if not parts:
             return
-        edges = pd.concat(parts, ignore_index=True)
-        ids, inv = np.unique(
-            np.concatenate([edges["u"].values, edges["v"].values]),
-            return_inverse=True,
-        )
-        m = len(edges)
+        edges = pa.Table.from_batches(parts)
+        u = edges.column("u").to_numpy()
+        ids, inv = np.unique(np.concatenate([u, edges.column("v").to_numpy()]),
+                             return_inverse=True)
+        m = len(u)
         uu, vv = inv[:m], inv[m:]
         # vectorized min-label propagation with pointer jumping — no
         # per-edge Python loop. Invariants: labels are node INDICES within
@@ -89,9 +86,9 @@ def _cc_local(e: DataFrame) -> DataFrame:
             if np.array_equal(new, labels):
                 break
             labels = new
-        yield pd.DataFrame({"id": ids, "comp": ids[labels]})
+        yield from pa.table({"id": ids, "comp": ids[labels]}).to_batches()
 
-    return e.coalesce(1).mapInPandas(kernel, schema="id long, comp long")
+    return e.coalesce(1).mapInArrow(kernel, schema="id long, comp long")
 
 
 def _large_star(e: DataFrame) -> DataFrame:

@@ -27,11 +27,11 @@ DuckDB oracle.
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import cells, knn
+from . import arrowrows, cells, knn
 
 EPS_M = 1e-9
 
@@ -182,12 +182,10 @@ def nearest_value(
 # a global Delaunay of the point cloud): TIN barycentric interpolation.
 # ---------------------------------------------------------------------------
 
-def np_delaunay(pts: "np.ndarray") -> "np.ndarray":
+def np_delaunay(pts: np.ndarray) -> np.ndarray:
     """Bowyer-Watson Delaunay triangulation: (n,2) points -> (m,3) vertex
     index triangles. O(n^2) — meant for the per-tile neighborhoods the
     engine hands it (hundreds of points), not global clouds."""
-    import numpy as np
-
     pts = np.asarray(pts, dtype=np.float64)
     n = len(pts)
     if n < 3:
@@ -232,8 +230,6 @@ def np_tin_interpolate(pts, vals, qx, qy):
     """Piecewise-linear TIN interpolation: NaN outside the convex hull.
     For each Delaunay triangle, barycentric-interpolate the queries it
     contains (vectorized over queries)."""
-    import numpy as np
-
     pts = np.asarray(pts, dtype=np.float64)
     vals = np.asarray(vals, dtype=np.float64)
     qx = np.asarray(qx, dtype=np.float64)
@@ -268,7 +264,7 @@ def linear_interpolate(
 
     Spark shape: nodes group by their (tx, ty); points are replicated to
     their own tile AND its 8 neighbors (one native explode — the halo), and
-    the two sides meet in a ``cogroup().applyInPandas`` that triangulates
+    the two sides meet in a ``cogroup().applyInArrow`` that triangulates
     each tile's halo'd point set once and interpolates all of the tile's
     nodes. Scale contract (documented divergence from gdal_grid's GLOBAL
     Delaunay): triangles are local to the 3x3-tile neighborhood — exact
@@ -306,20 +302,22 @@ def linear_interpolate(
         .filter((F.col("ty") >= 0) & (F.col("ty") < n))
     )
 
-    def interp(key, qpdf: pd.DataFrame, ppdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
+    out_ddl = f"{qid} long, lin_value double"
+    out_schema = arrowrows.arrow_schema(out_ddl)
 
-        if len(qpdf) == 0 or len(ppdf) < 3:
-            return pd.DataFrame(columns=[qid, "lin_value"])
-        vals = np_tin_interpolate(
-            ppdf[["plon", "plat"]].values, ppdf["pval"].values,
-            qpdf["lon"].values, qpdf["lat"].values,
-        )
-        ok = ~pd.isna(vals)
-        return pd.DataFrame({qid: qpdf[qid].values[ok], "lin_value": vals[ok]})
+    # grouped Arrow UDFs stay unannotated: PySpark 4.1 applyInArrow fails
+    # on partly annotated functions
+    def interp(q, p):
+        if q.num_rows == 0 or p.num_rows < 3:
+            return out_schema.empty_table()
+        qids, qlon, qlat = (q.column(c).to_numpy() for c in (qid, "lon", "lat"))
+        plon, plat, pval = (p.column(c).to_numpy() for c in ("plon", "plat", "pval"))
+        vals = np_tin_interpolate(np.column_stack([plon, plat]), pval, qlon, qlat)
+        ok = ~np.isnan(vals)
+        return arrowrows.columns_table([qids[ok], vals[ok]], out_schema)
 
     return (
         q2.groupBy("tx", "ty")
         .cogroup(p2.groupBy("tx", "ty"))
-        .applyInPandas(interp, schema=f"{qid} long, lin_value double")
+        .applyInArrow(interp, schema=out_ddl)
     )

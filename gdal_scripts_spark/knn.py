@@ -41,7 +41,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from . import cells
+from . import arrowrows, cells
 
 
 def _with_tile(df: DataFrame, z: int, lon: str, lat: str, prefix: str) -> DataFrame:
@@ -132,7 +132,6 @@ def _fallback_partition_topk(
     This is the scale-correct brute force: the big side is scanned once and
     never shuffled; shuffle volume is O(partitions * k * |Q|)."""
     import numpy as np
-    import pandas as pd
 
     spark = rem.sparkSession
     qrows = rem.select(qid, "_qlon", "_qlat").collect()
@@ -144,6 +143,12 @@ def _fallback_partition_topk(
     bc = spark.sparkContext.broadcast((qids, qlon, qlat))
     id_field = points.schema[pid].dataType.simpleString()
     qid_field = rem.schema[qid].dataType.simpleString()
+    ddl = f"{qid} {qid_field}, {pid} {id_field}, dist_m double"
+    schema = arrowrows.arrow_schema(ddl)
+
+    def flush(*cols):
+        return arrowrows.columns_table(
+            [np.concatenate(c) for c in cols], schema).to_batches()
 
     def run(batches):
         ids, lon, lat = bc.value
@@ -166,10 +171,11 @@ def _fallback_partition_topk(
             nb = len(b)
             if nb == 0:
                 continue
-            pla = b["_plat"].to_numpy(np.float64) * rad
-            plo = b["_plon"].to_numpy(np.float64) * rad
+            pids_np, plo, pla = (c.to_numpy(zero_copy_only=False)
+                                 for c in b.columns)
+            pla = pla.astype(np.float64) * rad
+            plo = plo.astype(np.float64) * rad
             cpl = np.cos(pla)
-            pids_np = b[pid].to_numpy()
             kk = min(k, nb)
             for s in range(0, nq, QCHUNK):
                 e = min(s + QCHUNK, nq)
@@ -196,28 +202,12 @@ def _fallback_partition_topk(
                 out_d.append(d[qi, pj])
                 out_n += len(qi)
             if out_n >= FLUSH_ROWS:
-                yield pd.DataFrame(
-                    {
-                        qid: np.concatenate(out_q),
-                        pid: np.concatenate(out_p),
-                        "dist_m": np.concatenate(out_d),
-                    }
-                )
+                yield from flush(out_q, out_p, out_d)
                 out_q, out_p, out_d, out_n = [], [], [], 0
         if out_q:
-            yield pd.DataFrame(
-                {
-                    qid: np.concatenate(out_q),
-                    pid: np.concatenate(out_p),
-                    "dist_m": np.concatenate(out_d),
-                }
-            )
-        else:
-            yield pd.DataFrame({qid: [], pid: [], "dist_m": []})
+            yield from flush(out_q, out_p, out_d)
 
-    return points.select(pid, "_plon", "_plat").mapInPandas(
-        run, schema=f"{qid} {qid_field}, {pid} {id_field}, dist_m double"
-    )
+    return points.select(pid, "_plon", "_plat").mapInArrow(run, schema=ddl)
 
 
 def knn_join(

@@ -15,10 +15,7 @@ Spark-first decomposition (partial+final like every global aggregate here):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -29,20 +26,22 @@ def rgb_histogram(images: DataFrame, bits: int = 5) -> DataFrame:
     """(bin, count) global coarse RGB histogram; bin = (r5<<10)|(g5<<5)|b5."""
     shift = 8 - bits
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    ddl = "bin long, count long"
+    schema = arrowrows.arrow_schema(ddl)
+
+    def run(batches):
         for b in batches:
-            for byts, fmt in zip(b["bytes"].values, b["fmt"].values):
+            for byts, fmt in zip(*(c.to_pylist() for c in b.columns)):
                 q = (codecs.decode_hwc(byts, fmt) >> shift).astype(np.int64)
                 # a single-band image counts as gray r = g = b
                 q = np.broadcast_to(q, (*q.shape[:2], 3))
                 bins = (q[:, :, 0] << (2 * bits)) | (q[:, :, 1] << bits) | q[:, :, 2]
                 counts = np.bincount(bins.ravel(), minlength=1 << (3 * bits))
                 nz = np.nonzero(counts)[0]
-                yield pd.DataFrame({"bin": nz, "count": counts[nz]})
+                yield from arrowrows.columns_table(
+                    [nz, counts[nz]], schema).to_batches()
 
-    per_img = images.select("bytes", "fmt").mapInPandas(
-        run, schema="bin long, count long"
-    )
+    per_img = images.select("bytes", "fmt").mapInArrow(run, schema=ddl)
     return per_img.groupBy("bin").agg(F.sum("count").alias("count"))
 
 

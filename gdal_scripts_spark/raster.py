@@ -43,10 +43,8 @@ Tile table convention: ``(z int, tx long, ty long)`` with ty in **TMS**
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -1136,26 +1134,22 @@ def warp_gcp_affine(
 def to_xyz(images: DataFrame, band: int = 0, sample_stride: int = 1) -> DataFrame:
     """gdal2xyz: every (stride-th) pixel as a row. Explodes h*w rows per
     image — guard with stride at scale."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    ddl = "image_id string, px int, py int, value int"
+    schema = arrowrows.arrow_schema(ddl)
+
+    def run(batches):
         for b in batches:
-            for iid, byts, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
+            for iid, byts, fmt in zip(*(c.to_pylist() for c in b.columns)):
                 img = codecs.decode_hwc(byts, fmt)[::sample_stride, ::sample_stride, band]
                 h, w = img.shape
                 ys, xs = np.mgrid[0:h, 0:w]
-                yield pd.DataFrame(
-                    {
-                        "image_id": iid,
-                        "px": (xs.ravel() * sample_stride).astype(np.int32),
-                        "py": (ys.ravel() * sample_stride).astype(np.int32),
-                        "value": img.ravel().astype(np.int32),
-                    }
-                )
+                yield from arrowrows.columns_table(
+                    [[iid] * (h * w),
+                     (xs.ravel() * sample_stride).astype(np.int32),
+                     (ys.ravel() * sample_stride).astype(np.int32),
+                     img.ravel().astype(np.int32)], schema).to_batches()
 
-    return images.select(*_DEC_COLS).mapInPandas(
-        run, schema="image_id string, px int, py int, value int"
-    )
+    return images.select(*_DEC_COLS).mapInArrow(run, schema=ddl)
 
 
 # ---------------------------------------------------------------------------

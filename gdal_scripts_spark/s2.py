@@ -22,8 +22,8 @@ the unsigned order (the face bits are constant across the range), so
 BETWEEN range_min AND range_max is exact in SQL.
 
 Execution contract: the Hilbert walk is data-dependent bit mixing — not
-expressible as a closed-form Column — so encoding runs as an Arrow-batched
-scalar ``pandas_udf`` over the numpy kernel (plans as ArrowEvalPython; no
+expressible as a closed-form Column — so encoding runs as a scalar
+``arrow_udf`` over the numpy kernel (plans as ArrowEvalPython; no
 row-Python).  Everything AFTER encoding (level, parent, range_min/max) is
 pure Column bit arithmetic inside whole-stage codegen, so the 100-TB plan
 pays Python once at ingest and joins/aggregates JVM-side thereafter.
@@ -47,7 +47,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType
@@ -350,10 +350,9 @@ def s2_cell_id(lon: Column, lat: Column, level: int = MAX_LEVEL) -> Column:
     if not 0 <= level <= MAX_LEVEL:
         raise ValueError(f"level must be in [0, {MAX_LEVEL}], got {level}")
 
-    @F.pandas_udf(LongType())
-    def enc(lo: pd.Series, la: pd.Series) -> pd.Series:
-        la_np = la.to_numpy(np.float64)
-        lo_np = lo.to_numpy(np.float64)
+    def enc(lo: pa.Array, la: pa.Array) -> pa.Array:
+        la_np = la.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+        lo_np = lo.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
         n = lo_np.shape[0]
         out = np.empty(n, dtype=np.int64)
         # chunk so the kernel's ~17-array working set stays L2/L3-resident
@@ -363,17 +362,17 @@ def s2_cell_id(lon: Column, lat: Column, level: int = MAX_LEVEL) -> Column:
         for s in range(0, n, step):
             out[s:s + step] = np_s2_cell_id(lo_np[s:s + step],
                                             la_np[s:s + step], level)
-        return pd.Series(out)
+        return pa.array(out)
 
-    return enc(lon, lat)
+    return F.arrow_udf(enc, LongType())(lon, lat)
 
 
 def s2_token(cell: Column) -> Column:
-    @F.pandas_udf(StringType())
-    def tok(c: pd.Series) -> pd.Series:
-        return pd.Series(np_s2_token(c.to_numpy(np.int64)))
+    def tok(c: pa.Array) -> pa.Array:
+        return pa.array(np_s2_token(c.to_numpy(zero_copy_only=False)),
+                        pa.string())
 
-    return tok(cell)
+    return F.arrow_udf(tok, StringType())(cell)
 
 
 def s2_level(cell: Column) -> Column:

@@ -23,29 +23,26 @@ Local-mode tuning notes (tests run on one JVM, ``local[N]``):
   :mod:`gdal_scripts_spark.zipcache`, installed when a worker imports this
   package, skips the archives whose stat stamp did not change; no conf is
   involved.
-- Python stages come in two shapes. Per-row stages (a kernel reads one
-  input row — an image, a polygon pair, a covering cell — and returns
-  zero or more output rows: the raster operators, the fragment passes of
-  the tile stages, rasterize, zonal partials, overlays of candidate
-  pairs) all run through :func:`gdal_scripts_spark.arrowrows.map_rows`,
-  one ``mapInArrow`` with Python scalars in and Arrow tables out, no
-  pandas frame. Grouped stages (the tile mosaics and overviews, the
+- Python stages are all Arrow UDFs; only the stateful streaming
+  operator (``streaming``) keeps ``applyInPandasWithState``, which has no
+  Arrow form. Per-row stages (a kernel reads one input row — an image, a
+  polygon pair, a covering cell — and returns zero or more output rows:
+  the raster operators, the fragment passes of the tile stages,
+  rasterize, zonal partials, overlays of candidate pairs) run through
+  :func:`gdal_scripts_spark.arrowrows.map_rows`, one ``mapInArrow`` with
+  Python scalars in and Arrow tables out. Scalar column codecs (S2
+  encode, WKT/WKB, PQ codes) are ``arrow_udf``; batch- and column-shaped
+  stages (``knn``, the ``vectorops`` scans, ``graph``, the ``sketches``
+  KMV partial, ``raster.to_xyz``, ``viewshed.viewshed_cells``) are
+  ``mapInArrow``; grouped stages (the tile mosaics and overviews, the
   ``dem`` halo assembly, ``formats.convex_hull_agg``, the ``gridops``
-  cogroup) get a whole group per call. Per-group Python cost:
-  ``applyInPandas`` builds and tears down a pandas frame per group, about
-  4 ms of worker CPU. Two ``raster.overview_tiles`` levels over the
-  ``raster_tiles`` benchmark's seed-1 base tiles (305 groups, 4 cores)
-  used 2.97 worker CPU-s as ``applyInPandas`` and 1.77 as
-  ``applyInArrow`` (median of 5 warm runs; decode, downsample, encode and
-  checksum included), so the grouped tile stages
-  (``raster.cut_base_tiles``, ``raster.overview_tiles``,
-  ``rasterize.rasterize_tiles``) are ``applyInArrow`` UDFs whose output
-  tables are built by :mod:`gdal_scripts_spark.arrowrows`. The few
-  ``mapInPandas`` stages left work on whole column batches
-  (``knn``, the ``vectorops`` scans, ``graph``, the ``sketches`` KMV
-  partial) or emit one column-shaped frame per image
-  (``raster.to_xyz``, ``viewshed.viewshed_cells``,
-  ``palette.rgb_histogram``).
+  cogroup) are ``applyInArrow``. No pandas frame sits between a kernel
+  and the JVM. Per-group Python cost is the reason: ``applyInPandas``
+  builds and tears down a pandas frame per group, about 4 ms of worker
+  CPU. Two ``raster.overview_tiles`` levels over the ``raster_tiles``
+  benchmark's seed-1 base tiles (305 groups, 4 cores) used 2.97 worker
+  CPU-s as ``applyInPandas`` and 1.77 as ``applyInArrow`` (median of 5
+  warm runs; decode, downsample, encode and checksum included).
 - A DataFrame made by ``spark.createDataFrame`` from a Python list scans a
   Python RDD, so every job that reads it runs Python tasks again (about
   1 CPU-s per job for 900 rows on 4 cores, against 0.1-0.2 for the same

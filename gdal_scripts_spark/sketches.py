@@ -23,10 +23,10 @@ distinct hashes exist the sketch is exact (est = count). Otherwise
 est = (k-1) / h_(k) where h_(k) is the k-th minimum normalized by 16^12
 (the classic unbiased KMV form).
 
-Scale shape: distinct(group, hash) partial-aggregates map-side; the
-optional Arrow-batched per-partition combine (``partial=True``) then cuts
-each partition's contribution to <= k rows per group BEFORE the per-group
-shuffle — the mergeable-sketch property, expressed as mapInPandas — so the
+Scale shape: distinct(group, hash) partial-aggregates map-side; an
+Arrow-batched per-partition combine then cuts each partition's
+contribution to <= k rows per group BEFORE the per-group shuffle — the
+mergeable-sketch property, expressed as mapInArrow — so the
 global window sorts at most k * n_partitions rows per group no matter how
 hot the group is. No row-Python anywhere; the estimate itself is pure
 Column arithmetic.
@@ -34,9 +34,11 @@ Column arithmetic.
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -48,16 +50,30 @@ def _kmv_partial_topk(group_cols: Sequence[str], k: int):
     """Per-partition combine: keep the k smallest hashes per group seen in
     this partition (across all of its Arrow batches). State is
     k * groups-in-partition rows — bounded regardless of group heat."""
+    order = [(c, "ascending") for c in (*group_cols, "_h")]
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: pd.DataFrame | None = None
-        cols = [*group_cols, "_h"]
-        for pdf in batches:
-            both = pdf[cols] if acc is None else pd.concat(
-                [acc, pdf[cols]], ignore_index=True)
-            both = both.sort_values("_h", kind="mergesort")
-            acc = both.groupby(list(group_cols), sort=False).head(k)
-        yield acc if acc is not None else pd.DataFrame(columns=cols)
+    def fn(batches):
+        acc = None
+        for b in batches:
+            t = pa.Table.from_batches([b])
+            t = (t if acc is None else pa.concat_tables([acc, t])).sort_by(order)
+            # sorted by group, then hash: row i opens a group when a key
+            # differs from row i-1's (NULL equal to NULL; a NaN key opens
+            # a group per row, which only keeps more rows)
+            n = t.num_rows
+            new = np.zeros(n, dtype=bool)
+            new[:1] = True
+            for c in group_cols:
+                x, y = t.column(c).slice(1), t.column(c).slice(0, n - 1)
+                new[1:] |= pc.or_(
+                    pc.fill_null(pc.not_equal(x, y), False),
+                    pc.xor(pc.is_null(x), pc.is_null(y)),
+                ).to_numpy()
+            i = np.arange(n)
+            rank = i - np.maximum.accumulate(np.where(new, i, 0))
+            acc = t.filter(pa.array(rank < k))
+        if acc is not None:
+            yield from acc.to_batches()
 
     return fn
 
@@ -67,7 +83,6 @@ def kmv_distinct(
     group_cols: Sequence[str],
     key_col: str,
     k: int = 64,
-    partial: bool = True,
 ) -> DataFrame:
     """Approximate COUNT(DISTINCT key) per group via a k-minimum-values
     sketch. Returns one row per group: ``est_distinct`` (long; exact when
@@ -77,8 +92,7 @@ def kmv_distinct(
     group_cols = list(group_cols)
     h = F.md5(F.col(key_col).cast("string"))
     dh = df.select(*group_cols, h.alias("_h")).distinct()
-    if partial:
-        dh = dh.mapInPandas(_kmv_partial_topk(group_cols, k), dh.schema)
+    dh = dh.mapInArrow(_kmv_partial_topk(group_cols, k), dh.schema)
     w = Window.partitionBy(*group_cols).orderBy("_h")
     ranked = (
         dh.withColumn("_rn", F.row_number().over(w))

@@ -21,9 +21,11 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from . import arrowrows
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -191,17 +193,23 @@ def _nearest_centroids_arrow(vec: Column, cent: np.ndarray, n: int) -> Column:
     c = np.ascontiguousarray(cent, dtype=np.float64)
     c2 = (c * c).sum(axis=1)
 
-    @F.pandas_udf("array<int>")
-    def kern(s: pd.Series) -> pd.Series:
-        if s.empty:
-            return pd.Series([], dtype=object)
-        m = np.array(s.tolist(), dtype=np.float64)
+    def kern(s: pa.Array) -> pa.Array:
+        m = _rows_matrix(s, c.shape[1])
         # |v-c|^2 = |v|^2 - 2 v.c + |c|^2 ; |v|^2 constant per row, skip it
         d2 = c2[None, :] - 2.0 * (m @ c.T)
         idx = np.argsort(d2, axis=1, kind="stable")[:, :n].astype(np.int32)
-        return pd.Series([row.tolist() for row in idx])
+        return pa.ListArray.from_arrays(
+            pa.array(np.arange(len(idx) + 1, dtype=np.int32) * idx.shape[1]),
+            pa.array(idx.ravel()))
 
-    return kern(vec.cast("array<double>"))
+    return F.arrow_udf(kern, "array<int>")(vec.cast("array<double>"))
+
+
+def _rows_matrix(s: pa.Array, d: int) -> np.ndarray:
+    """(n, d) float64 matrix of a list column whose rows all hold ``d``
+    values (``d = -1``: a non-empty column, ``d`` taken from its rows)."""
+    return s.flatten().to_numpy(zero_copy_only=False).astype(
+        np.float64, copy=False).reshape(len(s), d)
 
 
 def nearest_centroids(vec: Column, cent: np.ndarray, n: int) -> Column:
@@ -320,31 +328,24 @@ def pq_encode(vec: Column, books: np.ndarray) -> Column:
         raise ValueError(f"pq_encode: ksub={ksub} > 256 does not fit uint8 codes")
     b2 = np.einsum("mkd,mkd->mk", b, b)
 
-    @F.pandas_udf("binary")
-    def kern(s: pd.Series) -> pd.Series:
-        if s.empty:
-            return pd.Series([], dtype=object)
-        x = np.array(s.tolist(), dtype=np.float64).reshape(len(s), m, dsub)
+    def kern(s: pa.Array) -> pa.Array:
+        x = _rows_matrix(s, m * dsub).reshape(len(s), m, dsub)
         codes = np.empty((len(s), m), dtype=np.uint8)
         for j in range(m):
             # |x-c|^2 = |x|^2 - 2 x.c + |c|^2; |x|^2 constant per row
             d2 = b2[j][None, :] - 2.0 * np.einsum("nd,kd->nk", x[:, j], b[j])
             codes[:, j] = d2.argmin(axis=1)  # first-min: deterministic ties
-        return pd.Series([row.tobytes() for row in codes])
+        return pa.array([row.tobytes() for row in codes], pa.binary())
 
-    return kern(vec.cast("array<double>"))
+    return F.arrow_udf(kern, "binary")(vec.cast("array<double>"))
 
 
-def _codes_matrix(col: pd.Series, m: int) -> np.ndarray:
-    """(n, m) int64 codes from either the packed-binary layout (bytes per
-    row) or the legacy ``array<int>`` layout — one frombuffer for the
-    packed path, no per-row Python beyond the join."""
-    first = col.iloc[0]
-    if isinstance(first, (bytes, bytearray)):
-        return np.frombuffer(
-            b"".join(col), dtype=np.uint8
-        ).reshape(len(col), m).astype(np.int64)
-    return np.array(col.tolist(), dtype=np.int64)
+def _codes_matrix(col: pa.Array, m: int) -> np.ndarray:
+    """(n, m) int64 codes from the packed ``binary`` column of
+    :func:`pq_encode` (m bytes per row)."""
+    return np.frombuffer(
+        b"".join(col.to_pylist()), dtype=np.uint8
+    ).reshape(len(col), m).astype(np.int64)
 
 
 def _check_rerank(k: int, rerank: int) -> None:
@@ -409,8 +410,8 @@ def pq_topk(
         for bt in batches:
             if not len(bt):
                 continue
-            codes = _codes_matrix(bt["codes"], m)  # (n, m)
-            nid = bt["neighbor_id"].to_numpy(dtype=np.int64)
+            codes = _codes_matrix(bt.column("codes"), m)  # (n, m)
+            nid = _ids(bt.column("neighbor_id"))
             d = np.zeros((nq, len(codes)), dtype=np.float64)
             for j in range(m):
                 d += lut[:, j, :][:, codes[:, j]]
@@ -422,13 +423,32 @@ def pq_topk(
                 out_q.append(np.full(len(top), qids[i]))
                 out_n.append(ni[top])
                 out_d.append(di[top])
-            yield pd.DataFrame({
-                "qid": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "dist": np.concatenate(out_d),
-            })
+            yield from _candidates(out_q, out_n, out_d)
 
-    cand = cb.mapInPandas(scan, schema="qid long, neighbor_id long, dist double")
+    cand = cb.mapInArrow(scan, schema=_CAND_DDL)
+    return _rank_candidates(cand, queries, corpus, k, rerank, qid, cid, vec)
+
+
+_CAND_DDL = "qid long, neighbor_id long, dist double"
+_CAND_SCHEMA = pa.schema([("qid", pa.int64()), ("neighbor_id", pa.int64()),
+                          ("dist", pa.float64())])
+
+
+def _ids(col: pa.Array) -> np.ndarray:
+    return col.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+
+
+def _candidates(out_q, out_n, out_d):
+    """Record batches of the ADC scan's (qid, neighbor_id, dist) rows."""
+    return arrowrows.columns_table(
+        [np.concatenate(c) for c in (out_q, out_n, out_d)], _CAND_SCHEMA
+    ).to_batches()
+
+
+def _rank_candidates(cand, queries, corpus, k, rerank, qid, cid, vec):
+    """Final top-``k`` per query of the ADC candidates ``cand``, ranked by
+    (dist, neighbor_id). With ``rerank`` the ``rerank``-wide ADC shortlist
+    is ranked again by exact L2 against the corpus vectors."""
     wnd = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("neighbor_id"))
     if rerank:
         shortlist = (
@@ -457,7 +477,7 @@ def pq_topk(
         )
     return (
         cand.withColumn("rank", F.row_number().over(wnd))
-        .filter(F.col("rank") <= kk)
+        .filter(F.col("rank") <= int(k))
         .select("qid", "rank", "neighbor_id", F.round("dist", 6).alias("dist"))
     )
 
@@ -511,9 +531,9 @@ def pq_topk_ivf(
         for bt in batches:
             if not len(bt):
                 continue
-            codes = _codes_matrix(bt["codes"], m)
-            nid = bt["neighbor_id"].to_numpy(dtype=np.int64)
-            bkt = bt["bucket"].to_numpy(dtype=np.int64)
+            codes = _codes_matrix(bt.column("codes"), m)
+            nid = _ids(bt.column("neighbor_id"))
+            bkt = _ids(bt.column("bucket"))
             out_q, out_n, out_d = [], [], []
             for i in range(nq):
                 keep = np.isin(bkt, probed[i]) & (nid != qids[i])
@@ -527,46 +547,11 @@ def pq_topk_ivf(
                 out_q.append(np.full(len(top), qids[i]))
                 out_n.append(ni[top])
                 out_d.append(d[top])
-            if not out_q:
-                continue
-            yield pd.DataFrame({
-                "qid": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "dist": np.concatenate(out_d),
-            })
+            if out_q:
+                yield from _candidates(out_q, out_n, out_d)
 
-    cand = cb.mapInPandas(scan, schema="qid long, neighbor_id long, dist double")
-    wnd = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("neighbor_id"))
-    if rerank:
-        shortlist = (
-            cand.withColumn("rank", F.row_number().over(wnd))
-            .filter(F.col("rank") <= int(rerank))
-            .select("qid", "neighbor_id")
-        )
-        qvdf = queries.select(
-            F.col(qid).alias("qid"), F.col(vec).cast("array<double>").alias("qv")
-        )
-        cvdf = corpus.select(
-            F.col(cid).alias("neighbor_id"),
-            F.col(vec).cast("array<double>").alias("cv"),
-        )
-        exact_d = F.aggregate(
-            F.zip_with(F.col("qv"), F.col("cv"), lambda a, c: (a - c) * (a - c)),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-        return (
-            shortlist.join(cvdf, "neighbor_id")
-            .join(F.broadcast(qvdf), "qid")
-            .withColumn("dist", exact_d)
-            .withColumn("rank", F.row_number().over(wnd))
-            .filter(F.col("rank") <= int(k))
-            .select("qid", "rank", "neighbor_id", F.round("dist", 6).alias("dist"))
-        )
-    return (
-        cand.withColumn("rank", F.row_number().over(wnd))
-        .filter(F.col("rank") <= kk)
-        .select("qid", "rank", "neighbor_id", F.round("dist", 6).alias("dist"))
-    )
+    cand = cb.mapInArrow(scan, schema=_CAND_DDL)
+    return _rank_candidates(cand, queries, corpus, k, rerank, qid, cid, vec)
 
 
 # ---------------------------------------------------------------------------
@@ -586,20 +571,19 @@ def covariance_moments(emb: DataFrame, vec_col: str = "embedding"):
         s = None
         ss = None
         for b in batches:
-            m = np.stack(b[vec_col].values).astype(np.float64)
+            if not len(b):
+                continue
+            m = _rows_matrix(b.column(0), -1)
             n += len(m)
             cs = m.sum(axis=0)
             co = m.T @ m
             s = cs if s is None else s + cs
             ss = co if ss is None else ss + co
         if n:
-            yield pd.DataFrame({
-                "n": [n],
-                "s": [s.tolist()],
-                "ss": [ss.ravel().tolist()],
-            })
+            yield pa.RecordBatch.from_pydict(
+                {"n": [n], "s": [s.tolist()], "ss": [ss.ravel().tolist()]})
 
-    rows = emb.select(vec_col).mapInPandas(
+    rows = emb.select(vec_col).mapInArrow(
         partials, schema="n long, s array<double>, ss array<double>"
     ).collect()  # driver-bounded: one row per partition
     n = sum(r["n"] for r in rows)

@@ -18,7 +18,7 @@ Heights compare as elevation ANGLES relative to the observer eye
 blocks, a graze does not. The observer's own cell is visible.
 
 Spark-first shape: DEMs live one-per-row as encoded bytes; the kernel is a
-single numpy pass per image inside ``mapInPandas`` (two vectorized sweeps,
+single numpy pass per image inside ``mapInArrow`` (two vectorized sweeps,
 one per dominant axis — O(w) column matrices, no per-cell Python), so
 pixels never shuffle and a million-DEM viewshed job is embarrassingly
 parallel.
@@ -26,13 +26,10 @@ parallel.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from . import codecs
+from . import arrowrows, codecs
 
 
 def _sweep_angles(dem: np.ndarray, orow: int, ocol: int, eye: float,
@@ -143,31 +140,21 @@ def viewshed_cells(images: DataFrame, *, observer_height_col: str =
     with its visibility. ``images`` needs (image_id, bytes, fmt, orow,
     ocol, obs_h)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    schema = arrowrows.arrow_schema(_CELL_SCHEMA)
+
+    def run(batches):
         for b in batches:
-            frames = []
             for iid, buf, fmt, orow, ocol, oh in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values,
-                b["orow"].values, b["ocol"].values,
-                b[observer_height_col].values,
-            ):
+                    *(c.to_pylist() for c in b.columns)):
                 dem = codecs.decode_hwc(buf, fmt)[:, :, 0]
                 vis = np_viewshed(dem, int(orow), int(ocol), float(oh))
                 h, w = vis.shape
                 rr, cc = np.mgrid[0:h, 0:w]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "image_id": str(iid),
-                            "r": rr.ravel().astype(np.int32),
-                            "c": cc.ravel().astype(np.int32),
-                            "visible": vis.ravel(),
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+                yield from arrowrows.columns_table(
+                    [[str(iid)] * (h * w), rr.ravel().astype(np.int32),
+                     cc.ravel().astype(np.int32), vis.ravel()],
+                    schema).to_batches()
 
     return images.select(
         "image_id", "bytes", "fmt", "orow", "ocol", observer_height_col
-    ).mapInPandas(run, schema=_CELL_SCHEMA)
+    ).mapInArrow(run, schema=_CELL_SCHEMA)

@@ -80,8 +80,8 @@ def test_stage_plans_have_no_pandas_node(spark, square_pack):
 
 
 def _python_inputs(df, node: str) -> list[str]:
-    """Input attributes of the plan's first ``node`` (MapInArrow or
-    MapInPandas) Python node, without their expression ids."""
+    """Input attributes of the plan's first ``node`` (e.g. MapInArrow)
+    Python node, without their expression ids."""
     plan = _plan(df)
     (args,) = re.findall(node + r" \w+\(([^)]*)\)", plan)[:1]
     return re.sub(r"#\d+L?", "", args).split(", ")
@@ -96,9 +96,9 @@ def test_stages_ship_only_the_columns_they_read(spark):
         "image_id", "bytes", "fmt"]
     assert _python_inputs(info.raster_info(dem), "MapInArrow") == [
         "image_id", "bytes", "fmt"]
-    assert _python_inputs(viewshed.viewshed_cells(dem), "MapInPandas") == [
+    assert _python_inputs(viewshed.viewshed_cells(dem), "MapInArrow") == [
         "image_id", "bytes", "fmt", "orow", "ocol", "obs_h"]
-    assert _python_inputs(palette.rgb_histogram(dem), "MapInPandas") == [
+    assert _python_inputs(palette.rgb_histogram(dem), "MapInArrow") == [
         "bytes", "fmt"]
 
 
@@ -159,6 +159,12 @@ def test_map_rows_raises_instead_of_casting(spark):
         arrowrows.map_rows(src, lambda i: [(str(i),)], "i long").collect()
     with pytest.raises(Exception, match="convert|Expected"):
         arrowrows.map_rows(src, lambda i: [(i,)], "s string").collect()
+    # a non-integral float for an integer column raises instead of
+    # truncating; an integral one converts
+    with pytest.raises(Exception, match="truncated"):
+        arrowrows.map_rows(src, lambda i: [(i + 0.5,)], "i long").collect()
+    out = arrowrows.map_rows(src, lambda i: [(i + 1.0,)], "i int").collect()
+    assert sorted(r.i for r in out) == [1, 2]
 
 
 def test_empty_images_give_empty_typed_tiles(spark):

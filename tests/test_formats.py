@@ -189,6 +189,26 @@ def test_spark_wkb_column_roundtrip(spark):  # noqa: F811
         assert r.back == r.wkt
 
 
+def test_ragged_rings_format_and_simplify_without_json(spark):  # noqa: F811
+    # exterior (6 vertices) and hole (4) differ in length: the formatters
+    # and the simplifier read the struct as is, with no to_json detour
+    wkt = "POLYGON ((0 0, 10 0, 10 10, 5 10.001, 0 10, 0 0), (2 2, 3 2, 3 3, 2 2))"
+    g = spark.createDataFrame([(wkt,)], "wkt string").select(
+        formats.wkt_parse(F.col("wkt")).alias("g"))
+    out = g.select(
+        formats.wkt_format(F.col("g")).alias("wkt"),
+        formats.wkb_format(F.col("g")).alias("wkb"),
+        formats.wkt_format(formats.simplify_dp(F.col("g"), 0.01)).alias("simple"),
+    )
+    plans = out._jdf.queryExecution().toString()  # analyzed ... physical
+    assert "to_json" not in plans and "StructsToJson" not in plans
+    (r,) = out.collect()
+    assert r.wkt == wkt
+    assert bytes(r.wkb) == formats.parts_to_wkb(*formats.wkt_to_parts(wkt))
+    assert r.simple == (
+        "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 3 2, 3 3, 2 2))")
+
+
 # ---------------------------------------------------------------------------
 # GeoJSONSeq sink + source
 # ---------------------------------------------------------------------------

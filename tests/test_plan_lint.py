@@ -8,17 +8,27 @@ operators that kill a 100x scale-up never appear:
   for the two DOCUMENTED brute-force baselines (they exist as oracles for
   the scale paths, and both broadcast the small side by contract).
 - ``BatchEvalPython`` — a row-at-a-time Python UDF sneaked onto a hot
-  path (the engine's Python runs only in Arrow stages: scalar Arrow and
-  pandas UDFs plan as ArrowEvalPython, per-row stages as the MapInArrow
-  of ``arrowrows.map_rows``, grouped stages as FlatMapGroupsIn*).
-- ``MapInPandas`` outside the few batch- and column-shaped stages that
-  keep it (``MAP_IN_PANDAS``): a per-row stage that bypasses
-  ``arrowrows.map_rows``.
+  path (the engine's Python runs only in Arrow stages: scalar Arrow UDFs
+  plan as ArrowEvalPython of eval type 250, per-row and batch stages as
+  MapInArrow, grouped stages as FlatMapGroupsInArrow /
+  FlatMapCoGroupsInArrow).
+- any node of the pandas UDF family (``MapInPandas``,
+  ``FlatMapGroupsInPandas``, ``FlatMapCoGroupsInPandas``, or an
+  ArrowEvalPython of eval type 200, a scalar ``pandas_udf``).
+
+A source lint covers the stages no registry entry plans: no
+``pandas_udf``, ``mapInPandas`` or ``applyInPandas(`` in the package,
+and ``import pandas`` only in the test-data builders (``fixtures``) and the
+stateful streaming operator (``applyInPandasWithState`` has no Arrow
+form).
 
 Constructing a few entries executes bounded driver-side work (fixpoint
 rounds, IVF sampling, streaming micro-batches) — at sf0.001 that is
 seconds, and the lint doubles as a smoke test that every entry builds.
 """
+
+import re
+from pathlib import Path
 
 import pytest
 
@@ -29,11 +39,14 @@ BRUTE_BASELINES = {"knn_brute_topk", "cosine_topk_brute"}
 
 FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin", "BatchEvalPython")
 
-# entries whose plans keep a MapInPandas stage: the sketches KMV partial
-# (kmv_distinct_users), the vectorops PQ scans (pq_topk*) and the
-# column-shaped per-pixel emitters raster.to_xyz and viewshed_cells
-MAP_IN_PANDAS = {"kmv_distinct_users", "pq_topk", "pq_topk_ivf",
-                 "raster_to_xyz", "viewshed_wall"}
+PANDAS_NODES = ("MapInPandas", "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas")
+# ArrowEvalPython prints its eval type last: 200 for a scalar pandas_udf,
+# 250 for a scalar arrow_udf
+PANDAS_SCALAR = re.compile(r"ArrowEvalPython .*, 200$", re.M)
+
+PKG = Path(__file__).resolve().parents[1] / "gdal_scripts_spark"
+PANDAS_API = re.compile(r"pandas_udf|mapInPandas|applyInPandas\(")
+PANDAS_IMPORTERS = {"fixtures.py", "streaming.py"}
 
 
 @pytest.mark.parametrize("name", sorted(entry_mod.queries()))
@@ -45,8 +58,9 @@ def test_no_scale_killers_in_plan(spark, name):
         assert set(hits) <= {"BroadcastNestedLoopJoin"}, hits
     else:
         assert not hits, f"{name}: scale-killer operators in plan: {hits}"
-    assert ("MapInPandas" in plan) == (name in MAP_IN_PANDAS), (
-        f"{name}: per-row Python stages run through arrowrows.map_rows")
+    pandas = [op for op in PANDAS_NODES if op in plan]
+    pandas += PANDAS_SCALAR.findall(plan)
+    assert not pandas, f"{name}: pandas UDF nodes in plan: {pandas}"
     # driver-canon contract: the correctness harness sorts result columns
     # with pandas before hashing and cannot factorize nested values, so no
     # registry entry may expose Array/Map/Struct columns (flatten to
@@ -58,3 +72,15 @@ def test_no_scale_killers_in_plan(spark, name):
         if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))
     ]
     assert not nested, f"{name}: nested (non-canonicalizable) columns: {nested}"
+
+
+def test_no_pandas_stage_in_source():
+    api, imports = [], []
+    for path in sorted(PKG.glob("*.py")):
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            if PANDAS_API.search(line):
+                api.append(f"{path.name}:{i}")
+            if re.match(r"\s*import pandas\b", line) and path.name not in PANDAS_IMPORTERS:
+                imports.append(f"{path.name}:{i}")
+    assert not api, f"pandas UDF API in the package: {api}"
+    assert not imports, f"pandas imported outside the fixtures/streaming: {imports}"

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import hashlib
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -40,23 +41,35 @@ def test_kmv_accuracy_and_python_reference(spark):
     assert row["n_kept"] == k
 
 
+def _kmv_ref(keys, k):
+    """(est_distinct, n_kept) of a KMV sketch over ``keys``, in numpy."""
+    h = np.sort(np.array(
+        [int(hashlib.md5(str(x).encode()).hexdigest()[:12], 16) for x in set(keys)],
+        dtype=np.float64))
+    if len(h) < k:
+        return len(h), len(h)
+    return int(np.round((k - 1) * 16.0**12 / h[k - 1])), k
+
+
 def test_kmv_partial_combine_is_invariant(spark):
     # mergeable-sketch property: the Arrow per-partition top-k combine must
-    # not change the estimate, for any partitioning
+    # not change the estimate, for any partitioning; group "c" stays below
+    # k and the NULL group is a group like any other
     rows = [(g, i * 7 + j) for g in ("a", "b") for i in range(300) for j in (0, 1)]
+    rows += [("c", i % 5) for i in range(40)] + [(None, i) for i in range(50)]
     df = _df(spark, rows)
-    full = {
-        (r["grp"], r["est_distinct"], r["n_kept"])
-        for r in sketches.kmv_distinct(df, ["grp"], "key", k=32, partial=False).collect()
+    want = {
+        (g, *_kmv_ref([key for gg, key in rows if gg == g], 32))
+        for g in ("a", "b", "c", None)
     }
     for parts in (1, 7):
         got = {
             (r["grp"], r["est_distinct"], r["n_kept"])
             for r in sketches.kmv_distinct(
-                df.repartition(parts), ["grp"], "key", k=32, partial=True
+                df.repartition(parts), ["grp"], "key", k=32
             ).collect()
         }
-        assert got == full, parts
+        assert got == want, parts
 
 
 def _sets_df(spark, sets):
@@ -142,7 +155,7 @@ def test_kmv_validation_and_plan(spark):
     with pytest.raises(ValueError, match="k >= 2"):
         sketches.kmv_distinct(df, ["grp"], "key", k=1)
     # the estimate path is Column arithmetic; the only Python node is the
-    # Arrow-batched partial combine (MapInPandas), never row-Python
+    # Arrow-batched partial combine (MapInArrow), never row-Python
     plan = sketches.kmv_distinct(df, ["grp"], "key", k=8)._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
 

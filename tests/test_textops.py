@@ -497,10 +497,10 @@ def test_pq_rerank_narrower_than_k_rejected(spark):
         vectorops.pq_topk_ivf(df.limit(2), df, books, k=5, rerank=3)
 
 
-def test_pq_codes_packed_binary_and_legacy_parity(spark):
+def test_pq_codes_packed_binary(spark):
     # round-5 layout: codes ride as PACKED uint8 binary (m bytes/row, the
-    # TPAMI'11 design point); a legacy array<int> codes table must still
-    # produce the identical result set through _codes_matrix
+    # TPAMI'11 design point); a search over a precomputed codes table gives
+    # the same result set as one that encodes the corpus itself
     rng = np.random.default_rng(53)
     vecs = rng.standard_normal((80, 64)).astype(np.float32)
     pdf = pd.DataFrame({"vec_id": range(80), "embedding": [v.tolist() for v in vecs]})
@@ -514,15 +514,11 @@ def test_pq_codes_packed_binary_and_legacy_parity(spark):
     first = codes.orderBy("neighbor_id").first()
     assert isinstance(first["codes"], (bytes, bytearray))
     assert len(first["codes"]) == 8  # m bytes per vector, packed
-    binary_run = {(r["qid"], r["rank"], r["neighbor_id"], r["dist"])
-                  for r in vectorops.pq_topk(q, df, books, k=5, codes=codes).collect()}
-    legacy_rows = [(r["neighbor_id"], list(bytes(r["codes"])))
-                   for r in codes.collect()]
-    legacy = spark.createDataFrame(
-        legacy_rows, "neighbor_id long, codes array<int>")
-    legacy_run = {(r["qid"], r["rank"], r["neighbor_id"], r["dist"])
-                  for r in vectorops.pq_topk(q, df, books, k=5, codes=legacy).collect()}
-    assert binary_run == legacy_run
+    stored = {(r["qid"], r["rank"], r["neighbor_id"], r["dist"])
+              for r in vectorops.pq_topk(q, df, books, k=5, codes=codes).collect()}
+    encoded = {(r["qid"], r["rank"], r["neighbor_id"], r["dist"])
+               for r in vectorops.pq_topk(q, df, books, k=5).collect()}
+    assert stored == encoded and len(stored) == 20
     # ksub > 256 cannot pack into uint8 — rejected eagerly
     with pytest.raises(ValueError, match="256"):
         vectorops.pq_encode(F.col("embedding"), np.zeros((8, 257, 8)))
