@@ -23,11 +23,11 @@ Module map (SURVEY.md §7):
   raster      decode/stats/histogram/checksum/retile/clip/resample/pyramid/
               mosaic/rasterize over the images table
   polygonize  per-image run-based CCL + ring tracing in one map pass; sieve
-  sqlops      OGR-SQL-equivalent relational surface over the driver testdata
   textops     dedup (exact/minhash/simhash/jaccard), langid, quality, tokens,
               winnowing rolling-hash fingerprints
   sketches    KMV distinct-count sketch (mergeable Arrow partial combine)
-  vectorops   embedding similarity: brute-force cosine top-k + LSH buckets
+  vectorops   embedding similarity: brute-force, LSH and IVF cosine top-k,
+              PQ and IVF-PQ ADC top-k over one centroid kernel, PCA
   multimodal  binary-column decode plumbing (codec-gated stubs)
   checkpoint  per-partition lineage manifest + exact resume
   zipcache    Python workers: skip re-reading unchanged zip archives on

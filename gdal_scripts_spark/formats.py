@@ -219,17 +219,20 @@ def _wkb_coords(pts) -> bytes:
 
 
 def parts_to_wkb(kind: str, parts) -> bytes:
-    """ISO WKB, little-endian (``OGRGeometry::exportToWkb`` analog)."""
+    """ISO WKB, little-endian (``OGRGeometry::exportToWkb`` analog). An
+    EMPTY geometry (``parts = []``) is written the ISO way: a POINT as
+    NaN NaN, a LINESTRING with 0 points, a polygon with 0 rings, a Multi*
+    with 0 members."""
     kind = kind.upper()
     code = _WKB_CODE[kind]
     head = b"\x01" + _struct.pack("<I", code)
     if kind == "POINT":
-        p = parts[0][0][0]
+        p = parts[0][0][0] if parts else (math.nan, math.nan)
         return head + _struct.pack("<dd", p[0], p[1])
     if kind == "LINESTRING":
-        return head + _wkb_coords(parts[0][0])
+        return head + _wkb_coords(parts[0][0] if parts else [])
     if kind == "POLYGON":
-        rings = parts[0]
+        rings = parts[0] if parts else []
         return head + _struct.pack("<I", len(rings)) + b"".join(
             _wkb_coords(r) for r in rings
         )
@@ -273,10 +276,11 @@ def _wkb_read(mv: memoryview, off: int) -> tuple[str, list, int]:
 
     if kind == "POINT":
         x, y = _struct.unpack_from("<dd", mv, off)
-        return kind, [[[(x, y)]]], off + 16
+        empty = math.isnan(x) and math.isnan(y)
+        return kind, [] if empty else [[[(x, y)]]], off + 16
     if kind == "LINESTRING":
         pts, off = rd_coords(off)
-        return kind, [[pts]], off
+        return kind, [[pts]] if pts else [], off
     if kind == "POLYGON":
         nr = _struct.unpack_from("<I", mv, off)[0]
         off += 4
@@ -284,7 +288,7 @@ def _wkb_read(mv: memoryview, off: int) -> tuple[str, list, int]:
         for _ in range(nr):
             pts, off = rd_coords(off)
             rings.append(pts)
-        return kind, [rings], off
+        return kind, [rings] if rings else [], off
     # Multi*
     n = _struct.unpack_from("<I", mv, off)[0]
     off += 4
@@ -1202,6 +1206,10 @@ def convex_hull_agg(
     deliberately not emitted: collinear boundary points make it
     convention-dependent, while area/perimeter are invariant.
 
+    A point whose x or y is NULL or NaN is skipped, as SQL aggregates skip
+    NULLs: ``n_pts`` counts the valid distinct points, and a group with no
+    valid point gives no row.
+
     Scale shape (the reason this is not one grouped map): the convex hull
     is ASSOCIATIVE — hull(A ∪ B) = hull(hull(A) ∪ hull(B)) — so stage 1
     reduces each (grp, salt) bucket to its <= O(h) extreme vertices with
@@ -1217,6 +1225,9 @@ def convex_hull_agg(
         F.col(grp_col).alias("_g"),
         F.col(x_col).cast("double").alias("_x"),
         F.col(y_col).cast("double").alias("_y"),
+    ).where(
+        F.col("_x").isNotNull() & F.col("_y").isNotNull()
+        & ~F.isnan("_x") & ~F.isnan("_y")
     ).withColumn(
         "_salt", F.pmod(F.xxhash64("_x", "_y"), F.lit(int(fanin)))
     )
@@ -1231,7 +1242,7 @@ def convex_hull_agg(
     def local_hull(t):
         x, y = t.column("_x").to_numpy(), t.column("_y").to_numpy()
         h = _geom.np_convex_hull(np.column_stack([x, y]))
-        # distinct points, NaN equal to NaN and -0.0 to 0.0
+        # distinct points, -0.0 equal to 0.0
         xy = pa.table({"x": x + 0.0, "y": y + 0.0})
         n = xy.group_by(["x", "y"]).aggregate([]).num_rows
         g, salt = t.column("_g")[0].as_py(), t.column("_salt")[0].as_py()

@@ -1698,10 +1698,11 @@ _add("cosine_topk_ivf", _q_cosine_ivf, None)  # approximate; rows-only
 
 
 def _q_cosine_ivf_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF at a REAL coarse-quantizer width (n_centroids > 64 dispatches to
-    the Arrow matmul kernel instead of the unrolled Column expression —
-    the path a 10^9-vector deployment runs). Recall vs brute force pinned
-    in tests/test_knn.py; registry pin is the deterministic result set."""
+    """IVF at a REAL coarse-quantizer width (128 centroids, the shape a
+    10^9-vector deployment runs; buckets come from the same
+    ``nearest_centroids`` Arrow kernel as at 16). Recall vs brute force
+    pinned in tests/test_textops.py; registry pin is the deterministic
+    result set."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return vectorops.cosine_topk_ivf(emb.filter("vec_id < 10"), emb, k=5,
                                      n_centroids=128, n_probe=32)
@@ -1714,7 +1715,7 @@ def _q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     become 8 codebook indices, the scan reads CODES ONLY and ranks by
     asymmetric distance (per-query lookup tables) — the 10^12-vector
     storage/compute path next to IVF/LSH. Deterministic end-to-end
-    (ordered bounded training sample, einsum fixed-order arithmetic,
+    (ordered bounded training sample, fixed-order distance sums,
     partitioning-independent (dist, id) tie-break), so the full result is
     pinned as a committed golden; recall vs exact L2 brute is pinned in
     tests/test_textops.py."""

@@ -514,32 +514,10 @@ def np_s2_cover_rect(lon_min: float, lat_min: float, lon_max: float,
     return np.array(sorted(out), dtype=np.int64)
 
 
-def _seg_rect_any(x1, y1, x2, y2, rx0, ry0, rx1, ry1) -> bool:
-    """True iff ANY segment (x1,y1)-(x2,y2) intersects the axis-aligned
-    rect — vectorized Liang-Barsky parameter clip over all edges."""
-    x1 = np.asarray(x1, dtype=np.float64)
-    y1 = np.asarray(y1, dtype=np.float64)
-    x2 = np.asarray(x2, dtype=np.float64)
-    y2 = np.asarray(y2, dtype=np.float64)
-    dx = x2 - x1
-    dy = y2 - y1
-    t0 = np.zeros_like(x1)
-    t1 = np.ones_like(x1)
-    ok = np.ones(x1.shape, dtype=bool)
-    for p, q in ((-dx, x1 - rx0), (dx, rx1 - x1),
-                 (-dy, y1 - ry0), (dy, ry1 - y1)):
-        zero = p == 0.0
-        ok &= ~(zero & (q < 0.0))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            r = q / p
-        t0 = np.where(~zero & (p < 0.0), np.maximum(t0, r), t0)
-        t1 = np.where(~zero & (p > 0.0), np.minimum(t1, r), t1)
-    return bool(np.any(ok & (t0 <= t1)))
-
-
 def _seg_rect_any_batched(x1, y1, x2, y2, rx0, ry0, rx1, ry1) -> np.ndarray:
-    """Batched :func:`_seg_rect_any`: (E,) segments against (N,) rects ->
-    (N,) bool, one Liang-Barsky clip over the full (N, E) grid."""
+    """True per rect iff ANY segment (x1,y1)-(x2,y2) intersects it: (E,)
+    segments against (N,) axis-aligned rects -> (N,) bool, one vectorized
+    Liang-Barsky parameter clip over the full (N, E) grid."""
     x1 = np.asarray(x1, dtype=np.float64)
     y1 = np.asarray(y1, dtype=np.float64)
     x2 = np.asarray(x2, dtype=np.float64)
@@ -727,8 +705,7 @@ def np_s2_cover_cap(lon: float, lat: float, radius_m: float, *,
 
 
 def s2_containment_join(points: DataFrame, regions: DataFrame, *,
-                        leaf_col: str = "leaf", cell_col: str = "cell",
-                        how: str = "inner") -> DataFrame:
+                        leaf_col: str = "leaf", cell_col: str = "cell") -> DataFrame:
     """Point-in-region as pure EQUI-joins on S2 ids.
 
     ``regions[cell_col]`` may hold cells at MIXED levels (a covering).  A
@@ -748,36 +725,19 @@ def s2_containment_join(points: DataFrame, regions: DataFrame, *,
         empty = points.withColumn("_cell", F.col(leaf_col))
         return empty.join(regions, empty["_cell"] == regions[cell_col],
                           "inner").drop("_cell").where(F.lit(False))
-    if how == "inner":
-        # ONE join: snap the leaf to every present level (pure-Column bit
-        # math — an array of <=31 longs) and explode. A snapped cell can
-        # only equal a region cell AT ITS OWN LEVEL (the lsb encodes the
-        # level), so this is exactly the union of per-level equi-joins —
-        # but the probe side is scanned ONCE instead of once per level
-        # (the union form re-ran the whole upstream plan, including the
-        # Arrow leaf encode, for every level branch — n_levels full scans
-        # of a 100 TB table).
-        snapped = points.withColumn(
-            "_cell",
-            F.explode(F.array(*[s2_parent(F.col(leaf_col), lv)
-                                for lv in levels])),
-        )
-        return snapped.join(regions, snapped["_cell"] == regions[cell_col],
-                            "inner").drop("_cell")
-    # non-inner joins keep per-level branches (outer semantics differ
-    # under row multiplication)
-    parts = []
-    for lv in levels:
-        reg = regions.where(s2_level(F.col(cell_col)) == lv)
-        snapped = points.withColumn("_cell", s2_parent(F.col(leaf_col), lv))
-        parts.append(
-            snapped.join(reg, snapped["_cell"] == reg[cell_col], how)
-            .drop("_cell")
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    # ONE join: snap the leaf to every present level (pure-Column bit math
+    # — an array of <=31 longs) and explode. A snapped cell can only equal
+    # a region cell AT ITS OWN LEVEL (the lsb encodes the level), so this
+    # is exactly the union of per-level equi-joins — but the probe side is
+    # scanned ONCE instead of once per level (the union form re-ran the
+    # whole upstream plan, including the Arrow leaf encode, for every level
+    # branch — n_levels full scans of a 100 TB table).
+    snapped = points.withColumn(
+        "_cell",
+        F.explode(F.array(*[s2_parent(F.col(leaf_col), lv) for lv in levels])),
+    )
+    return snapped.join(regions, snapped["_cell"] == regions[cell_col],
+                        "inner").drop("_cell")
 
 
 # ---------------------------------------------------------------------------

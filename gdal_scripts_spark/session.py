@@ -31,10 +31,10 @@ Local-mode tuning notes (tests run on one JVM, ``local[N]``):
   rasterize, zonal partials, overlays of candidate pairs) run through
   :func:`gdal_scripts_spark.arrowrows.map_rows`, one ``mapInArrow`` with
   Python scalars in and Arrow tables out. Scalar column codecs (S2
-  encode, WKT/WKB, PQ codes) are ``arrow_udf``; batch- and column-shaped
-  stages (``knn``, the ``vectorops`` scans, ``graph``, the ``sketches``
-  KMV partial, ``raster.to_xyz``, ``viewshed.viewshed_cells``) are
-  ``mapInArrow``; grouped stages (the tile mosaics and overviews, the
+  encode, WKT/WKB, PQ codes, the IVF bucket kernel) are ``arrow_udf``;
+  batch- and column-shaped stages (``knn``, the ``vectorops`` scans,
+  ``graph``, the ``sketches`` KMV partial, ``raster.to_xyz``,
+  ``viewshed.viewshed_cells``) are ``mapInArrow``; grouped stages (the tile mosaics and overviews, the
   ``dem`` halo assembly, ``formats.convex_hull_agg``, the ``gridops``
   cogroup) are ``applyInArrow``. No pandas frame sits between a kernel
   and the JVM. Per-group Python cost is the reason: ``applyInPandas``

@@ -1,14 +1,17 @@
 """Embedding similarity over the ``embeddings`` table (driver prompt:
 similarity search as a first-class component).
 
-- brute-force cosine top-k: the exactness baseline. Dot products as native
-  ``F.zip_with``/``F.aggregate`` array expressions (JVM-side, codegen) —
-  no Python in the loop; top-k via the W2 window.
-- LSH-bucketed ANN: random-hyperplane signatures (sign of dot with seeded
-  deterministic pseudo-random planes) -> bucket equi-join; the scale path
-  that avoids the n^2 cross join. Recall measured against brute force in
-  tests.
-- cosine near-dup: pairs above a cosine threshold (embedding-space dedup).
+Five top-k searches, self-match excluded: ``cosine_topk_bruteforce``
+(the exactness baseline: native ``zip_with``/``aggregate`` dot products
+over a broadcast cross join), ``cosine_topk_lsh`` (random-hyperplane band
+equi-join), ``cosine_topk_ivf`` (coarse-centroid buckets), ``pq_topk``
+(product-quantization codes ranked by asymmetric distance, optional exact
+re-rank) and ``pq_topk_ivf`` (the same ADC scan over the probed buckets
+only). The cosine searches share one ranking tail, the PQ searches one ADC
+scan, and every squared distance to a centroid (k-means, IVF buckets and
+probes, PQ codes and lookup tables) is one kernel, :func:`_sq_dists`.
+Also here: cosine near-dup pairs and PCA (distributed moments +
+fixed-order power iteration).
 
 Scale notes: brute-force is O(Q*N) — at 10^9 rows it is a broadcast of the
 QUERY side only (points side never shuffles); IVF/LSH prunes candidates by
@@ -46,6 +49,18 @@ def cosine_cols(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _cosine_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Top-``k`` per ``qid`` of candidate ``(qid, qv, neighbor_id, cv)``
+    rows: cosine desc, ties by neighbor id asc."""
+    wnd = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
+    return (
+        pairs.withColumn("cos", cosine_cols(F.col("qv"), F.col("cv")))
+        .withColumn("rank", F.row_number().over(wnd))
+        .filter(F.col("rank") <= k)
+        .select("qid", "rank", "neighbor_id", F.round("cos", 6).alias("cos"))
+    )
+
+
 def cosine_topk_bruteforce(
     queries: DataFrame, corpus: DataFrame, k: int = 5,
     qid: str = "vec_id", cid: str = "vec_id", vec: str = "embedding",
@@ -54,14 +69,9 @@ def cosine_topk_bruteforce(
     ties by neighbor id asc."""
     q = queries.select(F.col(qid).alias("qid"), F.col(vec).alias("qv"))
     c = corpus.select(F.col(cid).alias("neighbor_id"), F.col(vec).alias("cv"))
-    wnd = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        F.broadcast(q).crossJoin(c)
-        .filter(F.col("qid") != F.col("neighbor_id"))
-        .withColumn("cos", cosine_cols(F.col("qv"), F.col("cv")))
-        .withColumn("rank", F.row_number().over(wnd))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "neighbor_id", F.round("cos", 6).alias("cos"))
+    return _cosine_topk(
+        F.broadcast(q).crossJoin(c).filter(F.col("qid") != F.col("neighbor_id")),
+        k,
     )
 
 
@@ -75,10 +85,7 @@ def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
     v = vec.cast("array<double>")
     sig = F.lit(0).cast("long")
     for i, p in enumerate(planes):
-        d = F.aggregate(
-            F.zip_with(v, F.array(*[F.lit(x) for x in p]), lambda a, b: a * b),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
+        d = _dot(v, F.array(*[F.lit(x) for x in p]))
         sig = sig.bitwiseOR(
             F.when(d > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long"))
         )
@@ -131,14 +138,8 @@ def cosine_topk_lsh(
     )
     qv = queries.select(F.col(qid).alias("qid"), F.col(vec).alias("qv"))
     cv = corpus.select(F.col(cid).alias("neighbor_id"), F.col(vec).alias("cv"))
-    wnd = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        cv.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(qv), "qid")
-        .withColumn("cos", cosine_cols(F.col("qv"), F.col("cv")))
-        .withColumn("rank", F.row_number().over(wnd))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "neighbor_id", F.round("cos", 6).alias("cos"))
+    return _cosine_topk(
+        cv.join(F.broadcast(cand), "neighbor_id").join(F.broadcast(qv), "qid"), k
     )
 
 
@@ -162,8 +163,55 @@ def cosine_near_dup_pairs(
 
 
 # ---------------------------------------------------------------------------
-# IVF (inverted-file) ANN — the other classic scale path next to LSH
+# The centroid kernel shared by IVF and PQ: training sample, k-means, and
+# squared distances from vectors to centroids
 # ---------------------------------------------------------------------------
+
+def _sq_dists(m: np.ndarray, cent: np.ndarray) -> np.ndarray:
+    """(n, k) squared L2 distances of the rows of ``m`` (n, d) to the
+    centroids ``cent`` (k, d): squared differences summed over the
+    dimensions in order from 0.0, the same IEEE operations as an
+    ``F.aggregate`` fold over ``zip_with``. Elementwise ops only, no BLAS:
+    BLAS picks kernels by CPUID and its last-ulp drift already broke one
+    committed golden in this repo (see SURVEY round-4 pansharpen note) —
+    argmin near-ties would amplify that into different buckets and codes."""
+    d = np.zeros((len(m), len(cent)), dtype=np.float64)
+    for j in range(cent.shape[1]):
+        t = m[:, j, None] - cent[None, :, j]
+        d += t * t
+    return d
+
+
+def _rows_matrix(s: pa.Array, d: int) -> np.ndarray:
+    """(n, d) float64 matrix of the non-NULL rows of a list column whose
+    rows all hold ``d`` values (``d = -1``: ``d`` taken from the rows)."""
+    return s.flatten().to_numpy(zero_copy_only=False).astype(
+        np.float64, copy=False).reshape(len(s) - s.null_count, d)
+
+
+def _vector_udf(vec: Column, kern, d: int, ddl: str) -> Column:
+    """Scalar Arrow UDF over the vector column ``vec``: ``kern`` maps the
+    (n, d) float64 matrix of a batch's non-NULL rows to one Arrow value per
+    row; a NULL vector gives NULL."""
+    def udf(s: pa.Array) -> pa.Array:
+        out = kern(_rows_matrix(s, d))
+        if not s.null_count:
+            return out
+        valid = s.is_valid().to_numpy(zero_copy_only=False)
+        return out.take(pa.array(np.cumsum(valid) - 1, mask=~valid))
+
+    return F.arrow_udf(udf, ddl)(vec.cast("array<double>"))
+
+
+def _sample(corpus: DataFrame, n: int, cid: str, vec: str) -> np.ndarray:
+    """Bounded driver-side training sample: the first ``n`` non-NULL
+    vectors by ``cid``. orderBy before limit: an unordered limit's row
+    order is partition-layout-dependent, which would make the seeded
+    k-means (and therefore the committed goldens) vary with core count."""
+    rows = (corpus.select(cid, vec).where(F.col(vec).isNotNull())
+            .orderBy(cid).limit(n).collect())
+    return np.array([r[1] for r in rows], dtype=np.float64)
+
 
 def _kmeans_lite(sample: np.ndarray, k: int, iters: int = 10,
                  seed: int = 11) -> np.ndarray:
@@ -174,8 +222,7 @@ def _kmeans_lite(sample: np.ndarray, k: int, iters: int = 10,
     k = min(k, len(sample))
     cent = sample[rng.choice(len(sample), k, replace=False)].astype(np.float64)
     for _ in range(iters):
-        d = ((sample[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        a = d.argmin(axis=1)
+        a = _sq_dists(sample, cent).argmin(axis=1)
         for c in range(k):
             m = a == c
             if m.any():
@@ -183,59 +230,25 @@ def _kmeans_lite(sample: np.ndarray, k: int, iters: int = 10,
     return cent
 
 
-def _nearest_centroids_arrow(vec: Column, cent: np.ndarray, n: int) -> Column:
-    """Arrow-batched twin of :func:`_nearest_centroids_col` for REAL
-    centroid counts (IVF at 10^9 vectors wants thousands): one BLAS matmul
-    per Arrow batch against the closure-captured centroid matrix instead
-    of an unrolled per-centroid Column expression (whose codegen blows up
-    past ~64 centroids). Ties broken by ascending centroid id (stable
-    argsort), same rule as the Column path's struct sort."""
+def nearest_centroids(vec: Column, cent: np.ndarray, n: int) -> Column:
+    """``array<int>`` of the ``n`` nearest centroid ids per vector, nearest
+    first, ties to the lower id (stable argsort); NULL for a NULL vector.
+    One scalar Arrow UDF over :func:`_sq_dists` against the
+    closure-captured centroid matrix, at any centroid count."""
     c = np.ascontiguousarray(cent, dtype=np.float64)
-    c2 = (c * c).sum(axis=1)
 
-    def kern(s: pa.Array) -> pa.Array:
-        m = _rows_matrix(s, c.shape[1])
-        # |v-c|^2 = |v|^2 - 2 v.c + |c|^2 ; |v|^2 constant per row, skip it
-        d2 = c2[None, :] - 2.0 * (m @ c.T)
-        idx = np.argsort(d2, axis=1, kind="stable")[:, :n].astype(np.int32)
+    def ids(m: np.ndarray) -> pa.Array:
+        idx = np.argsort(_sq_dists(m, c), axis=1, kind="stable")[:, :n].astype(np.int32)
         return pa.ListArray.from_arrays(
             pa.array(np.arange(len(idx) + 1, dtype=np.int32) * idx.shape[1]),
             pa.array(idx.ravel()))
 
-    return F.arrow_udf(kern, "array<int>")(vec.cast("array<double>"))
+    return _vector_udf(vec, ids, c.shape[1], "array<int>")
 
 
-def _rows_matrix(s: pa.Array, d: int) -> np.ndarray:
-    """(n, d) float64 matrix of a list column whose rows all hold ``d``
-    values (``d = -1``: a non-empty column, ``d`` taken from its rows)."""
-    return s.flatten().to_numpy(zero_copy_only=False).astype(
-        np.float64, copy=False).reshape(len(s), d)
-
-
-def nearest_centroids(vec: Column, cent: np.ndarray, n: int) -> Column:
-    """Dispatch: codegen Column expression for small coarse quantizers,
-    Arrow matmul kernel beyond 64 centroids."""
-    if len(cent) > 64:
-        return _nearest_centroids_arrow(vec, cent, n)
-    return _nearest_centroids_col(vec, cent, n)
-
-
-def _nearest_centroids_col(vec: Column, cent: np.ndarray, n: int) -> Column:
-    """Array of the ``n`` nearest centroid ids — native Column expressions
-    (per-centroid squared distance via aggregate/zip_with, then argsort by
-    constructing (dist, id) structs and array_sort), zero UDF."""
-    v = vec.cast("array<double>")
-    structs = []
-    for ci, c in enumerate(cent):
-        carr = F.array(*[F.lit(float(x)) for x in c])
-        d = F.aggregate(
-            F.zip_with(v, carr, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-        structs.append(F.struct(d.alias("d"), F.lit(ci).alias("cid")))
-    ranked = F.array_sort(F.array(*structs))
-    return F.transform(F.slice(ranked, 1, n), lambda s: s["cid"])
-
+# ---------------------------------------------------------------------------
+# IVF (inverted-file) ANN — the other classic scale path next to LSH
+# ---------------------------------------------------------------------------
 
 def cosine_topk_ivf(
     queries: DataFrame, corpus: DataFrame, k: int = 5, n_centroids: int = 16,
@@ -247,19 +260,13 @@ def cosine_topk_ivf(
     buckets and ranks only those candidates.
 
     Scale shape: centroids come from a bounded driver-side sample (one
-    ``limit(sample_n)`` collect); bucket assignment is a NATIVE column
-    expression, so the corpus is scanned in place and partitions by a plain
-    equi-join key; candidate volume ~= corpus * n_probe / n_centroids per
-    query. Recall measured against brute force in tests; exactness is the
-    brute path's job."""
-    # orderBy before limit: an unordered limit's row order is partition-
-    # layout-dependent, which would make the seeded k-means (and therefore
-    # the committed goldens) vary with core count
-    sample = np.array(
-        [r[1] for r in corpus.select(cid, vec).orderBy(cid).limit(sample_n).collect()],
-        dtype=np.float64,
-    )
-    cent = _kmeans_lite(sample, n_centroids, seed=seed)
+    ``limit(sample_n)`` collect); bucket assignment is the
+    :func:`nearest_centroids` Arrow UDF, so the corpus is scanned in place
+    and partitions by a plain equi-join key; candidate volume ~= corpus *
+    n_probe / n_centroids per query. A NULL vector has no bucket and drops
+    out of the join. Recall measured against brute force in tests;
+    exactness is the brute path's job."""
+    cent = _kmeans_lite(_sample(corpus, sample_n, cid, vec), n_centroids, seed=seed)
     cb = corpus.select(
         F.col(cid).alias("neighbor_id"), F.col(vec).alias("cv"),
         nearest_centroids(F.col(vec), cent, 1)[0].alias("bucket"),
@@ -270,14 +277,9 @@ def cosine_topk_ivf(
             nearest_centroids(F.col(vec), cent, n_probe)
         ).alias("bucket"),
     )
-    wnd = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        cb.join(F.broadcast(qb), "bucket")
-        .filter(F.col("qid") != F.col("neighbor_id"))
-        .withColumn("cos", cosine_cols(F.col("qv"), F.col("cv")))
-        .withColumn("rank", F.row_number().over(wnd))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "neighbor_id", F.round("cos", 6).alias("cos"))
+    return _cosine_topk(
+        cb.join(F.broadcast(qb), "bucket").filter(F.col("qid") != F.col("neighbor_id")),
+        k,
     )
 
 
@@ -297,10 +299,7 @@ def pq_train(
     subspaces gets its own k-means codebook; training is milliseconds on
     a few thousand rows and, like the IVF coarse quantizer, is amortized
     exactly like building any deployed dim table."""
-    sample = np.array(
-        [r[1] for r in corpus.select(cid, vec).orderBy(cid).limit(sample_n).collect()],
-        dtype=np.float64,
-    )
+    sample = _sample(corpus, sample_n, cid, vec)
     d = sample.shape[1]
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -311,33 +310,31 @@ def pq_train(
     ])
 
 
+def _pq_dists(x: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """(n, m, ksub) squared distances of the m subvectors of each row of
+    ``x`` (n, m * dsub) to the codebooks ``b`` (m, ksub, dsub)."""
+    m, _, dsub = b.shape
+    x = x.reshape(len(x), m, dsub)
+    return np.stack([_sq_dists(x[:, j], b[j]) for j in range(m)], axis=1)
+
+
 def pq_encode(vec: Column, books: np.ndarray) -> Column:
     """``binary`` of m PACKED uint8 codebook indices per vector (requires
-    ksub <= 256) — ONE Arrow-batched kernel, argmin per subspace. The
+    ksub <= 256), NULL for a NULL vector — ONE Arrow-batched kernel,
+    argmin of :func:`_sq_dists` per subspace (first minimum on ties). The
     packed layout is the design point of the PQ path: m bytes/row in the
     codes scan (8 at the default m=8) vs 4*D for float32 vectors — the
-    ~100x storage shrink Jegou et al. TPAMI'11 builds on. All products go
-    through np.einsum with default optimize=False (fixed C-loop order, NO
-    BLAS dispatch): BLAS picks kernels by CPUID and its last-ulp drift
-    already broke one committed golden in this repo (see SURVEY round-4
-    pansharpen note) — argmin near-ties would amplify that into different
-    CODES."""
+    ~100x storage shrink Jegou et al. TPAMI'11 builds on."""
     b = np.ascontiguousarray(books, dtype=np.float64)  # (m, ksub, dsub)
     m, ksub, dsub = b.shape
     if ksub > 256:
         raise ValueError(f"pq_encode: ksub={ksub} > 256 does not fit uint8 codes")
-    b2 = np.einsum("mkd,mkd->mk", b, b)
 
-    def kern(s: pa.Array) -> pa.Array:
-        x = _rows_matrix(s, m * dsub).reshape(len(s), m, dsub)
-        codes = np.empty((len(s), m), dtype=np.uint8)
-        for j in range(m):
-            # |x-c|^2 = |x|^2 - 2 x.c + |c|^2; |x|^2 constant per row
-            d2 = b2[j][None, :] - 2.0 * np.einsum("nd,kd->nk", x[:, j], b[j])
-            codes[:, j] = d2.argmin(axis=1)  # first-min: deterministic ties
-        return pa.array([row.tobytes() for row in codes], pa.binary())
+    def codes(x: np.ndarray) -> pa.Array:
+        c = _pq_dists(x, b).argmin(axis=2).astype(np.uint8)
+        return pa.array([row.tobytes() for row in c], pa.binary())
 
-    return F.arrow_udf(kern, "binary")(vec.cast("array<double>"))
+    return _vector_udf(vec, codes, m * dsub, "binary")
 
 
 def _codes_matrix(col: pa.Array, m: int) -> np.ndarray:
@@ -348,20 +345,9 @@ def _codes_matrix(col: pa.Array, m: int) -> np.ndarray:
     ).reshape(len(col), m).astype(np.int64)
 
 
-def _check_rerank(k: int, rerank: int) -> None:
-    """``0 < rerank < k`` would cut the ADC shortlist below k rows and the
-    exact pass would silently return fewer than k neighbors per query."""
-    if rerank and rerank < k:
-        raise ValueError(
-            f"rerank={rerank} must be >= k={k} (the exact pass re-ranks "
-            f"only the ADC shortlist; a shortlist narrower than k cannot "
-            f"yield k results)"
-        )
-
-
 def pq_topk(
     queries: DataFrame, corpus: DataFrame, books: np.ndarray, k: int = 5,
-    rerank: int = 0, codes: DataFrame | None = None,
+    rerank: int = 0,
     qid: str = "vec_id", cid: str = "vec_id", vec: str = "embedding",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) approximate top-k: the corpus is scanned
@@ -383,28 +369,64 @@ def pq_topk(
     pruned to a per-batch top-k — id-only shuffle, exactly like the kNN
     and LSH paths. Per-batch pruning uses the SAME (dist, neighbor_id)
     lexicographic key as the final window rank, so the global result is
-    independent of partitioning and core count. Recall vs the brute
-    oracle is measured in tests; exactness remains the brute path's job."""
-    _check_rerank(k, rerank)
-    b = np.ascontiguousarray(books, dtype=np.float64)
-    m, ksub, dsub = b.shape
-    q = queries.select(qid, vec).orderBy(qid).collect()
-    if not q:
-        raise ValueError("pq_topk: empty query side")
-    qids = np.array([r[0] for r in q], dtype=np.int64)
-    qv = np.array([r[1] for r in q], dtype=np.float64).reshape(len(q), m, dsub)
-    # lut[i, j, c] = ||q_i[j] - books[j, c]||^2 (exact, fixed-order einsum)
-    diff = qv[:, :, None, :] - b[None, :, :, :]
-    lut = np.einsum("nmkd,nmkd->nmk", diff, diff)
-    nq = len(qids)
-    kk = int(max(k, rerank) if rerank else k)
+    independent of partitioning and core count. NULL vectors take no
+    part. Recall vs the brute oracle is measured in tests; exactness
+    remains the brute path's job."""
+    return _adc_topk(queries, corpus, books, k, rerank, qid, cid, vec)
 
-    # production ingest shape: codes are written once next to the corpus
-    # (pass them via ``codes`` as a (neighbor_id, codes) table) and the
-    # search never touches vectors except in the optional re-rank join
-    cb = codes if codes is not None else corpus.select(
-        F.col(cid).alias("neighbor_id"), pq_encode(F.col(vec), b).alias("codes")
-    )
+
+def pq_topk_ivf(
+    queries: DataFrame, corpus: DataFrame, books: np.ndarray, k: int = 5,
+    n_centroids: int = 16, n_probe: int = 4, rerank: int = 0,
+    sample_n: int = 2048, seed: int = 11,
+    qid: str = "vec_id", cid: str = "vec_id", vec: str = "embedding",
+) -> DataFrame:
+    """IVFADC (Jegou et al. TPAMI 2011 §V): IVF coarse buckets prune the
+    candidate set, PQ codes price what remains — the canonical production
+    ANN shape at 10^12 vectors. The corpus scan reads (bucket, codes) only;
+    each query carries its ADC lookup tables plus the id set of its
+    ``n_probe`` nearest coarse buckets, and the kernel masks rows to the
+    probed buckets before any table lookups, so the ADC work per batch is
+    ~n_probe/n_centroids of the full scan while the bytes stay ~m/row.
+    The same ADC scan, (dist, id) pruning key and optional exact re-rank
+    as :func:`pq_topk`; recall vs brute pinned in tests."""
+    cent = _kmeans_lite(_sample(corpus, sample_n, cid, vec), n_centroids, seed=seed)
+    return _adc_topk(queries, corpus, books, k, rerank, qid, cid, vec,
+                     cent=cent, n_probe=n_probe)
+
+
+def _ids(col: pa.Array) -> np.ndarray:
+    return col.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+
+
+def _adc_topk(queries, corpus, books, k, rerank, qid, cid, vec,
+              cent=None, n_probe=0):
+    """The ADC search of :func:`pq_topk`; with coarse centroids ``cent``
+    each query scans only the rows of its ``n_probe`` nearest buckets
+    (:func:`pq_topk_ivf`). Queries and corpus rows with a NULL vector
+    take no part."""
+    if rerank and rerank < k:
+        raise ValueError(
+            f"rerank={rerank} must be >= k={k} (the exact pass re-ranks "
+            f"only the ADC shortlist; a shortlist narrower than k cannot "
+            f"yield k results)"
+        )
+    b = np.ascontiguousarray(books, dtype=np.float64)
+    m = b.shape[0]
+    q = queries.select(qid, vec).where(F.col(vec).isNotNull()).orderBy(qid).collect()
+    if not q:
+        raise ValueError("empty query side")
+    qids = np.array([r[0] for r in q], dtype=np.int64)
+    qv = np.array([r[1] for r in q], dtype=np.float64)
+    lut = _pq_dists(qv, b)  # lut[i, j, c] = ||q_i[j] - books[j, c]||^2
+    kk = int(max(k, rerank) if rerank else k)
+    ddl = "qid long, neighbor_id long, dist double"
+    schema = arrowrows.arrow_schema(ddl)
+    cols = [F.col(cid).alias("neighbor_id"), pq_encode(F.col(vec), b).alias("codes")]
+    probed = None
+    if cent is not None:
+        probed = np.argsort(_sq_dists(qv, cent), axis=1, kind="stable")[:, :n_probe]
+        cols.append(nearest_centroids(F.col(vec), cent, 1)[0].alias("bucket"))
 
     def scan(batches):
         for bt in batches:
@@ -412,37 +434,28 @@ def pq_topk(
                 continue
             codes = _codes_matrix(bt.column("codes"), m)  # (n, m)
             nid = _ids(bt.column("neighbor_id"))
-            d = np.zeros((nq, len(codes)), dtype=np.float64)
-            for j in range(m):
-                d += lut[:, j, :][:, codes[:, j]]
+            if probed is not None:
+                bkt = _ids(bt.column("bucket"))
             out_q, out_n, out_d = [], [], []
-            for i in range(nq):
+            for i in range(len(qids)):
                 keep = nid != qids[i]
-                di, ni = d[i][keep], nid[keep]
-                top = np.lexsort((ni, di))[:kk]  # same key as the window
+                if probed is not None:
+                    keep &= np.isin(bkt, probed[i])
+                ci, ni = codes[keep], nid[keep]
+                d = np.zeros(len(ci), dtype=np.float64)
+                for j in range(m):
+                    d += lut[i, j, :][ci[:, j]]
+                top = np.lexsort((ni, d))[:kk]  # same key as the window
                 out_q.append(np.full(len(top), qids[i]))
                 out_n.append(ni[top])
-                out_d.append(di[top])
-            yield from _candidates(out_q, out_n, out_d)
+                out_d.append(d[top])
+            yield from arrowrows.columns_table(
+                [np.concatenate(c) for c in (out_q, out_n, out_d)], schema
+            ).to_batches()
 
-    cand = cb.mapInArrow(scan, schema=_CAND_DDL)
+    cand = (corpus.where(F.col(vec).isNotNull()).select(*cols)
+            .mapInArrow(scan, schema=ddl))
     return _rank_candidates(cand, queries, corpus, k, rerank, qid, cid, vec)
-
-
-_CAND_DDL = "qid long, neighbor_id long, dist double"
-_CAND_SCHEMA = pa.schema([("qid", pa.int64()), ("neighbor_id", pa.int64()),
-                          ("dist", pa.float64())])
-
-
-def _ids(col: pa.Array) -> np.ndarray:
-    return col.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-
-
-def _candidates(out_q, out_n, out_d):
-    """Record batches of the ADC scan's (qid, neighbor_id, dist) rows."""
-    return arrowrows.columns_table(
-        [np.concatenate(c) for c in (out_q, out_n, out_d)], _CAND_SCHEMA
-    ).to_batches()
 
 
 def _rank_candidates(cand, queries, corpus, k, rerank, qid, cid, vec):
@@ -467,91 +480,16 @@ def _rank_candidates(cand, queries, corpus, k, rerank, qid, cid, vec):
             F.zip_with(F.col("qv"), F.col("cv"), lambda a, c: (a - c) * (a - c)),
             F.lit(0.0), lambda acc, x: acc + x,
         )
-        return (
+        cand = (
             shortlist.join(cvdf, "neighbor_id")
             .join(F.broadcast(qvdf), "qid")
             .withColumn("dist", exact_d)
-            .withColumn("rank", F.row_number().over(wnd))
-            .filter(F.col("rank") <= int(k))
-            .select("qid", "rank", "neighbor_id", F.round("dist", 6).alias("dist"))
         )
     return (
         cand.withColumn("rank", F.row_number().over(wnd))
         .filter(F.col("rank") <= int(k))
         .select("qid", "rank", "neighbor_id", F.round("dist", 6).alias("dist"))
     )
-
-
-def pq_topk_ivf(
-    queries: DataFrame, corpus: DataFrame, books: np.ndarray, k: int = 5,
-    n_centroids: int = 16, n_probe: int = 4, rerank: int = 0,
-    sample_n: int = 2048, seed: int = 11,
-    qid: str = "vec_id", cid: str = "vec_id", vec: str = "embedding",
-) -> DataFrame:
-    """IVFADC (Jegou et al. TPAMI 2011 §V): IVF coarse buckets prune the
-    candidate set, PQ codes price what remains — the canonical production
-    ANN shape at 10^12 vectors. The corpus scan reads (bucket, codes) only;
-    each query carries its ADC lookup tables plus the id set of its
-    ``n_probe`` nearest coarse buckets, and the kernel masks rows to the
-    probed buckets before any table lookups, so the ADC work per batch is
-    ~n_probe/n_centroids of the full scan while the bytes stay ~m/row.
-    Same partitioning-independent (dist, id) pruning key and optional
-    exact re-rank as :func:`pq_topk`; recall vs brute pinned in tests."""
-    _check_rerank(k, rerank)
-    sample = np.array(
-        [r[1] for r in corpus.select(cid, vec).orderBy(cid).limit(sample_n).collect()],
-        dtype=np.float64,
-    )
-    cent = _kmeans_lite(sample, n_centroids, seed=seed)
-    b = np.ascontiguousarray(books, dtype=np.float64)
-    m, ksub, dsub = b.shape
-    q = queries.select(qid, vec).orderBy(qid).collect()
-    if not q:
-        raise ValueError("pq_topk_ivf: empty query side")
-    qids = np.array([r[0] for r in q], dtype=np.int64)
-    qraw = np.array([r[1] for r in q], dtype=np.float64)
-    qv = qraw.reshape(len(q), m, dsub)
-    diff = qv[:, :, None, :] - b[None, :, :, :]
-    lut = np.einsum("nmkd,nmkd->nmk", diff, diff)
-    # probed bucket ids per query: exact distances to the coarse centroids
-    # (fixed-order einsum, stable argsort — same tie rule as the kernels)
-    cdiff = qraw[:, None, :] - cent[None, :, :]
-    cd2 = np.einsum("nkd,nkd->nk", cdiff, cdiff)
-    probed = np.argsort(cd2, axis=1, kind="stable")[:, :n_probe]
-    nq = len(qids)
-    kk = int(max(k, rerank) if rerank else k)
-
-    cb = corpus.select(
-        F.col(cid).alias("neighbor_id"),
-        nearest_centroids(F.col(vec), cent, 1)[0].alias("bucket"),
-        pq_encode(F.col(vec), b).alias("codes"),
-    )
-
-    def scan(batches):
-        for bt in batches:
-            if not len(bt):
-                continue
-            codes = _codes_matrix(bt.column("codes"), m)
-            nid = _ids(bt.column("neighbor_id"))
-            bkt = _ids(bt.column("bucket"))
-            out_q, out_n, out_d = [], [], []
-            for i in range(nq):
-                keep = np.isin(bkt, probed[i]) & (nid != qids[i])
-                if not keep.any():
-                    continue
-                ci, ni = codes[keep], nid[keep]
-                d = np.zeros(len(ci), dtype=np.float64)
-                for j in range(m):
-                    d += lut[i, j, :][ci[:, j]]
-                top = np.lexsort((ni, d))[:kk]
-                out_q.append(np.full(len(top), qids[i]))
-                out_n.append(ni[top])
-                out_d.append(d[top])
-            if out_q:
-                yield from _candidates(out_q, out_n, out_d)
-
-    cand = cb.mapInArrow(scan, schema=_CAND_DDL)
-    return _rank_candidates(cand, queries, corpus, k, rerank, qid, cid, vec)
 
 
 # ---------------------------------------------------------------------------
@@ -565,13 +503,13 @@ def covariance_moments(emb: DataFrame, vec_col: str = "embedding"):
     Arrow pass emits per-partition partial moments (d + d^2 doubles per
     partition, NOT per row), the driver combines them. At 10^12 rows the
     shuffle is n_partitions tiny rows — the covariance of a 100-TB
-    embedding table costs one scan."""
+    embedding table costs one scan. NULL vectors are skipped."""
     def partials(batches):
         n = 0
         s = None
         ss = None
         for b in batches:
-            if not len(b):
+            if len(b) == b.column(0).null_count:
                 continue
             m = _rows_matrix(b.column(0), -1)
             n += len(m)

@@ -189,6 +189,32 @@ def test_spark_wkb_column_roundtrip(spark):  # noqa: F811
         assert r.back == r.wkt
 
 
+EMPTIES = ["POINT EMPTY", "LINESTRING EMPTY", "POLYGON EMPTY",
+           "MULTIPOINT EMPTY", "MULTILINESTRING EMPTY", "MULTIPOLYGON EMPTY"]
+
+
+def test_wkb_empty_roundtrip(spark):  # noqa: F811
+    # ISO empties: POINT as NaN NaN, LINESTRING with 0 points, POLYGON with
+    # 0 rings, Multi* with 0 members; each reads back as parts = []
+    assert formats.parts_to_wkb("POINT", []).hex() == (
+        "0101000000" + "000000000000f87f" * 2)
+    assert formats.parts_to_wkb("LINESTRING", []).hex() == "010200000000000000"
+    assert formats.parts_to_wkb("POLYGON", []).hex() == "010300000000000000"
+    for wkt in EMPTIES:
+        kind = wkt.split()[0]
+        assert formats.wkb_to_parts(formats.parts_to_wkb(kind, [])) == (kind, [])
+    # one batch: each EMPTY next to a non-empty row
+    rows = [(w,) for e in EMPTIES for w in (e, "POINT (1 2)")]
+    df = spark.createDataFrame(rows, "wkt string").coalesce(1)
+    wkb = formats.wkb_from_wkt(F.col("wkt"))
+    out = df.select(
+        "wkt",
+        formats.wkt_format(formats.wkb_parse(wkb)).alias("back"),
+        (formats.wkb_format(formats.wkt_parse(F.col("wkt"))) == wkb).alias("same"),
+    ).collect()
+    assert [(r.back, r.same) for r in out] == [(r[0], True) for r in rows]
+
+
 def test_ragged_rings_format_and_simplify_without_json(spark):  # noqa: F811
     # exterior (6 vertices) and hole (4) differ in length: the formatters
     # and the simplifier read the struct as is, with no to_json detour
@@ -856,3 +882,16 @@ def test_convex_hull_agg_fanin_invariance(spark):
     assert out.schema["grp"].dataType.simpleString() == "string"
     c = sorted(map(tuple, out.collect()))
     assert c == [(f"g{g}", *rest) for g, *rest in a]
+
+
+def test_convex_hull_agg_skips_null_and_nan(spark):
+    # a NULL or NaN coordinate is skipped like a NULL in a SQL aggregate:
+    # n_pts counts valid distinct points; a group of only invalid points
+    # gives no row
+    nan = float("nan")
+    rows = [(1, 0.0, 0.0), (1, 4.0, 0.0), (1, 4.0, 4.0), (1, 0.0, 4.0),
+            (1, nan, 1.0), (1, 2.0, None), (2, None, 1.0), (2, 1.0, nan)]
+    df = spark.createDataFrame(rows, "grp long, x double, y double")
+    for fanin in (1, 16):
+        out = sorted(map(tuple, formats.convex_hull_agg(df, fanin=fanin).collect()))
+        assert out == [(1, 4, 32, 16.0)], out

@@ -20,13 +20,16 @@ A source lint covers the stages no registry entry plans: no
 ``pandas_udf``, ``mapInPandas`` or ``applyInPandas(`` in the package,
 and ``import pandas`` only in the test-data builders (``fixtures``) and the
 stateful streaming operator (``applyInPandasWithState`` has no Arrow
-form).
+form). A second source lint fails on orphaned private helpers: every
+private top-level function or class of the package must be referenced by
+code somewhere in the repository.
 
 Constructing a few entries executes bounded driver-side work (fixpoint
 rounds, IVF sampling, streaming micro-batches) — at sf0.001 that is
 seconds, and the lint doubles as a smoke test that every entry builds.
 """
 
+import ast
 import re
 from pathlib import Path
 
@@ -47,6 +50,7 @@ PANDAS_SCALAR = re.compile(r"ArrowEvalPython .*, 200$", re.M)
 PKG = Path(__file__).resolve().parents[1] / "gdal_scripts_spark"
 PANDAS_API = re.compile(r"pandas_udf|mapInPandas|applyInPandas\(")
 PANDAS_IMPORTERS = {"fixtures.py", "streaming.py"}
+REPO = PKG.parent
 
 
 @pytest.mark.parametrize("name", sorted(entry_mod.queries()))
@@ -84,3 +88,48 @@ def test_no_pandas_stage_in_source():
                 imports.append(f"{path.name}:{i}")
     assert not api, f"pandas UDF API in the package: {api}"
     assert not imports, f"pandas imported outside the fixtures/streaming: {imports}"
+
+
+def _code_names(tree: ast.Module, skip_own: bool) -> set[str]:
+    """Names the code of ``tree`` refers to: ``Name`` ids, ``Attribute``
+    attrs and import aliases (docstrings and comments do not count). With
+    ``skip_own`` a top-level definition's references to its own name
+    (recursion) do not count either."""
+    names = set()
+    for top in tree.body:
+        found = set()
+        for n in ast.walk(top):
+            if isinstance(n, ast.Name):
+                found.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                found.add(n.attr)
+            elif isinstance(n, ast.alias):
+                found.update({n.name, n.asname} - {None})
+        if skip_own:
+            found.discard(getattr(top, "name", None))
+        names |= found
+    return names
+
+
+def test_no_orphaned_private_helpers():
+    """Every private top-level function or class in the package (goldens
+    excluded) is referenced by code in the package, ``tests/``,
+    ``perfbench/``, ``tools/`` or ``bench.py``."""
+    private, refs = {}, set()
+    for path in sorted(PKG.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        refs |= _code_names(tree, skip_own=True)
+        if path.name == "goldens_sf001.py":
+            continue
+        for node in tree.body:
+            if (isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                    and node.name.startswith("_") and not node.name.endswith("__")):
+                private[node.name] = f"{path.name}:{node.lineno}"
+    others = [REPO / "bench.py"]
+    for d in ("tests", "perfbench", "tools"):
+        others += sorted((REPO / d).rglob("*.py"))
+    for path in others:
+        refs |= _code_names(ast.parse(path.read_text()), skip_own=False)
+    orphans = sorted(f"{where} {name}" for name, where in private.items()
+                     if name not in refs)
+    assert not orphans, f"private helpers no code refers to: {orphans}"

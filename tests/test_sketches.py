@@ -361,3 +361,7 @@ def test_covariance_moments_partition_invariance(spark):
     assert n1 == n8 == 100
     assert np.allclose(s1, s8, atol=1e-9) and np.allclose(ss1, ss8, atol=1e-9)
     assert np.allclose(s1, X.sum(axis=0)) and np.allclose(ss1, X.T @ X)
+    # NULL vectors are skipped, also in a partition that holds only NULLs
+    nulls = spark.createDataFrame([(None,)] * 3, "embedding array<double>")
+    n0, s0, ss0 = vectorops.covariance_moments(d1.unionByName(nulls.coalesce(1)))
+    assert n0 == 100 and np.array_equal(s0, s1) and np.array_equal(ss0, ss1)

@@ -3,6 +3,8 @@ simhash near-dup detection, multimodal quarantine plumbing."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -250,19 +252,21 @@ def test_ann_ivf_recall_vs_bruteforce(spark):
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.5, recall  # probing half the coarse buckets
-    # bucket assignment is a native column: no Python eval in the corpus scan
-    from gdal_scripts_spark.vectorops import _kmeans_lite, _nearest_centroids_col
+    # bucket assignment is one scalar Arrow UDF (eval type 250) in the
+    # corpus scan, no row-at-a-time Python
+    from gdal_scripts_spark.vectorops import _kmeans_lite
     cent = _kmeans_lite(vecs[:128].astype(np.float64), 8)
     plan = df.select(
-        _nearest_centroids_col(F.col("embedding"), cent, 1)[0].alias("b")
+        vectorops.nearest_centroids(F.col("embedding"), cent, 1)[0].alias("b")
     )._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert len(re.findall(r"ArrowEvalPython .*, 250$", plan, re.M)) == 1, plan
+    assert "BatchEvalPython" not in plan
 
 
 def test_ann_ivf_wide_arrow_kernel(spark):
-    # n_centroids > 64 dispatches to the Arrow matmul kernel; at high
-    # n_probe the candidate set covers most of the corpus, so recall vs
-    # brute force must be near-perfect — the "real centroid count" path
+    # a real coarse-quantizer width (128 centroids); at high n_probe the
+    # candidate set covers most of the corpus, so recall vs brute force
+    # must be near-perfect
     rng = np.random.default_rng(17)
     vecs = rng.standard_normal((400, 64)).astype(np.float32)
     pdf = pd.DataFrame({"vec_id": range(400), "embedding": [v.tolist() for v in vecs]})
@@ -279,19 +283,43 @@ def test_ann_ivf_wide_arrow_kernel(spark):
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.85, recall
-    # the two kernels agree on bucket assignment (same centroids)
-    from gdal_scripts_spark.vectorops import (
-        _kmeans_lite, _nearest_centroids_arrow, _nearest_centroids_col)
-    cent = _kmeans_lite(vecs[:256].astype(np.float64), 32)
-    col_b = [r["b"] for r in df.select(
-        "vec_id", _nearest_centroids_col(F.col("embedding"), cent, 3).alias("b")
-    ).orderBy("vec_id").collect()]
-    arw_b = [r["b"] for r in df.select(
-        "vec_id", _nearest_centroids_arrow(F.col("embedding"), cent, 3).alias("b")
-    ).orderBy("vec_id").collect()]
-    agree = sum(a == b for a, b in zip(col_b, arw_b))
-    # identical up to FP-noise ties between the two distance formulations
-    assert agree >= 0.99 * len(col_b), (agree, len(col_b))
+
+
+def _seq_nearest(v, cent, n):
+    """Sequential oracle: per centroid, squared differences summed in
+    dimension order from 0.0; sort by (distance, centroid id)."""
+    d = []
+    for ci, c in enumerate(cent):
+        acc = 0.0
+        for a, b in zip(v, c):
+            acc += (a - b) * (a - b)
+        d.append((acc, ci))
+    return [ci for _, ci in sorted(d)[:n]]
+
+
+@pytest.mark.parametrize("k", [8, 32, 128])
+def test_nearest_centroids_match_sequential_oracle(spark, k):
+    rng = np.random.default_rng(19)
+    dim = 16
+    vecs = rng.standard_normal((300, dim)).astype(np.float32)
+    cent = rng.standard_normal((k, dim))
+    # (1, 0, ..., 0) is at squared distance exactly 1 from centroids 1
+    # (the origin) and 4 (2, 0, ..., 0): the lower id wins
+    cent[1] = 0.0
+    cent[4] = 0.0
+    cent[4][0] = 2.0
+    tie = np.zeros(dim)
+    tie[0] = 1.0
+    rows = [(i, v.tolist()) for i, v in enumerate(vecs)]
+    rows += [(300, tie.tolist()), (301, None)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = {r["vec_id"]: r["b"] for r in df.select(
+        "vec_id", vectorops.nearest_centroids(F.col("embedding"), cent, 3).alias("b")
+    ).collect()}
+    assert got.pop(301) is None  # NULL vector -> NULL
+    assert got[300][:2] == [1, 4]
+    for i, v in rows[:-1]:
+        assert got[i] == _seq_nearest(v, cent, 3), i
 
 
 def test_deterministic_sample_properties(spark):
@@ -499,29 +527,58 @@ def test_pq_rerank_narrower_than_k_rejected(spark):
 
 def test_pq_codes_packed_binary(spark):
     # round-5 layout: codes ride as PACKED uint8 binary (m bytes/row, the
-    # TPAMI'11 design point); a search over a precomputed codes table gives
-    # the same result set as one that encodes the corpus itself
+    # TPAMI'11 design point)
     rng = np.random.default_rng(53)
     vecs = rng.standard_normal((80, 64)).astype(np.float32)
     pdf = pd.DataFrame({"vec_id": range(80), "embedding": [v.tolist() for v in vecs]})
-    df = spark.createDataFrame(pdf, schema="vec_id long, embedding array<float>").persist()
-    q = df.filter("vec_id < 4")
+    df = spark.createDataFrame(pdf, schema="vec_id long, embedding array<float>")
     books = vectorops.pq_train(df, m=8, ksub=16, sample_n=80)
     codes = df.select(
         F.col("vec_id").alias("neighbor_id"),
         vectorops.pq_encode(F.col("embedding"), books).alias("codes"),
-    ).persist()
+    )
     first = codes.orderBy("neighbor_id").first()
     assert isinstance(first["codes"], (bytes, bytearray))
     assert len(first["codes"]) == 8  # m bytes per vector, packed
-    stored = {(r["qid"], r["rank"], r["neighbor_id"], r["dist"])
-              for r in vectorops.pq_topk(q, df, books, k=5, codes=codes).collect()}
-    encoded = {(r["qid"], r["rank"], r["neighbor_id"], r["dist"])
-               for r in vectorops.pq_topk(q, df, books, k=5).collect()}
-    assert stored == encoded and len(stored) == 20
     # ksub > 256 cannot pack into uint8 — rejected eagerly
     with pytest.raises(ValueError, match="256"):
         vectorops.pq_encode(F.col("embedding"), np.zeros((8, 257, 8)))
+
+
+def test_ann_null_vectors(spark):
+    # a NULL vector gets NULL codes and no bucket, so it takes no part in
+    # any search: the results equal those over the corpus without it, and
+    # a NULL query has no rows
+    rng = np.random.default_rng(59)
+    vecs = rng.standard_normal((120, 64)).astype(np.float32)
+    rows = [(i, v.tolist()) for i, v in enumerate(vecs)]
+    clean = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    df = spark.createDataFrame(rows + [(500, None), (501, None)],
+                               "vec_id long, embedding array<float>")
+    q, q_clean = df.filter("vec_id < 5 OR vec_id = 500"), clean.filter("vec_id < 5")
+    books = vectorops.pq_train(df, m=8, ksub=16)
+    assert np.array_equal(books, vectorops.pq_train(clean, m=8, ksub=16))
+
+    def codes(d):
+        return {r["vec_id"]: r["c"] for r in d.select(
+            "vec_id", vectorops.pq_encode(F.col("embedding"), books).alias("c")
+        ).collect()}
+
+    got = codes(df)
+    assert got.pop(500) is None and got.pop(501) is None
+    assert got == codes(clean)
+
+    def rows_of(d):
+        return sorted(map(tuple, d.collect()))
+
+    ivf = rows_of(vectorops.cosine_topk_ivf(q, df, k=5, n_centroids=8, n_probe=4))
+    assert ivf == rows_of(vectorops.cosine_topk_ivf(
+        q_clean, clean, k=5, n_centroids=8, n_probe=4))
+    pq_ivf = rows_of(vectorops.pq_topk_ivf(q, df, books, k=5, n_centroids=8,
+                                           n_probe=4, rerank=10))
+    assert pq_ivf == rows_of(vectorops.pq_topk_ivf(
+        q_clean, clean, books, k=5, n_centroids=8, n_probe=4, rerank=10))
+    assert len(ivf) == len(pq_ivf) == 25
 
 
 # ---------------------------------------------------------------------------
